@@ -31,20 +31,19 @@ import tempfile
 import time
 import traceback
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
 
 from workloads import WORKLOADS
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
+FIXTURES = os.path.join(HERE, "fixtures")  # the project's seed-42 test tables, one dir per scale
 
 SETUP_REPEATS = 3  # setup_s = session start + median of this many registrations
-MIN_WARM = 2  # warm passes always run, even past --seconds
+MIN_WARM = 1  # warm passes always run, even past --seconds (see --min-warm)
 MAX_PASSES = 12
 TAIL_BEYOND = 10  # op_tail_ratio: highest percentile with this many samples above it
-DRIVER_MEMORY = "2g"
-CHECK_THREADS = 2
+DRIVER_MEMORY = "2g"  # pinned through get_spark's own SPARK_GRAFT_DRIVER_MEM setting
 
 E2E_UNITS = {
     "setup_s": "s",
@@ -80,11 +79,11 @@ LAYER_UNITS = {
     "udf.python_boot_s": "s",
     "udf.python_bytes_sent": "bytes",
     "udf.python_rows_received": "count",
-    "similarity.build_s.ivfpq": "s",
-    "similarity.build_jobs.ivfpq": "count",
-    "similarity.probe_s.ivfpq": "s",
-    "similarity.probe_jobs.ivfpq": "count",
-    "similarity.recall_at_5.ivfpq": "fraction",
+    "similarity.build_s.hnsw_ivf": "s",
+    "similarity.build_jobs.hnsw_ivf": "count",
+    "similarity.probe_s.hnsw_ivf": "s",
+    "similarity.probe_jobs.hnsw_ivf": "count",
+    "similarity.recall_at_5.hnsw_ivf": "fraction",
     "streaming.epochs": "count",
     "streaming.batch_s": "s",
     "streaming.add_batch_s": "s",
@@ -112,6 +111,8 @@ def _prepare_environment() -> None:
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     )
     os.environ["PYSPARK_PYTHON"] = sys.executable
+    # a fixed heap, so peak memory does not follow the JVM's sizing of the host
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEMORY
     # the short-lived JVM spark-submit runs first to build the driver command
     os.environ["SPARK_LAUNCHER_OPTS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
     if ROOT not in sys.path:
@@ -289,9 +290,10 @@ class Bench:
         self.master = f"local[{nproc}]"
         tmp = os.path.join(WORK, "tmp")
         conf = {
-            "spark.driver.memory": DRIVER_MEMORY,
-            "spark.driver.extraJavaOptions": (
-                f"-Xms{DRIVER_MEMORY} -XX:ReservedCodeCacheSize=512m -XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+            # Spark puts these before get_spark's own extraJavaOptions: the
+            # benchmark adds flags and replaces none of the package's
+            "spark.driver.defaultJavaOptions": (
+                f"-Xms{DRIVER_MEMORY} -XX:-UsePerfData -Djava.io.tmpdir={tmp}"
             ),
             "spark.local.dir": os.path.join(tmp, "spark"),
             "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
@@ -380,14 +382,12 @@ class Bench:
         self.layers[p]["proc.driver_cpu_s"] += _cpu_s() - cpu0
 
     def window(self) -> None:
-        if self.workload.before_window:
-            self.workload.before_window(self)
         t_win = time.perf_counter()
         p = 0
         while True:
             elapsed = time.perf_counter() - t_win
             prev = self.pass_wall.get(p - 1, 0.0)
-            if p == MAX_PASSES - 1 or (p >= MIN_WARM and elapsed + prev >= self.args.seconds):
+            if p == MAX_PASSES - 1 or (p >= self.args.min_warm and elapsed + prev >= self.args.seconds):
                 self.last_pass = p
             self.run_pass(p)
             if p == self.last_pass:
@@ -396,18 +396,15 @@ class Bench:
         self.jvm_peak_rss_mb = _vm_hwm_mb(self.jvm_pid)
 
     def check(self) -> None:
-        """Run the correctness checks, CHECK_THREADS at a time (they are
-        outside every timed region; overlapping one check's planning with
-        another's execution keeps a run short)."""
+        """Run the correctness checks one after another, outside every
+        timed region."""
         checks = self.workload.checks(self)
         self.attempted += len(checks)
-        with ThreadPoolExecutor(max_workers=CHECK_THREADS) as pool:
-            futures = [(c, pool.submit(c.fn)) for c in checks]
-            for c, fut in futures:
-                try:
-                    fut.result()
-                except Exception as e:
-                    self.fail(c.name, e)
+        for c in checks:
+            try:
+                c.fn()
+            except Exception as e:
+                self.fail(c.name, e)
 
     def record(self) -> dict:
         import pyspark
@@ -421,12 +418,17 @@ class Bench:
             "seed": self.seed,
             "sf": self.args.sf,
             "seconds": self.args.seconds,
+            "min_warm": self.args.min_warm,
             "trace": self.args.trace,
             "nproc": os.cpu_count(),
             "master": self.master,
             "default_parallelism": sc.defaultParallelism,
             "shuffle_partitions": self.spark.conf.get("spark.sql.shuffle.partitions"),
             "driver_memory": sc.getConf().get("spark.driver.memory"),
+            "driver_java_options": " ".join(
+                sc.getConf().get(k, "")
+                for k in ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
+            ),
             "pyspark": pyspark.__version__,
             "java": java,
             **_tree_rev(),
@@ -529,7 +531,7 @@ class Bench:
             counters.get((f"setup{r}", "create_table"), {}).get("jobs", 0)
             for r in range(SETUP_REPEATS)
         )
-        out["similarity.recall_at_5.ivfpq"] = self.state.get("recall", 0.0)
+        out["similarity.recall_at_5.hnsw_ivf"] = self.state.get("recall", 0.0)
         self.per_pass_layers = per_pass
         return out
 
@@ -540,7 +542,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=0.01, help="fixture scale factor")
+    ap.add_argument("--min-warm", type=int, default=MIN_WARM, help="warm passes run at least")
+    ap.add_argument(
+        "--sf", default="0.01", choices=("0.01", "0.001"),
+        help="fixture scale factor (0.001 is for the self-tests)",
+    )
     args = ap.parse_args(argv)
 
     if not (
@@ -554,10 +560,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 2
     _prepare_environment()
-    import datagen
 
     b = Bench(args)
-    b.data_dir = datagen.ensure(os.path.join(WORK, "data"), args.sf)
+    b.data_dir = os.path.join(FIXTURES, f"sf{args.sf}")
     shutil.rmtree(b.run_dir, ignore_errors=True)
     os.makedirs(b.run_dir)
     b.load_before = list(os.getloadavg())
@@ -594,7 +599,10 @@ def main(argv: list[str] | None = None) -> int:
     for k, (v, unit) in extra.items():
         print(f"# e2e {k} = {v:.6g} {unit}")
     ratio, pct, n = b.tail
-    if pct > 50:
+    if len(b.warm_passes()) < 3:
+        # with one or two samples per op every ratio is 1 or mirrors another
+        print("# e2e op_tail_ratio = n/a ratio (needs three warm passes: --min-warm 3)")
+    elif pct > 50:
         print(f"# e2e op_tail_ratio = {ratio:.6g} ratio (p{pct:.1f} over {n} warm executions)")
     else:
         print(

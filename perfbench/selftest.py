@@ -8,11 +8,11 @@ checks that:
 - the traced run prints every per-layer metric of BENCHMARK.json with its
   unit, writes the span file, and reports the tracing overhead;
 - span self-times are non-negative and sum to at most the traced wall time;
-- ``exec.jobs`` and ``queries.construct_jobs`` repeat exactly across the
-  two warm traced passes;
+- ``exec.jobs`` and ``queries.construct_jobs`` repeat exactly across two
+  warm traced passes (``--min-warm 2``);
 - both runs are correct (no failed op).
 
-Usage: ``python3 perfbench/selftest.py [--sf 0.001] [--workload NAME ...]``
+Usage: ``python3 perfbench/selftest.py [--workload NAME ...]``
 (about five minutes for both workloads on a 4-core host).
 """
 
@@ -29,10 +29,11 @@ ROOT = os.path.dirname(HERE)
 SEED = 7
 
 
-def _run(workload: str, trace: int, sf: float) -> tuple[dict, list[str]]:
+def _run(workload: str, trace: int) -> tuple[dict, list[str]]:
     cmd = [
         sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-        "--seed", str(SEED), "--seconds", "1", "--trace", str(trace), "--sf", str(sf),
+        "--seed", str(SEED), "--seconds", "1", "--trace", str(trace), "--sf", "0.001",
+        "--min-warm", "2",
     ]
     proc = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=600)
     lines = proc.stdout.strip().splitlines()
@@ -41,14 +42,14 @@ def _run(workload: str, trace: int, sf: float) -> tuple[dict, list[str]]:
     return json.loads(lines[-1]), lines[:-1]
 
 
-def check_workload(workload: str, sf: float, spec: dict) -> list[str]:
+def check_workload(workload: str, spec: dict) -> list[str]:
     errors: list[str] = []
 
     def expect(cond: bool, msg: str) -> None:
         if not cond:
             errors.append(f"{workload}: {msg}")
 
-    out, notes = _run(workload, 0, sf)
+    out, notes = _run(workload, 0)
     expect(set(out) == {"correct", "attempted", "failed", "metrics"}, f"result keys {sorted(out)}")
     expect(out["correct"] and out["failed"] == 0, f"untraced run failed {out['failed']} ops")
     for m in spec["end_to_end"]:
@@ -60,7 +61,7 @@ def check_workload(workload: str, sf: float, spec: dict) -> list[str]:
     expect(any(n.startswith("# e2e failed_ops = ") for n in notes), "no failed_ops line")
     expect(any(n.startswith("# record ") for n in notes), "no run record line")
 
-    out, notes = _run(workload, 1, sf)
+    out, notes = _run(workload, 1)
     expect(out["correct"] and out["failed"] == 0, f"traced run failed {out['failed']} ops")
     for m in spec["per_layer"]:
         got = out["metrics"].get(m["name"])
@@ -87,7 +88,6 @@ def check_workload(workload: str, sf: float, spec: dict) -> list[str]:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description="benchmark self-tests")
-    ap.add_argument("--sf", type=float, default=0.001)
     ap.add_argument("--workload", action="append")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -95,7 +95,7 @@ def main() -> int:
     names = args.workload or [w["name"] for w in spec["workloads"]]
     errors: list[str] = []
     for w in names:
-        errs = check_workload(w, args.sf, spec)
+        errs = check_workload(w, spec)
         print(f"{w}: {'ok' if not errs else 'FAILED'}")
         errors += errs
     for e in errors:

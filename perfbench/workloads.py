@@ -41,7 +41,6 @@ class Workload:
     units: Callable  # (bench) -> list[Unit]
     checks: Callable  # (bench) -> list[Check]
     prepare: Callable | None = None  # extra repeatable setup: fn(bench)
-    before_window: Callable | None = None  # untimed, once before pass 0: fn(bench)
     report: Callable | None = None  # workload-only end-to-end figures: fn(bench) -> dict
 
 
@@ -77,7 +76,7 @@ def oracle_check(bench, name: str) -> Check:
     def fn():
         df = bench.ctx.sql(text) if text is not None else spec.fn(bench.spark, bench.data_dir)
         got = df.toPandas()
-        want = bench.duck.cursor().execute(spec.oracle).fetchdf()  # one cursor per thread
+        want = bench.duck.execute(spec.oracle).fetchdf()
         bench.compare_frames(got, want, name)
         assert len(want) > 0, f"{name}: oracle returned no rows"
 
@@ -103,8 +102,8 @@ def _tpch_checks(bench) -> list[Check]:
 
 # ------------------------------------------------------------------ llm_ops
 
-LLM_BATCH = ("dedup_semantic_bounded", "events_match_recognize")
-PQ = dict(n_centroids=8, m=16, ksub=16)  # the sim_ann_ivfpq registry row's index
+LLM_BATCH = ("events_match_recognize",)
+HNSW_CELLS = 16  # the sim_ann_hnsw registry row's index
 # The ANN tiers' documented recall standard; the registry row's higher
 # floor holds for its fixed query set, not for every seeded one.
 RECALL_FLOOR = 0.6
@@ -148,58 +147,63 @@ def _files(path: str) -> list[str]:
     return [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
 
 
-def _ann_unit(bench) -> Unit:
-    """IVF-PQ serving: build the index from ``embeddings`` with the public
-    build call (the cache-miss/write path), then probe the resident index
-    with the seeded query set through ``prebuilt=`` (the read path)."""
+def _ann_queries(bench):
     from pyspark.sql import functions as F
 
+    emb = bench.tables["embeddings"]
+    return emb.filter(F.col("vec_id").isin(bench.state["query_ids"])).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def _ann_unit(bench) -> Unit:
+    """The hnsw_ivf ANN tier: build the index from ``embeddings`` with the
+    public build calls (IVF k-means, list assignment, HNSW graph over the
+    centroids; the cache-miss/write path), then probe the resident index
+    with the seeded query set through ``prebuilt`` (the read path)."""
     from blazingsql_spark.functions import similarity
+    from blazingsql_spark.operators import hnsw
     from blazingsql_spark.queries.registry import fan_out
 
-    st = bench.state
     emb = bench.tables["embeddings"]
     index: dict = {}
 
     def build(t):
-        with t.span("similarity.build.ivfpq", "build"):
-            cents, books, enc = similarity.ivfpq_build(emb, **PQ)
+        with t.span("similarity.build.hnsw_ivf", "build"):
+            cents = similarity.ivf_train_centroids(emb, k=HNSW_CELLS, dim=64)
+            lists = similarity.assign_to_centroids(emb, cents, "vec_id", "embedding")
             # persisted at the registry row's size-aware width
-            enc = fan_out(bench.spark, bench.data_dir, "embeddings", enc, per_task_rows=256)
-            enc = enc.persist()
-            enc.count()
-            index["prebuilt"] = (cents, books, enc)
+            lists = fan_out(bench.spark, bench.data_dir, "embeddings", lists, per_task_rows=256).persist()
+            lists.count()
+            graph = hnsw.graph_from_centroids(cents, m=8, ef_construction=64)
+            index["prebuilt"] = (cents, lists, graph)
 
     def topk():
-        queries = emb.filter(F.col("vec_id").isin(st["query_ids"])).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        return similarity.ivfpq_topk(
-            emb, queries, k=5, n_probe=6, prebuilt=index["prebuilt"], **PQ
+        cents, lists, graph = index["prebuilt"]
+        return hnsw.hnsw_ivf_topk(
+            emb, _ann_queries(bench), k=5, n_centroids=HNSW_CELLS, ef=64,
+            prebuilt=graph, prebuilt_ivf=(cents, lists),
         )
 
     def probe(t):
-        with t.span("similarity.probe.ivfpq"):
+        with t.span("similarity.probe.hnsw_ivf"):
             with t.span("queries.construct", "construct"):
                 df = topk()
             with t.span("exec", "exec"):
                 sink(df)
 
     def after(p: int):
-        # recall once per run, on the final pass, from the resident index
-        if p != bench.last_pass:
-            return
-        got = topk().select("query_id", "vec_id").toPandas()
-        want = st["exact"]
-        st["recall"] = len(want.merge(got, on=["query_id", "vec_id"])) / len(want)
+        # the final pass's answers, from the resident index, for the recall check
+        if p == bench.last_pass:
+            bench.state["approx"] = topk().select("query_id", "vec_id").toPandas()
 
     def cleanup():
         if "prebuilt" in index:
-            index.pop("prebuilt")[2].unpersist()
+            index.pop("prebuilt")[1].unpersist()
         bench.isolate()
 
     return Unit(
-        "ann:ivfpq", [("build:ivfpq", build), ("probe:ivfpq", probe)], after=after, cleanup=cleanup
+        "ann:hnsw_ivf", [("build:hnsw_ivf", build), ("probe:hnsw_ivf", probe)], after=after, cleanup=cleanup
     )
 
 
@@ -248,7 +252,8 @@ def _llm_units(bench) -> list[Unit]:
     p = bench.pass_no
     return (
         [_single(bench, n) for n in LLM_BATCH]
-        + [_ann_unit(bench), _ingest_unit(bench, p)]
+        + [_ann_unit(bench)]
+        + [_ingest_unit(bench, p)]
     )
 
 
@@ -256,9 +261,14 @@ def _llm_checks(bench) -> list[Check]:
     st = bench.state
 
     def recall():
-        r = st.get("recall")
-        assert r is not None, "ivfpq: no recall measured"
-        assert r >= RECALL_FLOOR, f"ivfpq: recall@5 {r:.3f} < {RECALL_FLOOR}"
+        from blazingsql_spark.functions import similarity
+
+        got = st.get("approx")
+        assert got is not None, "hnsw_ivf: no probe answers recorded"
+        exact = similarity.cosine_topk(bench.tables["embeddings"], _ann_queries(bench), k=5)
+        want = exact.select("query_id", "vec_id").toPandas()
+        r = st["recall"] = len(want.merge(got, on=["query_id", "vec_id"])) / len(want)
+        assert r >= RECALL_FLOOR, f"hnsw_ivf: recall@5 {r:.3f} < {RECALL_FLOOR}"
 
     def ingest():
         from pyspark.sql import functions as F
@@ -284,24 +294,9 @@ def _llm_checks(bench) -> list[Check]:
 
     return (
         [oracle_check(bench, n) for n in LLM_BATCH]
-        + [Check("recall:ivfpq", recall)]
+        + [Check("recall:hnsw_ivf", recall)]
         + [Check("ingest_invariants", ingest)]
     )
-
-
-def _llm_before_window(bench) -> None:
-    """Exact top-5 of the seeded query set (the recall baseline), computed
-    once before the window with ``similarity.cosine_topk``."""
-    from pyspark.sql import functions as F
-
-    from blazingsql_spark.functions import similarity
-
-    st = bench.state
-    emb = bench.tables["embeddings"]
-    queries = emb.filter(F.col("vec_id").isin(st["query_ids"])).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    st["exact"] = similarity.cosine_topk(emb, queries, k=5).select("query_id", "vec_id").toPandas()
 
 
 def _llm_report(bench) -> dict:
@@ -309,7 +304,7 @@ def _llm_report(bench) -> dict:
 
     st = bench.state
     warm = bench.warm_passes()
-    builds = [bench.latencies[p]["build:ivfpq"] for p in warm]
+    builds = [bench.latencies[p]["build:hnsw_ivf"] for p in warm]
     ingest = [bench.latencies[p]["ingest"] for p in warm]
     return {
         "index_build_s": (statistics.median(builds), "s"),
@@ -330,7 +325,6 @@ WORKLOADS = {
         _llm_units,
         _llm_checks,
         prepare=_llm_prepare,
-        before_window=_llm_before_window,
         report=_llm_report,
     ),
 }
