@@ -47,10 +47,15 @@ DRIVER_MEMORY = "2g"  # pinned through get_spark's own SPARK_GRAFT_DRIVER_MEM se
 
 E2E_UNITS = {
     "setup_s": "s",
+    "pass_cpu_s": "s",
+    "op_geomean_cpu_s": "s",
+    "jvm_peak_rss_mb": "MB",
+}
+# wall-time figures: printed as report lines, not in the JSON result (see README)
+WALL_UNITS = {
     "first_pass_s": "s",
     "pass_s": "s",
     "op_geomean_s": "s",
-    "jvm_peak_rss_mb": "MB",
 }
 LAYER_UNITS = {
     "session.start_s": "s",
@@ -124,9 +129,11 @@ def _cpu_s() -> float:
     return r.ru_utime + r.ru_stime
 
 
-def _java_children() -> list[int]:
-    """PIDs of JVMs this process started (the Spark driver)."""
-    me, out = os.getpid(), []
+def _proc_stats() -> dict[int, tuple[int, str, float]]:
+    """pid -> (parent pid, command name, CPU seconds of the process and its
+    reaped children) for every process in /proc."""
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
@@ -136,10 +143,38 @@ def _java_children() -> list[int]:
         except OSError:
             continue
         comm = stat[stat.index("(") + 1 : stat.rindex(")")]
-        ppid = int(stat[stat.rindex(")") + 2 :].split()[1])
-        if ppid == me and comm == "java":
-            out.append(int(d))
+        fields = stat[stat.rindex(")") + 2 :].split()
+        # utime, stime, cutime, cstime
+        out[int(d)] = (int(fields[1]), comm, sum(int(x) for x in fields[11:15]) / tick)
     return out
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and every process under it
+    (the driver JVM, Spark's Python daemon and its workers). A child that
+    exits is counted in its parent's reaped-children time, so the sum only
+    grows."""
+    me, procs = os.getpid(), _proc_stats()
+    total = 0.0
+    for pid, (_, _, cpu) in procs.items():
+        q = pid
+        while q > 1 and q != me:
+            q = procs.get(q, (0,))[0]
+        if q == me:
+            total += cpu
+    return total
+
+
+def host_jiffies() -> list[int]:
+    """The host-wide CPU time counters of /proc/stat (user ... steal)."""
+    with open("/proc/stat") as f:
+        return [int(x) for x in f.readline().split()[1:9]]
+
+
+def _java_children() -> list[int]:
+    """PIDs of JVMs this process started (the Spark driver)."""
+    me = os.getpid()
+    return [pid for pid, (ppid, comm, _) in _proc_stats().items() if ppid == me and comm == "java"]
 
 
 def _vm_hwm_mb(pid: int) -> float:
@@ -234,7 +269,9 @@ class Bench:
         self.pass_no = 0
         self.last_pass: int | None = None
         self.latencies: dict[int, dict[str, float]] = {}
+        self.op_cpu: dict[int, dict[str, float]] = {}
         self.pass_wall: dict[int, float] = {}
+        self.pass_cpu: dict[int, float] = {}
         self.layers: dict[int, dict[str, float]] = defaultdict(lambda: defaultdict(float))
         self.failures: list[str] = []
         self.attempted = 0
@@ -354,51 +391,64 @@ class Bench:
         units = self.workload.units(self)
         random.Random(f"{self.seed}:{p}").shuffle(units)
         lat: dict[str, float] = {}
-        self.latencies[p] = lat
-        untimed = 0.0
-        cpu0, t_pass = _cpu_s(), time.perf_counter()
+        cpu: dict[str, float] = {}
+        self.latencies[p], self.op_cpu[p] = lat, cpu
+        untimed = untimed_cpu = 0.0
+        cpu0, t_pass, tree0 = _cpu_s(), time.perf_counter(), tree_cpu_s()
         for u in units:
             for name, fn in u.ops:
                 self.tracer.trace_id = f"p{p}:{name}"
                 self.attempted += 1
-                t0 = time.perf_counter()
+                c0, t0 = tree_cpu_s(), time.perf_counter()
                 try:
                     with self.tracer.span("op"):
                         fn(self.tracer)
                 except Exception as e:  # counted in failed, the pass goes on
                     self.fail(f"p{p}:{name}", e)
                 lat[name] = time.perf_counter() - t0
+                cpu[name] = tree_cpu_s() - c0
             self.tracer.trace_id = None
             if u.after:
-                t0 = time.perf_counter()
+                c0, t0 = tree_cpu_s(), time.perf_counter()
                 try:
                     u.after(p)
                 except Exception as e:
                     self.fail(f"p{p}:{u.name}:record", e)
                 untimed += time.perf_counter() - t0
+                untimed_cpu += tree_cpu_s() - c0
             if u.cleanup:
                 u.cleanup()
         self.pass_wall[p] = time.perf_counter() - t_pass - untimed
+        self.pass_cpu[p] = tree_cpu_s() - tree0 - untimed_cpu
         self.layers[p]["proc.driver_cpu_s"] += _cpu_s() - cpu0
 
-    def window(self) -> None:
-        t_win = time.perf_counter()
-        p = 0
+    def cold_pass(self) -> None:
+        self.jiffies0 = host_jiffies()
+        self.run_pass(0)
+
+    def warm_window(self) -> None:
+        """Warm passes until the passes run so far (cold pass included)
+        have measured --seconds, never fewer than --min-warm."""
+        p = 1
         while True:
-            elapsed = time.perf_counter() - t_win
-            prev = self.pass_wall.get(p - 1, 0.0)
-            if p == MAX_PASSES - 1 or (p >= self.args.min_warm and elapsed + prev >= self.args.seconds):
+            measured = sum(self.pass_wall.values())
+            prev = self.pass_wall[p - 1]
+            if p == MAX_PASSES - 1 or (p >= self.args.min_warm and measured + prev >= self.args.seconds):
                 self.last_pass = p
             self.run_pass(p)
             if p == self.last_pass:
                 break
             p += 1
         self.jvm_peak_rss_mb = _vm_hwm_mb(self.jvm_pid)
+        d = [b - a for a, b in zip(self.jiffies0, host_jiffies())]
+        self.steal_share = d[7] / max(1, sum(d))
 
-    def check(self) -> None:
+    def check(self, of_passes: bool) -> None:
         """Run the correctness checks one after another, outside every
-        timed region."""
-        checks = self.workload.checks(self)
+        timed region: those that read nothing the passes record (the
+        oracle comparisons) between the cold pass and the warm ones, where
+        they also warm the JIT further; the rest after the last pass."""
+        checks = [c for c in self.workload.checks(self) if c.of_passes == of_passes]
         self.attempted += len(checks)
         for c in checks:
             try:
@@ -435,6 +485,7 @@ class Bench:
             "passes": len(self.latencies),
             "loadavg_before": self.load_before,
             "cpu_calibration_before_s": self.cal_before,
+            "window_steal_share": self.steal_share,
         }
 
     def stop(self) -> None:
@@ -447,17 +498,21 @@ class Bench:
     # ---- results
     def end_to_end(self) -> dict[str, float]:
         warm = self.warm_passes()
-        op_meds = {
-            op: statistics.median(self.latencies[p][op] for p in warm)
-            for op in self.latencies[warm[0]]
-        }
+
+        def geomean_of_op_medians(per_pass, floor=0.0):
+            meds = [statistics.median(per_pass[p][op] for p in warm) for op in per_pass[warm[0]]]
+            return math.exp(statistics.fmean(math.log(max(v, floor)) for v in meds))
+
         self.tail = tail_ratio(self.latencies, warm)
         return {
             "setup_s": self.setup_s,
+            "pass_cpu_s": statistics.median(self.pass_cpu[p] for p in warm),
+            # an op below one clock tick of CPU counts as one tick
+            "op_geomean_cpu_s": geomean_of_op_medians(self.op_cpu, 1 / os.sysconf("SC_CLK_TCK")),
+            "jvm_peak_rss_mb": self.jvm_peak_rss_mb,
             "first_pass_s": self.pass_wall[0],
             "pass_s": statistics.median(self.pass_wall[p] for p in warm),
-            "op_geomean_s": math.exp(statistics.fmean(math.log(v) for v in op_meds.values())),
-            "jvm_peak_rss_mb": self.jvm_peak_rss_mb,
+            "op_geomean_s": geomean_of_op_medians(self.latencies),
         }
 
     def per_layer(self) -> dict[str, float]:
@@ -570,8 +625,9 @@ def main(argv: list[str] | None = None) -> int:
     phases = {}
     try:
         for name, step in (
-            ("session", b.start_session), ("setup", b.setup), ("window", b.window),
-            ("check", b.check),
+            ("session", b.start_session), ("setup", b.setup), ("cold", b.cold_pass),
+            ("oracle_checks", lambda: b.check(False)), ("warm", b.warm_window),
+            ("pass_checks", lambda: b.check(True)),
         ):
             t0 = time.perf_counter()
             step()
@@ -595,7 +651,7 @@ def main(argv: list[str] | None = None) -> int:
         extra.update(b.workload.report(b))
     print(f"# record {json.dumps(record, sort_keys=True)}")
     for k, v in metrics.items():
-        print(f"# e2e {k} = {v:.6g} {E2E_UNITS[k]}")
+        print(f"# e2e {k} = {v:.6g} {E2E_UNITS.get(k) or WALL_UNITS[k]}")
     for k, (v, unit) in extra.items():
         print(f"# e2e {k} = {v:.6g} {unit}")
     ratio, pct, n = b.tail
@@ -617,7 +673,9 @@ def main(argv: list[str] | None = None) -> int:
         "end_to_end": metrics,
         "workload_figures": {k: v for k, (v, _) in extra.items()},
         "latencies": b.latencies,
+        "op_cpu": b.op_cpu,
         "pass_wall": b.pass_wall,
+        "pass_cpu": b.pass_cpu,
         "failures": b.failures,
     }
     runs = os.path.join(WORK, "runs")

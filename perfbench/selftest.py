@@ -4,7 +4,8 @@ For every workload this runs ``run.py`` untraced and traced (same seed) and
 checks that:
 
 - the untraced run prints every end-to-end metric of BENCHMARK.json, with
-  its unit, plus the workload's own figures and ``failed_ops``;
+  its unit, plus the wall-time figures, the workload's own figures and
+  ``failed_ops``;
 - the traced run prints every per-layer metric of BENCHMARK.json with its
   unit, writes the span file, and reports the tracing overhead;
 - span self-times are non-negative and sum to at most the traced wall time;
@@ -58,7 +59,8 @@ def check_workload(workload: str, spec: dict) -> list[str]:
         expect(got is not None and got["value"] > 0, f"e2e {m['name']} is not positive: {got}")
         expect(any(n.startswith(f"# e2e {m['name']} = ") for n in notes), f"no report line for {m['name']}")
     expect(set(out["metrics"]) == {m["name"] for m in spec["end_to_end"]}, "extra e2e metrics")
-    expect(any(n.startswith("# e2e failed_ops = ") for n in notes), "no failed_ops line")
+    for name in ("failed_ops", "first_pass_s", "pass_s", "op_geomean_s"):
+        expect(any(n.startswith(f"# e2e {name} = ") for n in notes), f"no {name} line")
     expect(any(n.startswith("# record ") for n in notes), "no run record line")
 
     out, notes = _run(workload, 1)

@@ -33,6 +33,7 @@ class Unit:
 class Check:
     name: str
     fn: Callable[[], None]  # raises AssertionError on a wrong result
+    of_passes: bool = False  # reads what the passes recorded, so runs after them
 
 
 @dataclass(frozen=True)
@@ -294,8 +295,8 @@ def _llm_checks(bench) -> list[Check]:
 
     return (
         [oracle_check(bench, n) for n in LLM_BATCH]
-        + [Check("recall:hnsw_ivf", recall)]
-        + [Check("ingest_invariants", ingest)]
+        + [Check("recall:hnsw_ivf", recall, of_passes=True)]
+        + [Check("ingest_invariants", ingest, of_passes=True)]
     )
 
 
