@@ -143,11 +143,11 @@ def main() -> None:
     # warmup: touch the JVM, codegen, and the parquet footers once
     specs["tpch_q6"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Per-query: one UNTIMED warmup execution, then best-of-3 CONSECUTIVE
+    # Per-query: one UNTIMED warmup execution, then best-of-4 CONSECUTIVE
     # timed repeats. The warmup absorbs C2 JIT compilation of that query's
     # codegen classes (measured: heavier queries need 2-3 executions to
     # reach steady state — q18 2.4s→1.0s, minhash 5.8s→0.9s — so without
-    # it best-of-3 can report a pre-warm number). Within the repeats,
+    # it best-of-4 can report a pre-warm number). Within the repeats,
     # persisted intermediates (the ANN index, dedup's banded table) stay
     # warm — the min measures steady-state repeated execution, the number
     # that matters for a resident engine. clearCache only BETWEEN queries,
@@ -200,8 +200,8 @@ def main() -> None:
             pass
         # localCheckpoint'ed RDDs have truncated lineage: once their blocks
         # are dropped they are IRRECOVERABLE, so any session-scoped handle
-        # to them (the prebuilt IVF-PQ index) must be dropped with them —
-        # the next query rebuilds from source, repeats 2-3 still measure
+        # to them (the prebuilt ANN indexes) must be dropped with them —
+        # the next query rebuilds from source, repeats 2-4 still measure
         # the warm probe path.
         #
         # The "RDD N was locally checkpointed, its lineage has been
@@ -213,10 +213,9 @@ def main() -> None:
         # single-threaded, every query fully executes via the noop sink
         # BEFORE this cleanup runs, and the only session-scoped handle to
         # checkpointed blocks is cleared in the same inter-query window.
-        from blazingsql_spark.queries import pipeline as _pl
+        from blazingsql_spark.queries.pipeline import reset_resident_indexes
 
-        _pl._IVFPQ_PREBUILT.clear()
-        _pl._IVF_INT8_PREBUILT.clear()
+        reset_resident_indexes()
         # Dead broadcast blocks (one per broadcast join per execution) are
         # only reclaimed when a DRIVER GC collects their handles and the
         # ContextCleaner notices — with a 48g heap that can be never during

@@ -29,10 +29,10 @@ def _hnsw_index(spark, sf_dir: str, emb):
     """Session-scoped resident index: centroids + assignment lists
     (persisted) + the landmark graph, built once per (app, sf_dir) so
     bench repeats measure the probe path — the same amortization
-    discipline as pipeline._ivfpq_index, and the same dict so bench.py's
-    inter-query cleanup drops both together. Deterministic: a fresh
-    session rebuilds the identical index (md5-seeded k-means, seeded
-    level RNG)."""
+    discipline as pipeline._ivfpq_index, and the same dict so
+    pipeline.reset_resident_indexes() drops both together. Deterministic:
+    a fresh session rebuilds the identical index (md5-seeded k-means,
+    seeded level RNG)."""
     from blazingsql_spark.queries.pipeline import _IVFPQ_PREBUILT
 
     key = (spark.sparkContext.applicationId, sf_dir, "hnsw_ivf")

@@ -1551,7 +1551,8 @@ def _ivfpq_index(spark, sf_dir: str, emb):
         # scoring stage on ONE task (measured: the biggest probe stage at
         # sf0.1). per_task_rows sizes the width from the footer row count
         # (8 tasks at sf0.1); on real many-row-group inputs fan_out is a
-        # no-op and the build layout is the scan's own.
+        # no-op and the persisted layout is whatever the build's own
+        # plan left it in.
         encoded = fan_out(spark, sf_dir, "embeddings", encoded, per_task_rows=256).persist()
         encoded.count()  # materialize the compressed codes now
         _IVFPQ_PREBUILT[key] = (cents, books, encoded)
@@ -1759,6 +1760,17 @@ def _ivf_int8_index(spark, sf_dir: str, emb):
         flists.count()
         _IVF_INT8_PREBUILT[key] = (cents, qlists, flists)
     return _IVF_INT8_PREBUILT[key]
+
+
+def reset_resident_indexes() -> None:
+    """Drop every session-scoped prebuilt ANN index (IVF-PQ and the HNSW
+    index graph_ann keeps in the same dict, IVF-int8, PCA-routed IVF), so
+    the next execution rebuilds from source. Call it after unpersisting
+    the session's RDDs: a localCheckpoint'ed index cannot be recomputed
+    once its blocks are gone."""
+    _IVFPQ_PREBUILT.clear()
+    _IVF_INT8_PREBUILT.clear()
+    _IVF_PCA_PREBUILT.clear()
 
 
 @register(

@@ -9,6 +9,18 @@ Determinism rules (so value-hashes match across engines):
 - every computed column is aliased identically in both dialects;
 - LIMIT queries carry a total ORDER BY with a unique tiebreaker;
 - no engine-specific functions in compared output (e.g. hash()).
+
+Row order: the external correctness run over ``__spark_entry__.queries()``
+records only its first 50 rows (``CORRECTNESS_r*.json``), so the order
+decides which rows get checked. ``all_queries()`` yields ``DRIVER_ORDER``
+first, then every other row in registration order. ``DRIVER_ORDER`` is
+the 3 sentinels (``expr_math``, ``text_stats``, ``tpch_q1``) followed by
+the 47 registered rows whose latest appearance in a committed
+``CORRECTNESS_r*.json`` is oldest; rows never checked come first, ties go
+by registration order. Regenerate it whenever a new
+``CORRECTNESS_r*.json`` lands: run
+``python -m pytest tests/test_entry.py -k driver_order`` and paste the
+tuple its failure message prints.
 """
 
 from __future__ import annotations
@@ -39,11 +51,8 @@ _QUERY_MODULES = (
     "blazingsql_spark.queries.expressions",
     "blazingsql_spark.queries.pipeline",
     "blazingsql_spark.queries.tpch_extra",
-    # promoted in round 6 (staged through the r4-r5 registration freeze):
     "blazingsql_spark.queries.formats",
     "blazingsql_spark.queries.graph_ann",
-    # registered in round 6 for the round-7 window (sits past the 50-row
-    # driver window until the r7 flip, so it cannot perturb the r6 run):
     "blazingsql_spark.queries.graph_inc",
 )
 
@@ -86,11 +95,14 @@ def register(name: str, oracle: str | None = None, headline: bool = False, doc: 
 def _prepare_session(spark: SparkSession) -> None:
     """Confs the queries depend on, set defensively: the driver may hand us
     a session built without blazingsql_spark.session.get_spark (e.g. its own
-    harness session). Both are runtime-settable."""
+    harness session)."""
+    from pyspark.errors import AnalysisException
+
     try:
         # UTC so timestamp extraction/windows match the (UTC-naive) oracle
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
+    except AnalysisException:
+        # a session that forbids changing the conf keeps its own zone
         pass
 
 
@@ -112,22 +124,27 @@ def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
     except OSError:
         key = (path, None, None)
     if key not in _SCAN_META:
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.lib
+        import pyarrow.parquet as pq
 
+        try:
             meta = pq.ParquetFile(path).metadata
-            raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-            try:
-                max_bytes = int(raw)
-            except ValueError:  # "128m"-style spellings
-                units = {"k": 10, "m": 20, "g": 30}
-                max_bytes = int(raw[:-1]) << units.get(raw[-1].lower(), 0)
-            by_size = max(1, -(-_os.path.getsize(path) // max_bytes))
-            # parquet split granularity is the row group: a byte-range
-            # split can't run more tasks than there are row groups
-            _SCAN_META[key] = (min(meta.num_row_groups, by_size), meta.num_rows)
-        except Exception:
-            _SCAN_META[key] = (1 << 30, 1 << 62)  # unknown: assume parallel enough
+            size = _os.path.getsize(path)
+        except (OSError, pyarrow.lib.ArrowInvalid):
+            # a directory, a missing file or a non-parquet footer: the
+            # layout is unknown, assume parallel enough
+            _SCAN_META[key] = (1 << 30, 1 << 62)
+            return _SCAN_META[key]
+        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
+        try:
+            max_bytes = int(raw)
+        except ValueError:  # "128m"-style spellings
+            units = {"k": 10, "m": 20, "g": 30}
+            max_bytes = int(raw[:-1]) << units.get(raw[-1].lower(), 0)
+        by_size = max(1, -(-size // max_bytes))
+        # parquet split granularity is the row group: a byte-range
+        # split can't run more tasks than there are row groups
+        _SCAN_META[key] = (min(meta.num_row_groups, by_size), meta.num_rows)
     return _SCAN_META[key]
 
 
@@ -236,839 +253,60 @@ def pair(
 
 _loaded = False
 
-# The driver records correctness rows for a bounded prefix of the registry
-# in iteration order. The window is EXACTLY 50 rows (measured: CORRECTNESS_
-# r01/r02/r03 each contain exactly 50 rows) — round 3 overflowed it by
-# front-loading 62 names, so the planned TPC-H/join rotation block got no
-# driver row at all (VERDICT r3 "What's wrong" #4). The round-4 window is
-# therefore assembled from explicitly-budgeted blocks with a structural
-# assert; everything past the window queues in backlog-drain order for
-# round 5 (freeze: no new registrations in r4-r5 until every query has had
-# at least one driver row).
-_DRIVER_WINDOW = 50
-
-_SENTINELS = (
-    # standing canaries, pinned first every round: the two round-2 red rows
-    # (dialect-cast fixes, green since r3) + tpch_q1
+# Generated, not hand-edited: the module docstring says how it is chosen
+# and how to regenerate it.
+DRIVER_ORDER = (
     "expr_math",
     "text_stats",
     "tpch_q1",
-)
-
-_R3_RED_FIXES = (
-    # the 11 round-3 red rows, all harness-representation defects fixed in
-    # round 4 (8x CAST(SUM(..) AS BIGINT) in the DuckDB oracles, 3x
-    # array/map outputs serialized to strings) — must show green in r4
-    "split_assign",
-    "sample_stratified",
-    "sample_weighted",
-    "shard_assign",
-    "text_repetition",
-    "pipeline_prepare_corpus",
-    "profile_lineitem",
-    "sample_domain_mix",
-    "expr_array",
-    "expr_map",
-    "emb_label_centroids",
-)
-
-_NEVER_CHECKED_R4 = (
-    # 16 of the 63 queries with no driver row in any round: the 12 round-3
-    # registrations that fell past the r3 cutoff + 4 named in VERDICT r3
-    # (bm25 / pagerank / merge / span-dedup). The other 47 are the r5 plan.
-    "events_retention",
-    "window_ratio_to_report",
-    "agg_grouping_fn",
-    "intersect_all",
-    "except_distinct",
-    "expr_try_cast",
-    "expr_greatest_least",
-    "text_perplexity",
-    "dedup_components",
-    "events_gapfill",
-    "events_anomaly",
-    "expr_like_wildcards",
-    "text_bm25",
-    "graph_pagerank",
-    "merge_upsert_orders",
-    "dedup_spans",
-)
-
-_ROTATION_R4 = (
-    # re-verification of the round-1-green block with no driver row since
-    # r1 (two fixture regenerations ago): the full TPC-H q3-q22 tail + the
-    # 4 trickiest join semantics. Remaining joins/windows/aggs follow in r6.
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "join_inner",
-    "join_full_outer",
-    "join_nonequi",
-    "join_nullsafe",
-)
-
-_R4_WINDOW = _SENTINELS + _R3_RED_FIXES + _NEVER_CHECKED_R4 + _ROTATION_R4
-assert len(_R4_WINDOW) == _DRIVER_WINDOW, (
-    f"driver window misbudgeted: {len(_R4_WINDOW)} names for "
-    f"{_DRIVER_WINDOW} rows"
-)
-assert len(set(_R4_WINDOW)) == len(_R4_WINDOW), "duplicate in driver window"
-
-_BACKLOG_NEVER_CHECKED = (
-    # the 47 remaining zero-driver-row queries, queued immediately after the
-    # window so the r5 rotation is a mechanical promote (47 + 3 sentinels
-    # = 50 — drains the backlog completely by end of r5)
-    "agg_bool_bit",
-    "agg_count_if",
-    "agg_equidepth",
-    "agg_group_by_all",
-    "agg_histogram",
-    "agg_mad_outliers",
-    "agg_mode",
-    "agg_skew_kurt",
-    "agg_string_agg",
-    "agg_winsorize",
-    "asof_forward_events",
-    "asof_nearest_events",
-    "asof_tolerance_events",
-    "dedup_canonicalize",
-    "docs_feature_hash",
-    "docs_tokenize_ids",
-    "emb_normalize",
-    "events_ab_test",
-    "events_attribution",
-    "events_ewma",
-    "events_interpolate",
-    "events_markov",
-    "events_ohlc",
-    "events_top_paths",
-    "events_twap",
-    "events_window_approx_distinct",
-    "expr_array_setops",
-    "expr_bit_shift",
-    "expr_collation",
-    "expr_date_format",
-    "expr_json",
-    "expr_levenshtein",
-    "expr_regexp_extract",
-    "expr_split_part",
-    "expr_variant",
-    "interval_join_events",
-    "join_fuzzy_names",
-    "join_lateral",
-    "ml_linear_probe",
-    "pivot_native",
-    "rag_hybrid_rrf",
-    "sample_weighted_es",
-    "scd2_orders",
-    "sketch_heavy_hitters",
-    "sql_recursive_cte",
-    "vocab_bpe_pairs",
-    "window_ntile",
-)
-assert len(_BACKLOG_NEVER_CHECKED) == 47, len(_BACKLOG_NEVER_CHECKED)
-
-# Round-5 window: the 3 standing sentinels + the complete 47-query
-# never-checked backlog = exactly 50. After this round every registered
-# query has >= 1 driver row; round 6 begins the re-verification rotation
-# (alternating halves, starting with the r1-stale window_*/agg_* block and
-# the 6 joins not rotated in r4). The r4 window queues right behind so any
-# overflow re-checks the freshest-green rows first.
-_R5_WINDOW = _SENTINELS + _BACKLOG_NEVER_CHECKED
-assert len(_R5_WINDOW) == _DRIVER_WINDOW, (
-    f"driver window misbudgeted: {len(_R5_WINDOW)} names for "
-    f"{_DRIVER_WINDOW} rows"
-)
-assert len(set(_R5_WINDOW)) == len(_R5_WINDOW), "duplicate in driver window"
-
-# Round-6 window: CORRECTNESS_r05 confirmed the backlog drained 50/50 green,
-# so the pre-queued composition is promoted exactly as staged
-# (3 + 2 + 27 + 18 = 50).
-
-_STAGED_R6 = (
-    # the 2 registrations held by the r4-r5 freeze, first driver rows now:
-    "io_format_matrix",  # ORC/CSV/JSON parser matrix (queries/formats.py)
-    "sim_ann_hnsw",  # HNSW coarse-probe ANN tier (queries/graph_ann.py)
-)
-
-_R1_STALE = (
-    # no driver row since round 1 — two fixture regenerations ago
-    # (computed from CORRECTNESS_r01-05)
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_distinct_rows",
-    "agg_grouping_sets",
-    "agg_median",
-    "agg_multicol_count",
-    "agg_no_groupby",
-    "agg_rollup",
-    "agg_stats",
-    "agg_sum0",
-    "join_anti",
-    "join_cross",
-    "join_left",
-    "join_right",
-    "join_semi",
-    "join_theta",
-    "limit_only",
-    "topk",
-    "window_first_last",
-    "window_global",
-    "window_lag_lead",
-    "window_moving_avg",
-    "window_multi_over",
-    "window_range_frame",
-    "window_rank",
-    "window_row_number",
-    "window_running_sum",
-)
-assert len(_R1_STALE) == 27, len(_R1_STALE)
-
-_R2_STALE_FIRST_HALF = (
-    # 18 of the 47 r2-stale rows, semantics-heaviest first; the other 29
-    # queue for r7
-    "asof_join_events",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "events_sessionize",
-    "except_all",
-    "intersect",
-    "join_null_keys_dropped",
-    "orderby_nulls",
-    "sim_ann_ivf",
-    "sim_ann_lsh",
-    "sim_cosine_topk",
-    "sim_near_dup",
-    "tpch_q14",
-    "union_all",
-    "union_distinct",
-    "union_type_coerce",
-)
-assert len(_R2_STALE_FIRST_HALF) == 18, len(_R2_STALE_FIRST_HALF)
-
-_R6_WINDOW = _SENTINELS + _STAGED_R6 + _R1_STALE + _R2_STALE_FIRST_HALF
-assert len(_R6_WINDOW) == _DRIVER_WINDOW, (
-    f"driver window misbudgeted: {len(_R6_WINDOW)} names for "
-    f"{_DRIVER_WINDOW} rows"
-)
-assert len(set(_R6_WINDOW)) == len(_R6_WINDOW), "duplicate in driver window"
-
-# Round-7 window, staged AS CODE in round 6 and PROMOTED round 7 after
-# CORRECTNESS_r06 landed 50/50 green (same discipline as r5→r6 and
-# r6→r7). Composition: the 3 standing _SENTINELS, the
-# r6-registered "dedup_components_incremental" (first driver row), the
-# remaining 29 r2-stale rows (r2 green set minus _R2_STALE_FIRST_HALF),
-# and the 17 alphabetically-first r3-stale rows to fill to exactly 50.
-# After r7, no registered query's latest driver row is older than two
-# rounds, and the rotation settles into alternating halves.
-
-_R2_STALE_SECOND_HALF = (
-    "agg_approx_distinct",
-    "agg_with_nulls",
-    "distinct_with_nulls",
-    "events_json_extract",
-    "events_tumbling_window",
-    "expr_bitwise",
-    "expr_case",
-    "expr_cast",
-    "expr_datetime",
-    "expr_extract",
-    "expr_interval",
-    "expr_is_truth",
-    "expr_literals",
-    "expr_predicates",
-    "expr_rand",
-    "expr_string",
-    "expr_to_timestamp",
-    "multimodal_decode",
-    "multimodal_meta",
-    "multimodal_resize",
-    "nested_struct_ops",
-    "pivot_status",
-    "range_join_orders",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_winnowing",
-    "topk_per_group",
-    "window_nth_value",
-)
-assert len(_R2_STALE_SECOND_HALF) == 29, len(_R2_STALE_SECOND_HALF)
-
-_R3_STALE_FIRST_17 = (
-    "agg_approx_percentile",
-    "agg_corr_covar",
-    "agg_filter_clause",
-    "agg_having",
-    "agg_percentile_cont",
-    "agg_regression",
-    "agg_salted_skew",
-    "dedup_contamination",
-    "docs_chunk",
-    "docs_pack",
-    "events_funnel",
-    "events_hopping_window",
-    "events_trending",
-    "expr_string_pad",
-    "knn_classify",
-    "limit_offset",
-    "multimodal_frames",
-)
-assert len(_R3_STALE_FIRST_17) == 17, len(_R3_STALE_FIRST_17)
-
-_R7_WINDOW = (
-    _SENTINELS
-    + ("dedup_components_incremental",)
-    + _R2_STALE_SECOND_HALF
-    + _R3_STALE_FIRST_17
-)
-assert len(_R7_WINDOW) == _DRIVER_WINDOW, (
-    f"driver window misbudgeted: {len(_R7_WINDOW)} names for "
-    f"{_DRIVER_WINDOW} rows"
-)
-assert len(set(_R7_WINDOW)) == len(_R7_WINDOW), "duplicate in driver window"
-assert not set(_R7_WINDOW[3:]) & set(_R6_WINDOW), (
-    "r7 rotation must not re-check r6-fresh rows (sentinels excepted)"
-)
-
-# Round-8 window, promoted first-commit of round 8 after CORRECTNESS_r07
-# landed 50/50 green (same discipline as r5→r6→r7→r8). Composition: the 3
-# standing _SENTINELS; the 21 never-driver-checked rows — the 19
-# r6-registered queries, `sim_ann_ivf_int8` (r7-registered; ADVICE r7
-# flagged that its oracle gate had no recorded driver run) and
-# `dedup_semantic_bounded` (r8-registered production SemDeDup path); all
-# 19 remaining r3-stale rows (subqueries ×6, PQ/IVF-PQ, tpch_extra ×4,
-# text ops, unpivot, vocab, 2 windows); and the 7 alphabetically-first
-# r4-stale rows to fill to exactly 50. After r8, every registered query
-# has ≥1 driver row and no row's latest check is older than r4.
-
-_NEVER_CHECKED_R8 = (
-    "cdc_apply_orders",
-    "corpus_profile",
-    "dedup_semantic",
-    "dedup_semantic_bounded",
-    "dedup_url_canonical",
-    "docs_ngram_novelty",
-    "docs_tfidf_topk",
-    "docs_token_budget",
-    "emb_quantize_int8",
-    "expr_try_arithmetic",
-    "expr_url_parse",
-    "graph_triangles",
-    "io_webdataset_roundtrip",
-    "multimodal_mp3_meta",
-    "multimodal_mp4_frames",
-    "sample_dsir_weights",
-    "sample_shuffle_head",
-    "sim_ann_ivf_int8",
-    "text_gopher_quality",
-    "text_html_strip",
-    "text_nfc_normalize",
-)
-assert len(_NEVER_CHECKED_R8) == 21, len(_NEVER_CHECKED_R8)
-
-_R3_STALE_REMAINING = (
-    "sim_ann_ivfpq",
-    "sim_ann_pq",
-    "subquery_correlated_scalar",
-    "subquery_exists",
-    "subquery_in",
-    "subquery_not_exists",
-    "subquery_not_in",
-    "subquery_scalar",
-    "text_boilerplate",
-    "text_redact",
-    "text_stopwords",
-    "tpch_q11",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q9",
-    "unpivot_metrics",
-    "vocab_topk",
-    "window_ignore_nulls",
-    "window_range_time",
-)
-assert len(_R3_STALE_REMAINING) == 19, len(_R3_STALE_REMAINING)
-
-_R4_STALE_FIRST_7 = (
-    "agg_grouping_fn",
-    "dedup_components",
-    "dedup_spans",
-    "emb_label_centroids",
-    "events_anomaly",
-    "events_gapfill",
-    "events_retention",
-)
-
-_R8_WINDOW = (
-    _SENTINELS + _NEVER_CHECKED_R8 + _R3_STALE_REMAINING + _R4_STALE_FIRST_7
-)
-assert len(_R8_WINDOW) == _DRIVER_WINDOW, (
-    f"driver window misbudgeted: {len(_R8_WINDOW)} names for "
-    f"{_DRIVER_WINDOW} rows"
-)
-assert len(set(_R8_WINDOW)) == len(_R8_WINDOW), "duplicate in driver window"
-assert not set(_R8_WINDOW[3:]) & set(_R7_WINDOW), (
-    "r8 rotation must not re-check r7-fresh rows (sentinels excepted)"
-)
-
-# Round-9 window, STAGED as code in round 8 (same discipline as every
-# round since r5): promote by swapping it into DRIVER_PRIORITY as r9's
-# first commit ONLY after CORRECTNESS_r08 lands 50/50 green. Composition:
-# the 3 standing sentinels; the 11 rows registered in r8 after the r8
-# window froze (bloom screen, exact+ANN margin mining, unigram seed, KN
-# perplexity, HLL rollup, logistic training, pattern matching, zorder
-# key, domain blocklist, arrow IPC — first driver rows); and the 36
-# alphabetically-first of the 40 remaining r4-stale rows to fill to 50
-# (the last 4 + the r5 block roll to r10). Recount against the live
-# registry at flip time if r9 registers early.
-_NEW_IN_R8 = (
-    "dedup_bloom_incremental",
-    "events_pattern_match",
-    "io_arrow_roundtrip",
-    "ml_logistic_quality",
-    "sim_margin_mine",
-    "sim_margin_mine_ann",
-    "sketch_hll_mergeable",
-    "text_perplexity_kn",
-    "url_domain_blocklist",
-    "vocab_unigram_seed",
-    "zorder_values",
-)
-_R4_STALE_REMAINING = (
-    "except_distinct",
-    "expr_array",
-    "expr_greatest_least",
-    "expr_like_wildcards",
-    "expr_map",
-    "expr_try_cast",
-    "graph_pagerank",
-    "intersect_all",
-    "join_full_outer",
-    "join_inner",
-    "join_nonequi",
-    "join_nullsafe",
-    "merge_upsert_orders",
-    "pipeline_prepare_corpus",
-    "profile_lineitem",
-    "sample_domain_mix",
-    "sample_stratified",
-    "sample_weighted",
-    "shard_assign",
-    "split_assign",
-    "text_bm25",
-    "text_perplexity",
-    "text_repetition",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "window_ratio_to_report",
-)
-assert len(_R4_STALE_REMAINING) == 40, len(_R4_STALE_REMAINING)
-_R9_WINDOW_STAGED = _SENTINELS + _NEW_IN_R8 + _R4_STALE_REMAINING[:36]
-assert len(_R9_WINDOW_STAGED) == _DRIVER_WINDOW, len(_R9_WINDOW_STAGED)
-assert len(set(_R9_WINDOW_STAGED)) == len(_R9_WINDOW_STAGED)
-assert not set(_R9_WINDOW_STAGED[3:]) & set(_R8_WINDOW), (
-    "r9 rotation must not re-check r8-fresh rows (sentinels excepted)"
-)
-
-# Round-10 window, STAGED as code in the round-8 extension session (the
-# same stage-ahead discipline as _R9_WINDOW_STAGED): promote by swapping
-# into DRIVER_PRIORITY as r10's first commit ONLY after CORRECTNESS_r09
-# lands 50/50 green. Composition: the 3 standing sentinels; the 22 rows
-# registered AFTER the r9 freeze (first driver rows — KN trigram, span
-# rewrite, PCA project, categorical/target encoders, CMS, temperature
-# mix, phrase tags, MMR, PCA-routed IVF, WordPiece first-merge, entity
-# resolution, LSH eval, image dHash + its banded dedup, AUC, audio
-# fingerprint, bin pack, Holt forecast); the 4 r4-stale rolled past r9;
-# and the 21 alphabetically-first of the 47 r5-stale rows to fill to 50 Recount at
-# flip time if r9/r10 register early.
-_NEW_POST_R9_FREEZE = (
-    "io_uint_widening",  # registered r9 (uint widening policy row)
-    "events_match_recognize",  # registered r9 (SQL:2016 spelling row)
-    "sketch_ddsketch_quantiles",  # registered r9 (mergeable quantiles)
-    "text_perplexity_kn3",
-    "dedup_spans_rewrite",
-    "emb_pca_project",
-    "encode_categorical",
-    "encode_target_smoothed",
-    "sketch_cms_counts",
-    "sample_temperature_mix",
-    "text_phrase_tags",
-    "sim_mmr_rerank",
-    "sim_ann_ivf_pca",
-    "vocab_wordpiece_first",
-    "dedup_entity_resolution",
-    "dedup_lsh_eval",
-    "multimodal_dhash",
-    "ml_auc_eval",
-    "multimodal_audio_fp",
-    "docs_bin_pack",
-    "multimodal_dhash_dedup",
-    "events_holt_forecast",
-)
-_R4_STALE_ROLLED = ("tpch_q6", "tpch_q7", "tpch_q8", "window_ratio_to_report")
-_R5_STALE_FIRST_24 = (
-    "agg_bool_bit",
-    "agg_count_if",
-    "agg_equidepth",
-    "agg_group_by_all",
-    "agg_histogram",
-    "agg_mad_outliers",
-    "agg_mode",
-    "agg_skew_kurt",
-    "agg_string_agg",
-    "agg_winsorize",
-    "asof_forward_events",
-    "asof_nearest_events",
-    "asof_tolerance_events",
-    "dedup_canonicalize",
-    "docs_feature_hash",
-    "docs_tokenize_ids",
-    "emb_normalize",
-    "events_ab_test",
-    "events_attribution",
-    "events_ewma",
-    "events_interpolate",
-    # events_markov + events_ohlc + events_top_paths roll to r11: the
-    # r9-new rows (uint widening, match_recognize, ddsketch) took slots.
-    # events_mr_navigation + events_mr_skip_overlap + events_mr_permute
-    # + events_mr_all_rows + sketch_hll_intersect + sim_ann_filtered
-    # + sample_negatives
-    # (registered
-    # post-r10-freeze in the r9 extension session) also roll to r11.
-)
-_R10_WINDOW_STAGED = (
-    _SENTINELS + _NEW_POST_R9_FREEZE + _R4_STALE_ROLLED + _R5_STALE_FIRST_24
-)
-assert len(_R10_WINDOW_STAGED) == _DRIVER_WINDOW, len(_R10_WINDOW_STAGED)
-assert len(set(_R10_WINDOW_STAGED)) == len(_R10_WINDOW_STAGED)
-assert not set(_R10_WINDOW_STAGED[3:]) & set(_R9_WINDOW_STAGED), (
-    "r10 rotation must not re-check r9-fresh rows (sentinels excepted)"
-)
-assert not set(_R10_WINDOW_STAGED[3:]) & set(_R8_WINDOW), (
-    "r10 rotation must not re-check r8-fresh rows (sentinels excepted)"
-)
-
-# Round-11 window, STAGED as code in round 10 (the proven stage-ahead
-# discipline): promote by swapping into DRIVER_PRIORITY as r11's first
-# commit ONLY after CORRECTNESS_r10 lands 50/50 green. Composition: the
-# 3 standing sentinels; the 8 rows that have NEVER had a driver row
-# (the r9-extension MATCH_RECOGNIZE block, HLL intersection, filtered
-# ANN ×2 incl. the r10-registered HNSW tier, negative sampling); the 26
-# rows last driver-checked in r5 (oldest-stale — includes the rolled
-# events_markov/ohlc/top_paths); and the 13 alphabetically-first of the
-# 47 r6-stale rows to fill to 50. Recount at flip time if r10/r11
-# register more rows — NEW registrations take slots from the r6 fill.
-_NEVER_DRIVER_CHECKED_R10 = (
-    "events_mr_navigation",
-    "events_mr_permute",
-    "events_mr_skip_overlap",
-    "events_mr_all_rows",
-    "events_mr_measure_expr",  # registered r10 (arithmetic measures)
-    "events_mr_exclusion",  # registered r10 ({- -} exclusion)
-    "events_mr_unmatched",  # registered r10 (WITH UNMATCHED ROWS)
-    "sample_negatives",
-    "sim_ann_filtered",
-    "sim_ann_filtered_hnsw",
-    "sketch_hll_intersect",
-)
-_R5_STALE_FOR_R11 = (
-    "events_markov",
-    "events_ohlc",
-    "events_top_paths",
-    "events_twap",
-    "events_window_approx_distinct",
-    "expr_array_setops",
-    "expr_bit_shift",
-    "expr_collation",
-    "expr_date_format",
-    "expr_json",
-    "expr_levenshtein",
-    "expr_regexp_extract",
-    "expr_split_part",
-    "expr_variant",
-    "interval_join_events",
-    "join_fuzzy_names",
-    "join_lateral",
-    "ml_linear_probe",
-    "pivot_native",
-    "rag_hybrid_rrf",
-    "sample_weighted_es",
-    "scd2_orders",
-    "sketch_heavy_hitters",
-    "sql_recursive_cte",
-    "vocab_bpe_pairs",
-    "window_ntile",
-)
-# Rows whose SQL changed in r11 to de-vacuate them (VERDICT r10 "What's
-# wrong" #1: their oracles returned 0 rows at every SF, so prior green
-# rows only proved both engines agree on empty). Semantics changed →
-# they MUST be re-driver-checked, taking r6-fill slots per the recount
-# rule, and they are exempt from the no-re-check asserts below (their
-# prior green rows no longer attest the current SQL).
-_DEVACUATED_R11 = (
-    "tpch_q7",
-    "tpch_q22",
-    # tpch_q11: the r11 vacuity assert caught it empty at sf0.1 ONLY
-    # (fixed 0.001 share threshold vs 20k parts); the HAVING fraction is
-    # now adaptive (1.2/COUNT(part)) — SQL changed, so it re-checks
-    "tpch_q11",
-    "join_anti",
-    "subquery_not_exists",
-    "subquery_scalar",
-    "except_all",
-    "except_distinct",
-)
-_R6_STALE_FILL = (
-    "agg_count_distinct",
-    "agg_cube",
-    # agg_distinct_rows + agg_grouping_sets + agg_median +
-    # agg_multicol_count + agg_no_groupby + agg_rollup + agg_stats +
-    # agg_sum0 dropped from the fill: the 8 de-vacuated rows above take
-    # their slots, per the recount rule (asof_join_events + dedup_exact
-    # + dedup_jaccard were already dropped in r10 for the r10-registered
-    # MR rows)
-)
-_R11_WINDOW_STAGED = (
-    _SENTINELS
-    + _NEVER_DRIVER_CHECKED_R10
-    + _DEVACUATED_R11
-    + _R5_STALE_FOR_R11
-    + _R6_STALE_FILL
-)
-assert len(_R11_WINDOW_STAGED) == _DRIVER_WINDOW, len(_R11_WINDOW_STAGED)
-assert len(set(_R11_WINDOW_STAGED)) == len(_R11_WINDOW_STAGED)
-assert not (
-    set(_R11_WINDOW_STAGED[3:]) - set(_DEVACUATED_R11)
-) & set(_R10_WINDOW_STAGED), (
-    "r11 rotation must not re-check r10-fresh rows (sentinels and "
-    "SQL-changed de-vacuated rows excepted)"
-)
-assert not (
-    set(_R11_WINDOW_STAGED[3:]) - set(_DEVACUATED_R11)
-) & set(_R9_WINDOW_STAGED), (
-    "r11 rotation must not re-check r9-fresh rows (sentinels and "
-    "SQL-changed de-vacuated rows excepted)"
-)
-
-# Round-12 window, STAGED as code in round 11 (the stage-ahead
-# discipline): promote by swapping into DRIVER_PRIORITY as r12's first
-# commit ONLY after CORRECTNESS_r11 lands 50/50 green. Composition: the
-# 3 standing sentinels; the 2 rows REGISTERED in r11 (filtered serving
-# on the flat-PQ and multi-probe-LSH tiers — never driver-checked); the
-# 42 rows last driver-checked in r6 (oldest-stale after the r11 flip);
-# and the 3 alphabetically-first of the 47 r7-stale rows to fill to 50.
-# Recount at flip time if r12 registers more rows — NEW registrations
-# take slots from the r7 fill.
-_NEW_R11_REGISTRATIONS = (
-    "sim_ann_filtered_pq",
-    "sim_ann_filtered_lsh",
-    # nondeterministic symbol assignment differential (the r11-lifted
-    # first-true restriction) — took agg_corr_covar's r7-fill slot per
-    # the recount rule
-    "events_mr_nondeterministic",
-    # ^ partition anchor composed with ambiguous DEFINEs — took
-    # agg_approx_distinct's r7-fill slot
-    "events_mr_anchors",
-)
-_R6_STALE_FOR_R12 = (
-    # agg_distinct_rows: displaced from the r11 fill by the tpch_q11
-    # de-vacuation swap, so it stays r6-stale and rolls here
-    "agg_distinct_rows",
-    "agg_grouping_sets",
-    "agg_median",
-    "agg_multicol_count",
-    "agg_no_groupby",
-    "agg_rollup",
-    "agg_stats",
-    "agg_sum0",
-    "asof_join_events",
-    "dedup_exact",
-    "dedup_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "events_sessionize",
-    "intersect",
-    "io_format_matrix",
-    "join_cross",
-    "join_left",
-    "join_null_keys_dropped",
-    "join_right",
-    "join_semi",
-    "join_theta",
-    "limit_only",
-    "orderby_nulls",
-    "sim_ann_hnsw",
-    "sim_ann_ivf",
-    "sim_ann_lsh",
-    "sim_cosine_topk",
-    "sim_near_dup",
-    "topk",
-    "tpch_q14",
-    "union_all",
-    "union_distinct",
-    "union_type_coerce",
-    "window_first_last",
-    "window_global",
-    "window_lag_lead",
-    "window_moving_avg",
-    "window_multi_over",
-    "window_range_frame",
-    "window_rank",
-    "window_row_number",
-    "window_running_sum",
-)
-_R7_STALE_FILL = (
-    # emptied by the recount rule: agg_corr_covar's slot went to
-    # events_mr_nondeterministic, agg_approx_percentile's to the
-    # displaced agg_distinct_rows (r6-stale, older), and
-    # agg_approx_distinct's to events_mr_anchors
-)
-_R12_WINDOW_STAGED = (
-    _SENTINELS
-    + _NEW_R11_REGISTRATIONS
-    + _R6_STALE_FOR_R12
-    + _R7_STALE_FILL
-)
-assert len(_R12_WINDOW_STAGED) == _DRIVER_WINDOW, len(_R12_WINDOW_STAGED)
-assert len(set(_R12_WINDOW_STAGED)) == len(_R12_WINDOW_STAGED)
-assert not set(_R12_WINDOW_STAGED[3:]) & set(_R11_WINDOW_STAGED), (
-    "r12 rotation must not re-check r11-fresh rows (sentinels excepted)"
-)
-assert not set(_R12_WINDOW_STAGED[3:]) & set(_R10_WINDOW_STAGED), (
-    "r12 rotation must not re-check r10-fresh rows (sentinels excepted)"
-)
-
-# Round-13 window, STAGED as code in round 12 (the stage-ahead
-# discipline): promote by swapping into DRIVER_PRIORITY as r13's first
-# commit ONLY after CORRECTNESS_r12 lands 50/50 green. With the r12
-# flip draining the last never-driver-checked rows, rotation is now
-# oldest-stale re-verification: the 3 standing sentinels + the r12
-# registrations (never driver-checked — they take slots from the tail
-# of the r7-stale list per the recount rule; the displaced rows roll
-# to r14 as the then-oldest) + the rows last driver-checked in r7.
-_NEW_R12_REGISTRATIONS = (
-    # nondeterministic assignment WITH navigation in DEFINE (the
-    # per-thread scanner landed r12) and PREV/NEXT navigation inside
-    # MEASURES; judge-verifiable via tools/check_queries.py at all
-    # three SFs
     "events_mr_nav_nondeterministic",
     "events_mr_measure_nav",
-)
-_R7_STALE_FOR_R13 = (
-    "dedup_components_incremental",
     "agg_approx_distinct",
-    "agg_with_nulls",
-    "distinct_with_nulls",
-    "events_json_extract",
+    "agg_approx_percentile",
     "events_tumbling_window",
-    "expr_bitwise",
-    "expr_case",
-    "expr_cast",
-    "expr_datetime",
-    "expr_extract",
-    "expr_interval",
-    "expr_is_truth",
-    "expr_literals",
-    "expr_predicates",
-    "expr_rand",
-    "expr_string",
-    "expr_to_timestamp",
-    "multimodal_decode",
-    "multimodal_meta",
-    "multimodal_resize",
-    "nested_struct_ops",
+    "events_json_extract",
     "pivot_status",
     "range_join_orders",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_winnowing",
     "topk_per_group",
     "window_nth_value",
-    "agg_approx_percentile",
-    "agg_corr_covar",
-    "agg_filter_clause",
+    "agg_with_nulls",
+    "distinct_with_nulls",
+    "limit_offset",
     "agg_having",
     "agg_percentile_cont",
-    "agg_regression",
+    "agg_filter_clause",
     "agg_salted_skew",
-    "dedup_contamination",
-    "docs_chunk",
-    "docs_pack",
+    "agg_corr_covar",
+    "agg_regression",
     "events_funnel",
-    "events_hopping_window",
-    "events_trending",
+    "expr_predicates",
+    "expr_string",
+    "expr_datetime",
+    "expr_extract",
+    "expr_case",
+    "expr_cast",
+    "expr_bitwise",
+    "expr_interval",
+    "expr_is_truth",
+    "expr_to_timestamp",
+    "expr_rand",
+    "expr_literals",
     "expr_string_pad",
+    "text_quality",
+    "text_langid",
+    "text_fingerprint",
+    "docs_pack",
+    "multimodal_meta",
+    "multimodal_decode",
+    "nested_struct_ops",
+    "text_winnowing",
+    "multimodal_resize",
+    "docs_chunk",
+    "dedup_contamination",
+    "events_trending",
+    "events_hopping_window",
     "knn_classify",
-    # limit_offset and multimodal_frames displaced to r14 by the two
-    # r12 registrations (the recount-at-flip rule)
 )
-_R13_WINDOW_STAGED = (
-    _SENTINELS + _NEW_R12_REGISTRATIONS + _R7_STALE_FOR_R13
-)
-assert len(_R13_WINDOW_STAGED) == _DRIVER_WINDOW, len(_R13_WINDOW_STAGED)
-assert len(set(_R13_WINDOW_STAGED)) == len(_R13_WINDOW_STAGED)
-assert not set(_R13_WINDOW_STAGED[3:]) & set(_R12_WINDOW_STAGED), (
-    "r13 rotation must not re-check r12-fresh rows (sentinels excepted)"
-)
-assert not set(_R13_WINDOW_STAGED[3:]) & set(_R11_WINDOW_STAGED), (
-    "r13 rotation must not re-check r11-fresh rows (sentinels excepted)"
-)
-
-# Past the window, queue the freshest-green rows first (r11, then r10, …)
-# so any driver overflow re-checks the most recently verified work.
-# PROMOTED for round 12 (CORRECTNESS_r11 landed 50/50 green, zero err —
-# the promotion precondition documented above _R12_WINDOW_STAGED). This
-# drains the last 4 never-driver-checked rows (_NEW_R11_REGISTRATIONS)
-# plus the 42 r6-stale rows, closing the registry→driver gap to zero.
-DRIVER_PRIORITY = _R12_WINDOW_STAGED + tuple(
-    # dict.fromkeys dedupes while keeping first (freshest-round) position:
-    # the r11..r4 windows overlap heavily, and a duplicated overflow slot
-    # would re-check the same row twice instead of reaching older rows
-    n
-    for n in dict.fromkeys(
-        _R11_WINDOW_STAGED
-        + _R10_WINDOW_STAGED
-        + _R9_WINDOW_STAGED
-        + _R8_WINDOW
-        + _R7_WINDOW
-        + _R6_WINDOW
-        + _R5_WINDOW
-        + _R4_WINDOW
-    )
-    if n not in _R12_WINDOW_STAGED
-)
-assert len(set(DRIVER_PRIORITY)) == len(DRIVER_PRIORITY)
 
 
 def all_queries() -> dict[str, QuerySpec]:
@@ -1077,11 +315,6 @@ def all_queries() -> dict[str, QuerySpec]:
         for mod in _QUERY_MODULES:
             importlib.import_module(mod)
         _loaded = True
-    ordered: dict[str, QuerySpec] = {}
-    for name in DRIVER_PRIORITY:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, spec in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
+    ordered = {name: REGISTRY[name] for name in DRIVER_ORDER}
+    ordered.update(REGISTRY)
     return ordered

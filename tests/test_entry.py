@@ -2,7 +2,22 @@
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import subprocess
+import sys
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 import __spark_entry__ as entry_mod
+from blazingsql_spark.queries import registry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SENTINELS = ("expr_math", "text_stats", "tpch_q1")
 
 
 def test_contract_shapes():
@@ -38,3 +53,60 @@ def test_every_oracle_parses_in_duckdb(oracle):
 
     for name, sql in e.oracle_sql().items():
         oracle.execute(f"EXPLAIN {sql}")
+
+
+def _registration_order() -> list[str]:
+    """REGISTRY order as a fresh process builds it. In this process a test
+    module may have imported a query module early, which reorders it."""
+    code = (
+        "from blazingsql_spark.queries.registry import REGISTRY, all_queries\n"
+        "all_queries()\n"
+        "print('\\n'.join(REGISTRY))"
+    )
+    out = subprocess.run([sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True)
+    return out.stdout.split()
+
+
+def test_driver_order():
+    """DRIVER_ORDER is the 3 sentinels, then the 47 rows whose latest
+    appearance in a committed CORRECTNESS_r*.json is oldest (ties by
+    registration order), and it leads queries()."""
+    last_round: dict[str, int] = {}
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                last_round[name] = max(last_round.get(name, 0), rnd)
+    rest = [n for n in _registration_order() if n not in SENTINELS]
+    rest.sort(key=lambda n: last_round.get(n, 0))  # stable: ties keep registration order
+    expected = SENTINELS + tuple(rest[:47])
+    body = "".join(f'    "{n}",\n' for n in expected)
+    assert expected == registry.DRIVER_ORDER, f"regenerate registry.py's tuple:\nDRIVER_ORDER = (\n{body})"
+
+    registered = registry.all_queries()
+    assert len(set(registry.DRIVER_ORDER)) == len(registry.DRIVER_ORDER) == 50
+    assert set(registry.DRIVER_ORDER) <= set(registered)
+    qs = entry_mod.queries()
+    assert list(qs)[:50] == list(registry.DRIVER_ORDER)
+    assert len(qs) == 281
+
+
+def test_scan_meta_unknown_layout_falls_back(tmp_path, monkeypatch):
+    """A directory or a truncated file has no readable footer: _scan_meta
+    assumes the scan is parallel enough (no Spark needed to get there).
+    Any other error is a bug and propagates."""
+    good = tmp_path / "good.parquet"
+    pq.write_table(pa.table({"a": list(range(100))}), good)
+    truncated = tmp_path / "truncated.parquet"
+    truncated.write_bytes(good.read_bytes()[:-10])
+    directory = tmp_path / "dir.parquet"
+    directory.mkdir()
+    for path in (directory, truncated):
+        assert registry._scan_meta(None, str(path)) == (1 << 30, 1 << 62)
+
+    def broken(_path):
+        raise RuntimeError("not a footer error")
+
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    with pytest.raises(RuntimeError):
+        registry._scan_meta(None, str(good))

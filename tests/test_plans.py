@@ -522,7 +522,7 @@ def test_streaming_microbatch_plan_budgets(spark, tmp_path):
     """r13 (VERDICT r12 #6): the streaming maintainers' per-batch compute
     bodies keep their measured exchange budgets — a regression adding a
     shuffle to a path that runs once per micro-batch multiplies into
-    every epoch forever. Budgets measured by tools/r13_stream_audit.py
+    every epoch forever. Budgets measured by `tools/prof.py stream`
     (plans committed under plans/r13/stream_*_plan.txt)."""
     from pyspark.sql import functions as F
 

@@ -36,19 +36,6 @@ def main() -> int:
     from tests.conftest import compare_frames
 
     spark = get_spark(app_name="check_queries", master="local[8]")
-    # staged-for-next-round modules (not in registry._QUERY_MODULES yet)
-    # self-register on import so their names are checkable here too
-    for staged in (
-        "blazingsql_spark.queries.formats",
-        "blazingsql_spark.queries.graph_ann",
-        "blazingsql_spark.queries.graph_inc",
-    ):
-        try:
-            __import__(staged)
-        except ImportError as e:
-            # surface it — this tool exists to debug staged queries, and a
-            # silent skip turns a broken module into a bare KeyError below
-            print(f"WARN: staged module {staged} failed to import: {e}")
     specs = all_queries()
     bad = 0
     for sf in sf_dirs:

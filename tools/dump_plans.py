@@ -1,14 +1,17 @@
-"""Regenerate named query sections of PLANS.md from live
-`.explain("formatted")` output at sf0.001, so plan quality stays
-reviewable without running Spark.
+"""Dump `.explain("formatted")` of registry rows at sf0.001 (plan shape,
+not data volume, is what is recorded), so plan quality stays reviewable
+without running Spark.
 
-Usage: python tools/dump_plans.py name1 name2 ...
-Replaces each existing `## name` section in place (or appends missing
-ones at the end).
+Usage:
+  python tools/dump_plans.py name [name ...]
+      replace each `## name` section of PLANS.md in place (or append it)
+  python tools/dump_plans.py --dir DIR --tag TAG [name ...]
+      write plans/DIR/<name>_TAG.txt; with no names, every headline row
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -16,31 +19,50 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+TESTDATA = "/root/testdata"  # fixture root, see TESTDATA.md
+
+
+def plan_text(df) -> str:
+    """Formatted physical plan. Control chars from plan literals (e.g.
+    match_recognize's NUL classification sentinel) are escaped so the
+    dump stays a text file."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return "".join(ch if ch.isprintable() or ch in "\n\t" else f"\\x{ord(ch):02x}" for ch in plan)
+
 
 def main() -> int:
-    names = sys.argv[1:]
-    if not names:
-        print("usage: dump_plans.py name [name ...]")
-        return 2
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--dir", help="write plans/DIR/<name>_TAG.txt instead of PLANS.md")
+    ap.add_argument("--tag", help="file suffix in --dir mode, e.g. before/after")
+    args = ap.parse_args()
+    if (args.dir is None) != (args.tag is None):
+        ap.error("--dir and --tag go together")
+    if args.dir is None and not args.names:
+        ap.error("PLANS.md mode needs at least one name")
 
     from blazingsql_spark.queries.registry import all_queries
     from blazingsql_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans", master="local[4]")
     specs = all_queries()
+    names = args.names or sorted(n for n, s in specs.items() if s.headline)
+    plans = {name: plan_text(specs[name].fn(spark, f"{TESTDATA}/sf0.001")) for name in names}
+
+    if args.dir is not None:
+        outdir = os.path.join(REPO, "plans", args.dir)
+        os.makedirs(outdir, exist_ok=True)
+        for name, plan in plans.items():
+            path = os.path.join(outdir, f"{name}_{args.tag}.txt")
+            with open(path, "w") as f:
+                f.write(plan.rstrip() + "\n")
+            print(f"wrote {path}")
+        return 0
+
     path = os.path.join(REPO, "PLANS.md")
-    text = open(path).read()
-    for name in names:
-        df = specs[name].fn(spark, "/root/testdata/sf0.001")
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # control chars from plan literals (e.g. match_recognize's NUL
-        # classification sentinel) would make PLANS.md a binary file
-        plan = "".join(
-            ch if ch.isprintable() or ch in "\n\t" else f"\\x{ord(ch):02x}"
-            for ch in plan
-        )
+    with open(path) as f:
+        text = f.read()
+    for name, plan in plans.items():
         section = f"## {name}\n\n```\n{plan.rstrip()}\n```\n"
         pat = re.compile(rf"## {re.escape(name)}\n.*?(?=\n## |\Z)", re.S)
         if pat.search(text):
@@ -51,7 +73,8 @@ def main() -> int:
         else:
             text = text.rstrip() + "\n\n" + section
             print(f"appended: {name}")
-    open(path, "w").write(text)
+    with open(path, "w") as f:
+        f.write(text)
     return 0
 
 
