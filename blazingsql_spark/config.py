@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # reference option (context.py:1239-1266) → (spark conf, transform) | None
@@ -73,9 +74,10 @@ def apply_config_options(spark: SparkSession, options: dict[str, Any]) -> dict[s
         if mapping is None:
             continue
         conf, cast = mapping
+        setting = str(cast(value))
         try:
-            spark.conf.set(conf, str(cast(value)))
+            spark.conf.set(conf, setting)
             applied[key] = conf
-        except Exception:  # read-only confs (executor cores on a live session)
+        except AnalysisException:  # a conf a live session may not change
             applied[key] = f"{conf} (static — set at session build)"
     return applied

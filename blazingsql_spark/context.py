@@ -22,6 +22,7 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from blazingsql_spark.session import get_spark
@@ -224,8 +225,8 @@ class Context:
         names = set(self._tables)
         try:
             names.update(t.name for t in self.spark.catalog.listTables())
-        except Exception:
-            pass
+        except AnalysisException:
+            pass  # current schema dropped since: only this context's tables are left
         return sorted(names)
 
     def describe_table(self, table_name: str) -> dict[str, str]:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -719,8 +720,8 @@ def _cache_flt_ids(flt_ids: DataFrame) -> DataFrame:
     if prev is not None:
         try:
             prev.unpersist()
-        except Exception:
-            pass  # session torn down since: nothing left to evict
+        except Py4JError:
+            pass  # session stopped or its JVM gone since: nothing left to evict
     flt_ids = flt_ids.cache()
     _FLT_ID_CACHE[key] = flt_ids
     return flt_ids

@@ -29,20 +29,21 @@ def _parquet_readable(spark: SparkSession, path: str) -> bool:
     masking those as "no index yet" would silently disable the dedup
     screen for every later batch and permanently append known duplicates
     to the corpus. Same discipline as operators/forget.py and
-    ComponentsIngest._snapshots.
+    ComponentsIngest._snapshots. A missing path is answered by the Hadoop
+    FileSystem before any read: ``spark.read`` on it would log a WARN with
+    a full FileNotFoundException trace on every first epoch.
     """
     from pyspark.errors import AnalysisException
 
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(jpath):
+        return False
     try:
         spark.read.parquet(path)
         return True
     except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return False
         raise
 

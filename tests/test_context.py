@@ -34,6 +34,20 @@ def test_create_table_from_pandas_and_df(bc):
     assert bc.sql("SELECT SUM(b) AS s FROM df_t").first()["s"] == 12
 
 
+def test_list_tables_survives_a_dropped_current_schema(bc):
+    """With the current schema dropped, the catalog listing raises
+    AnalysisException; list_tables falls back to this context's tables."""
+    bc.create_table("lt_keep", pd.DataFrame({"a": [1]}))
+    bc.spark.sql("CREATE DATABASE IF NOT EXISTS lt_gone")
+    bc.spark.sql("USE lt_gone")
+    try:
+        bc.spark.sql("DROP DATABASE lt_gone CASCADE")
+        assert "lt_keep" in bc.list_tables()
+    finally:
+        bc.spark.sql("USE default")
+        bc.drop_table("lt_keep")
+
+
 def test_async_token(bc):
     bc.create_table("ord", f"{SF_DIR}/orders.parquet")
     token = bc.sql("SELECT COUNT(*) AS n FROM ord", return_token=True)

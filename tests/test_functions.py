@@ -113,6 +113,25 @@ def test_apply_config_options(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
 
 
+def test_static_confs_are_reported_not_swallowed(spark):
+    """A conf a live session may not change raises AnalysisException: the
+    codegen cache size is one (get_spark sets it at build), and
+    apply_config_options reports such a conf as static. Any other failure,
+    such as a value that does not cast, propagates."""
+    from pyspark.errors import AnalysisException
+
+    from blazingsql_spark.session import _DEFAULTS
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    with pytest.raises(AnalysisException, match="CANNOT_MODIFY_STATIC_CONFIG"):
+        spark.conf.set(key, "10")
+    assert spark.conf.get(key) == _DEFAULTS[key]
+    applied = apply_config_options(spark, {"MAX_KERNEL_RUN_THREADS": 2})
+    assert applied == {"MAX_KERNEL_RUN_THREADS": "spark.executor.cores (static — set at session build)"}
+    with pytest.raises(ValueError):
+        apply_config_options(spark, {"JOIN_PARTITION_SIZE_THRESHOLD": "400MB"})
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     from pyspark.sql import functions as F
 

@@ -567,3 +567,39 @@ def test_streaming_microbatch_plan_budgets(spark, tmp_path):
     D.build_signature_index(batch, idx_path, "text", "doc_id", 8, 4, 2)
     pairs = D.incremental_near_dup_check(spark, batch, idx_path, "text", "doc_id", 8, 4, 2)
     assert exchange_count(pairs) <= 6, exchange_count(pairs)
+
+
+# TPC-H texts whose generated classes are the same on every execution. q2
+# and q20 are left out: AQE numbers their codegen stages in the order
+# concurrent stages finish, and the number is part of the class source
+# (see the codegen cache comment in session.py).
+_CODEGEN_REPEAT_ROWS = ("tpch_q5", "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q11", "tpch_q21")
+
+
+def test_repeat_executions_reuse_generated_classes(spark):
+    """A repeated query compiles nothing: the session's codegen cache
+    (session._DEFAULTS) holds the generated classes of a group of TPC-H
+    texts whose working set is larger than Spark's 100-entry default, so
+    the second round of the group makes 0 Janino compiles."""
+    from blazingsql_spark.context import Context
+    from blazingsql_spark.session import codegen_stats
+
+    bc = Context(spark=spark)
+    for t in ("region", "nation", "customer", "supplier", "part", "orders", "lineitem"):
+        bc.create_table(t, f"{SF_DIR}/{t}.parquet")
+    texts = [all_queries()[name].fn.sql for name in _CODEGEN_REPEAT_ROWS]
+    # start cold, so the first round compiles the group's whole working set
+    field = spark._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).invalidateAll()
+
+    compiles = []
+    for _ in range(2):
+        before = codegen_stats(spark).compiles
+        for text in texts:
+            bc.sql(text).write.format("noop").mode("overwrite").save()
+        compiles.append(codegen_stats(spark).compiles - before)
+    assert compiles[0] > 100, compiles
+    assert compiles[1] == 0, compiles

@@ -1378,8 +1378,15 @@ def test_parquet_probe_distinguishes_absent_from_broken(spark, tmp_path):
 
     from blazingsql_spark.streaming.ingest import BloomCorpusIngest, _parquet_readable
 
-    # absent path and empty directory: legitimate "not yet" cases
-    assert not _parquet_readable(spark, str(tmp_path / "never_created"))
+    # absent path and empty directory: legitimate "not yet" cases. The
+    # absent path is answered without a Spark read, which would log a WARN
+    # with a FileNotFoundException trace on every first epoch.
+    def no_read(_):
+        raise AssertionError("absent path probed through spark.read")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(type(spark), "read", property(no_read))
+        assert not _parquet_readable(spark, str(tmp_path / "never_created"))
     (tmp_path / "empty").mkdir()
     assert not _parquet_readable(spark, str(tmp_path / "empty"))
 

@@ -8,8 +8,15 @@ Row mode runs each row once untimed (JIT, resident indexes), then N timed
 runs. DataFrame construction and execution (planning + noop sink) run
 under separate Spark job groups, and each timed run prints:
 construction seconds and jobs, planning seconds, execution seconds, jobs
-and stages, and the input and shuffle bytes. Stages and bytes come from
-the session's own Spark event log, parsed with perfbench/spans.py.
+and stages, the input and shuffle bytes, and the run's code generation
+cost: Janino compiles (Spark's CodegenMetrics; 0 when every generated
+class came from Spark's codegen cache) and JIT compile milliseconds (the
+JVM's CompilationMXBean; the JIT compiles in background threads, so the
+split between runs is approximate). Stages and bytes come from the
+session's own Spark event log, parsed with perfbench/spans.py. A last
+line gives the session's totals, warm-up runs included: Janino compiles
+(with a large enough codegen cache, the rows' working set of generated
+classes), JIT milliseconds, and the JIT code cache's peak.
 
 Stream mode drives every streaming maintainer directly with sf0.001
 fixture batches (epoch 0 = cold build, later epochs = steady state) and
@@ -55,7 +62,7 @@ def profile_rows(args) -> int:
 
     from blazingsql_spark.queries.pipeline import reset_resident_indexes
     from blazingsql_spark.queries.registry import all_queries
-    from blazingsql_spark.session import get_spark
+    from blazingsql_spark.session import codegen_stats, get_spark
 
     event_dir = tempfile.mkdtemp(prefix="prof_events_")
     spark = get_spark(
@@ -69,11 +76,12 @@ def profile_rows(args) -> int:
     )
     sc = spark.sparkContext
     specs = all_queries()
-    runs = []  # (row, rep, construct_s, plan_s, exec_s)
+    runs = []  # (row, rep, construct_s, plan_s, exec_s, compiles, jit_ms)
     for name in args.rows:
         spec = specs[name]
         spec.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         for rep in range(1, args.reps + 1):
+            cg0 = codegen_stats(spark)
             with job_group(sc, f"{name}:{rep}|construct"):
                 t0 = time.perf_counter()
                 df = spec.fn(spark, args.sf_dir)
@@ -83,9 +91,13 @@ def profile_rows(args) -> int:
                 t2 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 t3 = time.perf_counter()
-            runs.append((name, rep, t1 - t0, t2 - t1, t3 - t2))
+            cg1 = codegen_stats(spark)
+            runs.append(
+                (name, rep, t1 - t0, t2 - t1, t3 - t2, cg1.compiles - cg0.compiles, cg1.jit_ms - cg0.jit_ms)
+            )
         spark.catalog.clearCache()
         reset_resident_indexes()
+    total = codegen_stats(spark)
     spark.stop()  # flushes the event log
 
     def attribute(group, _submit_ms):
@@ -93,7 +105,7 @@ def profile_rows(args) -> int:
 
     counters = job_counters(read_event_log(event_dir), attribute)
     shutil.rmtree(event_dir, ignore_errors=True)
-    for name, rep, construct_s, plan_s, exec_s in runs:
+    for name, rep, construct_s, plan_s, exec_s, compiles, jit_ms in runs:
         c = counters.get((f"{name}:{rep}", "construct"), {})
         e = counters.get((f"{name}:{rep}", "exec"), {})
         print(
@@ -104,9 +116,15 @@ def profile_rows(args) -> int:
             f"input {c.get('input_bytes', 0) + e.get('input_bytes', 0):.0f} B / "
             f"{c.get('input_records', 0) + e.get('input_records', 0):.0f} rec  "
             f"shuffle write {c.get('shuffle_write_bytes', 0) + e.get('shuffle_write_bytes', 0):.0f} B "
-            f"read {c.get('shuffle_read_bytes', 0) + e.get('shuffle_read_bytes', 0):.0f} B",
+            f"read {c.get('shuffle_read_bytes', 0) + e.get('shuffle_read_bytes', 0):.0f} B  "
+            f"janino {compiles} compiles  jit {jit_ms} ms",
             flush=True,
         )
+    print(
+        f"session: janino {total.compiles} compiles  jit {total.jit_ms} ms  "
+        f"code cache peak {total.code_cache_peak_mb:.0f} MB",
+        flush=True,
+    )
     return 0
 
 
