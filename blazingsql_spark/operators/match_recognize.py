@@ -1,97 +1,71 @@
-"""MATCH_RECOGNIZE — the SQL spelling of row-pattern matching, mapped
-onto the repo's CEP core (streaming/patterns.py compiles the same
-pattern syntax to a Thompson NFA; queries/relational.py carries the
-regexp-shaped batch twin `events_pattern_match`).
+"""MATCH_RECOGNIZE — the SQL spelling of row-pattern matching, run on
+the repo's one row-pattern scanner (streaming/patterns.py compiles the
+PATTERN to a Thompson NFA and scan_rows steps it over rows;
+queries/relational.py carries the regexp-shaped batch twin
+`events_pattern_match`).
 
 The reference engine has no row-pattern surface at all (its Calcite
 fork parses none of SQL:2016 §R; engine/src/parser has no pattern
 kernels), so this is a beyond-reference convenience for migrating users
-who type the standard spelling. Scope — the deterministic core that
-covers the common funnel/sessionization queries:
+who type the standard spelling. Scope:
 
-- ``PARTITION BY`` keys, ``ORDER BY`` keys (ASC, with stable tiebreak
-  columns listed explicitly);
+- ``PARTITION BY`` keys, ``ORDER BY`` keys (ASC/DESC, with stable
+  tiebreak columns listed explicitly);
 - ``PATTERN`` over the regular core: symbols, concatenation, ``|``,
-  ``(...)``, postfix ``* + ?`` (greedy) and their SQL:2016 RELUCTANT
-  forms ``*? +? ?? {n,m}?`` (late r12 — preferment prefers the shortest
-  accept; such patterns always route through the priority scanners),
-  and ``PERMUTE(A, B, ...)`` (expanded to the alternation of all
-  orderings, <= 6 elements);
+  ``(...)``, postfix ``* + ?`` and bounded ``{n,m}`` (greedy), their
+  SQL:2016 RELUCTANT forms ``*? +? ?? {n,m}?``, ``PERMUTE(A, B, ...)``
+  (expanded to the alternation of all orderings, <= 6 elements),
+  top-level ``^``/``$`` partition anchors and ``{- -}`` exclusions;
 - ``AFTER MATCH SKIP``: PAST LAST ROW (default, non-overlapping),
   TO NEXT ROW (overlapping matches), TO FIRST/LAST <sym> (resume at a
   mapped row; the SQL:2016 runtime errors — unmapped symbol, resume at
   the match's own first row — raise inside the scan);
 - ``DEFINE`` with arbitrary Spark SQL boolean expressions per symbol,
-  evaluated row-at-a-time, plus ``PREV(col[, n])`` / ``NEXT(col[, n])``
-  navigation with PHYSICAL-offset semantics (the previous/next row of
-  the ordered partition, whatever symbol it classified as — running
-  semantics). SYMBOL-RELATIVE navigation — ``PREV(A.price)``,
-  ``FIRST(V.ts)``, ``LAST(B.amount, 2)``, bare ``A.price`` — is also
-  supported: such predicates cannot be pre-evaluated (which rows are
-  "mapped to A" depends on the match attempt in progress), so any
-  DEFINE containing one routes the whole operator through the
-  IN-AUTOMATON path: symbols without navigation still classify through
-  one vectorized codegen projection (per-symbol boolean flags), and the
-  navigation predicates are compiled by operators/mr_expr.py to scalar
-  closures evaluated during the NFA scan with the current row
-  tentatively mapped to the symbol under test (SQL:2016 running
-  semantics; mr_expr's docstring states the grammar). SYMBOL
-  ASSIGNMENT: on the vectorized path (no navigation in DEFINE) a row
-  may satisfy SEVERAL predicates and the PATTERN decides the mapping,
-  per SQL:2016 PREFERMENT order (r12) — greedy quantifiers prefer
-  consuming more, alternation prefers the LEFT branch even when a
-  right branch would match longer (``A | B C`` matches just A,
-  Oracle/Flink behavior; the classic Oracle V-shape with an undefined
-  STRT finds BOTH Vs; see find_match_spans_nd). Partitions whose rows
-  each satisfy at most one symbol — the overwhelmingly common
-  mutually-exclusive DEFINEs — take the deterministic set-scan when
-  the pattern is alternation-free (where preferment and longest
-  coincide), byte-identical to the pre-r11 behavior; a user-written
-  ``|`` routes even deterministic partitions through the priority
-  scanner so preferment holds. The IN-AUTOMATON path (symbol-relative
-  navigation in DEFINE) ALSO resolves nondeterministic assignment
-  (r12, second half): the cheap deterministic scan (first-true
-  classification — DEFINEd symbols in define order, undefined last)
-  runs first, and the moment a row satisfies two or more symbols the
-  PATTERN could both consume (undefined always-true symbols included),
-  the partition re-scans through scan_rows_in_automaton_nd — a Pike-VM
-  whose threads each carry their OWN copy-on-write tentative mapping,
-  so ``C AS v > LAST(A.v)`` is evaluated against the rows THAT
-  THREAD assigned to A, in the same preferment order as the vectorized
-  scanner. Histories make state-dedup unsound, so the thread count is
-  capped (default 256) with a loud raise — the one genuinely
-  exponential corner (several always-true navigation symbols under a
-  shared quantifier). Pattern-level preferment (which accepted prefix
-  of an attempt's code string wins) is honored on the deterministic
-  scan too via ordered-thread stepping when the pattern carries
-  ``|``. WITHIN no longer
-  forces that path: the duration bound is enforced identically by
-  every scanner (_within_breaks), so nav-free WITHIN queries keep the
-  vectorized classification and nondeterministic assignment. A row
-  matching no symbol breaks any in-flight match on both paths.
+  plus ``PREV(col[, n])`` / ``NEXT(col[, n])`` with PHYSICAL-offset
+  semantics (rewritten to lag/lead over the partition window). All of
+  these become per-symbol boolean flag columns of one codegen
+  projection. SYMBOL-RELATIVE navigation — ``PREV(A.price)``,
+  ``FIRST(V.ts)``, ``LAST(B.amount, 2)``, bare ``A.price`` — cannot be
+  pre-evaluated, because which rows are "mapped to A" depends on the
+  match attempt in progress. Such predicates are compiled by
+  operators/mr_expr.py to scalar closures, evaluated during the scan
+  with the current row tentatively mapped to the symbol under test
+  (SQL:2016 running semantics; mr_expr's docstring states the
+  grammar);
 - ``MEASURES``: MATCH_NUMBER(), CLASSIFIER(), COUNT(*), COUNT(S.*),
   FIRST/LAST(col [, n]) with the SQL:2016 logical offset,
-  FIRST/LAST(S.col [, n]), and the FINAL aggregates
-  SUM/AVG/MIN/MAX(col) / SUM/AVG/MIN/MAX(S.col) (NULL-skipping; NULL
-  over zero eligible rows); ONE ROW PER MATCH or ALL ROWS PER MATCH.
-  Under ALL ROWS PER MATCH measures follow SQL:2016 semantics: the
-  unprefixed default is RUNNING (each row sees the measure evaluated
-  over its own prefix of the match; bare CLASSIFIER() is per-row), and
-  a ``FINAL`` prefix requests the whole-match constant. MATCH_NUMBER()
-  is prefix-invariant. Under ONE ROW PER MATCH running and final
-  coincide (last-row evaluation).
+  FIRST/LAST(S.col [, n]), PREV/NEXT, the FINAL aggregates
+  SUM/AVG/MIN/MAX/STDDEV/VARIANCE (NULL-skipping; NULL over zero
+  eligible rows) and numeric arithmetic over those; ONE ROW PER MATCH
+  or ALL ROWS PER MATCH [WITH UNMATCHED ROWS]. Under ALL ROWS PER
+  MATCH measures follow SQL:2016 semantics: the unprefixed default is
+  RUNNING (each row sees the measure evaluated over its own prefix of
+  the match; bare CLASSIFIER() is per-row), and a ``FINAL`` prefix
+  requests the whole-match constant. Under ONE ROW PER MATCH running
+  and final coincide (last-row evaluation);
 - ``SUBSET W = (A, B)``: union pattern variables, resolvable anywhere
-  a symbol name is (MEASURES, DEFINE navigation, SKIP TO).
+  a symbol name is (MEASURES, DEFINE navigation, SKIP TO);
 - ``WITHIN <interval|number>`` (the Flink extension): bounds the match
-  duration against the first ORDER BY key, enforced inside the scan so
-  arbitrary vectorized DEFINEs keep working.
+  duration against the first ORDER BY key, enforced inside the scan.
 
-Scale shape: classification is one codegen CASE projection; matching is
-one applyInPandas over the PARTITION BY key — per-key event history in
+SYMBOL ASSIGNMENT follows SQL:2016: a row may satisfy SEVERAL
+predicates, and the PATTERN decides the mapping in PREFERENCE order.
+Greedy quantifiers prefer consuming more, reluctant ones less, and
+alternation prefers the LEFT branch even when a right branch would
+match longer (``A | B C`` matches just A, Oracle/Flink behavior). Every
+partition goes through the same scanner, streaming/patterns.scan_rows,
+a priority-thread Pike VM: truth comes from the flag columns and, for
+navigation symbols, from the closures, whose threads each carry their
+own tentative mapping (so ``C AS v > LAST(A.v)`` reads the rows THAT
+THREAD assigned to A). A row matching no symbol the pattern can consume
+ends the attempt.
+
+Scale shape: the flags are one codegen projection; matching is one
+applyInPandas over the PARTITION BY key — per-key event history in
 memory, the same bound as every MATCH_RECOGNIZE implementation
 (Flink/Oracle both require a partition key for parallelism; skewed keys
-are the user's modeling problem there too). The NFA scan is O(events)
-per key for the patterns the syntax admits.
+are the user's modeling problem there too). The scan is O(events ×
+NFA states) per key for navigation-free DEFINEs.
 """
 
 from __future__ import annotations
@@ -104,70 +78,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from blazingsql_spark.operators import mr_expr
 from blazingsql_spark.streaming.patterns import (
-    RELUCTANT_PROBE,
+    _SKIP_PAST,
     _Nfa,
     compile_pattern,
-    ordered_closure,
+    scan_rows,
 )
-
-_NO_SYM = "\x00"  # classification miss: breaks any in-flight match
-
-
-class InAutomatonAmbiguity(ValueError):
-    """The deterministic in-automaton scan met a row that satisfies two
-    or more symbols the PATTERN could both consume at the current match
-    position — first-true classification would diverge from SQL:2016
-    nondeterministic symbol assignment there. Raised by the classifier
-    as a ROUTING SIGNAL: callers catch it and re-scan the partition with
-    :func:`scan_rows_in_automaton_nd` (per-thread tentative mappings).
-    Subclasses ValueError so an uncaught escape is still a loud,
-    self-explaining error rather than a silent first-true answer."""
-
-
-_SKIP_PAST = ("past",)
-
-
-def _skip_resume(skip, pos: int, last_acc: int, span_codes: str) -> int:
-    """Next scan position after a match [pos, last_acc) under an AFTER
-    MATCH SKIP mode (('past',) | ('next',) | ('first'|'last', char)).
-    Raises on the SQL:2016 runtime errors: skipping to a symbol the
-    match never mapped, or to the match's own first row (infinite
-    loop)."""
-    kind = skip[0]
-    if kind == "past":
-        return last_acc
-    if kind == "next":
-        return pos + 1
-    chs = skip[1]
-    hits = [i for i, c in enumerate(span_codes) if c in chs]
-    idx = (hits[0] if kind == "first" else hits[-1]) if hits else -1
-    if idx < 0:
-        raise ValueError(
-            f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO {kind.upper()} names a "
-            f"symbol the match did not map any row to"
-        )
-    if idx == 0:
-        raise ValueError(
-            "MATCH_RECOGNIZE: AFTER MATCH SKIP TO the first row of the "
-            "match would loop forever (SQL:2016 runtime error)"
-        )
-    return pos + idx
-
-
-def _within_breaks(within, j: int, pos: int) -> bool:
-    """True when row ``j`` falls outside the attempt-at-``pos``'s
-    match-duration budget (``within=(order_key_values, dur)``) — or
-    either key is NULL (x != x catches NaT/nan without a pandas call
-    per row). Shared by all three scanners so the bound's semantics
-    cannot drift between them."""
-    if within is None:
-        return False
-    tv, dur = within
-    tj, tp = tv[j], tv[pos]
-    return (
-        tj is None or tj != tj or tp is None or tp != tp or tj - tp > dur
-    )
 
 
 def _strip_anchors(pattern: str) -> tuple[str, bool, bool]:
@@ -183,155 +100,6 @@ def _strip_anchors(pattern: str) -> tuple[str, bool, bool]:
     if p.endswith("$"):
         a_end, p = True, p[:-1].rstrip()
     return p, a_start, a_end
-
-
-def find_match_spans(
-    nfa: _Nfa,
-    s: str,
-    skip=_SKIP_PAST,
-    within=None,
-    anchor_start: bool = False,
-    anchor_end: bool = False,
-) -> list[tuple[int, int]]:
-    """Leftmost-longest match spans [(start, end)), the same scan
-    discipline as StreamMatcher._scan at end-of-input. ``skip`` selects
-    the AFTER MATCH resume point: ('past',) gives the classic
-    non-overlapping spans; ('next',) and ('first'|'last', char) allow
-    overlapping matches per SQL:2016. ``within=(order_keys, dur)``
-    enforces the Flink-style match-duration bound (the accepted prefix
-    still emits), identical to scan_rows_in_automaton's.
-    ``anchor_start`` restricts attempts to position 0; ``anchor_end``
-    accepts only matches ending at the last row (SQL:2016 ^/$)."""
-    spans: list[tuple[int, int]] = []
-    start_closure = nfa.closure(frozenset([nfa.start]))
-    pos, size = 0, len(s)
-    while pos < size:
-        states = start_closure
-        last_acc = -1
-        j = pos
-        while j < size:
-            if within is not None and _within_breaks(within, j, pos):
-                break
-            nxt = nfa.step(states, s[j])
-            if not nxt:
-                break
-            states = nxt
-            j += 1
-            if nfa.accept in states and (not anchor_end or j == size):
-                last_acc = j
-        if last_acc > pos:
-            spans.append((pos, last_acc))
-            pos = _skip_resume(skip, pos, last_acc, s[pos:last_acc])
-        else:
-            pos += 1
-        if anchor_start:
-            break  # only the partition's first row can start a match
-    return spans
-
-
-# ordered_closure moved next to _Nfa (streaming/patterns.py) in r12 so
-# StreamMatcherND can share it without a circular import; the local
-# name is kept for the scanners below.
-_ordered_closure = ordered_closure
-
-
-def find_match_spans_nd(
-    nfa: _Nfa,
-    truth,
-    size: int,
-    skip=_SKIP_PAST,
-    within=None,
-    anchor_start: bool = False,
-    anchor_end: bool = False,
-) -> list[tuple[int, int, str]]:
-    """Nondeterministic-classification scan (SQL:2016): a row may
-    satisfy SEVERAL symbols — ``truth(j, ch)`` says whether row ``j``
-    can be consumed as symbol char ``ch`` — and the PATTERN decides the
-    assignment. Returns ``[(start, end, codes)]`` with the preferred
-    assignment per match in SQL:2016 PREFERMENT order (r12, closing the
-    ADVICE-r11 finding): the choice points rank greedy-quantifier
-    continuation and the LEFT alternation branch first, exactly the
-    eps/trans edge order compile_pattern emits — so ``A | B C`` matches
-    just ``A`` even though ``B C`` would be longer (Oracle/Flink
-    behavior), while greedy-only patterns still take the longest match
-    (every preference there is "consume more"). Mechanically: when the
-    highest-priority live thread reaches accept, its match is recorded
-    and every LOWER-priority thread is cut (any match they could
-    produce ranks below the recorded one); surviving higher-priority
-    threads keep extending, and a later accept from one of them
-    overrides unconditionally (it ranks above everything recorded).
-    With deterministic truth and no alternation in the pattern the
-    spans are exactly find_match_spans' (property-tested), so the
-    vectorized fast path only routes here when a partition contains an
-    ambiguous row or the pattern carries a user-written ``|``.
-
-    Priority-thread simulation (Pike-VM shape): threads are an ordered
-    list of NFA states deduplicated first-wins, each carrying its
-    assignment as an immutable (char, parent) chain, so per-row work is
-    O(states × edges) and reconstruction is O(span) — no backtracking
-    blowup on adversarial patterns."""
-    spans: list[tuple[int, int, str]] = []
-    start_list = _ordered_closure(nfa, [nfa.start])
-    # closures are per-state constants: memoize across rows/attempts
-    # (the inner loop asks for the same handful of target states
-    # millions of times on a long ambiguous partition)
-    closure_memo: dict[int, list[int]] = {}
-
-    def closure_of(state: int) -> list[int]:
-        got = closure_memo.get(state)
-        if got is None:
-            got = closure_memo[state] = _ordered_closure(nfa, [state])
-        return got
-
-    pos = 0
-    while pos < size:
-        threads: list[tuple[int, tuple | None]] = [
-            (st, None) for st in start_list
-        ]
-        best_end, best_node = -1, None
-        j = pos
-        while j < size and threads:
-            if within is not None and _within_breaks(within, j, pos):
-                break
-            new_threads: list[tuple[int, tuple | None]] = []
-            seen: set[int] = set()
-            for st, node in threads:
-                for want, to in nfa.trans.get(st, ()):
-                    if want is not None and not truth(j, want):
-                        continue
-                    nxt_node = (want if want is not None else ".", node)
-                    for c in closure_of(to):
-                        if c not in seen:
-                            seen.add(c)
-                            new_threads.append((c, nxt_node))
-            threads = new_threads
-            j += 1
-            if anchor_end and j != size:
-                continue  # $-anchored: only size-ending accepts count
-            for idx, (st, node) in enumerate(threads):
-                if st == nfa.accept:
-                    # SQL:2016 preferment: everything still alive is
-                    # higher-priority than any accept recorded so far,
-                    # so a new accept overrides unconditionally — and
-                    # the threads BELOW this accept are cut (their
-                    # eventual matches rank under the recorded one).
-                    best_end, best_node = j, node
-                    del threads[idx + 1:]
-                    break
-        if best_end > pos:
-            chars: list[str] = []
-            node = best_node
-            while node is not None:
-                chars.append(node[0])
-                node = node[1]
-            codes = "".join(reversed(chars))
-            spans.append((pos, best_end, codes))
-            pos = _skip_resume(skip, pos, best_end, codes)
-        else:
-            pos += 1
-        if anchor_start:
-            break  # only the partition's first row can start a match
-    return spans
 
 
 _MEASURE_FORMS = re.compile(
@@ -971,8 +739,8 @@ _PERMUTE_KW = re.compile(r"\bPERMUTE\s*\(", re.IGNORECASE)
 def _expand_permute(pattern: str) -> str:
     """Expand SQL:2016 ``PERMUTE(...)`` into the alternation of all
     orderings — lexicographic by argument position, the standard's
-    preference order, which under this scanner's leftmost-longest
-    discipline only matters for equal-length alternatives anyway.
+    preference order, which the scanner's left-first alternation
+    honors.
     Arguments may be QUANTIFIED or GROUPED sub-patterns
     (``PERMUTE(A+, B)``, ``PERMUTE((A B)?, C)``) and PERMUTE may nest —
     each argument is parenthesized in the expansion so alternation
@@ -1115,10 +883,9 @@ def compile_symbols(
     # metacharacter (SQL:2016 ^/$ anchors, character classes, '.')
     # used to compile to a LITERAL char transition that no classified
     # row can ever produce, so the pattern silently matched nothing.
-    # (Reluctant quantifiers — *?, +?, ??, {n,m}? — were rejected here
-    # until late r12; SQL:2016 preferment order makes them well-defined,
-    # so compile_pattern now encodes them as inverted edge priority and
-    # callers route such patterns through the priority scanners.)
+    # (Reluctant quantifiers — *?, +?, ??, {n,m}? — pass: the SQL:2016
+    # preference order makes them well-defined, and compile_pattern
+    # encodes them as inverted edge priority.)
     bad = sorted(set(re.sub(r"[A-Za-z0-9(){}|*+?,]", "", char_pattern)))
     if bad:
         raise ValueError(
@@ -1153,43 +920,6 @@ def _parse_order_keys(order_by: list[str]) -> tuple[list[str], list[bool]]:
             cols.append(item)
             asc.append(True)
     return cols, asc
-
-
-def classify_symbols(
-    df: DataFrame,
-    names: list[str],
-    sym_chars: dict[str, str],
-    define: dict[str, str],
-    partition_by: list[str] | None = None,
-    order_by: list[str] | None = None,
-    allow_navigation: bool = True,
-) -> DataFrame:
-    """Deterministic first-true classification: add ``__sym`` (one NFA
-    alphabet char per row; the NUL sentinel for rows matching no
-    symbol). DEFINEd symbols test first (in define order), undefined
-    (always-true) symbols last, in pattern order.
-
-    PREV(col[, n]) / NEXT(col[, n]) navigation in DEFINE is rewritten to
-    lag/lead helper columns over the (partition, order) window BEFORE
-    classification — physical-offset semantics (the previous/next ROW in
-    the partition, regardless of which symbol it classified as). The
-    window shares the downstream groupBy's partition key, so it rides
-    the same exchange. ``allow_navigation=False`` rejects PREV/NEXT
-    (the streaming twin: lag/lead need the whole ordered partition)."""
-    define, nav_df, nav_names = _physical_nav_rewrite(
-        df, define, partition_by, order_by, allow_navigation
-    )
-    clf = None
-    for s in list(define) + [n for n in names if n not in define]:
-        pred = F.expr(define[s]) if s in define else F.lit(True)
-        clf = (
-            F.when(pred, F.lit(sym_chars[s]))
-            if clf is None
-            else clf.when(pred, F.lit(sym_chars[s]))
-        )
-    return nav_df.withColumn("__sym", F.coalesce(clf, F.lit(_NO_SYM))).drop(
-        *nav_names
-    )
 
 
 def _physical_nav_rewrite(
@@ -1242,418 +972,37 @@ def _physical_nav_rewrite(
     return define, nav_df, list(nav_cols)
 
 
-def build_classifier(test_order, flags, compiled, ctx, names_by_char=None):
-    """Per-attempt first-true classifier over one ordered partition.
-
-    ``test_order`` is [(kind, char)] in classification order — kind is
-    'vec' (precomputed boolean list in ``flags``), 'rel' (compiled
-    mr_expr closure in ``compiled``), or 'any' (undefined symbol,
-    always true). The returned ``classify(j, pos, tent)`` mutates
-    ``ctx`` and, on success, records ``j`` in ``tent`` under the chosen
-    symbol (SQL:2016 running semantics: the row under test is
-    tentatively mapped to the symbol being tried; a mapping left behind
-    by an attempt the NFA then kills is never read again).
-
-    AMBIGUITY IS A ROUTING SIGNAL (r12): the deterministic in-automaton
-    scan cannot do SQL:2016 nondeterministic symbol assignment, so a
-    row whose predicates make TWO OR MORE symbols true (undefined
-    always-true symbols included) — BOTH of which the NFA could consume
-    at the current match position (``consumable``) — raises
-    :class:`InAutomatonAmbiguity`; the callers catch it and re-scan the
-    partition with :func:`scan_rows_in_automaton_nd`, which resolves
-    the assignment with per-thread tentative mappings in SQL:2016
-    preferment order. The consumability gate keeps the classic Oracle
-    start-symbol idiom on the cheap deterministic scan: ``PATTERN (S
-    D+) DEFINE S AS TRUE, D AS price < PREV(price)`` has rows
-    satisfying both S and D, but the pattern never admits both at once,
-    so the assignment is forced at every row. Classification is
-    CONSUMABILITY-FIRST (r12, fixing a first-true divergence the
-    vectorized path never had): with exactly one consumable true
-    symbol the SQL:2016 assignment is forced and DEFINE order is
-    irrelevant — a row that satisfies a non-consumable symbol earlier
-    in DEFINE order no longer ends an attempt a consumable symbol
-    could extend. Mutually-exclusive DEFINEs (the common case)
-    classify exactly as before, byte-identically."""
-    import pandas as pd
-
-    def classify(j, pos, tent, consumable=None):
-        ctx.j, ctx.pos, ctx.tent = j, pos, tent
-        first_true = None  # first truthy symbol, consumable or not
-        chosen = None  # first truthy symbol the NFA can consume here
-        for kind, ch in test_order:
-            if kind == "any":
-                truthy = True
-            elif kind == "vec":
-                v = flags[ch][j]
-                truthy = v is not None and not pd.isna(v) and bool(v)
-            else:
-                lst = tent.setdefault(ch, [])
-                lst.append(j)
-                truthy = bool(compiled[ch](ctx))
-                lst.pop()
-            if truthy:
-                if first_true is None:
-                    first_true = ch
-                if consumable is None or ch in consumable:
-                    if chosen is not None:
-                        nm = names_by_char or {}
-                        raise InAutomatonAmbiguity(
-                            "MATCH_RECOGNIZE: row satisfies multiple "
-                            "DEFINEd symbols "
-                            f"({nm.get(chosen, chosen)!r} and "
-                            f"{nm.get(ch, ch)!r}) that the PATTERN could "
-                            "both consume at this match position — "
-                            "deterministic classification would diverge "
-                            "from SQL:2016 nondeterministic symbol "
-                            "assignment (callers fall back to the "
-                            "per-thread nondeterministic scan)"
-                        )
-                    chosen = ch
-        # the NFA-consumable true symbol wins (SQL:2016: the PATTERN
-        # decides the assignment — with exactly one consumable true
-        # symbol the choice is forced, classification order is
-        # irrelevant); with no consumable true symbol, any true symbol
-        # ends the attempt just the same, so return the first
-        out = chosen if chosen is not None else first_true
-        if out is not None:
-            tent.setdefault(out, []).append(j)
-        return out
-
-    return classify
+def flag_list(col) -> list[bool]:
+    """A flag column as Python bools, NULL as False. A column holding a
+    NULL arrives as object dtype; this avoids ``fillna(False)``, whose
+    object-dtype downcast pandas deprecates. ``tolist`` yields Python
+    bools, and None or pd.NA for NULL."""
+    return [v is True for v in col.tolist()]
 
 
-def scan_rows_in_automaton(
-    nfa: _Nfa,
-    classify,
-    size: int,
-    final: bool = True,
-    skip=_SKIP_PAST,
-    within=None,
-    anchor_start: bool = False,
-    anchor_end: bool = False,
-    preferment: bool = False,
-) -> tuple[list[tuple[int, int, str]], int | None]:
-    """Greedy scan with PER-ATTEMPT classification (the in-automaton
-    twin of :func:`find_match_spans`). Returns ``(spans, carry_start)``:
-    spans are ``(lo, hi, codes)`` triples; with ``final=False`` (the
-    streaming caller) a live in-flight attempt at end-of-input is NOT
-    resolved — its start index comes back as ``carry_start`` so the
-    caller can persist the suffix, exactly the StreamMatcher._scan
-    contract. ``within=(tvals, dur)`` enforces the Flink-style
-    match-duration bound: a row whose order-key value exceeds the
-    attempt's first row by more than ``dur`` (or whose key is NULL)
-    ends the attempt — the accepted prefix still emits.
-
-    ``preferment=False`` (default) accepts the LONGEST extension of
-    each attempt via the set-scan — correct for alternation-free
-    patterns, where every greedy preference is "consume more".
-    ``preferment=True`` (r12; set by callers when the user pattern
-    carries ``|``) steps an ORDERED thread list instead: when the
-    highest-priority thread accepts, lower-priority threads are cut and
-    the match is recorded; a later accept from a surviving
-    higher-priority thread overrides — SQL:2016 preferment, so
-    ``A | A B`` over a row satisfying both stops at ``A``.
-    Classification itself is path-independent (one symbol per row per
-    attempt), so the two modes differ only in which accepted PREFIX of
-    the attempt's code string wins."""
-    start_closure = nfa.closure(frozenset([nfa.start]))
-    start_threads = _ordered_closure(nfa, [nfa.start])
-    closure_memo: dict[int, list[int]] = {}
-
-    def closure_of(state: int) -> list[int]:
-        got = closure_memo.get(state)
-        if got is None:
-            got = closure_memo[state] = _ordered_closure(nfa, [state])
-        return got
-
-    # consumable-char sets memoized by live-state set: an NFA visits few
-    # distinct state sets, so the per-row ambiguity-gate cost collapses
-    # to one dict hit instead of an O(states x edges) walk
-    cons_memo: dict = {}
-
-    def consumable_of(key, live) -> set[str] | None:
-        got = cons_memo.get(key, False)
-        if got is False:
-            cs: set[str] | None = set()
-            for s in live:
-                for want, _to in nfa.trans.get(s, ()):
-                    if want is None:
-                        cs = None  # wildcard: everything consumable
-                        break
-                    cs.add(want)
-                if cs is None:
-                    break
-            got = cons_memo[key] = cs
-        return got
-
-    spans: list[tuple[int, int, str]] = []
-    pos = 0
-    while pos < size:
-        states = start_closure
-        threads: list[int] = list(start_threads)
-        tent: dict[str, list[int]] = {}
-        codes: list[str] = []
-        last_acc = -1
-        j = pos
-        while j < size:
-            if within is not None and _within_breaks(within, j, pos):
-                break
-            # chars the NFA could consume from the current position —
-            # the classifier's ambiguity check raises only when >=2
-            # TRUE symbols are both in this set (first-true vs a
-            # non-consumable symbol is not a divergence; see
-            # build_classifier)
-            if preferment:
-                cons = consumable_of(tuple(threads), threads)
-            else:
-                cons = consumable_of(states, states)
-            c = classify(j, pos, tent, cons)
-            if c is None:
-                break
-            if preferment:
-                new_threads: list[int] = []
-                seen: set[int] = set()
-                for st in threads:
-                    for want, to in nfa.trans.get(st, ()):
-                        if want is not None and want != c:
-                            continue
-                        for cl in closure_of(to):
-                            if cl not in seen:
-                                seen.add(cl)
-                                new_threads.append(cl)
-                if not new_threads:
-                    break
-                threads = new_threads
-                codes.append(c)
-                j += 1
-                if not anchor_end or j == size:
-                    for idx, st in enumerate(threads):
-                        if st == nfa.accept:
-                            last_acc = j
-                            del threads[idx + 1:]
-                            break
-            else:
-                nxt = nfa.step(states, c)
-                if not nxt:
-                    break
-                codes.append(c)
-                states = nxt
-                j += 1
-                if nfa.accept in states and (not anchor_end or j == size):
-                    last_acc = j
-        else:
-            # attempt hit end-of-input with live states: in-flight only
-            # if some live state can still consume a character
-            live = threads if preferment else states
-            if not final and any(nfa.trans[s] for s in live):
-                return spans, pos
-        if last_acc > pos:
-            span_codes = "".join(codes[: last_acc - pos])
-            spans.append((pos, last_acc, span_codes))
-            pos = _skip_resume(skip, pos, last_acc, span_codes)
-        else:
-            pos += 1
-        if anchor_start:
-            break  # only the partition's first row can start a match
-    return spans, None
-
-
-def build_truth_nd(test_order, flags, compiled, cols, size):
-    """Per-thread truth oracle for :func:`scan_rows_in_automaton_nd`:
-    ``truth(j, pos, ch, tent)`` says whether row ``j`` of an attempt
-    starting at ``pos`` can be consumed as symbol ``ch`` GIVEN the
-    thread's own tentative mapping ``tent`` ({char: row-index sequence},
-    WITHOUT ``j`` appended — the oracle appends it itself before
-    evaluating a navigation predicate, per mr_expr's contract).
-    Vectorized flags and undefined symbols ignore ``tent`` entirely, so
-    only navigation predicates pay the per-thread evaluation."""
-    import pandas as pd
-
-    kind_by_char = {ch: kind for kind, ch in test_order}
-    from blazingsql_spark.operators import mr_expr
-
+def build_truth(flags, compiled, cols, size):
+    """The scanner's truth over one ordered partition: ``truth(j, pos,
+    ch, tent)`` says whether row ``j`` of the attempt starting at
+    ``pos`` can be consumed as symbol ``ch``. ``flags`` maps a
+    vectorized symbol to its per-row booleans (NULL already False),
+    ``compiled`` a navigation symbol to its mr_expr closure, which is
+    evaluated with ``j`` tentatively appended to the thread's mapping
+    ``tent`` (mr_expr's contract); any other symbol is undefined and
+    always true. ``cols`` holds the columns the closures read."""
     ctx = mr_expr.MatchCtx(cols, 0, 0, size, {})
 
     def truth(j, pos, ch, tent):
-        kind = kind_by_char.get(ch)
-        if kind == "any":
+        rows = flags.get(ch)
+        if rows is not None:
+            return rows[j]
+        pred = compiled.get(ch)
+        if pred is None:
             return True
-        if kind == "vec":
-            v = flags[ch][j]
-            return v is not None and not pd.isna(v) and bool(v)
         ctx.j, ctx.pos = j, pos
         ctx.tent = {**tent, ch: mr_expr.ImmutableRows(j, tent.get(ch))}
-        return bool(compiled[ch](ctx))
+        return bool(pred(ctx))
 
     return truth
-
-
-def scan_rows_in_automaton_nd(
-    nfa: _Nfa,
-    truth,
-    size: int,
-    final: bool = True,
-    skip=_SKIP_PAST,
-    within=None,
-    anchor_start: bool = False,
-    anchor_end: bool = False,
-    max_threads: int = 256,
-    names_by_char=None,
-    read_chars: frozenset | None = None,
-) -> tuple[list[tuple[int, int, str]], int | None]:
-    """SQL:2016 NONDETERMINISTIC symbol assignment for the in-automaton
-    (navigation-DEFINE) path — the per-thread twin of
-    :func:`find_match_spans_nd`, closing the r11/r12 documented
-    restriction that navigation DEFINEs required mutually-exclusive
-    predicates. Each Pike-VM thread carries its OWN tentative mapping
-    (copy-on-write dict of persistent O(1)-append row sequences —
-    mr_expr.ImmutableRows), so a navigation predicate like
-    ``C AS v > LAST(A.v)`` is evaluated against the rows THAT THREAD
-    assigned to A — different assignment histories legitimately diverge,
-    which is why threads here cannot be deduplicated by NFA state
-    alone. They CAN be deduplicated by (state, the projection of the
-    mapping onto ``read_chars``) — the symbol chars whose tentative
-    rows some navigation predicate actually READS
-    (mr_expr closure.used_sym_chars): histories agreeing there have
-    identical futures, and first-wins keeps the preferment order. With
-    no navigation reads (``read_chars=frozenset()``) this collapses to
-    find_match_spans_nd's state-dedup exactly; ``read_chars=None``
-    (unknown reads) disables cross-thread dedup entirely. Residual
-    blowup — k symbols under a quantifier whose mappings ARE all read —
-    is inherently exponential and bounded by ``max_threads``; exceeding
-    it raises loudly (no row-pattern engine resolves that case without
-    a bound). Preferment order is identical to find_match_spans_nd:
-    threads are priority-ordered, the highest accept cuts everything
-    below it, and a later accept from a surviving higher thread
-    overrides.
-
-    ``truth(j, pos, ch, tent)`` is :func:`build_truth_nd`'s oracle.
-    Returns ``(spans, carry_start)`` with scan_rows_in_automaton's
-    streaming contract: under ``final=False`` an attempt still alive at
-    end-of-input comes back as ``carry_start`` (the attempt is replayed
-    from its first row next micro-batch — per-thread state never needs
-    to persist because the mapping is a pure function of the attempt's
-    rows, which the carry keeps)."""
-    from blazingsql_spark.operators.mr_expr import (
-        ImmutableRows as _ImmutableRows,
-    )
-
-    start_list = _ordered_closure(nfa, [nfa.start])
-    closure_memo: dict[int, list[int]] = {}
-
-    def closure_of(state: int) -> list[int]:
-        got = closure_memo.get(state)
-        if got is None:
-            got = closure_memo[state] = _ordered_closure(nfa, [state])
-        return got
-
-    read_order = tuple(sorted(read_chars)) if read_chars is not None else None
-
-    spans: list[tuple[int, int, str]] = []
-    empty_tent: dict = {}
-    pos = 0
-    while pos < size:
-        # thread = (state, node, tent): node is the (char, parent)
-        # assignment chain (codes reconstruction), tent the mapping the
-        # navigation predicates read. All start threads share the empty
-        # history.
-        threads: list[tuple[int, tuple | None, dict]] = [
-            (st, None, empty_tent) for st in start_list
-        ]
-        best_end, best_node = -1, None
-        j = pos
-        while j < size and threads:
-            if within is not None and _within_breaks(within, j, pos):
-                break
-            new_threads: list[tuple[int, tuple | None, dict]] = []
-            seen: set = set()
-            for st, node, tent in threads:
-                per_want: dict = {}
-                for want, to in nfa.trans.get(st, ()):
-                    ent = per_want.get(want, False)
-                    if ent is False:
-                        if want is not None and not truth(j, pos, want, tent):
-                            per_want[want] = None
-                            continue
-                        if want is None:
-                            ntent = tent
-                            nnode = (".", node)
-                        else:
-                            # O(1) persistent append (a tuple concat
-                            # would make one long attempt quadratic)
-                            ntent = {
-                                **tent,
-                                want: _ImmutableRows(j, tent.get(want)),
-                            }
-                            nnode = (want, node)
-                        # dedup key: full history when reads are
-                        # unknown, else the read-projection — histories
-                        # agreeing on every
-                        # char a predicate reads share all futures.
-                        # ImmutableRows compares by IDENTITY: shared
-                        # lineage dedups (the common case — threads that
-                        # diverged only on unread symbols), equal-content
-                        # distinct-lineage under-merges, which is sound
-                        # and cap-guarded
-                        proj = (
-                            id(nnode)
-                            if read_order is None
-                            else tuple(ntent.get(c) for c in read_order)
-                        )
-                        ent = per_want[want] = (nnode, ntent, proj)
-                    elif ent is None:
-                        continue
-                    nnode, ntent, proj = ent
-                    for cl in closure_of(to):
-                        k = (cl, proj)
-                        if k not in seen:
-                            seen.add(k)
-                            new_threads.append((cl, nnode, ntent))
-            if len(new_threads) > max_threads:
-                raise ValueError(
-                    "MATCH_RECOGNIZE: nondeterministic symbol assignment "
-                    f"over navigation DEFINEs exceeded {max_threads} "
-                    "concurrent assignment histories at one row — the "
-                    "PATTERN admits exponentially many mappings whose "
-                    "navigation predicates all stay live (e.g. several "
-                    "always-true symbols under a quantifier). Make the "
-                    "DEFINE predicates more selective or mutually "
-                    "exclusive"
-                )
-            threads = new_threads
-            j += 1
-            if threads and (not anchor_end or j == size):
-                for idx, (st, node, _tent) in enumerate(threads):
-                    if st == nfa.accept:
-                        # preferment: record the highest-priority accept,
-                        # cut everything below it; surviving higher
-                        # threads may override later
-                        best_end, best_node = j, node
-                        del threads[idx + 1:]
-                        break
-        else:
-            # attempt hit end-of-input with live threads: in-flight only
-            # if some thread can still consume a character
-            if (
-                not final
-                and threads
-                and any(nfa.trans[st] for st, _n, _t in threads)
-            ):
-                return spans, pos
-        if best_end > pos:
-            chars: list[str] = []
-            node = best_node
-            while node is not None:
-                chars.append(node[0])
-                node = node[1]
-            codes = "".join(reversed(chars))
-            spans.append((pos, best_end, codes))
-            pos = _skip_resume(skip, pos, best_end, codes)
-        else:
-            pos += 1
-        if anchor_start:
-            break  # only the partition's first row can start a match
-    return spans, None
 
 
 def _sort_partition(pdf, order_cols, order_asc):
@@ -1784,18 +1133,16 @@ def match_recognize(
     symbol unmapped, or resume at the match's own first row — raise).
 
     DEFINEs with symbol-relative navigation (``PREV(A.price)``,
-    ``FIRST(V.ts)``, bare ``A.price``) route through the in-automaton
-    scan: classification happens per match ATTEMPT (running semantics),
-    so a failed attempt restarts cleanly at the next row — worst case
-    O(rows²) per partition on degenerate inputs, the same bound as any
-    backtracking row-pattern scan; typical inputs stay O(rows) because
-    attempts fail on their first row. ``_force_in_automaton`` is a test
-    hook: it routes nav-free DEFINEs (which must then fit mr_expr's
-    grammar) through the same scan to property-check the two paths
-    agree."""
+    ``FIRST(V.ts)``, bare ``A.price``) are evaluated per match ATTEMPT
+    and per thread (running semantics), so a failed attempt restarts
+    cleanly at the next row — worst case O(rows²) per partition on
+    degenerate inputs, the same bound as any backtracking row-pattern
+    scan; typical inputs stay O(rows) because attempts fail on their
+    first row. ``_force_in_automaton`` is a test hook: it compiles
+    nav-free DEFINEs (which must then fit mr_expr's grammar) to mr_expr
+    closures too, to property-check them against the Spark SQL flag
+    columns."""
     import pandas as pd
-
-    from blazingsql_spark.operators import mr_expr
 
     define = dict(define or {})
     # SQL:2016 {- ... -} exclusions: expand PERMUTE first (so excluded
@@ -1803,16 +1150,6 @@ def match_recognize(
     # the excluded region still matches and feeds measures; its rows
     # are dropped from ALL ROWS output below (no-op under ONE ROW)
     pattern, anchor_start, anchor_end = _strip_anchors(pattern)
-    # user-written alternation or a reluctant quantifier, detected
-    # BEFORE PERMUTE expansion (PERMUTE's generated branches are
-    # equal-length permutations, where preferment and longest
-    # coincide): either forces the priority scanner even on
-    # deterministic partitions — SQL:2016 preferment means `A | A B`
-    # matches just A and `A+? B` stops at the first B, neither of which
-    # the longest-discipline set-scan can express. The reluctant probe
-    # tolerates whitespace (`A+ ?` ≡ `A+?` after compile_symbols strips
-    # spaces).
-    user_alt = "|" in pattern or bool(RELUCTANT_PROBE.search(pattern))
     pattern, excluded_syms = _extract_exclusions(_expand_permute(pattern))
     names, sym_chars, nfa = compile_symbols(pattern, define)
     excluded_chars = frozenset(
@@ -1886,8 +1223,6 @@ def match_recognize(
     order_cols, order_asc = _parse_order_keys(list(order_by))
     within_dur = _parse_within(within) if within is not None else None
     if within_dur is not None:
-        import pandas as pd_
-
         if not order_asc[0]:
             raise ValueError(
                 "MATCH_RECOGNIZE: WITHIN requires the first ORDER BY key "
@@ -1898,80 +1233,39 @@ def match_recognize(
         is_time = isinstance(
             key_t, (T.TimestampType, T.TimestampNTZType, T.DateType)
         )
-        if is_time != isinstance(within_dur, pd_.Timedelta):
+        if is_time != isinstance(within_dur, pd.Timedelta):
             raise ValueError(
                 f"MATCH_RECOGNIZE: WITHIN {within!r} does not fit the "
                 f"first ORDER BY key {order_cols[0]!r} of type "
                 f"{key_t.simpleString()} — use an INTERVAL for "
                 f"timestamp/date keys and a plain number for numeric keys"
             )
-    # WITHIN no longer forces the in-automaton path (r11): the duration
-    # bound is enforced identically by all three scanners via
-    # _within_breaks, so nav-free WITHIN queries keep the vectorized
-    # classification (cheaper) AND get nondeterministic symbol
-    # assignment consistently with their unbounded twins.
-    route_auto = bool(symrel_preds)
-    if route_auto:
-        vec_define = {s: p for s, p in define.items() if s not in symrel_preds}
-        vdef, nav_df, nav_names = _physical_nav_rewrite(
-            df, vec_define, partition_by, order_by, allow_navigation=True
-        )
-        coded = nav_df
-        flag_cols: dict[str, str] = {}
-        for s, p in vdef.items():
-            # keyed by symbol index, not char: Spark resolves columns
-            # case-insensitively, so __p_a and __p_A would collide for
-            # patterns with >26 distinct symbols
-            cname = f"__p_{names.index(s)}"
-            coded = coded.withColumn(cname, F.expr(p))
-            flag_cols[sym_chars[s]] = cname
-        coded = coded.drop(*nav_names)
-        compiled: dict[str, object] = {}
-        used_cols: set[str] = set()
-        nav_read_chars: frozenset[str] = frozenset()
-        for s, p in symrel_preds.items():
-            closure, used = mr_expr.compile_predicate(
-                p, df.columns, measure_syms
-            )
-            compiled[sym_chars[s]] = closure
-            used_cols |= used
-            nav_read_chars |= closure.used_sym_chars
-        # classification order: DEFINEd symbols in define order, then
-        # undefined (always-true) symbols in pattern order — identical
-        # to classify_symbols' CASE
-        test_order: list[tuple[str, str]] = []
-        for s in list(define) + [n for n in names if n not in define]:
-            ch = sym_chars[s]
-            kind = (
-                "rel" if s in symrel_preds else "vec" if s in define else "any"
-            )
-            test_order.append((kind, ch))
-        aux_cols = list(flag_cols.values())
-    else:
-        # Vectorized path (no symbol-relative navigation, no WITHIN):
-        # ONE codegen projection of per-symbol boolean flags (replacing
-        # the pre-r11 single first-true CASE column). At scan time each
-        # partition checks whether any row satisfies >1 symbol: if not
-        # (the overwhelmingly common mutually-exclusive DEFINEs), codes
-        # derive first-true and the deterministic set-scan runs exactly
-        # as before; if so, the priority scanner resolves the SQL:2016
-        # nondeterministic symbol assignment (the pre-r11 documented
-        # restriction, now lifted on this path).
-        vdef, nav_df, nav_names = _physical_nav_rewrite(
-            df, dict(define), partition_by, order_by, allow_navigation=True
-        )
-        coded = nav_df
-        flag_cols = {}
-        for s, p in vdef.items():
-            cname = f"__p_{names.index(s)}"
-            coded = coded.withColumn(cname, F.expr(p))
-            flag_cols[sym_chars[s]] = cname
-        coded = coded.drop(*nav_names)
-        test_order = [
-            ("vec" if s in define else "any", sym_chars[s])
-            for s in list(define) + [n for n in names if n not in define]
-        ]
-        aux_cols = list(flag_cols.values())
+    # Symbols with symbol-relative navigation compile to mr_expr
+    # closures the scanner evaluates per thread; every other DEFINE
+    # becomes one boolean flag column of a single codegen projection
+    # (physical PREV/NEXT rewritten to lag/lead first).
+    vec_define = {s: p for s, p in define.items() if s not in symrel_preds}
+    vdef, coded, nav_names = _physical_nav_rewrite(
+        df, vec_define, partition_by, order_by, allow_navigation=True
+    )
+    flag_cols: dict[str, str] = {}
+    for s, p in vdef.items():
+        # keyed by symbol index, not char: Spark resolves columns
+        # case-insensitively, so __p_a and __p_A would collide for
+        # patterns with >26 distinct symbols
+        cname = f"__p_{names.index(s)}"
+        coded = coded.withColumn(cname, F.expr(p))
+        flag_cols[sym_chars[s]] = cname
+    coded = coded.drop(*nav_names)
+    compiled: dict[str, object] = {}
+    used_cols: set[str] = set()
+    nav_read_chars: frozenset[str] = frozenset()
+    for s, p in symrel_preds.items():
+        closure, used = mr_expr.compile_predicate(p, df.columns, measure_syms)
+        compiled[sym_chars[s]] = closure
+        used_cols |= used
+        nav_read_chars |= closure.used_sym_chars
+    aux_cols = list(flag_cols.values())
 
     # partition-context holder for PREV/NEXT measures (physical
     # navigation may leave the match): run() keeps pdf/lo current
@@ -2000,106 +1294,26 @@ def match_recognize(
         )
     names_by_char = {c: s for s, c in sym_chars.items()}
 
-    def scan_in_automaton(pdf) -> list[tuple[int, int, str]]:
+    def run(key, pdf):
+        pdf = _sort_partition(pdf, order_cols, order_asc)
+        part_ctx["pdf"] = pdf
         size = len(pdf)
-        cols = {c: pdf[c].tolist() for c in used_cols}
-        flags = {ch: pdf[cn].tolist() for ch, cn in flag_cols.items()}
-        ctx = mr_expr.MatchCtx(cols, 0, 0, size, {})
-        classify = build_classifier(
-            test_order, flags, compiled, ctx, names_by_char
+        truth = build_truth(
+            {ch: flag_list(pdf[cn]) for ch, cn in flag_cols.items()},
+            compiled,
+            {c: pdf[c].tolist() for c in used_cols},
+            size,
         )
         bound = (
             (pdf[order_cols[0]].tolist(), within_dur)
             if within_dur is not None
             else None
         )
-        try:
-            spans, _ = scan_rows_in_automaton(
-                nfa, classify, size, final=True, skip=skip, within=bound,
-                anchor_start=anchor_start, anchor_end=anchor_end,
-                preferment=user_alt,
-            )
-        except InAutomatonAmbiguity:
-            # a row satisfied >=2 consumable symbols: re-scan the whole
-            # partition with per-thread tentative mappings — true
-            # SQL:2016 nondeterministic assignment over navigation
-            # DEFINEs (r12; unambiguous partitions never pay for this)
-            truth = build_truth_nd(test_order, flags, compiled, cols, size)
-            spans, _ = scan_rows_in_automaton_nd(
-                nfa, truth, size, final=True, skip=skip, within=bound,
-                anchor_start=anchor_start, anchor_end=anchor_end,
-                names_by_char=names_by_char, read_chars=nav_read_chars,
-            )
-        return spans
-
-    def run(key, pdf):
-        import numpy as np
-
-        pdf = _sort_partition(pdf, order_cols, order_asc)
-        part_ctx["pdf"] = pdf
-        if route_auto:
-            spans = scan_in_automaton(pdf)
-        else:
-            size = len(pdf)
-            bound = (
-                (pdf[order_cols[0]].tolist(), within_dur)
-                if within_dur is not None
-                else None
-            )
-            flags = {
-                ch: pdf[cn].fillna(False).to_numpy(dtype=bool)
-                for ch, cn in flag_cols.items()
-            }
-            n_undef = sum(1 for kind, _ch in test_order if kind == "any")
-            n_true = sum(flags.values()) + n_undef if flags else (
-                np.full(size, n_undef)
-            )
-            if size and np.max(n_true, initial=0) > 1:
-                # ambiguous partition: SQL:2016 nondeterministic symbol
-                # assignment via the priority scanner
-                def truth(j, ch, _f=flags):
-                    arr = _f.get(ch)
-                    return True if arr is None else bool(arr[j])
-
-                spans = find_match_spans_nd(
-                    nfa, truth, size, skip=skip, within=bound,
-                    anchor_start=anchor_start, anchor_end=anchor_end,
-                )
-            else:
-                # deterministic rows: first-true codes + the set-scan,
-                # byte-identical to the pre-r11 single-CASE path.
-                # Sentinel is '#', NOT _NO_SYM ("\x00"): numpy <U1
-                # stores "\x00" as the EMPTY string, so join() would
-                # drop those positions and shift every span index.
-                # '#' is outside the letters-only symbol alphabet, so
-                # like _NO_SYM it breaks any in-flight match.
-                code_arr = np.full(size, "#", dtype="<U1")
-                for _kind, ch in reversed(test_order):
-                    arr = flags.get(ch)
-                    if arr is None:
-                        code_arr[:] = ch
-                    else:
-                        code_arr[arr] = ch
-                codes = "".join(code_arr)
-                if user_alt:
-                    # user alternation: SQL:2016 preferment can pick a
-                    # SHORTER branch (`A | A B` stops at A) — the
-                    # longest-discipline set-scan cannot, so run the
-                    # priority scanner over the deterministic codes
-                    spans = find_match_spans_nd(
-                        nfa,
-                        lambda j, ch, _s=codes: _s[j] == ch,
-                        size, skip=skip, within=bound,
-                        anchor_start=anchor_start, anchor_end=anchor_end,
-                    )
-                else:
-                    spans = [
-                        (lo, hi, codes[lo:hi])
-                        for lo, hi in find_match_spans(
-                            nfa, codes, skip=skip, within=bound,
-                            anchor_start=anchor_start, anchor_end=anchor_end,
-                        )
-                    ]
+        spans, _ = scan_rows(
+            nfa, truth, size, skip=skip, within=bound,
+            anchor_start=anchor_start, anchor_end=anchor_end,
+            read_chars=nav_read_chars,
+        )
         if all_rows:
             frames = []
             for n, (lo, hi, scodes) in enumerate(spans, start=1):

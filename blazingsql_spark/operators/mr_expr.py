@@ -7,14 +7,14 @@ the predicate must be evaluated INSIDE the automaton scan, per
 (row, attempt-state) pair. This module compiles the restricted predicate
 grammar below into plain Python closures over scalar values — no Spark
 call, no pandas eval, no string eval — so the per-row test inside
-``operators.match_recognize`` stays a handful of dict/list lookups.
+``streaming.patterns.scan_rows`` stays a handful of dict/list lookups.
 
 The reference engine has no row-pattern surface at all (its Calcite fork
 parses none of SQL:2016 §R — engine/src has no pattern kernels), so this
 whole surface is beyond-reference; the grammar is therefore scoped to
 what the navigation semantics actually need rather than to full Spark
 SQL (symbols WITHOUT navigation keep the unrestricted vectorized
-Spark-SQL path in ``classify_symbols``):
+Spark-SQL flag columns of ``operators.match_recognize``):
 
     expr     := or
     or       := and (OR and)*
@@ -115,15 +115,15 @@ def _fetch(cols, name, idx):
 
 class ImmutableRows:
     """Persistent row-index sequence for PER-THREAD tentative mappings
-    (the nondeterministic in-automaton scanner): O(1) append — a cons
+    (``streaming.patterns.scan_rows``): O(1) append — a cons
     cell sharing its parent — where a tuple concat would make a long
     single-attempt span quadratic. Supports exactly the access shapes
     :func:`_nav_idx` needs: O(1) ``rows[0]`` (FIRST), ``rows[-1]``
     (LAST/PREV/NEXT base) and ``len``; O(k) for an offset k from the
     tail; O(n) ascending iteration (SUBSET unions). Equality/hash stay
-    IDENTITY on purpose: the scanner dedups thread histories by
-    projection, and identity can only under-merge (cap-guarded), never
-    wrongly merge two genuinely different histories."""
+    IDENTITY: the scanner interns every append within an attempt, so
+    equal sequences are the same object there and identity dedup is
+    content dedup."""
 
     __slots__ = ("idx", "parent", "length", "first")
 
@@ -292,8 +292,8 @@ def compile_predicate(sql: str, columns: list[str], sym_chars: dict[str, str]):
     pos = 0
     used: set[str] = set()
     # symbol CHARS whose tentative mapping this predicate reads (via
-    # SYM.col navigation): the nondeterministic in-automaton scanner
-    # dedups threads on exactly this projection of the mapping — two
+    # SYM.col navigation): the scanner carries and dedups threads on
+    # exactly this projection of the mapping — two
     # assignment histories that agree on these chars have identical
     # futures (exposed as closure.used_sym_chars)
     used_syms: set[str] = set()
@@ -572,7 +572,8 @@ _SYMREL_NAV = re.compile(
 
 
 def is_symbol_relative(pred_sql: str, names: list[str]) -> bool:
-    """True when a DEFINE predicate needs in-automaton evaluation: it
+    """True when a DEFINE predicate needs per-thread evaluation in the
+    scan: it
     contains FIRST/LAST navigation (running-semantics by definition), a
     symbol-qualified reference ``SYM.col``, or a symbol-qualified
     PREV/NEXT. Plain ``PREV(col)``/``NEXT(col)`` stay on the vectorized

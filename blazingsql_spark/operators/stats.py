@@ -297,7 +297,7 @@ def holt_linear(
         F.expr("slice(__ys, 2, size(__ys) - 1)"), lambda y: F.array(y, F.lit(0.0))
     )
 
-    def step(acc, x):
+    def smooth(acc, x):
         nl = F.lit(a) * x[0] + F.lit(a1) * (acc[0] + acc[1])
         nb = (
             F.lit(b1) * ((F.lit(a) * x[0] + F.lit(a1) * (acc[0] + acc[1])) - acc[0])
@@ -305,7 +305,7 @@ def holt_linear(
         )
         return F.array(nl, nb)
 
-    st = F.aggregate(rest, init, step)
+    st = F.aggregate(rest, init, smooth)
     return with_ys.select(
         *key_cols,
         F.size("__ys").cast("long").alias("n_obs"),

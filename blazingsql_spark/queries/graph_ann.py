@@ -471,7 +471,7 @@ def sketch_ddsketch_quantiles(spark, sf_dir):
 
 @register(
     "events_mr_navigation",
-    headline=True,  # the in-automaton (symbol-relative) scan — benched from r9 ext
+    headline=True,  # the symbol-relative scan — benched from r9 ext
     oracle="""
     WITH e AS (
         SELECT user_id, ts, event_id, event_type,
@@ -507,7 +507,7 @@ def sketch_ddsketch_quantiles(spark, sf_dir):
     """,
     doc="Symbol-relative MATCH_RECOGNIZE navigation (FIRST(V.ts) in "
     "DEFINE — SQL:2016 running semantics, operators/mr_expr.py + the "
-    "in-automaton scan in operators/match_recognize.py) plus the "
+    "row scanner in streaming/patterns.py) plus the "
     "SUM(C.value_c) FINAL aggregate measure: a conversion funnel where "
     "the purchase must land within 8 hours of the view that STARTED "
     "the funnel, across a variable-length click run — inexpressible "
@@ -525,8 +525,8 @@ def events_mr_navigation(spark, sf_dir):
     reference has no row-pattern surface at all (no SQL:2016 §R in its
     Calcite fork); beyond-reference. Scale shape: one vectorized
     classification projection + one applyInPandas over user_id, the
-    same exchange as every per-key CEP operator here; the in-automaton
-    scan is O(events) per key for this pattern (attempts fail on their
+    same exchange as every per-key CEP operator here; the scan is
+    O(events) per key for this pattern (attempts fail on their
     first row except at views)."""
     from blazingsql_spark.context import Context
     from blazingsql_spark.queries.registry import ensure_views
@@ -1219,8 +1219,8 @@ def events_mr_nondeterministic(spark, sf_dir):
     doc="SQL:2016 ^ partition anchor + nondeterministic assignment "
     "together (both r11): PATTERN (^ A B* P) where A and B share the "
     "same predicate (every non-purchase row satisfies both) — the "
-    "anchored scan attempts position 0 only, and the priority scanner "
-    "resolves the A/B split. n = the first purchase's position in the "
+    "anchored scan attempts position 0 only, and the scanner's threads "
+    "resolve the A/B split. n = the first purchase's position in the "
     "user's history; users whose FIRST event is a purchase never "
     "match (the anchor pins A to row 1). The DuckDB twin derives the "
     "same positionally",
@@ -1282,15 +1282,14 @@ def events_mr_anchors(spark, sf_dir):
     ORDER BY r.user_id
     """,
     doc="SQL:2016 nondeterministic symbol assignment WITH NAVIGATION in "
-    "DEFINE (the r12-lifted restriction, second half): A's predicate reads "
-    "FIRST(A.value) — the attempt's own tentative mapping — while every "
-    "non-null row also satisfies B, so the deterministic in-automaton scan "
-    "signals ambiguity and the per-thread scanner resolves the assignment. "
-    "Greedy A+ claims the maximal run with value >= the attempt's first "
-    "value; B is the row that breaks the run (or the final row when the "
-    "run covers the whole partition — preferment override). The DuckDB "
-    "twin derives the same split positionally. Pre-r12 this query RAISED; "
-    "pre-r11 it silently matched nothing",
+    "DEFINE: A's predicate reads FIRST(A.value) — the attempt's own "
+    "tentative mapping — while every non-null row also satisfies B, so "
+    "the scanner's threads, each with its own mapping, resolve the "
+    "assignment. Greedy A+ claims the maximal run with value >= the "
+    "attempt's first value; B is the row that breaks the run (or the "
+    "final row when the run covers the whole partition — a higher-"
+    "priority accept overrides). The DuckDB twin derives the same split "
+    "positionally",
 )
 def events_mr_nav_nondeterministic(spark, sf_dir):
     """Through the SQL spelling like the other MR rows, with a ^ anchor

@@ -1,44 +1,38 @@
-"""Streaming CEP sequence-pattern matching — the incremental twin of the
-batch ``events_pattern_match`` query (queries/relational.py).
+"""Row-pattern matching core: a Thompson NFA over single-character
+symbols, the one scanner that steps it over rows, and the streaming
+operators built on that scanner.
 
-The batch query assembles each user's full event-code string and counts
-non-overlapping greedy regex matches (``'vc+p'`` = view, 1+ clicks,
-purchase). A streaming twin cannot hold the whole per-user history: state
-must be bounded. This module compiles the pattern to a Thompson NFA and
-runs an incremental leftmost-longest scanner whose per-user state is
+``compile_pattern`` builds the NFA. Its epsilon-edge order encodes
+the SQL:2016 preference order: a greedy quantifier ranks "consume more"
+first, a reluctant one ranks "stop" first, and alternation ranks the
+left branch first. :func:`scan_rows` runs that NFA as a Pike VM (Cox, "Regular
+Expression Matching: the Virtual Machine Approach") over a row
+sequence. A row is consumed as symbol ``ch`` when ``truth(j, pos, ch,
+tent)`` says so, so one row may satisfy several symbols and the
+pattern decides the assignment. Threads are kept in priority order;
+when the highest-priority live thread accepts, every lower-priority
+thread is cut, and a later accept from a surviving higher thread
+overrides it. That is ``re.finditer``'s leftmost-first discipline, so
+``re`` is the oracle for every pattern (property-tested). Every route
+runs through this scanner: the batch MATCH_RECOGNIZE operator
+(operators/match_recognize.py), and :class:`StreamMatcher` behind the
+three streaming entry points below.
 
-    (n_matches, longest_match, carry)
+Streaming state is bounded. A key's state is ``(n_matches, longest,
+carry)``, where ``carry`` holds only the rows of the in-flight match
+attempt. That suffix is bounded by the longest single match the pattern
+can absorb, which an adversarial stream can grow without limit (an
+endless click run under ``vc+p``). ``max_carry`` therefore caps it: an
+attempt whose carry exceeds the cap is aborted (carry dropped,
+``n_aborted`` incremented and emitted). Matches spanning an aborted
+attempt are lost, and the output says so.
 
-where ``carry`` is ONLY the suffix of the stream belonging to the
-in-flight match attempt. That suffix is bounded by the longest single
-match the pattern can absorb — an INPUT-DEPENDENT bound: for ``vc+p`` it
-is the user's longest click run, which a degenerate/adversarial stream
-can grow without limit. ``max_carry`` therefore enforces a hard cap: an
-attempt whose carry exceeds it is aborted (carry dropped, ``n_aborted``
-incremented and emitted) so a state-store row can never exceed
-``max_carry`` characters regardless of input. Matches spanning an
-aborted attempt are lost and the output says so — the honest trade on an
-unbounded stream.
-
-Semantics: leftmost-longest, non-overlapping. For patterns without
-ambiguous alternation (no two alternatives matching different-length
-prefixes at the same start) this coincides with the Java/Python/RE2
-leftmost-GREEDY semantics the batch twin uses — property-tested against
-``re.findall`` in tests/test_streaming_patterns.py. Supported syntax:
-literal characters, ``.``, ``|``, ``(...)``, postfix ``* + ?`` and the
-reluctant ``*? +? ?? {n,m}?`` forms (late r12) — the regular core of
-MATCH_RECOGNIZE patterns (reference has no CEP operator;
-this is a superset surface; cf. reference io/src parsers having no
-streaming layer at all).
-
-Each micro-batch emits the user's totals *as if the stream ended here*
+Each micro-batch emits the key's totals *as if the stream ended here*
 (the pending attempt is resolved against end-of-input without mutating
-stored state), so the last emitted row per user equals the batch query on
-the same prefix. Cross-batch event order: within a micro-batch, rows are
-sorted by (ts, event_id); across micro-batches the source must deliver
-per-user events in order (true for the file source used in tests; a
-production kafka deployment would buffer by event time upstream — the
-same contract as the reference-free ``user_running_totals`` operator).
+stored state), so the last emitted row per key equals the batch answer
+on the same prefix. Within a micro-batch, rows are sorted by (ts, id);
+across micro-batches the source must deliver per-key events in order.
+The reference engine has no CEP operator; this surface is beyond it.
 """
 
 from __future__ import annotations
@@ -47,6 +41,8 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from blazingsql_spark.operators.mr_expr import ImmutableRows
 
 # ---------------------------------------------------------------------------
 # Thompson NFA over single characters (public-textbook construction).
@@ -68,33 +64,12 @@ class _Nfa:
         self.trans[s] = []
         return s
 
-    def closure(self, states: frozenset[int]) -> frozenset[int]:
-        seen = set(states)
-        stack = list(states)
-        while stack:
-            s = stack.pop()
-            for t in self.eps[s]:
-                if t not in seen:
-                    seen.add(t)
-                    stack.append(t)
-        return frozenset(seen)
-
-    def step(self, states: frozenset[int], ch: str) -> frozenset[int]:
-        nxt: set[int] = set()
-        for s in states:
-            for want, t in self.trans[s]:
-                if want is None or want == ch:
-                    nxt.add(t)
-        return self.closure(frozenset(nxt)) if nxt else frozenset()
-
 
 def ordered_closure(nfa: _Nfa, starts) -> list[int]:
-    """ε-closure as an ORDERED list (preorder DFS following eps edges in
-    declaration order) — the thread-priority order for preferment
-    scanning: compile_pattern appends the preferred edge first (greedy
-    quantifier continuation, left alternative). Shared by the batch
-    priority scanners (operators/match_recognize.py) and
-    :class:`StreamMatcherND`."""
+    """Epsilon-closure as an ORDERED list (preorder DFS following eps
+    edges in declaration order): the thread-priority order of
+    :func:`scan_rows`, because compile_pattern appends the preferred
+    edge first."""
     out: list[int] = []
     seen: set[int] = set()
     stack = list(reversed(list(starts)))
@@ -107,12 +82,6 @@ def ordered_closure(nfa: _Nfa, starts) -> list[int]:
         stack.extend(reversed(nfa.eps.get(st, [])))
     return out
 
-
-# a '?' right after a quantifier (whitespace-tolerant — the MR
-# compiler strips spaces): the SQL:2016 reluctant marker. Shared by
-# every path that must route reluctant patterns to the priority
-# scanners (the longest-discipline set-scan would be silently wrong)
-RELUCTANT_PROBE = re.compile(r"[*+?}]\s*\?")
 
 _BOUNDED_QUANT = re.compile(r"\{(\d*)(,)?(\d*)\}")
 _MAX_BOUND = 1000  # expansion cap: states grow linearly with the bound
@@ -241,10 +210,9 @@ def compile_pattern(pattern: str) -> _Nfa:
             if reluctant:
                 pos += 1
             ns, ne = nfa.new_state(), nfa.new_state()
-            # epsilon-edge ORDER encodes match preference for the
-            # priority (nondeterministic-classification) scanner:
-            # greedy appends enter/loop BEFORE exit, reluctant the
-            # reverse. Set-based scans ignore order.
+            # epsilon-edge ORDER encodes match preference for
+            # scan_rows: greedy appends enter/loop BEFORE exit,
+            # reluctant the reverse
             if reluctant:
                 if op in ("*", "?"):
                     nfa.eps[ns].append(ne)
@@ -302,304 +270,265 @@ def compile_pattern(pattern: str) -> _Nfa:
     if pos != len(pattern):
         raise ValueError(f"trailing {pattern[pos:]!r} in pattern {pattern!r}")
     nfa.start, nfa.accept = s, e
-    if nfa.accept in nfa.closure(frozenset([nfa.start])):
+    if nfa.accept in ordered_closure(nfa, [nfa.start]):
         raise ValueError(f"pattern {pattern!r} matches the empty string")
     return nfa
 
 
 # ---------------------------------------------------------------------------
-# Incremental leftmost-longest scanner.
+# The row scanner and its incremental form.
 # ---------------------------------------------------------------------------
+
+_SKIP_PAST = ("past",)
+_MAX_THREADS = 256  # assignment histories alive at one row
+
+
+def _skip_resume(skip, pos: int, last_acc: int, span_codes: str) -> int:
+    """Next scan position after a match [pos, last_acc) under an AFTER
+    MATCH SKIP mode (('past',) | ('next',) | ('first'|'last', chars)).
+    Raises on the SQL:2016 runtime errors: skipping to a symbol the
+    match never mapped, or to the match's own first row (infinite
+    loop)."""
+    kind = skip[0]
+    if kind == "past":
+        return last_acc
+    if kind == "next":
+        return pos + 1
+    chs = skip[1]
+    hits = [i for i, c in enumerate(span_codes) if c in chs]
+    idx = (hits[0] if kind == "first" else hits[-1]) if hits else -1
+    if idx < 0:
+        raise ValueError(
+            f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO {kind.upper()} names a "
+            f"symbol the match did not map any row to"
+        )
+    if idx == 0:
+        raise ValueError(
+            "MATCH_RECOGNIZE: AFTER MATCH SKIP TO the first row of the "
+            "match would loop forever (SQL:2016 runtime error)"
+        )
+    return pos + idx
+
+
+def _within_breaks(within, j: int, pos: int) -> bool:
+    """True when row ``j`` falls outside the attempt-at-``pos``'s
+    match-duration budget (``within=(order_key_values, dur)``) — or
+    either key is NULL (x != x catches NaT/nan without a pandas call
+    per row)."""
+    tv, dur = within
+    tj, tp = tv[j], tv[pos]
+    return (
+        tj is None or tj != tj or tp is None or tp != tp or tj - tp > dur
+    )
+
+
+def scan_rows(
+    nfa: _Nfa,
+    truth,
+    size: int,
+    final: bool = True,
+    skip=_SKIP_PAST,
+    within=None,
+    anchor_start: bool = False,
+    anchor_end: bool = False,
+    read_chars: frozenset = frozenset(),
+) -> tuple[list[tuple[int, int, str]], int | None]:
+    """Match ``nfa`` over rows ``0..size-1`` in SQL:2016 preference
+    order; returns ``(spans, carry_start)``.
+
+    ``truth(j, pos, ch, tent)`` says whether row ``j`` of the attempt
+    starting at ``pos`` can be consumed as symbol char ``ch``, given the
+    thread's mapping ``tent`` ({char: mr_expr.ImmutableRows}, without
+    ``j``). Each thread carries its own mapping, restricted to
+    ``read_chars``: the chars whose mapped rows some navigation
+    predicate reads (mr_expr's ``closure.used_sym_chars``). Threads are
+    deduplicated by (NFA state, that mapping), first wins, which keeps
+    the priority order. Appends are interned per attempt, so equal
+    mappings are the same object and dedup is by content. With no
+    reads this is plain state dedup, at most one thread per state.
+    Histories that all stay live under read navigation can still grow
+    exponentially; more than ``_MAX_THREADS`` threads at one row (never
+    fewer than the NFA's state count) raises.
+
+    Spans are ``(lo, hi, codes)``, ``codes`` being the preferred
+    assignment, one symbol char per row. ``skip`` is the AFTER MATCH
+    mode (see _skip_resume), ``within=(order_key_values, dur)`` the
+    match-duration bound (a row beyond it ends the attempt; the
+    accepted prefix still emits), and ``anchor_start``/``anchor_end``
+    the SQL:2016 ``^``/``$``. Under ``final=False`` (streams) an
+    attempt still able to consume at end-of-input is not resolved: its
+    first row comes back as ``carry_start``, and the caller replays it
+    from there once more rows arrive."""
+    read_order = tuple(sorted(read_chars))
+    start_threads = ordered_closure(nfa, [nfa.start])
+    closure_memo: dict[int, list[int]] = {}
+    cap = max(_MAX_THREADS, len(nfa.eps))
+    no_rows: dict = {}
+    spans: list[tuple[int, int, str]] = []
+    pos = 0
+    while pos < size:
+        # thread = (state, node, tent): node is the (char, parent)
+        # chain the span's codes are rebuilt from
+        threads: list[tuple[int, tuple | None, dict]] = [
+            (st, None, no_rows) for st in start_threads
+        ]
+        interned: dict = {}
+        best_end, best_node = -1, None
+        j = pos
+        while j < size and threads:
+            if within is not None and _within_breaks(within, j, pos):
+                break
+            new_threads: list[tuple[int, tuple | None, dict]] = []
+            seen: set = set()
+            for st, node, tent in threads:
+                for want, to in nfa.trans[st]:
+                    ntent = tent
+                    if want is None:
+                        nnode = (".", node)
+                    elif truth(j, pos, want, tent):
+                        nnode = (want, node)
+                        if want in read_chars:
+                            at = (j, tent.get(want))
+                            rows = interned.get(at)
+                            if rows is None:
+                                rows = interned[at] = ImmutableRows(*at)
+                            ntent = {**tent, want: rows}
+                    else:
+                        continue
+                    proj = tuple(map(ntent.get, read_order))
+                    targets = closure_memo.get(to)
+                    if targets is None:
+                        targets = closure_memo[to] = ordered_closure(nfa, [to])
+                    for cl in targets:
+                        key = (cl, proj)
+                        if key not in seen:
+                            seen.add(key)
+                            new_threads.append((cl, nnode, ntent))
+            if len(new_threads) > cap:
+                raise ValueError(
+                    "MATCH_RECOGNIZE: nondeterministic symbol assignment "
+                    f"over navigation DEFINEs exceeded {cap} "
+                    "concurrent assignment histories at one row — the "
+                    "PATTERN admits exponentially many mappings whose "
+                    "navigation predicates all stay live (e.g. several "
+                    "always-true symbols under a quantifier). Make the "
+                    "DEFINE predicates more selective or mutually "
+                    "exclusive"
+                )
+            threads = new_threads
+            j += 1
+            if not anchor_end or j == size:
+                for idx, (st, node, _tent) in enumerate(threads):
+                    if st == nfa.accept:
+                        # record the highest-priority accept and cut
+                        # everything below it; a surviving higher
+                        # thread may override it later
+                        best_end, best_node = j, node
+                        del threads[idx + 1:]
+                        break
+        else:
+            # end of input with live threads: in flight only if one of
+            # them can still consume a row
+            if not final and any(nfa.trans[st] for st, _n, _t in threads):
+                return spans, pos
+        if best_end > pos:
+            chars: list[str] = []
+            node = best_node
+            while node is not None:
+                chars.append(node[0])
+                node = node[1]
+            codes = "".join(reversed(chars))
+            spans.append((pos, best_end, codes))
+            pos = _skip_resume(skip, pos, best_end, codes)
+        else:
+            pos += 1
+        if anchor_start:
+            break  # only the partition's first row can start a match
+    return spans, None
+
+
+def char_truth(text: str):
+    """Truth over a code string: row ``j`` is exactly symbol ``text[j]``."""
+    return lambda j, pos, ch, tent: text[j] == ch
+
+
+def mask_truth(sym_bits: dict[str, int]):
+    """Truth over per-row bitmasks: row ``j`` satisfies every symbol
+    whose bit ``sym_bits[ch]`` is set in ``masks[j]``."""
+    return lambda masks: lambda j, pos, ch, tent: masks[j] & sym_bits[ch]
 
 
 class StreamMatcher:
-    """Incremental non-overlapping leftmost-PREFERMENT matcher (r12 —
-    previously leftmost-longest; for alternation-free patterns the two
-    coincide, every greedy preference being "consume more", so existing
-    streams are byte-identical; with alternation the left branch now
-    wins even when a right branch would match longer, exactly
-    ``re.finditer``'s discipline — so the batch regexp twin and this
-    matcher agree on EVERY pattern, property-tested).
+    """:func:`scan_rows` fed incrementally, for one key of a stream.
 
-    ``feed(text)`` consumes more of the stream; ``snapshot()`` returns the
-    (n_matches, longest) pair *as if the stream ended now* without
-    disturbing the in-flight attempt; ``carry`` is the suffix that must
-    persist across batches (the state-store payload), hard-capped at
-    ``max_carry`` characters: an in-flight attempt that outgrows the cap
-    is aborted (carry dropped, ``n_aborted`` incremented) so state stays
-    bounded even on adversarial streams whose longest possible match is
-    unbounded (e.g. an endless click run under ``vc+p``).
-    """
+    ``feed(rows)`` consumes more rows; ``snapshot()`` returns
+    ``(n_matches, longest)`` *as if the stream ended now* without
+    disturbing the in-flight attempt. Rows are any sliceable sequence
+    that ``+`` concatenates: a code string (the default,
+    :func:`char_truth`), a list of bitmasks (:func:`mask_truth`), or a
+    list of row tuples. ``truth_of(rows)`` builds the scanner's truth
+    over one such sequence, and ``within_of(rows)`` its WITHIN bound.
+    ``carry`` is the in-flight attempt's rows, the state-store payload,
+    capped at ``max_carry`` rows: an attempt that outgrows the cap is
+    aborted (carry dropped, ``n_aborted`` incremented). Committed
+    matches always start before the carry, under every ``skip`` mode,
+    so replaying the carry never recounts one."""
 
     def __init__(
         self,
         nfa: _Nfa,
+        truth_of=char_truth,
         n_matches: int = 0,
         longest: int = 0,
-        carry: str = "",
+        carry="",
         max_carry: int = 4096,
         n_aborted: int = 0,
-        skip_next: bool = False,
+        skip=_SKIP_PAST,
+        read_chars: frozenset = frozenset(),
+        within_of=None,
     ):
         if max_carry < 1:
             raise ValueError(f"max_carry must be >= 1, got {max_carry}")
         self.nfa = nfa
+        self.truth_of = truth_of
         self.n_matches = n_matches
         self.longest = longest
         self.carry = carry
         self.max_carry = max_carry
         self.n_aborted = n_aborted
-        # AFTER MATCH SKIP TO NEXT ROW (late r12): resume one row after
-        # the match START — overlapping matches. The carry contract is
-        # unchanged: committed matches all start BEFORE the in-flight
-        # attempt's position, so a rescan from the carry never recounts
-        self.skip_next = skip_next
+        self.skip = skip
+        self.read_chars = read_chars
+        self.within_of = within_of
 
-    def feed(self, text: str) -> None:
-        self.n_matches, self.longest, self.carry = self._scan(
-            self.carry + text, self.n_matches, self.longest, final=False
+    def _scan(self, rows, final: bool):
+        return scan_rows(
+            self.nfa, self.truth_of(rows), len(rows), final=final,
+            skip=self.skip,
+            within=self.within_of(rows) if self.within_of else None,
+            read_chars=self.read_chars,
         )
+
+    def feed(self, rows) -> None:
+        rows = self.carry + rows if len(self.carry) else rows
+        spans, carry_start = self._scan(rows, final=False)
+        self.n_matches += len(spans)
+        self.longest = max([self.longest] + [hi - lo for lo, hi, _ in spans])
+        self.carry = rows[carry_start:] if carry_start is not None else rows[:0]
         if len(self.carry) > self.max_carry:
             # the whole carry is ONE in-flight attempt; abort it rather
             # than keep unbounded state (a kept suffix could fabricate a
             # match start the true stream never had)
             self.n_aborted += 1
-            self.carry = ""
+            self.carry = rows[:0]
 
     def snapshot(self) -> tuple[int, int]:
-        n, longest, _ = self._scan(self.carry, self.n_matches, self.longest, final=True)
-        return n, longest
-
-    def _scan(self, text: str, n: int, longest: int, final: bool) -> tuple[int, int, str]:
-        nfa = self.nfa
-        start_threads = ordered_closure(nfa, [nfa.start])
-        memo: dict[int, list[int]] = {}
-
-        def closure_of(st: int) -> list[int]:
-            got = memo.get(st)
-            if got is None:
-                got = memo[st] = ordered_closure(nfa, [st])
-            return got
-
-        pos, size = 0, len(text)
-        while pos < size:
-            threads = list(start_threads)
-            last_acc = -1
-            j = pos
-            while j < size and threads:
-                ch = text[j]
-                new_threads: list[int] = []
-                seen: set[int] = set()
-                for st in threads:
-                    for want, to in nfa.trans.get(st, ()):
-                        if want is not None and want != ch:
-                            continue
-                        for c in closure_of(to):
-                            if c not in seen:
-                                seen.add(c)
-                                new_threads.append(c)
-                threads = new_threads
-                if not threads:
-                    break
-                j += 1
-                for idx, st in enumerate(threads):
-                    if st == nfa.accept:
-                        # preferment: record the highest-priority accept,
-                        # cut lower-priority threads; a later accept from
-                        # a surviving thread overrides
-                        last_acc = j
-                        del threads[idx + 1:]
-                        break
-            if j == size and threads:
-                # Attempt hit end of input with live threads. It is only
-                # genuinely in-flight if some live state can still consume a
-                # character (e.g. {accept} alone for 'vc+p' after the 'p'
-                # cannot — that match is final regardless of future input).
-                if not final and any(nfa.trans[s] for s in threads):
-                    # Everything from `pos` is the in-flight carry. Nothing
-                    # here is committed (more input could extend the match).
-                    return n, longest, text[pos:]
-            if last_acc > pos:
-                n += 1
-                longest = max(longest, last_acc - pos)
-                pos = pos + 1 if self.skip_next else last_acc
-            else:
-                pos += 1
-        return n, longest, ""
-
-
-class StreamMatcherND:
-    """Incremental SQL:2016 preferment-order matcher over per-row truth
-    BITMASKS — the streaming twin of the batch priority scanner
-    (operators/match_recognize.find_match_spans_nd), added in r12 so
-    nondeterministic symbol assignment no longer silently diverges
-    between the batch and streaming paths (VERDICT-r11 #5).
-
-    Each element of the stream is an int whose bit ``sym_bits[ch]``
-    says whether that row can be consumed as symbol ``ch`` (a row may
-    satisfy SEVERAL symbols; undefined always-true symbols have their
-    bit set on every row). The scan runs priority threads: greedy
-    continuation and the left alternation branch rank first, the
-    highest-priority accepting thread records the match and cuts
-    lower-priority threads, and a later accept from a surviving thread
-    overrides — identical preferment to the batch scanner, so with
-    deterministic one-hot masks and an alternation-free pattern the
-    results equal :class:`StreamMatcher`'s byte for byte
-    (property-tested).
-
-    State bound: the carry persists the in-flight attempt's mask
-    suffix, hard-capped at ``max_carry`` rows (abort + counter past it)
-    — the same discipline as StreamMatcher. Matches recorded
-    mid-attempt are NOT committed while the attempt is in flight
-    (more input could extend a surviving higher-priority thread);
-    ``snapshot()`` resolves the pending attempt as if the stream ended
-    now, without touching stored state."""
-
-    def __init__(
-        self,
-        nfa: _Nfa,
-        sym_bits: dict[str, int],
-        n_matches: int = 0,
-        longest: int = 0,
-        carry: tuple | list = (),
-        max_carry: int = 4096,
-        n_aborted: int = 0,
-        skip_next: bool = False,
-        skip_fl: tuple | None = None,
-    ):
-        if max_carry < 1:
-            raise ValueError(f"max_carry must be >= 1, got {max_carry}")
-        if skip_next and skip_fl is not None:
-            raise ValueError("skip_next and skip_fl are mutually exclusive")
-        self.nfa = nfa
-        self.sym_bits = sym_bits
-        self.skip_next = skip_next
-        # AFTER MATCH SKIP TO FIRST/LAST <sym> (late r12): ('first'|'last',
-        # symbol char). Needs the match's symbol assignment, so the scan
-        # tracks per-thread (char, parent) chains — only in this mode;
-        # the int-thread hot loop below stays for PAST/TO NEXT. The
-        # SQL:2016 runtime errors (symbol unmapped, resume at the match's
-        # own first row) raise, identical to the batch operator.
-        self.skip_fl = skip_fl
-        self.n_matches = n_matches
-        self.longest = longest
-        self.carry = list(carry)
-        self.max_carry = max_carry
-        self.n_aborted = n_aborted
-        self._start = ordered_closure(nfa, [nfa.start])
-        self._closure_memo: dict[int, list[int]] = {}
-
-    def _closure_of(self, st: int) -> list[int]:
-        got = self._closure_memo.get(st)
-        if got is None:
-            got = self._closure_memo[st] = ordered_closure(self.nfa, [st])
-        return got
-
-    def feed(self, masks: list[int]) -> None:
-        self.n_matches, self.longest, self.carry = self._scan(
-            self.carry + list(masks), self.n_matches, self.longest,
-            final=False,
-        )
-        if len(self.carry) > self.max_carry:
-            self.n_aborted += 1
-            self.carry = []
-
-    def snapshot(self) -> tuple[int, int]:
-        n, longest, _ = self._scan(
-            self.carry, self.n_matches, self.longest, final=True
-        )
-        return n, longest
-
-    def _scan(
-        self, masks: list[int], n: int, longest: int, final: bool
-    ) -> tuple[int, int, list[int]]:
-        if self.skip_fl is not None:
-            return self._scan_fl(masks, n, longest, final)
-        nfa, bits = self.nfa, self.sym_bits
-        pos, size = 0, len(masks)
-        while pos < size:
-            threads = list(self._start)
-            best_end = -1
-            j = pos
-            while j < size and threads:
-                mask = masks[j]
-                new_threads: list[int] = []
-                seen: set[int] = set()
-                for st in threads:
-                    for want, to in nfa.trans.get(st, ()):
-                        if want is not None and not (
-                            mask & bits.get(want, 0)
-                        ):
-                            continue
-                        for c in self._closure_of(to):
-                            if c not in seen:
-                                seen.add(c)
-                                new_threads.append(c)
-                threads = new_threads
-                if not threads:
-                    break
-                j += 1
-                for idx, st in enumerate(threads):
-                    if st == nfa.accept:
-                        # preferment: record, cut lower-priority threads
-                        best_end = j
-                        del threads[idx + 1:]
-                        break
-            if (
-                j == size
-                and threads
-                and not final
-                and any(nfa.trans[s] for s in threads)
-            ):
-                # attempt hit end-of-input with a thread that can still
-                # consume: in-flight — nothing committed, carry from pos
-                return n, longest, masks[pos:]
-            if best_end > pos:
-                n += 1
-                longest = max(longest, best_end - pos)
-                pos = pos + 1 if self.skip_next else best_end
-            else:
-                pos += 1
-        return n, longest, []
-
-    def _scan_fl(
-        self, masks: list[int], n: int, longest: int, final: bool
-    ) -> tuple[int, int, list[int]]:
-        """The TO FIRST/LAST variant of _scan: delegates to the batch
-        per-thread scanner (scan_rows_in_automaton_nd), which already
-        implements identical preferment threading, the (char, parent)
-        assignment chains _skip_resume needs — including its SQL:2016
-        runtime errors — and the final=False/carry_start streaming
-        contract. read_chars=frozenset() collapses its dedup to
-        state-dedup (mask truth is history-independent), and the thread
-        cap is lifted to the state count so large bounded-quantifier
-        NFAs can never trip it here. Carry contract unchanged: the
-        resume position is strictly inside the match (the
-        first-row-resume error guarantees > pos), so committed matches
-        always start before the in-flight position."""
-        from blazingsql_spark.operators.match_recognize import (
-            scan_rows_in_automaton_nd,
-        )
-
-        bits = self.sym_bits
-        spans, carry_start = scan_rows_in_automaton_nd(
-            self.nfa,
-            lambda j, pos, ch, tent: bool(masks[j] & bits.get(ch, 0)),
-            len(masks),
-            final=final,
-            skip=self.skip_fl,
-            read_chars=frozenset(),
-            max_threads=max(256, 4 * len(self.nfa.eps)),
-        )
-        for lo, hi, _codes in spans:
-            n += 1
-            longest = max(longest, hi - lo)
-        carry = masks[carry_start:] if carry_start is not None else []
-        return n, longest, carry
+        spans, _ = self._scan(self.carry, final=True)
+        longest = max([self.longest] + [hi - lo for lo, hi, _ in spans])
+        return self.n_matches + len(spans), longest
 
 
 # ---------------------------------------------------------------------------
-# The streaming operator.
+# The streaming operators.
 # ---------------------------------------------------------------------------
 
 DEFAULT_CODE_MAP = {"view": "v", "click": "c", "purchase": "p", "error": "e"}
@@ -659,7 +588,8 @@ def pattern_match_stream(
         batch = pd.concat(chunks).sort_values(["ts", "event_id"])
         codes = "".join(batch["event_type"].map(lambda t: cmap.get(t, default_code)))
         m = StreamMatcher(
-            nfa, n0, longest0, carry0, max_carry=max_carry, n_aborted=aborted0
+            nfa, n_matches=n0, longest=longest0, carry=carry0,
+            max_carry=max_carry, n_aborted=aborted0,
         )
         m.feed(codes)
         seen = seen0 + len(batch)
@@ -692,56 +622,40 @@ def match_recognize_stream(
     after_match: str = "PAST LAST ROW",
 ) -> DataFrame:
     """Streaming MATCH_RECOGNIZE summary — the incremental twin of
-    operators.match_recognize for its ONE-ROW-PER-MATCH aggregate form:
-    one codegen projection evaluates every DEFINE into a per-row truth
-    BITMASK (PREV/NEXT navigation is rejected — a stream has no ordered
-    partition to lag over), then each key's mask stream feeds the
-    bounded-state :class:`StreamMatcherND`, which resolves SQL:2016
-    NONDETERMINISTIC SYMBOL ASSIGNMENT with the same preferment order
-    as the batch priority scanner (r12 — ambiguous DEFINEs previously
-    classified first-true here while the batch path forked threads).
-    ``after_match`` selects the streaming SKIP mode (late r12): 'PAST
-    LAST ROW' (default, non-overlapping), 'TO NEXT ROW' (overlapping
-    matches — the scan resumes one row after each match START), or
-    'TO FIRST/LAST <sym>' (resume AT the first/last row the match
-    mapped to that symbol; the SQL:2016 runtime errors — symbol
-    unmapped, resume at the match's own first row — raise, identical
-    to the batch operator). Every mode keeps the same carry bound:
-    the resume position is always strictly after the committed match's
-    start, so cross-batch rescans never recount.
+    operators.match_recognize for its ONE-ROW-PER-MATCH aggregate form,
+    run by :class:`StreamMatcher` over each key's rows with the batch
+    operator's scanner and preference order.
+
+    Without symbol-relative navigation or WITHIN, one codegen projection
+    evaluates every DEFINE into a per-row truth BITMASK (a row may
+    satisfy several symbols; undefined symbols' bits are always set),
+    and the carry is the in-flight attempt's masks. PREV/NEXT are
+    rejected: a stream has no ordered partition to lag over.
+    ``after_match`` is 'PAST LAST ROW' (default), 'TO NEXT ROW', or 'TO
+    FIRST/LAST <sym>', with the batch operator's SQL:2016 runtime
+    errors.
 
     Emits one (key, n_matches, longest_match, n_codes, n_aborted) row
     per key per micro-batch with the totals the batch operator would
     report on the prefix seen so far — the same contract, state bound,
-    and ``max_carry`` abort discipline as pattern_match_stream (which
-    remains the event-code-map convenience wrapper, deterministic by
-    construction). MEASURES are not part of this surface: emission is
-    O(1) per match (a count and a length) — no per-prefix measure
-    re-evaluation exists on the streaming path, so the batch operator's
-    O(span) cumulative-measure machinery has nothing to mirror here
-    (VERDICT-r11 #6: documented bound). ^/$ anchors are rejected
-    loudly below.
+    and ``max_carry`` abort discipline as pattern_match_stream.
+    MEASURES are not part of this surface: emission is a count and a
+    length per match. ^/$ anchors are rejected loudly below.
 
     SYMBOL-RELATIVE navigation in DEFINE (``FIRST(V.ts)``,
     ``LAST(B.x, n)``, bare ``A.col``) is supported on streams too: those
     references only ever name rows of the CURRENT match attempt, which
-    is exactly the suffix the carry state already persists — so the
-    in-automaton scan resumes across micro-batches with no semantic
-    drift from the batch operator. The carry then stores row VALUES
-    (the nav-referenced columns + the vectorized symbols' flags), not
-    just a code string, bounded by the same ``max_carry`` row cap.
-    PREV/NEXT stay rejected (physical offsets can reach rows OUTSIDE
-    the attempt, which a bounded stream no longer has).
+    is exactly the suffix the carry persists. The carry then stores row
+    VALUES (the nav-referenced columns and the vectorized symbols'
+    flags), bounded by the same ``max_carry`` row cap.
 
     ``within`` bounds the match DURATION like the batch operator (the
     Flink extension): a row whose ``ts_col`` exceeds the attempt's
     first row by more than the bound ends the attempt (the accepted
-    prefix still emits). A WITHIN stream always routes through the
-    row-value carry (the ts of every in-flight row must persist across
-    micro-batches), and as a welcome side effect the bound caps the
-    carry naturally on streams whose event time advances. The bound's
-    type is checked against ``ts_col`` at plan time (interval for
-    timestamps, plain number for numeric keys).
+    prefix still emits). A WITHIN stream also carries row values (the
+    ts of every in-flight row must persist across micro-batches). The
+    bound's type is checked against ``ts_col`` at plan time (interval
+    for timestamps, plain number for numeric keys).
 
     Cross-batch order contract: per-key rows must arrive in (ts, id)
     order across micro-batches (within a batch they are sorted), same
@@ -751,24 +665,18 @@ def match_recognize_stream(
 
     from blazingsql_spark.operators import mr_expr
     from blazingsql_spark.operators.match_recognize import (
+        _expand_permute,
+        _extract_exclusions,
+        _parse_within,
+        _strip_anchors,
         compile_symbols,
     )
 
     define = dict(define or {})
-    # {- -} exclusions only affect ALL ROWS row output, which this
-    # summary form never emits — strip them so the pattern compiles
-    # (leaving the braces in would make them literal NFA characters no
-    # row code can equal: silent zero matches forever)
-    from blazingsql_spark.operators.match_recognize import (
-        _expand_permute,
-        _extract_exclusions,
-        _strip_anchors,
-    )
-
     pattern, anchor_start, anchor_end = _strip_anchors(pattern)
     if anchor_start or anchor_end:
-        # loud, not the generic metacharacter error (r12, VERDICT-r11
-        # #5): the batch operator supports ^/$, so a migrating user
+        # loud, not the generic metacharacter error: the batch
+        # operator supports ^/$, so a migrating user
         # deserves the real reason streams cannot
         raise ValueError(
             "MATCH_RECOGNIZE: ^/$ partition anchors are not supported on "
@@ -790,15 +698,13 @@ def match_recognize_stream(
             f"{after_match!r} (streams support PAST LAST ROW, TO NEXT "
             f"ROW, and TO FIRST/LAST <sym>)"
         )
-    skip_next = am.group("next") is not None
-    # preferment probe BEFORE PERMUTE expansion (like the batch twin):
-    # PERMUTE's generated branches are equal-length permutations, where
-    # preferment and longest coincide — no need for the ordered-thread
-    # scan on their account
-    preferment = "|" in pattern or bool(RELUCTANT_PROBE.search(pattern))
+    # {- -} exclusions only affect ALL ROWS row output, which this
+    # summary form never emits — strip them so the pattern compiles
+    # (leaving the braces in would make them literal NFA characters no
+    # row code can equal: silent zero matches forever)
     pattern, _ = _extract_exclusions(_expand_permute(pattern))
     names, sym_chars, nfa = compile_symbols(pattern, define)
-    skip_fl = None
+    skip = ("next",) if am.group("next") else _SKIP_PAST
     if am.group("fl"):
         flsym = am.group("flsym")
         if flsym not in sym_chars:
@@ -806,7 +712,7 @@ def match_recognize_stream(
                 f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO unknown symbol "
                 f"{flsym!r}"
             )
-        skip_fl = (am.group("fl").lower(), sym_chars[flsym])
+        skip = (am.group("fl").lower(), sym_chars[flsym])
     if max_carry < 1:
         raise ValueError(f"max_carry must be >= 1, got {max_carry}")
     symrel = {
@@ -815,8 +721,6 @@ def match_recognize_stream(
     }
     within_dur = None
     if within is not None:
-        from blazingsql_spark.operators.match_recognize import _parse_within
-
         within_dur = _parse_within(within)
         is_time = isinstance(
             events.schema[ts_col].dataType,
@@ -832,20 +736,9 @@ def match_recognize_stream(
     if symrel or within_dur is not None:
         return _match_recognize_stream_nav(
             events, key_col, ts_col, id_col, define, symrel,
-            names, sym_chars, nfa, max_carry, within_dur,
-            preferment=preferment, skip_next=skip_next, skip_fl=skip_fl,
+            names, sym_chars, nfa, max_carry, within_dur, skip,
         )
-    # r12 (VERDICT-r11 #5): nondeterministic symbol assignment on the
-    # streaming path. ONE codegen projection emits a per-row truth
-    # BITMASK over the pattern symbols (a row may satisfy several
-    # DEFINEs; undefined symbols' bits are always set), and the
-    # priority matcher resolves the assignment with the same SQL:2016
-    # preferment as the batch scanner — so ambiguous DEFINEs no longer
-    # silently classify first-true on streams while the batch path
-    # forks threads. Deterministic one-hot streams with alternation-
-    # free patterns produce byte-identical counters to the pre-r12
-    # StreamMatcher (property-tested). Symbol alphabet is capped at 52,
-    # so the mask always fits a LongType.
+    # Symbol alphabet is capped at 52, so the mask always fits a LongType
     sym_bits = {sym_chars[s]: 1 << i for i, s in enumerate(names)}
     undef_const = 0
     mask_expr = None
@@ -886,10 +779,9 @@ def match_recognize_stream(
             n0, longest0, carry0, seen0, aborted0 = 0, 0, [], 0, 0
         chunks = [pdf[["ts", "event_id", "__mask"]] for pdf in pdfs]
         batch = pd.concat(chunks).sort_values(["ts", "event_id"])
-        m = StreamMatcherND(
-            nfa, sym_bits, n0, longest0, carry0,
-            max_carry=max_carry, n_aborted=aborted0,
-            skip_next=skip_next, skip_fl=skip_fl,
+        m = StreamMatcher(
+            nfa, mask_truth(sym_bits), n0, longest0, carry0,
+            max_carry=max_carry, n_aborted=aborted0, skip=skip,
         )
         m.feed([int(x) for x in batch["__mask"]])
         seen = seen0 + len(batch)
@@ -937,16 +829,14 @@ def _match_recognize_stream_nav(
     sym_chars: dict[str, str],
     nfa,
     max_carry: int,
-    within_dur=None,
-    preferment: bool = False,
-    skip_next: bool = False,
-    skip_fl: tuple | None = None,
+    within_dur,
+    skip,
 ) -> DataFrame:
     """Symbol-relative streaming twin (see match_recognize_stream's
     docstring): the carry persists the in-flight attempt's ROWS (nav
     column values + vectorized flags, pickled — state-store internal,
-    never crosses process versions within a run), so the in-automaton
-    scan replays the attempt exactly when the next micro-batch arrives.
+    never crosses process versions within a run), so the scanner replays
+    the attempt exactly when the next micro-batch arrives.
     FIRST/LAST/bare-SYM.col only: those resolve inside the attempt by
     construction. PREV/NEXT (physical offsets) are rejected loudly."""
     import pickle  # noqa: PLC0415
@@ -956,15 +846,9 @@ def _match_recognize_stream_nav(
 
     from blazingsql_spark.operators import mr_expr
     from blazingsql_spark.operators.match_recognize import (
-        _SKIP_PAST,
-        InAutomatonAmbiguity,
-        build_classifier,
-        build_truth_nd,
-        scan_rows_in_automaton,
-        scan_rows_in_automaton_nd,
+        build_truth,
+        flag_list,
     )
-
-    skip = skip_fl or (("next",) if skip_next else _SKIP_PAST)
 
     compiled: dict[str, object] = {}
     used_cols: set[str] = set()
@@ -982,7 +866,7 @@ def _match_recognize_stream_nav(
         used_cols |= used
     nav_read_chars = frozenset().union(
         *(c.used_sym_chars for c in compiled.values())
-    ) if compiled else frozenset()
+    )
 
     flag_cols: dict[str, str] = {}
     coded = events
@@ -1001,99 +885,73 @@ def _match_recognize_stream_nav(
         coded = coded.withColumn(cname, F.expr(p))
         flag_cols[sym_chars[s]] = cname
 
-    test_order: list[tuple[str, str]] = []
-    for s in list(define) + [n for n in names if n not in define]:
-        ch = sym_chars[s]
-        kind = "rel" if s in symrel else "vec" if s in define else "any"
-        test_order.append((kind, ch))
-
     val_cols = sorted(used_cols | {ts_col, id_col})
     coded = coded.select(
         F.col(key_col).alias("user_id"), *val_cols, *flag_cols.values()
     )
+    n_vals = len(val_cols)
+
+    # the matcher's rows are tuples (*values, *flags) in val_cols then
+    # flag_cols order; the state blob stays column-wise
+    def columns(rows):
+        return list(zip(*rows)) or [()] * (n_vals + len(flag_cols))
+
+    def truth_of(rows):
+        cols = columns(rows)
+        return build_truth(
+            dict(zip(flag_cols, cols[n_vals:])),
+            compiled,
+            dict(zip(val_cols, cols)),
+            len(rows),
+        )
+
+    within_of = None
+    if within_dur is not None:
+        ts_at = val_cols.index(ts_col)
+
+        def within_of(rows):
+            return [r[ts_at] for r in rows], within_dur
 
     def update(key, pdfs, state):
         (user_id,) = key
+        rows0: list[tuple] = []
         if state.exists:
             n0, longest0, seen0, aborted0, blob = state.get
-            carry = pickle.loads(bytes(blob)) if blob else None
+            if blob:
+                carry = pickle.loads(bytes(blob))
+                rows0 = list(zip(
+                    *(carry["cols"][c] for c in val_cols),
+                    *(carry["flags"][ch] for ch in flag_cols),
+                ))
         else:
-            n0, longest0, seen0, aborted0, carry = 0, 0, 0, 0, None
-        c_cols = carry["cols"] if carry else {c: [] for c in val_cols}
-        c_flags = carry["flags"] if carry else {ch: [] for ch in flag_cols}
+            n0, longest0, seen0, aborted0 = 0, 0, 0, 0
         batch = pd.concat(list(pdfs)).sort_values([ts_col, id_col])
-        cols = {c: c_cols[c] + batch[c].tolist() for c in val_cols}
-        flags = {
-            ch: c_flags[ch] + batch[cn].tolist()
-            for ch, cn in flag_cols.items()
-        }
-        size = len(batch) + (len(next(iter(c_cols.values()))) if c_cols else 0)
-
-        def _scan(cols_, flags_, size_, final_):
-            """Deterministic in-automaton scan with the r12
-            nondeterministic fallback: a row satisfying >=2 consumable
-            symbols re-scans with per-thread tentative mappings — the
-            carry contract is identical (the attempt is replayed from
-            its first row next batch, so thread state never persists)."""
-            w = (
-                (cols_[ts_col], within_dur)
-                if within_dur is not None
-                else None
-            )
-            ctx_ = mr_expr.MatchCtx(cols_, 0, 0, size_, {})
-            classify_ = build_classifier(test_order, flags_, compiled, ctx_)
-            try:
-                return scan_rows_in_automaton(
-                    nfa, classify_, size_, final=final_, within=w,
-                    skip=skip, preferment=preferment,
-                )
-            except InAutomatonAmbiguity:
-                truth_ = build_truth_nd(
-                    test_order, flags_, compiled, cols_, size_
-                )
-                return scan_rows_in_automaton_nd(
-                    nfa, truth_, size_, final=final_, within=w,
-                    skip=skip, read_chars=nav_read_chars,
-                )
-
-        spans, carry_start = _scan(cols, flags, size, False)
-        n = n0 + len(spans)
-        longest = max([longest0] + [hi - lo for lo, hi, _ in spans])
-        aborted = aborted0
-        if carry_start is not None and size - carry_start > max_carry:
-            # the whole carry is ONE in-flight attempt; abort it rather
-            # than keep unbounded state (same discipline as StreamMatcher)
-            aborted += 1
-            carry_start = None
-        if carry_start is not None:
-            new_cols = {c: cols[c][carry_start:] for c in val_cols}
-            new_flags = {ch: flags[ch][carry_start:] for ch in flag_cols}
-            blob = pickle.dumps({"cols": new_cols, "flags": new_flags})
-        else:
-            new_cols = new_flags = None
-            blob = None
+        m = StreamMatcher(
+            nfa, truth_of, n0, longest0, rows0, max_carry=max_carry,
+            n_aborted=aborted0, skip=skip, read_chars=nav_read_chars,
+            within_of=within_of,
+        )
+        m.feed(list(zip(
+            *(batch[c].tolist() for c in val_cols),
+            *(flag_list(batch[cn]) for cn in flag_cols.values()),
+        )))
+        blob = None
+        if m.carry:
+            cols = [list(c) for c in columns(m.carry)]
+            blob = pickle.dumps({
+                "cols": dict(zip(val_cols, cols)),
+                "flags": dict(zip(flag_cols, cols[n_vals:])),
+            })
         seen = seen0 + len(batch)
-        state.update((n, longest, seen, aborted, blob))
-        # snapshot: resolve the pending attempt as if the stream ended
-        # here, without touching stored state (carry starts at the
-        # attempt start, so a standalone final scan reproduces it —
-        # symbol-relative refs never leave the attempt, which is WHY
-        # FIRST/LAST-only navigation is exactly resumable)
-        n_fin, longest_fin = n, longest
-        if new_cols is not None:
-            c_size = size - carry_start
-            spans2, _ = _scan(new_cols, new_flags, c_size, True)
-            n_fin += len(spans2)
-            longest_fin = max(
-                [longest_fin] + [hi - lo for lo, hi, _ in spans2]
-            )
+        state.update((m.n_matches, m.longest, seen, m.n_aborted, blob))
+        n_fin, longest_fin = m.snapshot()
         yield pd.DataFrame(
             {
                 "user_id": [user_id],
                 "n_matches": [n_fin],
                 "longest_match": [longest_fin],
                 "n_codes": [seen],
-                "n_aborted": [aborted],
+                "n_aborted": [m.n_aborted],
             }
         )
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tests.conftest import compare_frames
@@ -513,14 +513,14 @@ def oracle_fuzz_docs():
 # ---------------------------------------------------------------------------
 # MATCH_RECOGNIZE pattern fuzzing (r12, VERDICT-r11 #9). DuckDB has no
 # SQL:2016 row-pattern surface, so the oracle is Python's re engine —
-# a leftmost-PREFERMENT matcher, exactly the SQL:2016 order the r12
-# scanners implement (greedy quantifiers, left-first alternation). The
+# a leftmost-PREFERMENT matcher, exactly the SQL:2016 order the row
+# scanner implements (greedy quantifiers, left-first alternation). The
 # generator drives the REAL compile path (_strip_anchors,
 # _expand_permute for PERMUTE, compile_pattern's bounded-quantifier
-# expansion) — the pre-r11 `A{2} C` silent-no-match bug is exactly the
-# class this catches a round early. Both scanners are checked: the
-# priority scanner on every pattern, and the deterministic set-scan on
-# alternation-free ones (where preferment == longest by construction).
+# expansion) — an `A{2} C` silent-no-match bug is exactly the class
+# this catches. The scanner is checked with no mapping carried (the
+# vectorized route) and with every symbol's mapping carried (the
+# navigation route).
 # ---------------------------------------------------------------------------
 
 
@@ -583,15 +583,17 @@ def _mr_pattern():
     pattern=_mr_pattern(),
     s=st.text(alphabet="abcd", max_size=24),
 )
+# longest match (b a a b) and preferment (b a a, then b) disagree here
+@example(pattern="ba*(ab)?", s="baab")
 def test_fuzzed_mr_pattern_matches_re(pattern, s):
     import re as _re
 
-    from blazingsql_spark.operators.match_recognize import (
-        _strip_anchors,
-        find_match_spans,
-        find_match_spans_nd,
+    from blazingsql_spark.operators.match_recognize import _strip_anchors
+    from blazingsql_spark.streaming.patterns import (
+        char_truth,
+        compile_pattern,
+        scan_rows,
     )
-    from blazingsql_spark.streaming.patterns import compile_pattern
 
     core, a_start, a_end = _strip_anchors(pattern)
     try:
@@ -608,39 +610,25 @@ def test_fuzzed_mr_pattern_matches_re(pattern, s):
         for m in _re.finditer(pattern, s)
         if m.end() > m.start()
     ]
-    got_nd = find_match_spans_nd(
+    got, carry = scan_rows(
         nfa,
-        lambda j, ch, _s=s: _s[j] == ch,
+        char_truth(s),
         len(s),
         anchor_start=a_start,
         anchor_end=a_end,
-    )
-    assert [(lo, hi) for lo, hi, _ in got_nd] == want, (pattern, s, got_nd)
-    for lo, hi, codes in got_nd:
-        assert codes == s[lo:hi]
-    # the per-thread in-automaton scanner (navigation-DEFINE path) must
-    # agree on every generated pattern too — anchors, bounded and
-    # reluctant quantifiers, alternation, PERMUTE expansions
-    from blazingsql_spark.operators.match_recognize import (
-        scan_rows_in_automaton_nd,
-    )
-
-    got_pt, carry = scan_rows_in_automaton_nd(
-        nfa,
-        lambda j, pos, ch, tent, _s=s: _s[j] == ch,
-        len(s),
-        anchor_start=a_start,
-        anchor_end=a_end,
-        # tent-independent truth: state-dedup (duplicate-branch patterns
-        # like (a|a)+ would otherwise blow the thread cap)
-        read_chars=frozenset(),
     )
     assert carry is None
-    assert got_pt == got_nd, (pattern, s, got_pt, got_nd)
-    if "|" not in core and not _re.search(r"[*+?}]\?", core):
-        # the deterministic set-scan is longest-discipline: correct only
-        # without alternation AND without reluctant quantifiers
-        got_set = find_match_spans(
-            nfa, s, anchor_start=a_start, anchor_end=a_end
-        )
-        assert got_set == want, (pattern, s, got_set)
+    assert [(lo, hi) for lo, hi, _ in got] == want, (pattern, s, got)
+    for lo, hi, codes in got:
+        assert codes == s[lo:hi]
+    # carrying every mapping (navigation route) must agree: with
+    # deterministic truth each thread's mapping is the consumed string
+    got_nav, _ = scan_rows(
+        nfa,
+        char_truth(s),
+        len(s),
+        anchor_start=a_start,
+        anchor_end=a_end,
+        read_chars=frozenset("abc"),
+    )
+    assert got_nav == got, (pattern, s, got_nav, got)

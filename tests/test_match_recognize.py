@@ -11,26 +11,50 @@ from pyspark.sql import functions as F
 
 from blazingsql_spark.context import Context
 from blazingsql_spark.operators.match_recognize import (
-    find_match_spans,
     match_recognize,
     rewrite_match_recognize,
 )
-from blazingsql_spark.streaming.patterns import compile_pattern
+from blazingsql_spark.streaming.patterns import (
+    _SKIP_PAST,
+    _skip_resume,
+    char_truth,
+    compile_pattern,
+    ordered_closure,
+    scan_rows,
+)
 
 
 def test_find_match_spans_matches_re_on_random_strings():
+    """The scanner over a code string equals re: re.finditer under
+    AFTER MATCH SKIP PAST LAST ROW, and every non-empty re.match
+    position under SKIP TO NEXT ROW (each row starts an attempt)."""
     rnd = random.Random(20260815)
     for pat in [
         "ab+c", "abc", "a?b+c", "b*c", "(ab|bc)d?", "a.c", "c+",
-        # bounded quantifiers (r11: previously '{' compiled as a literal
+        # bounded quantifiers (previously '{' compiled as a literal
         # char and the pattern silently matched nothing)
         "a{2}c", "a{1,3}b", "ab{2,}", "(ab){2}", "a{0,2}bc", "b{3}",
+        "ba*(ab)?",
     ]:
         nfa = compile_pattern(pat)
+        cre = re.compile(pat)
         for _ in range(150):
             s = "".join(rnd.choice("abcde") for _ in range(rnd.randint(0, 40)))
-            want = [(m.start(), m.end()) for m in re.finditer(pat, s)]
-            assert find_match_spans(nfa, s) == want, (pat, s)
+            want = [(m.start(), m.end()) for m in cre.finditer(s)]
+            got, _ = scan_rows(nfa, char_truth(s), len(s))
+            assert [(lo, hi) for lo, hi, _c in got] == want, (pat, s)
+            assert all(
+                len(c) == hi - lo
+                and all(x in (y, ".") for x, y in zip(c, s[lo:hi]))
+                for lo, hi, c in got
+            ), (pat, s)  # a wildcard row's code is "."
+            want_next = [
+                (p, m.end())
+                for p in range(len(s))
+                if (m := cre.match(s, p)) and m.end() > p
+            ]
+            got, _ = scan_rows(nfa, char_truth(s), len(s), skip=("next",))
+            assert [(lo, hi) for lo, hi, _c in got] == want_next, (pat, s)
 
 
 def test_match_recognize_operator_measures(spark):
@@ -460,10 +484,8 @@ def test_in_automaton_path_equals_vectorized_on_nav_free(spark):
     (forced via the test hook) is row-for-row identical to the
     precomputed classification path, across random streams and both
     emit modes — INCLUDING ambiguous/overlapping DEFINEs and undefined
-    symbols since r12: the in-automaton path now falls back to
-    scan_rows_in_automaton_nd on ambiguity, which implements the same
-    SQL:2016 preferment-ordered nondeterministic assignment as the
-    vectorized find_match_spans_nd."""
+    symbols: both feed the same scanner, one from Spark SQL flag
+    columns and one from mr_expr closures."""
     rnd = random.Random(20260816)
     rows = [
         (u, i, rnd.choice(["view", "click", "purchase", "error"]), float(rnd.randint(0, 9)))
@@ -1741,16 +1763,10 @@ def test_emission_modes_randomized_invariants(spark):
     """Randomized differential over the three ALL-ROWS emission modes on
     one partition: (1) WITH UNMATCHED ROWS emits every input row exactly
     once (SKIP PAST LAST ROW is non-overlapping), with mno NULL exactly
-    on the rows find_match_spans leaves uncovered; (2) plain ALL ROWS
+    on the rows scan_rows leaves uncovered; (2) plain ALL ROWS
     equals the matched subset; (3) {- C -} exclusion equals ALL ROWS
     minus the C-classified rows with identical measures."""
     import random as _r
-
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans,
-        match_recognize,
-    )
-    from blazingsql_spark.streaming.patterns import compile_pattern
 
     rnd = _r.Random(20260816)
     define = {
@@ -1769,7 +1785,12 @@ def test_emission_modes_randomized_invariants(spark):
         sym_codes = "".join(
             {"v": "a", "c": "b", "p": "c"}.get(ch, "d") for ch in codes
         )
-        spans = find_match_spans(compile_pattern("ab*c"), sym_codes)
+        spans = [
+            (lo, hi)
+            for lo, hi, _c in scan_rows(
+                compile_pattern("ab*c"), char_truth(sym_codes), len(sym_codes)
+            )[0]
+        ]
         covered = {j for lo, hi in spans for j in range(lo, hi)}
 
         unm = match_recognize(
@@ -2111,33 +2132,6 @@ def test_unsupported_pattern_metacharacters_raise(spark):
         compile_symbols(ok, {})
 
 
-def test_nd_scanner_equals_deterministic_on_onehot():
-    """find_match_spans_nd with one-hot truth (each row satisfies
-    exactly one symbol) must equal find_match_spans span-for-span with
-    the input string as the assignment — the no-ambiguity consistency
-    guarantee that makes the runtime routing safe."""
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-    )
-
-    rnd = random.Random(20260817)
-    skips = [("past",), ("next",)]
-    for pat in ["ab+c", "abc", "a?b+c", "b*c", "(ab|bc)d?", "c+",
-                "a{2}c", "a{1,3}b", "(ab){2}"]:
-        nfa = compile_pattern(pat)
-        for _ in range(120):
-            s = "".join(rnd.choice("abcd") for _ in range(rnd.randint(0, 30)))
-            skip = rnd.choice(skips)
-            want = [
-                (lo, hi, s[lo:hi])
-                for lo, hi in find_match_spans(nfa, s, skip=skip)
-            ]
-            got = find_match_spans_nd(
-                nfa, lambda j, ch, _s=s: _s[j] == ch, len(s), skip=skip
-            )
-            assert got == want, (pat, s, skip)
-
-
 def test_nondeterministic_symbol_assignment(spark):
     """r11: the vectorized path resolves SQL:2016 nondeterministic
     symbol assignment — a row satisfying several DEFINEs is mapped by
@@ -2248,9 +2242,8 @@ def test_within_vectorized_equals_in_automaton(spark):
 def test_partition_anchors(spark):
     """SQL:2016 ^/$ partition anchors (r11): a leading ^ restricts
     matches to ones starting at the partition's first row, a trailing
-    $ to ones ending at its last row — on the vectorized scan, the
-    priority (ambiguous) scan, and the in-automaton scan, and through
-    the SQL spelling. Streaming still rejects anchors loudly (the
+    $ to ones ending at its last row — with one-hot flags, ambiguous
+    flags and a navigation DEFINE, and through the SQL spelling. Streaming still rejects anchors loudly (the
     partition end is unknowable on a stream)."""
     rows = [(1, i, e) for i, e in
             enumerate(["view", "click", "view", "click", "purchase"])]
@@ -2326,10 +2319,6 @@ def test_nd_scanner_longest_extents_match_bruteforce():
     truth and re-match the pattern over the same extent."""
     import itertools
 
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-    )
-
     rnd = random.Random(20260819)
     for pat in ["ab", "a+b", "ab*c", "(a|b)c", "a{2}b", "ab?c"]:
         nfa = compile_pattern(pat)
@@ -2340,7 +2329,7 @@ def test_nd_scanner_longest_extents_match_bruteforce():
             truth_tbl = [
                 {ch: rnd.random() < 0.6 for ch in "abc"} for _ in range(size)
             ]
-            truth = lambda j, ch, _t=truth_tbl: _t[j].get(ch, False)
+            truth = lambda j, pos, ch, tent, _t=truth_tbl: _t[j].get(ch, False)
 
             def longest_from(pos):
                 best = -1
@@ -2362,7 +2351,7 @@ def test_nd_scanner_longest_extents_match_bruteforce():
                     pos = end
                 else:
                     pos += 1
-            got = find_match_spans_nd(nfa, truth, size)
+            got, _ = scan_rows(nfa, truth, size)
             assert [(lo, hi) for lo, hi, _c in got] == want, (
                 pat, truth_tbl, got, want,
             )
@@ -2376,31 +2365,23 @@ def test_nd_scanner_longest_extents_match_bruteforce():
 
 
 def test_preferment_order_alternation():
-    """r12 (ADVICE-r11): SQL:2016 PREFERMENT order, not leftmost-longest
-    — alternation prefers the LEFT branch even when a right branch
-    would match longer. `a|bc` over all-ambiguous rows matches `a`
-    (Oracle/Flink behavior); the pre-r12 scanner returned `bc`."""
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-    )
-
+    """SQL:2016 PREFERMENT order, not leftmost-longest — alternation
+    prefers the LEFT branch even when a right branch would match
+    longer. `a|bc` over all-ambiguous rows matches `a` (Oracle/Flink
+    behavior)."""
     nfa = compile_pattern("a|bc")
-    got = find_match_spans_nd(nfa, lambda j, ch: True, 4)
+    got, _ = scan_rows(nfa, lambda j, pos, ch, tent: True, 4)
     assert got == [(0, 1, "a"), (1, 2, "a"), (2, 3, "a"), (3, 4, "a")]
 
     # prefix alternation with DETERMINISTIC truth: `a|ab` over codes
-    # "ab" stops at `a` under preferment (the set-scan would say (0,2))
+    # "ab" stops at `a` under preferment (longest match would say (0,2))
     nfa2 = compile_pattern("a|ab")
-    got2 = find_match_spans_nd(
-        nfa2, lambda j, ch, _s="ab": _s[j] == ch, 2
-    )
+    got2, _ = scan_rows(nfa2, char_truth("ab"), 2)
     assert got2 == [(0, 1, "a")]
 
     # right branch still wins when the left branch cannot match
     nfa3 = compile_pattern("a|bc")
-    got3 = find_match_spans_nd(
-        nfa3, lambda j, ch, _s="bc": _s[j] == ch, 2
-    )
+    got3, _ = scan_rows(nfa3, char_truth("bc"), 2)
     assert got3 == [(0, 2, "bc")]
 
     # preferment equals re's leftmost-first on prefix alternations
@@ -2413,16 +2394,13 @@ def test_preferment_order_alternation():
             want = [
                 (m.start(), m.end()) for m in cre.finditer(s) if m.end() > m.start()
             ]
-            got = find_match_spans_nd(
-                nfa4, lambda j, ch, _s=s: _s[j] == ch, len(s)
-            )
+            got, _ = scan_rows(nfa4, char_truth(s), len(s))
             assert [(lo, hi) for lo, hi, _ in got] == want, (pat, s, got)
 
 
 def test_preferment_operator_paths(spark):
-    """The operator honors preferment on every path: vectorized
-    ambiguous, vectorized deterministic with user alternation, and
-    in-automaton (navigation DEFINE) with user alternation."""
+    """The operator honors preferment for ambiguous and deterministic
+    rows, with and without a navigation DEFINE."""
     # vectorized ambiguous: every row satisfies A and B and C
     df = spark.createDataFrame(
         [(1, i, float(i + 1)) for i in range(4)], ["uid", "seq", "v"]
@@ -2443,8 +2421,7 @@ def test_preferment_operator_paths(spark):
     ).collect()
     assert [r.n for r in out2] == [1]
 
-    # in-automaton (navigation in DEFINE) + user alternation: the
-    # preferment threads run over the per-attempt classified codes
+    # navigation in DEFINE + user alternation
     out3 = match_recognize(
         df2, ["uid"], ["seq"], [("COUNT(*)", "n")],
         "A | A B", {"A": "et = 'a'", "B": "et = 'b' AND seq > FIRST(A.seq)"},
@@ -2453,14 +2430,12 @@ def test_preferment_operator_paths(spark):
 
 
 def test_in_automaton_nondeterministic_assignment(spark):
-    """r12 second half (ROADMAP candidate 2, closing VERDICT-r11 #2's
-    restriction for real): a row satisfying two symbols the PATTERN
-    could both consume, while a DEFINE uses symbol-relative navigation,
-    no longer raises — the partition re-scans with per-thread tentative
-    mappings (scan_rows_in_automaton_nd) and resolves the assignment in
-    SQL:2016 preferment order. The navigation predicate sees each
-    THREAD's own mapping: C AS v > LAST(A.v) compares against the rows
-    that thread assigned to A."""
+    """A row satisfying two symbols the PATTERN could both consume,
+    while a DEFINE uses symbol-relative navigation: the scanner's
+    threads carry their own tentative mappings and resolve the
+    assignment in SQL:2016 preferment order. The navigation predicate
+    sees each THREAD's own mapping: C AS v > LAST(A.v) compares against
+    the rows that thread assigned to A."""
     df = spark.createDataFrame(
         [(1, i, float(i)) for i in range(4)], ["uid", "seq", "v"]
     )
@@ -2489,8 +2464,7 @@ def test_in_automaton_nondeterministic_assignment(spark):
     ).collect()
     assert [(r.n, r.na, r.bv) for r in out2] == [(4, 3, 3.0)]
 
-    # mutually-exclusive DEFINEs keep the cheap deterministic scan
-    # (byte-identical results, no fallback)
+    # mutually-exclusive DEFINEs
     ok = match_recognize(
         df, ["uid"], ["seq"], [("COUNT(*)", "n")],
         "(A | B)+ C",
@@ -2519,30 +2493,41 @@ def test_in_automaton_nd_thread_cap_raises(spark):
 
 
 def test_in_automaton_nd_scanner_equals_vectorized_nd_scanner():
-    """Property (r12): with tent-INDEPENDENT truth the per-thread
-    in-automaton nondeterministic scanner emits byte-identical spans to
-    find_match_spans_nd (which is itself brute-force-verified above) —
-    same preferment order, same skip resume, same anchors."""
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-        scan_rows_in_automaton_nd,
-    )
-
+    """With tent-INDEPENDENT truth, carrying every symbol's mapping (the
+    navigation route, read_chars set) emits byte-identical spans to
+    carrying none (the vectorized route, state dedup only) — same
+    preferment order, same skip resume, same anchors."""
     rnd = random.Random(20260816)
     pats = ["ab", "a+b", "(a|b)+c", "a*b", "ab?c", "(ab)+", "a|bc", "a+b+"]
+    checked = 0
     for _ in range(250):
         pat = rnd.choice(pats)
         size = rnd.randint(0, 12)
         tbl = {
             (j, ch): rnd.random() < 0.6 for j in range(size) for ch in "abc"
         }
-        nfa = compile_pattern(pat)
-        ref = find_match_spans_nd(nfa, lambda j, ch, _t=tbl: _t[(j, ch)], size)
-        got, carry = scan_rows_in_automaton_nd(
-            nfa, lambda j, pos, ch, tent, _t=tbl: _t[(j, ch)], size
+        truth = lambda j, pos, ch, tent, _t=tbl: _t[(j, ch)]
+        kw = dict(
+            skip=rnd.choice([("past",), ("next",)]),
+            anchor_start=rnd.random() < 0.2,
+            anchor_end=rnd.random() < 0.2,
         )
+        nfa = compile_pattern(pat)
+        ref, _ = scan_rows(nfa, truth, size, **kw)
+        try:
+            got, carry = scan_rows(
+                nfa, truth, size, read_chars=frozenset("abc"), **kw
+            )
+        except ValueError as e:
+            # carried mappings keep genuinely different assignment
+            # histories apart, so (a|b)+ over many ambiguous rows can
+            # reach the thread cap; state dedup never does
+            assert "assignment histories" in str(e), e
+            continue
+        checked += 1
         assert carry is None
         assert got == ref, (pat, size, got, ref)
+    assert checked > 200
 
 
 def test_in_automaton_nd_scanner_matches_backtracking_reference():
@@ -2553,13 +2538,6 @@ def test_in_automaton_nd_scanner_matches_backtracking_reference():
     and returns the first accept (classic leftmost-preferment regex
     semantics, the SQL:2016 choice-point ranking)."""
     import sys
-
-    from blazingsql_spark.operators.match_recognize import (
-        _SKIP_PAST,
-        _skip_resume,
-        scan_rows_in_automaton_nd,
-    )
-    from blazingsql_spark.streaming.patterns import ordered_closure
 
     sys.setrecursionlimit(10000)
 
@@ -2620,7 +2598,7 @@ def test_in_automaton_nd_scanner_matches_backtracking_reference():
 
         nfa = compile_pattern(pat)
         ref = brute(nfa, truth, size)
-        got, carry = scan_rows_in_automaton_nd(nfa, truth, size)
+        got, carry = scan_rows(nfa, truth, size, read_chars=frozenset("ab"))
         assert carry is None
         assert got == ref, (pat, size, got, ref)
 
@@ -2728,8 +2706,7 @@ def test_reluctant_quantifiers_operator(spark):
     """Late r12: SQL:2016 reluctant quantifiers (*?, +?, ??, {n,m}?) —
     preferment prefers the SHORTEST accept, so `A+? B` over fully
     ambiguous rows yields pair-matches where greedy `A+ B` consumes the
-    whole partition. Routed through the priority scanners on every
-    path (the longest-discipline set-scan never sees them)."""
+    whole partition."""
     df = spark.createDataFrame(
         [(1, i, float(i)) for i in range(6)], ["uid", "seq", "v"]
     )
@@ -2744,8 +2721,7 @@ def test_reluctant_quantifiers_operator(spark):
     ).collect()
     assert [r.n for r in greedy] == [6]
 
-    # reluctant + navigation DEFINE: in-automaton ND fallback honors
-    # the inverted priority too
+    # reluctant + navigation DEFINE: the inverted priority holds too
     nav = match_recognize(
         df, ["uid"], ["seq"], [("COUNT(*)", "n")],
         "A+? B", {"A": "v >= FIRST(A.v)", "B": "v >= 0"},
@@ -2779,13 +2755,6 @@ def test_in_automaton_nd_hypothesis_vs_backtracking(pat, size, bits):
     deterministic bit pool so hypothesis can shrink failures — and the
     per-thread scanner must equal the preferment-order backtracking
     reference on spans AND codes."""
-    from blazingsql_spark.operators.match_recognize import (
-        _SKIP_PAST,
-        _skip_resume,
-        scan_rows_in_automaton_nd,
-    )
-    from blazingsql_spark.streaming.patterns import compile_pattern, ordered_closure
-
     def truth(j, pos, ch, tent):
         na = min(3, len(tent.get("a", ())))
         k = (j * 3 + "abc".index(ch)) * 4 + na
@@ -2828,7 +2797,7 @@ def test_in_automaton_nd_hypothesis_vs_backtracking(pat, size, bits):
         return spans
 
     try:
-        got, carry = scan_rows_in_automaton_nd(nfa, truth, size)
+        got, carry = scan_rows(nfa, truth, size, read_chars=frozenset("a"))
     except ValueError as e:
         # genuinely exponential draws ((a|b)+c with a and b true and c
         # false everywhere) hit the documented 256-history cap, which
@@ -2921,3 +2890,55 @@ def test_stddev_variance_measures(spark):
         if len(prefix) >= 2:
             assert abs(row.rsd - statistics.stdev(prefix)) < 1e-9, i
         assert abs(row.rvp - statistics.pvariance(prefix)) < 1e-9, i
+
+
+def test_equal_mappings_dedup_by_content(spark):
+    """(A A | A)+ reaches the same rows-mapped-to-A along many branch
+    paths. The scanner interns each mapping append, so those threads
+    are one thread: a deterministic partition matches whole instead of
+    raising the assignment-history cap (which it would past ~12 rows if
+    equal mappings stayed distinct objects)."""
+    for n in (12, 300):
+        df = spark.createDataFrame(
+            [(1, i, float(i if i < n - 1 else -1)) for i in range(n)],
+            ["uid", "seq", "v"],
+        )
+        out = match_recognize(
+            df, ["uid"], ["seq"], [("COUNT(*)", "n"), ("COUNT(A.*)", "na")],
+            "(A A | A)+ B",
+            {"A": "v >= 0 AND v > FIRST(A.v) - 1000", "B": "v < 0"},
+        ).collect()
+        assert [(r.n, r.na) for r in out] == [(n, n - 1)], n
+
+
+def test_null_flags_are_false_without_downcast(spark):
+    """A DEFINE that evaluates to NULL classifies as false. The flag
+    column arrives as an object Series holding None; converting it must
+    not take pandas' deprecated fillna downcast (a FutureWarning on
+    every partition with a NULL flag)."""
+    import warnings
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from blazingsql_spark.operators.match_recognize import flag_list
+
+    col = pa.array([True, None, False], pa.bool_()).to_pandas()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert flag_list(col) == [True, False, False]
+        assert flag_list(pd.Series([True, False])) == [True, False]
+        with pytest.raises(FutureWarning, match="Downcasting"):
+            col.fillna(False)  # the conversion flag_list replaces
+
+    df = spark.createDataFrame(
+        [(1, 0, 1.0), (1, 1, None), (1, 2, 2.0), (1, 3, 3.0)],
+        "uid long, seq long, v double",
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = match_recognize(
+            df, ["uid"], ["seq"], [("COUNT(*)", "n")], "A+",
+            {"A": "v > 0"},
+        ).collect()
+    assert [r.n for r in out] == [1, 2]

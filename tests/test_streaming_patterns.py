@@ -13,20 +13,27 @@ from blazingsql_spark.queries.registry import all_queries, load_table
 from blazingsql_spark.streaming import events as st
 from blazingsql_spark.streaming.patterns import (
     StreamMatcher,
+    char_truth,
     compile_pattern,
+    mask_truth,
     pattern_match_stream,
+    scan_rows,
 )
 from tests.conftest import SF_DIR
 
 PATTERNS = ["vc+p", "vcp", "v?c+p", "c*p", "(vc|cp)e?", "v.p", "ve*c+p", "p+", "v(c|e)+p",
-            # prefix alternations: re prefers the LEFT (shorter) branch —
-            # r12's preferment StreamMatcher must agree (the pre-r12
-            # leftmost-longest scan returned the longer right branch)
-            "v|vc", "c|cp", "v(c|cp)"]
+            # prefix alternations: re prefers the LEFT (shorter) branch,
+            # and so must the matcher (longest match would take the
+            # longer right branch)
+            "v|vc", "c|cp", "v(c|cp)",
+            # longest match would swallow "vccv" whole
+            "vc*(cv)?"]
 
 
 def test_matcher_matches_re_on_random_streams():
+    """Chunk-fed code strings and one-hot bitmasks both equal re."""
     rng = random.Random(20260815)
+    bits = {c: 1 << i for i, c in enumerate("vcpes")}
     for pat in PATTERNS:
         nfa = compile_pattern(pat)
         for _ in range(200):
@@ -36,13 +43,17 @@ def test_matcher_matches_re_on_random_streams():
             whole = StreamMatcher(nfa)
             whole.feed(s)
             chunked = StreamMatcher(nfa)
+            masks = StreamMatcher(nfa, mask_truth(bits), carry=[])
             i = 0
             while i < len(s):
                 k = rng.randint(1, 5)
                 chunked.feed(s[i : i + k])
+                masks.feed([bits[c] for c in s[i : i + k]])
                 i += k
             assert whole.snapshot() == want, (pat, s)
             assert chunked.snapshot() == want, (pat, s)
+            if "." not in pat:  # a mask has no wildcard row
+                assert masks.snapshot() == want, (pat, s)
 
 
 def test_matcher_carry_is_bounded():
@@ -516,15 +527,10 @@ def test_match_recognize_stream_accepts_exclusions(spark, tmp_path):
 
 
 def test_nd_stream_matcher_matches_batch_nd_scanner():
-    """r12 (VERDICT-r11 #5): StreamMatcherND fed in random chunks must
-    equal the batch priority scanner (find_match_spans_nd) at
-    end-of-input — same preferment order, same counts/longest — over
-    random ambiguous truth tables, patterns WITH alternation included."""
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-    )
-    from blazingsql_spark.streaming.patterns import StreamMatcherND
-
+    """The bitmask StreamMatcher fed in random chunks must equal one
+    batch scan_rows over the whole stream at end-of-input (the carry
+    contract) — over random ambiguous truth tables, patterns WITH
+    alternation included."""
     rnd = random.Random(20260820)
     for pat in ["ab", "a+b", "ab*c", "(a|b)c", "a|bc", "a{2}b", "ab?c",
                 "(ab|ba)+", "a(b|c)*a"]:
@@ -536,12 +542,11 @@ def test_nd_stream_matcher_matches_batch_nd_scanner():
                 sum(bit for ch, bit in bits.items() if rnd.random() < 0.5)
                 for _ in range(size)
             ]
-            truth = lambda j, ch, _m=masks, _b=bits: bool(_m[j] & _b[ch])
-            spans = find_match_spans_nd(nfa, truth, size)
+            spans, _ = scan_rows(nfa, mask_truth(bits)(masks), size)
             want_n = len(spans)
             want_longest = max([hi - lo for lo, hi, _ in spans], default=0)
 
-            m = StreamMatcherND(nfa, bits)
+            m = StreamMatcher(nfa, mask_truth(bits), carry=[])
             i = 0
             while i < size:
                 step = rnd.randint(1, 6)
@@ -552,31 +557,6 @@ def test_nd_stream_matcher_matches_batch_nd_scanner():
                 pat, masks, spans,
             )
             assert m.n_aborted == 0
-
-
-def test_nd_stream_matcher_equals_set_matcher_on_onehot():
-    """With deterministic one-hot masks and an alternation-free pattern
-    StreamMatcherND's counters equal StreamMatcher's byte for byte —
-    the consistency guarantee that makes routing every
-    match_recognize_stream query through the ND matcher safe."""
-    from blazingsql_spark.streaming.patterns import StreamMatcherND
-
-    rnd = random.Random(20260821)
-    bits = {"a": 1, "b": 2, "c": 4, "d": 8}
-    for pat in ["ab+c", "abc", "a?b+c", "b*c", "c+", "a{2}c", "(ab){2}"]:
-        nfa = compile_pattern(pat)
-        for _ in range(60):
-            s = "".join(rnd.choice("abcd") for _ in range(rnd.randint(0, 30)))
-            old = StreamMatcher(nfa)
-            nd = StreamMatcherND(nfa, bits)
-            i = 0
-            while i < len(s):
-                step = rnd.randint(1, 5)
-                old.feed(s[i : i + step])
-                nd.feed([bits[ch] for ch in s[i : i + step]])
-                i += step
-            assert nd.snapshot() == old.snapshot(), (pat, s)
-            assert (nd.n_matches, nd.longest) == (old.n_matches, old.longest)
 
 
 def test_match_recognize_stream_nondeterministic_assignment(spark, tmp_path):
@@ -648,13 +628,12 @@ def test_match_recognize_stream_nondeterministic_assignment(spark, tmp_path):
 
 
 def test_match_recognize_stream_nav_nondeterministic(spark, tmp_path):
-    """r12 second half: symbol-relative navigation + AMBIGUOUS DEFINEs
-    on a stream — every row satisfies the vectorized B while run rows
-    also satisfy the navigation A, so the deterministic in-automaton
-    scan signals ambiguity and the streaming caller falls back to the
-    per-thread scanner, across REAL micro-batch boundaries (the carry
-    replays the in-flight attempt; thread state never persists). Final
-    per-key totals equal the batch operator on the same data."""
+    """Symbol-relative navigation + AMBIGUOUS DEFINEs on a stream —
+    every row satisfies the vectorized B while run rows also satisfy
+    the navigation A, so the scanner's threads resolve the assignment,
+    across REAL micro-batch boundaries (the carry replays the in-flight
+    attempt; thread state never persists). Final per-key totals equal
+    the batch operator on the same data."""
     import os
 
     import pandas as pd
@@ -772,16 +751,11 @@ def test_reluctant_quantifiers_stream(spark, tmp_path):
 
 
 def test_stream_skip_to_next_row_matchers_match_batch():
-    """Late r12: AFTER MATCH SKIP TO NEXT ROW on streams (overlapping
-    matches, resume at match start + 1) — chunk-fed StreamMatcher and
-    StreamMatcherND with skip_next equal the batch scanners with
-    skip=('next',) on totals, across random chunkings. The carry
-    contract is unchanged: committed matches all start before the
-    in-flight position, so rescans never recount."""
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-    )
-    from blazingsql_spark.streaming.patterns import StreamMatcherND
+    """AFTER MATCH SKIP TO NEXT ROW on streams (overlapping matches,
+    resume at match start + 1) — chunk-fed code-string and bitmask
+    matchers equal one batch scan with skip=('next',) on totals, across
+    random chunkings. Committed matches all start before the in-flight
+    position, so rescans never recount."""
 
     rnd = random.Random(5)
     bits = {c: 1 << i for i, c in enumerate("abc")}
@@ -789,12 +763,10 @@ def test_stream_skip_to_next_row_matchers_match_batch():
         nfa = compile_pattern(pat)
         for _ in range(60):
             s = "".join(rnd.choice("abc") for _ in range(rnd.randint(0, 30)))
-            ref = find_match_spans_nd(
-                nfa, lambda j, ch, _s=s: _s[j] == ch, len(s), skip=("next",)
-            )
+            ref, _ = scan_rows(nfa, char_truth(s), len(s), skip=("next",))
             want = (len(ref), max((hi - lo for lo, hi, _ in ref), default=0))
-            m = StreamMatcher(nfa, skip_next=True)
-            nd = StreamMatcherND(nfa, bits, skip_next=True)
+            m = StreamMatcher(nfa, skip=("next",))
+            nd = StreamMatcher(nfa, mask_truth(bits), carry=[], skip=("next",))
             masks = [bits[c] for c in s]
             i = 0
             while i < len(s):
@@ -882,25 +854,17 @@ def test_match_recognize_stream_skip_to_next_row(spark, tmp_path):
 
 
 def test_stream_skip_to_first_last_sym(spark, tmp_path):
-    """Late r12: AFTER MATCH SKIP TO FIRST/LAST <sym> on streams — the
-    bitmask matcher tracks per-thread assignment chains in this mode so
-    the committed match's codes drive the same _skip_resume (including
-    its SQL:2016 runtime errors) as the batch scanner. Chunk-fed
-    matcher-level differential + e2e micro-batch run vs the batch
-    operator."""
+    """AFTER MATCH SKIP TO FIRST/LAST <sym> on streams — the committed
+    match's codes drive the same _skip_resume (including its SQL:2016
+    runtime errors) as the batch scan. Chunk-fed matcher-level
+    differential + e2e micro-batch run vs the batch operator."""
     import os
 
     import pandas as pd
     import pytest
 
-    from blazingsql_spark.operators.match_recognize import (
-        find_match_spans_nd,
-        match_recognize,
-    )
-    from blazingsql_spark.streaming.patterns import (
-        StreamMatcherND,
-        match_recognize_stream,
-    )
+    from blazingsql_spark.operators.match_recognize import match_recognize
+    from blazingsql_spark.streaming.patterns import match_recognize_stream
 
     rnd = random.Random(11)
     bits = {c: 1 << i for i, c in enumerate("abc")}
@@ -918,10 +882,8 @@ def test_stream_skip_to_first_last_sym(spark, tmp_path):
             else:
                 masks = [bits[rnd.choice("abc")] for _ in range(size)]
             try:
-                ref = find_match_spans_nd(
-                    nfa,
-                    lambda j, ch, _m=masks: bool(_m[j] & bits[ch]),
-                    size, skip=skip,
+                ref, _ = scan_rows(
+                    nfa, mask_truth(bits)(masks), size, skip=skip
                 )
                 want = (
                     len(ref),
@@ -930,7 +892,7 @@ def test_stream_skip_to_first_last_sym(spark, tmp_path):
                 err = False
             except ValueError:
                 err = True
-            m = StreamMatcherND(nfa, bits, skip_fl=skip)
+            m = StreamMatcher(nfa, mask_truth(bits), carry=[], skip=skip)
             try:
                 i = 0
                 while i < size:
@@ -1006,3 +968,72 @@ def test_stream_skip_to_first_last_sym(spark, tmp_path):
             raw, "user_id", "event_id", "event_id", "V C+ P", dict(define),
             after_match="TO FIRST Z",
         )
+
+
+def test_preferment_not_longest_on_every_route(spark, tmp_path):
+    """SQL:2016 preferment is not longest match: PATTERN (B A* (A B)?)
+    over rows b a a b is two matches, lengths 3 and 1 (greedy A* takes
+    both a's, so (A B)? is skipped), as re.finditer says — not one
+    match of length 4. Every route runs the same scanner: the batch
+    operator with flag columns and with a navigation DEFINE, and the
+    three streams (bitmasks, navigation rows, code string), fed in two
+    micro-batches so the carry replays the in-flight attempt."""
+    import os
+
+    import pandas as pd
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+    from blazingsql_spark.streaming.patterns import match_recognize_stream
+
+    assert [len(m[0]) for m in re.finditer("ba*(ab)?", "baab")] == [3, 1]
+    pdf = pd.DataFrame(
+        [(1, i, i, t) for i, t in enumerate("baab")],
+        columns=["user_id", "ts", "event_id", "event_type"],
+    )
+    pattern = "B A* (A B)?"
+    vec = {"A": "event_type = 'a'", "B": "event_type = 'b'"}
+    nav = {"A": "event_type = 'a' AND FIRST(B.ts) >= 0",
+           "B": "event_type = 'b'"}
+    for define in (vec, nav):
+        got = match_recognize(
+            spark.createDataFrame(pdf), ["user_id"], ["ts"],
+            [("COUNT(*)", "n")], pattern, dict(define),
+        ).collect()
+        assert [r.n for r in got] == [3, 1], define
+
+    src = tmp_path / "src_pref"
+    src.mkdir()
+    for i in range(2):
+        f = src / f"b{i}.json"
+        pdf.iloc[2 * i : 2 * i + 2].to_json(f, orient="records", lines=True)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    raw = (
+        spark.readStream.schema(
+            "user_id long, ts long, event_id long, event_type string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    streams = {
+        "t_pref_masks": match_recognize_stream(
+            raw, "user_id", "ts", "event_id", pattern, dict(vec)
+        ),
+        "t_pref_nav": match_recognize_stream(
+            raw, "user_id", "ts", "event_id", pattern, dict(nav)
+        ),
+        "t_pref_chars": pattern_match_stream(
+            raw, "ba*(ab)?", code_map={"a": "a", "b": "b"}
+        ),
+    }
+    for name, out in streams.items():
+        q = (out.writeStream.format("memory").queryName(name)
+             .outputMode("update").start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        last = spark.sql(
+            f"SELECT n_matches, longest_match, n_codes FROM {name} "
+            "ORDER BY n_codes DESC LIMIT 1"
+        ).collect()
+        assert [tuple(r) for r in last] == [(2, 3, 4)], name

@@ -8,7 +8,7 @@ Cases (select by name; default all):
             embeddings at 1x and 64x
   mr        MATCH_RECOGNIZE (applyInPandas path) and DDSketch build +
             quantiles on events at 1x/16x/64x
-  mr_nav    symbol-relative MATCH_RECOGNIZE (in-automaton DEFINE scan) vs
+  mr_nav    symbol-relative MATCH_RECOGNIZE (per-thread navigation DEFINE) vs
             its vectorized twin (same pattern, budget constraint dropped)
             on events at 1x/16x/64x
 
