@@ -549,16 +549,8 @@ def ivf_train_centroids(
     centroids = init
     for _ in range(iterations):
         assigned = assign_to_centroids(vectors, centroids, id_col, vec_col)
-        # per-cluster element-wise mean: dim avg() aggregates in ONE
-        # groupBy — partial (map-side) aggregation reduces each partition
-        # to ≤k rows before the exchange
         centroids = (
-            assigned.groupBy("centroid_id")
-            .agg(
-                F.array(
-                    *[F.avg(F.element_at(F.col(vec_col), i + 1)) for i in range(dim)]
-                ).alias("centroid")
-            )
+            _cluster_means(assigned, vec_col, dim)
             # materialize the k-row table NOW: without this, iteration N's
             # plan re-embeds (and re-scans the corpus for) iterations
             # 1..N-1 — O(iter²) corpus scans — and every downstream use of
@@ -569,6 +561,36 @@ def ivf_train_centroids(
             .localCheckpoint(eager=True)
         )
     return centroids
+
+
+def _cluster_means(assigned: DataFrame, vec_col: str, dim: int) -> DataFrame:
+    """Per-cluster element-wise mean of the first ``dim`` elements:
+    (centroid_id, centroid array<double>). NULL elements are skipped, and
+    a position no row of a cluster has (NULL or short vectors) is NULL.
+
+    One avg() per (centroid_id, position) over the exploded elements,
+    not dim avg() columns per cluster: dim columns make 2*dim buffer
+    fields, and past spark.sql.codegen.maxFields (100) both
+    HashAggregates leave whole-stage codegen for the iterator path,
+    which generates its projections again in every task. Partial
+    aggregation still reduces each partition to at most k*dim rows
+    before the exchange; each position's sum runs over the same rows
+    in the same order as a per-column avg."""
+    elems = assigned.select(
+        "centroid_id",
+        F.posexplode_outer(F.slice(F.col(vec_col), 1, dim)).alias("pos", "x"),
+    )
+    means = elems.groupBy("centroid_id", "pos").agg(F.avg("x").alias("m"))
+    by_pos = F.map_from_entries(
+        # a cluster whose vectors are all NULL or empty keeps its row:
+        # posexplode_outer gave it a NULL position, left out here
+        F.collect_list(F.when(F.col("pos").isNotNull(), F.struct("pos", "m")))
+    )
+    return means.groupBy("centroid_id").agg(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)), lambda i: by_pos[i]
+        ).alias("centroid")
+    )
 
 
 def assign_to_centroids(

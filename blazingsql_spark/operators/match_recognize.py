@@ -61,11 +61,14 @@ THREAD assigned to A). A row matching no symbol the pattern can consume
 ends the attempt.
 
 Scale shape: the flags are one codegen projection; matching is one
-applyInPandas over the PARTITION BY key — per-key event history in
-memory, the same bound as every MATCH_RECOGNIZE implementation
-(Flink/Oracle both require a partition key for parallelism; skewed keys
-are the user's modeling problem there too). The scan is O(events ×
-NFA states) per key for navigation-free DEFINEs.
+per-partition pandas kernel (mapInPandas) over an input hashed and
+sorted by the PARTITION BY key, whose task count follows the input's
+estimated size. Each task streams its Arrow batches and scans one key
+at a time, so memory holds one batch plus one key's event history, the
+same bound as every MATCH_RECOGNIZE implementation (Flink/Oracle both
+require a partition key for parallelism; skewed keys are the user's
+modeling problem there too). The scan is O(events × NFA states) per
+key for navigation-free DEFINEs.
 """
 
 from __future__ import annotations
@@ -1245,18 +1248,19 @@ def match_recognize(
     # becomes one boolean flag column of a single codegen projection
     # (physical PREV/NEXT rewritten to lag/lead first).
     vec_define = {s: p for s, p in define.items() if s not in symrel_preds}
-    vdef, coded, nav_names = _physical_nav_rewrite(
-        df, vec_define, partition_by, order_by, allow_navigation=True
-    )
-    flag_cols: dict[str, str] = {}
-    for s, p in vdef.items():
-        # keyed by symbol index, not char: Spark resolves columns
-        # case-insensitively, so __p_a and __p_A would collide for
-        # patterns with >26 distinct symbols
-        cname = f"__p_{names.index(s)}"
-        coded = coded.withColumn(cname, F.expr(p))
-        flag_cols[sym_chars[s]] = cname
-    coded = coded.drop(*nav_names)
+    # keyed by symbol index, not char: Spark resolves columns
+    # case-insensitively, so __p_a and __p_A would collide for patterns
+    # with >26 distinct symbols
+    flag_cols = {sym_chars[s]: f"__p_{names.index(s)}" for s in vec_define}
+
+    def classify(frame: DataFrame) -> DataFrame:
+        vdef, out, nav_names = _physical_nav_rewrite(
+            frame, vec_define, partition_by, order_by, allow_navigation=True
+        )
+        for s, p in vdef.items():
+            out = out.withColumn(flag_cols[sym_chars[s]], F.expr(p))
+        return out.drop(*nav_names)
+
     compiled: dict[str, object] = {}
     used_cols: set[str] = set()
     nav_read_chars: frozenset[str] = frozenset()
@@ -1410,20 +1414,180 @@ def match_recognize(
             {k: pd.Series(v, dtype=object) for k, v in out.items()}
         )
 
-    # pin the exchange width: AQE's bytes-based coalescing would shrink
-    # this shuffle to a couple of tasks on small-byte inputs, but the
-    # downstream stage is a PYTHON scan whose cost is rows×pattern work,
-    # not bytes — an explicit repartition-by-num carries a
-    # REPARTITION_BY_NUM hint AQE respects, and groupBy reuses the hash
-    # partitioning (no second exchange; plan-asserted)
+    # The matcher is one Python stage over a key-hashed, key-sorted
+    # input: each task streams its partition and calls run() once per
+    # key. Its width follows the input's size (see _PY_TASK_BYTES) and
+    # is pinned by an explicit repartition-by-num, which AQE's
+    # bytes-based coalescing leaves alone. The repartition sits under
+    # the classification, so a PREV/NEXT window over the same key rides
+    # the same exchange.
+    spark = df.sparkSession
     try:
-        n_part = int(
-            coded.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     except ValueError:  # e.g. 'auto' under AQE auto-optimized shuffle
-        n_part = coded.sparkSession.sparkContext.defaultParallelism
-    coded = coded.repartition(n_part, *partition_by)
-    return coded.groupBy(*partition_by).applyInPandas(run, out_schema)
+        n_part = spark.sparkContext.defaultParallelism
+    if partition_by:
+        width = _python_width(classify(df), n_part)
+        coded = classify(df.repartition(width, *partition_by))
+        coded = coded.sortWithinPartitions(*partition_by)
+    else:
+        coded = classify(df.repartition(1))
+    # groupBy puts NULL and NaN floating keys in different groups, but
+    # pandas reads both as NaN: carry an IS NULL flag for those keys
+    null_cols = []
+    for i, k in enumerate(partition_by):
+        if isinstance(coded.schema[k].dataType, (T.FloatType, T.DoubleType)):
+            null_cols.append(f"__mr_null_{i}")
+            coded = coded.withColumn(null_cols[-1], F.isnull(k))
+    kernel = _per_key_kernel(run, list(partition_by), null_cols, coded.schema)
+    return coded.mapInPandas(kernel, out_schema)
+
+
+# Input bytes (Catalyst's estimate of the classified frame) per matcher
+# task. A Python task has a fixed cost of about 0.27 s CPU, measured on
+# events_match_recognize: most of it is PySpark's per-task worker setup
+# (setup_spark_files calls importlib.invalidate_caches(), which re-reads
+# 16 zip directories), the rest Arrow framing. Matching costs about
+# 0.12 s per 230 KB of classified events (sf0.01, 150 keys), so a task
+# pays its fixed cost again in matching only past about 500 KB. 384 KB
+# keeps each task's matching near its fixed cost: the sf0.01 events
+# rows (224-249 KB) run in one task, and sf0.1 (2.07-2.30 MB) still
+# fills 4 cores.
+_PY_TASK_BYTES = 384 << 10
+
+
+def _python_width(coded: DataFrame, n_part: int) -> int:
+    """Task count of the matcher stage: Catalyst's size estimate of its
+    input over _PY_TASK_BYTES, capped at ``n_part``. The estimate comes
+    from the optimized plan's statistics and runs no job; an input of
+    unknown size reports Long.MaxValue and gets the cap."""
+    # a Scala BigInt: py4j hands back an int or a proxy whose str() is
+    # the decimal value
+    size = int(
+        str(coded._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    return max(1, min(n_part, -(-size // _PY_TASK_BYTES)))
+
+
+def _key_starts(pdf, cols):
+    """Positions where a new key starts in ``pdf``, which is sorted by
+    ``cols``, position 0 included. Keys compare as Spark's groupBy
+    compares them: NULL equals NULL, NaN equals NaN and -0.0 equals 0.0
+    (a NULL floating key is told from NaN by its IS NULL column, which
+    is in ``cols`` too)."""
+    import numpy as np
+
+    change = np.zeros(max(len(pdf) - 1, 0), dtype=bool)
+    for c in cols:
+        a = pdf[c].to_numpy()
+        if a.dtype.kind in "mM":
+            a = a.view("int64")  # NaT is one int64 value, so NaT == NaT
+        nxt, prev = a[1:], a[:-1]
+        if a.dtype.kind == "O":
+            try:
+                ne = np.asarray(nxt != prev, dtype=bool)
+            except ValueError:  # array-valued keys compare as a whole
+                ne = np.fromiter(
+                    (not _same_value(x, y) for x, y in zip(nxt, prev)),
+                    dtype=bool,
+                    count=len(nxt),
+                )
+        else:
+            ne = nxt != prev
+            if a.dtype.kind == "f":
+                ne &= ~(np.isnan(nxt) & np.isnan(prev))
+        change |= ne
+    return np.concatenate(([0], np.flatnonzero(change) + 1))
+
+
+def _same_value(x, y) -> bool:
+    import numpy as np
+
+    if x is None or y is None:
+        return x is y
+    return bool(np.array_equal(x, y))
+
+
+# pandas dtype of a Spark integral column without NULLs
+_INT_DTYPES = {
+    T.ByteType: "int8",
+    T.ShortType: "int16",
+    T.IntegerType: "int32",
+    T.LongType: "int64",
+}
+
+
+def _per_key_kernel(run, keys, null_cols, schema):
+    """The matcher stage as a ``mapInPandas`` function: it streams one
+    key-sorted partition's Arrow batches, calls ``run(key, pdf)`` for
+    each complete key and carries the last key of a batch into the
+    next, so memory holds one batch plus one key. ``run`` sees what a
+    grouped-map pandas UDF over the keys would hand it:
+    - the key is the tuple of the key columns' first values;
+    - the frame has a fresh index and no IS NULL helper columns;
+    - column dtypes are those of a per-key Arrow conversion. A batch
+      converts an integral column with a NULL anywhere to float64 and a
+      boolean one to object; a key without NULLs gets its int/bool
+      dtype back. (An integral value beyond 2**53 that shares a batch
+      with a NULL in its column has already lost precision there.)
+    The outputs of a batch's keys are concatenated into one frame,
+    split only where their dtypes differ, so no concat widens a
+    column."""
+    from itertools import groupby
+
+    import pandas as pd
+
+    cols = keys + null_cols
+    ints = {
+        f.name: _INT_DTYPES[type(f.dataType)]
+        for f in schema
+        if type(f.dataType) in _INT_DTYPES
+    }
+    bools = [f.name for f in schema if isinstance(f.dataType, T.BooleanType)]
+
+    def one(pieces):
+        pdf = (
+            pd.concat(pieces, ignore_index=True)
+            if len(pieces) > 1
+            else pieces[0].reset_index(drop=True)
+        )
+        for c, dt in ints.items():
+            if pdf[c].dtype.kind == "f" and not pdf[c].isna().any():
+                pdf[c] = pdf[c].astype(dt)
+        for c in bools:
+            if pdf[c].dtype == object and not pdf[c].isna().any():
+                pdf[c] = pdf[c].astype(bool)
+        key = tuple(pdf[k].iloc[0] for k in keys)
+        return run(key, pdf.drop(columns=null_cols))
+
+    def concat_runs(frames):
+        nonempty = (f for f in frames if len(f))
+        for _, same in groupby(nonempty, key=lambda f: tuple(f.dtypes)):
+            yield pd.concat(list(same), ignore_index=True)
+
+    def kernel(batches):
+        carry = []  # the rows of the batch-spanning key seen so far
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            starts = _key_starts(pdf, cols)
+            if carry:
+                edge = pd.concat([carry[-1].iloc[-1:], pdf.iloc[:1]])
+                if len(_key_starts(edge, cols)) == 1:  # same key goes on
+                    end = starts[1] if len(starts) > 1 else len(pdf)
+                    carry.append(pdf.iloc[:end])
+                    starts = starts[1:]
+                    if not len(starts):
+                        continue
+            outs = [one(carry)] if carry else []
+            for a, b in zip(starts[:-1], starts[1:]):
+                outs.append(one([pdf.iloc[a:b]]))
+            carry = [pdf.iloc[starts[-1]:]]
+            yield from concat_runs(outs)
+        if carry:
+            yield from concat_runs([one(carry)])
+
+    return kernel
 
 
 # ---------------------------------------------------------------------------

@@ -86,7 +86,7 @@ def sim_ann_hnsw(spark, sf_dir):
 
 @register(
     "events_match_recognize",
-    headline=True,  # the applyInPandas CEP path — no other headline row measures it
+    headline=True,  # the Python CEP kernel — no other headline row measures it
     oracle="""
     WITH coded AS (
         SELECT user_id, ts, event_id,
@@ -524,8 +524,8 @@ def events_mr_navigation(spark, sf_dir):
     Context.sql rewrite path) — what a migrating user would type. The
     reference has no row-pattern surface at all (no SQL:2016 §R in its
     Calcite fork); beyond-reference. Scale shape: one vectorized
-    classification projection + one applyInPandas over user_id, the
-    same exchange as every per-key CEP operator here; the scan is
+    classification projection + one per-partition pandas kernel over
+    user_id, the same exchange as every per-key CEP operator here; the scan is
     O(events) per key for this pattern (attempts fail on their
     first row except at views)."""
     from blazingsql_spark.context import Context
@@ -617,8 +617,8 @@ def events_mr_skip_overlap(spark, sf_dir):
     """Overlapping-match mode: greedy leftmost-longest from every resume
     position one row after the previous match's START (vs the default
     non-overlapping PAST LAST ROW). Same scale shape as every
-    MATCH_RECOGNIZE row (one codegen classification + one per-key
-    applyInPandas scan, one exchange); the overlap multiplies OUTPUT
+    MATCH_RECOGNIZE row (one codegen classification + one per-partition
+    kernel scanning key by key, one exchange); the overlap multiplies OUTPUT
     rows (bounded by input rows x longest run), never state."""
     from blazingsql_spark.context import Context
     from blazingsql_spark.queries.registry import ensure_views
@@ -746,7 +746,8 @@ def sketch_hll_intersect(spark, sf_dir):
 def events_mr_permute(spark, sf_dir):
     """PERMUTE through the SQL spelling (rewriter -> operator -> NFA).
     Same scale shape as every row-pattern row: one codegen
-    classification, one per-key applyInPandas scan, one exchange."""
+    classification, one per-partition kernel scanning key by key, one
+    exchange."""
     from blazingsql_spark.context import Context
     from blazingsql_spark.queries.registry import ensure_views
 
@@ -1164,8 +1165,8 @@ def events_mr_nondeterministic(spark, sf_dir):
     and SUM(A.value) see exactly the greedy-assigned rows, LAST(B.value)
     the final row. Runs through the SQL spelling like the other MR
     rows. Scale shape identical to events_match_recognize: one codegen
-    flags projection, one exchange on user_id, one applyInPandas scan
-    (the ambiguity routing happens inside the scan, per partition)."""
+    flags projection, one exchange on user_id, one Python kernel scan
+    (the ambiguity routing happens inside the scan, per key)."""
     from blazingsql_spark.context import Context
     from blazingsql_spark.queries.registry import ensure_views
 
@@ -1296,8 +1297,8 @@ def events_mr_nav_nondeterministic(spark, sf_dir):
     (one attempt per partition) and a derived-table factor filtering
     NULL values so the run/break positions are SQL-derivable. Scale
     shape identical to events_match_recognize: one codegen flags
-    projection, one exchange on user_id, one applyInPandas scan; the
-    nondeterministic fallback runs per partition, threads dedup on the
+    projection, one exchange on user_id, one Python kernel scan; the
+    nondeterministic fallback runs per key, threads dedup on the
     mapping projection the navigation reads ({A}), so the thread count
     stays O(pattern) here despite every row satisfying two symbols."""
     from blazingsql_spark.context import Context
@@ -1374,8 +1375,8 @@ def events_mr_measure_nav(spark, sf_dir):
     nondeterministic assignment (A and B share a predicate), and the ^
     anchor. Scale shape identical to the other MR rows: one codegen
     flags projection, one pinned-width exchange on user_id, one
-    applyInPandas scan; measure navigation reads the already-present
-    partition frame, no extra data movement."""
+    Python kernel scan; measure navigation reads the already-present
+    key frame, no extra data movement."""
     from blazingsql_spark.context import Context
     from blazingsql_spark.queries.registry import ensure_views
 

@@ -106,46 +106,123 @@ def _prepare_session(spark: SparkSession) -> None:
         pass
 
 
-# parquet-footer metadata cache: path -> (effective scan splits, num_rows).
-# METADATA cache only (three ints per table) — query results are never
-# memoized; every execution recomputes from the parquet inputs. Keyed by
-# (path, size, mtime) so an in-process fixture regeneration with a
-# different layout invalidates the entry (ADVICE r12).
-_SCAN_META: dict[tuple, tuple[int, int]] = {}
+# parquet-footer cache: (path, size, mtime) -> (file size, footer), the
+# footer None when the file has none readable. METADATA only (row-group
+# count, row count, schema) — query results are never memoized; every
+# execution recomputes from the parquet inputs. Keyed by (path, size,
+# mtime) so an in-process fixture regeneration with a different layout
+# invalidates the entry (ADVICE r12).
+_FOOTERS: dict[tuple, tuple] = {}
 
 
-def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(effective scan-split count, row count) from the parquet footer."""
+def _footer(path: str):
+    """(file size, pyarrow FileMetaData or None) of a parquet file."""
     import os as _os
+
+    import pyarrow.lib
+    import pyarrow.parquet as pq
 
     try:
         st = _os.stat(path)
         key = (path, st.st_size, st.st_mtime_ns)
     except OSError:
         key = (path, None, None)
-    if key not in _SCAN_META:
-        import pyarrow.lib
-        import pyarrow.parquet as pq
-
+    if key not in _FOOTERS:
         try:
             meta = pq.ParquetFile(path).metadata
-            size = _os.path.getsize(path)
         except (OSError, pyarrow.lib.ArrowInvalid):
-            # a directory, a missing file or a non-parquet footer: the
-            # layout is unknown, assume parallel enough
-            _SCAN_META[key] = (1 << 30, 1 << 62)
-            return _SCAN_META[key]
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        try:
-            max_bytes = int(raw)
-        except ValueError:  # "128m"-style spellings
-            units = {"k": 10, "m": 20, "g": 30}
-            max_bytes = int(raw[:-1]) << units.get(raw[-1].lower(), 0)
-        by_size = max(1, -(-size // max_bytes))
-        # parquet split granularity is the row group: a byte-range
-        # split can't run more tasks than there are row groups
-        _SCAN_META[key] = (min(meta.num_row_groups, by_size), meta.num_rows)
-    return _SCAN_META[key]
+            # a directory, a missing file or a non-parquet footer
+            meta = None
+        _FOOTERS[key] = (key[1], meta)
+    return _FOOTERS[key]
+
+
+def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(effective scan-split count, row count) from the parquet footer."""
+    size, meta = _footer(path)
+    if meta is None:
+        # the layout is unknown, assume parallel enough
+        return (1 << 30, 1 << 62)
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
+    try:
+        max_bytes = int(raw)
+    except ValueError:  # "128m"-style spellings
+        units = {"k": 10, "m": 20, "g": 30}
+        max_bytes = int(raw[:-1]) << units.get(raw[-1].lower(), 0)
+    by_size = max(1, -(-size // max_bytes))
+    # parquet split granularity is the row group: a byte-range
+    # split can't run more tasks than there are row groups
+    return (min(meta.num_row_groups, by_size), meta.num_rows)
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, built from the
+    footer instead, so the read runs no schema-inference job; and
+    whether a column is TIMESTAMP(NANOS), which Spark reads only under
+    spark.sql.legacy.parquet.nanosAsLong, as bigint. None when the
+    footer is unreadable or holds a type not mapped here (INT96,
+    unsigned, binary, map, TIME, ...): the caller then lets Spark
+    infer."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    _, meta = _footer(path)
+    if meta is None:
+        return None
+    if any(
+        meta.schema.column(i).physical_type == "INT96"
+        for i in range(meta.num_columns)
+    ):
+        return None  # pyarrow shows INT96 as nanos; Spark as timestamp
+    ntz = (
+        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+        == "true"
+    )
+    nanos = False
+    scalars = {
+        pa.bool_(): T.BooleanType(),
+        pa.int8(): T.ByteType(),
+        pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(),
+        pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(),
+        pa.string(): T.StringType(),
+        pa.large_string(): T.StringType(),
+        pa.date32(): T.DateType(),
+    }
+
+    def spark_type(t):
+        nonlocal nanos
+        if t in scalars:
+            return scalars[t]
+        if pa.types.is_timestamp(t):
+            if t.unit == "ns":
+                nanos = True
+                return T.LongType()
+            if t.tz is None and ntz:
+                return T.TimestampNTZType()
+            return T.TimestampType()
+        if pa.types.is_decimal128(t):
+            return T.DecimalType(t.precision, t.scale)
+        if pa.types.is_list(t) or pa.types.is_large_list(t):
+            elem = spark_type(t.value_type)
+            return None if elem is None else T.ArrayType(elem, True)
+        if pa.types.is_struct(t):
+            return struct(list(t))
+        return None
+
+    def struct(fields):
+        out = []
+        for f in fields:
+            t = spark_type(f.type)
+            if t is None:
+                return None
+            out.append(T.StructField(f.name, t, True))
+        return T.StructType(out)
+
+    schema = struct(list(meta.schema.to_arrow_schema()))
+    return None if schema is None else (schema, nanos)
 
 
 def fan_out(
@@ -196,20 +273,26 @@ def load_table(
 
 def _load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _prepare_session(spark)
-    if name == "events":
-        # events.ts resolution varies across fixture regenerations (NANOS in
-        # rounds 1-2, MICROS since round 3) — under nanosAsLong a NANOS file
-        # surfaces ts as bigint (truncate to µs, identical to DuckDB's
-        # TIMESTAMP_NS→TIMESTAMP cast); a MICROS file reads as timestamp
-        # directly. Probe the dtype, never assume.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
+    path = f"{sf_dir}/{name}.parquet"
+    reader = spark.read
+    footer = _footer_schema(spark, path)
+    if footer is not None:
+        schema, nanos = footer
+        if nanos:
+            # Spark reads TIMESTAMP(NANOS) only as bigint, and only with
+            # this session-wide flag; MICROS files leave the session as is
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        reader = reader.schema(schema)
+    df = reader.parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # events.ts resolution varies across fixture regenerations (NANOS
+        # in rounds 1-2, MICROS since round 3): a NANOS ts arrives as
+        # bigint; truncate to µs, identical to DuckDB's
+        # TIMESTAMP_NS→TIMESTAMP cast
+        from pyspark.sql import functions as F
 
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def ensure_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

@@ -110,3 +110,51 @@ def test_scan_meta_unknown_layout_falls_back(tmp_path, monkeypatch):
     monkeypatch.setattr(pq, "ParquetFile", broken)
     with pytest.raises(RuntimeError):
         registry._scan_meta(None, str(good))
+
+
+def test_footer_schema_matches_spark_inference(spark):
+    """load_table passes the schema built from the parquet footer, so the
+    read runs no schema-inference job. It must be exactly the schema
+    Spark infers, for every fixture table at every scale present; and
+    loading the MICROS-timestamp events leaves the session's
+    nanosAsLong flag as it was."""
+    from tests.conftest import SF_DIR
+
+    root = os.path.dirname(SF_DIR)
+    checked = 0
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        for path in sorted(glob.glob(os.path.join(root, sf, "*.parquet"))):
+            got = registry._footer_schema(spark, path)
+            assert got is not None, path
+            schema, nanos = got
+            assert schema == spark.read.parquet(path).schema, path
+            assert not nanos, path
+            checked += 1
+    assert checked >= len(registry.TABLES)
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    sc = spark.sparkContext
+    sc.setJobGroup("footer_schema", "load_table")
+    try:
+        registry.load_table(spark, SF_DIR, "events")
+        assert sc.statusTracker().getJobIdsForGroup("footer_schema") == []
+    finally:
+        sc.setJobGroup("", "")
+    assert spark.conf.get(key) == before
+
+
+def test_footer_schema_nanos_and_unmapped(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column reads as bigint under nanosAsLong, the
+    only way Spark reads it; a type the footer mapping does not cover
+    (unsigned) leaves the schema to Spark's own inference."""
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000_000_123, None], pa.timestamp("ns"))}),
+        tmp_path / "nanos.parquet",
+    )
+    schema, nanos = registry._footer_schema(spark, str(tmp_path / "nanos.parquet"))
+    assert nanos and schema.simpleString() == "struct<ts:bigint>"
+    pq.write_table(
+        pa.table({"u": pa.array([1], pa.uint32())}), tmp_path / "u.parquet"
+    )
+    assert registry._footer_schema(spark, str(tmp_path / "u.parquet")) is None

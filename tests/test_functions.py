@@ -3,6 +3,8 @@ DuckDB, engine-specific hashing, stubbed decoders) and the config mapping."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2711,3 +2713,45 @@ def test_prefilter_flt_ids_cache_evicts_previous(spark):
     assert second.is_cached
     assert not first.is_cached  # evicted by the second call
     assert len(similarity._FLT_ID_CACHE) == 1
+
+
+def test_lloyd_mean_update_matches_per_column_avg(spark):
+    """The IVF Lloyd update averages per (centroid_id, position) over the
+    exploded vectors, so both aggregates stay in whole-stage codegen
+    (dim avg() columns would exceed spark.sql.codegen.maxFields). It
+    must equal one avg(element_at(vec, i)) per position — with NULL
+    vectors, NULL elements, short and long vectors and a cluster with
+    no element at all — bit for bit."""
+    from blazingsql_spark.functions.similarity import _cluster_means
+
+    dim = 4
+    assigned = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0, 4.0]),
+            (1, [0.1, None, 0.3, 0.7]),
+            (1, [0.2, 0.4]),  # short: positions 3, 4 absent
+            (1, None),
+            (2, [5.0, 6.0, 7.0, 8.0, 9.0]),  # long: past dim ignored
+            (2, [1e-17, 1e17, -0.0, 3.3]),
+            (3, None),  # no element at all: all-NULL centroid
+            (4, [None, None]),
+        ],
+        "centroid_id bigint, embedding array<double>",
+    )
+    want = assigned.groupBy("centroid_id").agg(
+        F.array(
+            *[
+                F.avg(F.try_element_at(F.col("embedding"), F.lit(i + 1)))
+                for i in range(dim)
+            ]
+        ).alias("centroid")
+    )
+    got = _cluster_means(assigned, "embedding", dim)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert {r.centroid_id: r.centroid for r in got.collect()}[3] == [None] * dim
+
+    got.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    # both avg() HashAggregates run inside whole-stage codegen
+    assert len(re.findall(r"\*\(\d+\) HashAggregate", plan)) == 2, plan

@@ -1347,7 +1347,7 @@ def test_explain_accepts_match_recognize(spark):
         """,
         detail=True,
     )
-    assert "FlatMapGroupsInPandas" in plan
+    assert "MapInPandas" in plan
 
 
 def test_measure_arithmetic_expressions(spark):
@@ -2942,3 +2942,145 @@ def test_null_flags_are_false_without_downcast(spark):
             {"A": "v > 0"},
         ).collect()
     assert [r.n for r in out] == [1, 2]
+
+
+def _canon_rows(rows, drop_first=False):
+    """Rows as sortable tuples: NaN compares equal to NaN, and -0.0 to
+    0.0 (a group of both reports either, as groupBy does)."""
+    def canon(v):
+        if isinstance(v, float):
+            return "nan" if v != v else v + 0.0
+        return v
+
+    return sorted(
+        (tuple(canon(v) for v in r[1 if drop_first else 0 :]) for r in rows),
+        key=repr,
+    )
+
+
+def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
+    """The matcher stage is one mapInPandas kernel per shuffle partition:
+    it streams the partition's Arrow batches, splits them into keys and
+    runs each key alone. Spread over 16 partitions (most of them empty)
+    with 3-row Arrow batches (every key spans batches), its output must
+    equal running the operator on each key's rows by themselves, for
+    ONE ROW, ALL ROWS and WITH UNMATCHED ROWS.
+
+    The key ``k`` is a double holding NULL, NaN, -0.0 and 0.0, which
+    must group as groupBy groups them: NULL apart from NaN, -0.0 with
+    0.0. The per-key reference runs each group alone, keyed by its
+    string label ``g`` and in one Arrow batch, so it shares none of the
+    kernel's floating-key or batch-spanning logic. ``amount`` is a
+    BIGINT that is NULL only under one key, so batches mixing keys
+    convert it to float64."""
+    from blazingsql_spark.operators import match_recognize as mr
+
+    codes = {"v": "view", "c": "click", "p": "purchase", "s": "search"}
+    streams = [  # (key, group label, events)
+        (None, "null", "vcpvccps"),
+        (float("nan"), "nan", "svcpvp"),
+        (-0.0, "zero", "vccp"),
+        (1.5, "x", "vcccpvcp"),
+        (0.0, "zero", "cvcpv"),  # the -0.0 group, later seqs
+        (2.5, "y", "ssss"),  # no match: no ONE ROW output, all unmatched
+    ]
+    rows, seq = [], 0
+    for key, label, stream in streams:
+        for i, ch in enumerate(stream):
+            seq += 1
+            amount = None if label == "x" and i % 3 == 0 else 10 * seq
+            rows.append((key, label, seq, codes[ch], amount))
+    df = spark.createDataFrame(
+        rows, "k double, g string, seq bigint, event_type string, amount bigint"
+    )
+    define = {
+        "V": "event_type = 'view'",
+        "C": "event_type = 'click'",
+        "P": "event_type = 'purchase'",
+    }
+    measures = [
+        ("MATCH_NUMBER()", "mno"),
+        ("FIRST(seq)", "first_seq"),
+        ("COUNT(*)", "n"),
+        ("FIRST(C.amount)", "first_click"),
+        ("SUM(amount)", "total"),
+        ("CLASSIFIER()", "cls"),
+    ]
+    modes = [
+        dict(all_rows=False),
+        dict(all_rows=True),
+        dict(all_rows=True, unmatched=True),
+    ]
+
+    def run(frame, key, mode):
+        return match_recognize(
+            frame, [key], ["seq"], measures, "V C+ P", define, **mode
+        )
+
+    want = {
+        i: [
+            r
+            for label in ("null", "nan", "zero", "x", "y")
+            for r in run(df.filter(F.col("g") == label), "g", mode).collect()
+        ]
+        for i, mode in enumerate(modes)
+    }
+    monkeypatch.setattr(mr, "_PY_TASK_BYTES", 1)  # widest stage
+    conf = spark.conf
+    saved = {
+        c: conf.get(c)
+        for c in (
+            "spark.sql.shuffle.partitions",
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+        )
+    }
+    conf.set("spark.sql.shuffle.partitions", "16")
+    conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        for i, mode in enumerate(modes):
+            out = run(df, "k", mode)
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert re.search(r"hashpartitioning\(k#\d+, 16\)", plan), plan
+            # ONE ROW output leads with the key: k here, g in the reference
+            one_row = not mode["all_rows"]
+            got = _canon_rows(out.collect(), drop_first=one_row)
+            assert got == _canon_rows(want[i], drop_first=one_row), mode
+            assert got, mode
+        # NULL and NaN hash apart; in one partition they sort next to
+        # each other when no other key lies between
+        conf.set("spark.sql.shuffle.partitions", "1")
+        pair = df.filter(F.col("g").isin("null", "nan"))
+        got = _canon_rows(run(pair, "k", modes[1]).collect())
+        assert got == _canon_rows(
+            r for r in want[1] if r.g in ("null", "nan")
+        )
+    finally:
+        for c, v in saved.items():
+            conf.set(c, v)
+
+
+def test_key_starts_groups_keys_as_group_by():
+    """The kernel's key split on the pandas columns a key-sorted Arrow
+    batch converts to: NaN equals NaN and -0.0 equals 0.0 (a NULL
+    floating key is told from NaN by the IS NULL column beside it), NaT
+    equals NaT, and an array key (object column of ndarrays and None)
+    compares as a whole value."""
+    import numpy as np
+    import pandas as pd
+
+    from blazingsql_spark.operators import match_recognize as mr
+
+    nan = float("nan")
+    pdf = pd.DataFrame(
+        {
+            "f": [nan, nan, nan, -0.0, 0.0, 1.0],
+            "f_null": [True, False, False, False, False, False],
+            "t": pd.to_datetime(
+                [None, None, None, "2024-01-01", "2024-01-01", None]
+            ),
+            "a": [None] * 3 + [np.array([1, 2]), np.array([1, 2]), np.array([1])],
+        }
+    )
+    assert mr._key_starts(pdf, ["f", "f_null"]).tolist() == [0, 1, 3, 5]
+    assert mr._key_starts(pdf, ["t"]).tolist() == [0, 3, 5]
+    assert mr._key_starts(pdf, ["a"]).tolist() == [0, 3, 5]

@@ -356,8 +356,8 @@ def test_ddsketch_build_is_one_shuffle_no_udf(spark):
 
 def test_match_recognize_classification_is_codegen(spark):
     """Row classification (the DEFINE CASE) must stay JVM-side; the only
-    Python stage is the per-key applyInPandas NFA scan, and the only
-    exchange is the partition-key shuffle feeding it."""
+    Python stage is the per-partition mapInPandas matcher kernel, and the
+    only exchange is the partition-key shuffle feeding it."""
     from blazingsql_spark.operators.match_recognize import match_recognize
     from blazingsql_spark.queries.registry import load_table
 
@@ -375,7 +375,7 @@ def test_match_recognize_classification_is_codegen(spark):
         },
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     assert exchange_count(out) == 1, plan
 
@@ -394,8 +394,8 @@ def test_match_recognize_symbol_relative_plan_shape(spark):
     """The in-automaton path (symbol-relative DEFINE) must keep the same
     scale shape as the vectorized path: nav-free symbols classify as
     JVM-side boolean projections (no BatchEvalPython), the only Python
-    stage is the per-key applyInPandas scan, and the only exchange is
-    the partition-key shuffle feeding it."""
+    stage is the per-partition mapInPandas kernel, and the only exchange
+    is the partition-key shuffle feeding it."""
     from blazingsql_spark.operators.match_recognize import match_recognize
     from blazingsql_spark.queries.registry import load_table
 
@@ -411,7 +411,7 @@ def test_match_recognize_symbol_relative_plan_shape(spark):
         },
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
     assert "BatchEvalPython" not in plan, plan  # flags are codegen CASEs
     assert exchange_count(out) == 1, plan
 
@@ -473,10 +473,56 @@ def test_ivf_topk_filtered_selectivity_action_count(spark):
     assert out.count() > 0  # and the lazy plan still executes
 
 
+def _python_widths(df) -> list[int]:
+    """Widths of the pinned (REPARTITION_BY_NUM) key exchanges; Spark
+    plans a width of 1 as SinglePartition."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        int(n or 1)
+        for n in re.findall(
+            r"Exchange (?:SinglePartition|hashpartitioning\([^()]*, (\d+)\)),"
+            r" REPARTITION_BY_NUM",
+            plan,
+        )
+    ]
+
+
+def test_match_recognize_width_follows_input_size(spark):
+    """The matcher stage's task count comes from Catalyst's size
+    estimate of its input, not from an option: the sf0.001 and sf0.01
+    events run as ONE Python task (each task has a fixed cost near
+    that of matching all of sf0.01), and an input estimated past
+    n_part tasks' worth runs spark.sql.shuffle.partitions tasks."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+
+    fn = all_queries()["events_match_recognize"].fn
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    for sf_dir in (SF_DIR, sf01):
+        if os.path.isdir(sf_dir):
+            assert _python_widths(fn(spark, sf_dir)) == [1], sf_dir
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    big = spark.range(20_000_000).select(  # planned, never run
+        (F.col("id") % 1000).alias("user_id"),
+        F.col("id").alias("ts"),
+        F.lit("view").alias("event_type"),
+    )
+    out = match_recognize(
+        big, ["user_id"], ["ts"], [("COUNT(*)", "n")], "V+",
+        {"V": "event_type = 'view'"},
+    )
+    assert _python_widths(out) == [n_part]
+
+
 def test_mr_nondeterministic_single_shuffle(spark):
     """r12 (VERDICT-r11 #8): the ND-assignment MATCH_RECOGNIZE row keeps
     the canonical MR plan shape — ONE hash exchange on the partition key
-    feeding ONE FlatMapGroupsInPandas scan (plus the final presentation
+    feeding ONE MapInPandas matcher kernel (plus the final presentation
     sort); a future change must not silently add a second shuffle or a
     second Python stage."""
     from blazingsql_spark.plans import physical_plan
@@ -494,7 +540,7 @@ def test_mr_nondeterministic_single_shuffle(spark):
         n = exchange_count(df)
         assert n <= 2, (name, n)  # key hash + presentation sort
         plan = physical_plan(df, "simple")
-        assert plan.count("FlatMapGroupsInPandas") == 1, (name, plan)
+        assert plan.count("MapInPandas") == 1, (name, plan)
 
 
 def test_filtered_ann_prune_before_scan(spark):

@@ -7,8 +7,10 @@ Usage:
 Row mode runs each row once untimed (JIT, resident indexes), then N timed
 runs. DataFrame construction and execution (planning + noop sink) run
 under separate Spark job groups, and each timed run prints:
-construction seconds and jobs, planning seconds, execution seconds, jobs
-and stages, the input and shuffle bytes, and the run's code generation
+construction seconds and jobs, planning seconds, execution seconds, jobs,
+stages and tasks, the time Python workers ran (Spark's "time to run
+Python workers" metric of the pandas/Arrow UDF nodes), the input and
+shuffle bytes, and the run's code generation
 cost: Janino compiles (Spark's CodegenMetrics; 0 when every generated
 class came from Spark's codegen cache) and JIT compile milliseconds (the
 JVM's CompilationMXBean; the JIT compiles in background threads, so the
@@ -112,7 +114,9 @@ def profile_rows(args) -> int:
             f"{name} run {rep}/{args.reps}: "
             f"construct {construct_s:.3f} s / {c.get('jobs', 0):.0f} jobs  "
             f"plan {plan_s:.3f} s  "
-            f"exec {exec_s:.3f} s / {e.get('jobs', 0):.0f} jobs / {e.get('stages', 0):.0f} stages  "
+            f"exec {exec_s:.3f} s / {e.get('jobs', 0):.0f} jobs / {e.get('stages', 0):.0f} stages / "
+            f"{e.get('tasks', 0):.0f} tasks  "
+            f"python {e.get('python_run_s', 0):.3f} s  "
             f"input {c.get('input_bytes', 0) + e.get('input_bytes', 0):.0f} B / "
             f"{c.get('input_records', 0) + e.get('input_records', 0):.0f} rec  "
             f"shuffle write {c.get('shuffle_write_bytes', 0) + e.get('shuffle_write_bytes', 0):.0f} B "

@@ -6,7 +6,7 @@ Cases (select by name; default all):
   docs      remove_duplicated_ngram_spans, KN bigram/trigram perplexity,
             ANN margin mining and bounded semantic dedup on documents /
             embeddings at 1x and 64x
-  mr        MATCH_RECOGNIZE (applyInPandas path) and DDSketch build +
+  mr        MATCH_RECOGNIZE (per-partition kernel) and DDSketch build +
             quantiles on events at 1x/16x/64x
   mr_nav    symbol-relative MATCH_RECOGNIZE (per-thread navigation DEFINE) vs
             its vectorized twin (same pattern, budget constraint dropped)
