@@ -61,14 +61,15 @@ THREAD assigned to A). A row matching no symbol the pattern can consume
 ends the attempt.
 
 Scale shape: the flags are one codegen projection; matching is one
-per-partition pandas kernel (mapInPandas) over an input hashed and
-sorted by the PARTITION BY key, whose task count follows the input's
-estimated size. Each task streams its Arrow batches and scans one key
-at a time, so memory holds one batch plus one key's event history, the
-same bound as every MATCH_RECOGNIZE implementation (Flink/Oracle both
-require a partition key for parallelism; skewed keys are the user's
-modeling problem there too). The scan is O(events × NFA states) per
-key for navigation-free DEFINEs.
+per-partition kernel (mapInArrow) over an input hashed and sorted by
+the PARTITION BY key, whose task count follows the input's estimated
+size. Each task streams its Arrow batches, splits them into keys on
+the Arrow data and scans one key at a time in pandas, so memory holds
+one batch plus one key's event history, the same bound as every
+MATCH_RECOGNIZE implementation (Flink/Oracle both require a partition
+key for parallelism; skewed keys are the user's modeling problem there
+too). The scan is O(events × NFA states) per key for navigation-free
+DEFINEs.
 """
 
 from __future__ import annotations
@@ -1432,15 +1433,8 @@ def match_recognize(
         coded = coded.sortWithinPartitions(*partition_by)
     else:
         coded = classify(df.repartition(1))
-    # groupBy puts NULL and NaN floating keys in different groups, but
-    # pandas reads both as NaN: carry an IS NULL flag for those keys
-    null_cols = []
-    for i, k in enumerate(partition_by):
-        if isinstance(coded.schema[k].dataType, (T.FloatType, T.DoubleType)):
-            null_cols.append(f"__mr_null_{i}")
-            coded = coded.withColumn(null_cols[-1], F.isnull(k))
-    kernel = _per_key_kernel(run, list(partition_by), null_cols, coded.schema)
-    return coded.mapInPandas(kernel, out_schema)
+    kernel = _per_key_kernel(run, list(partition_by), out_schema, spark)
+    return coded.mapInArrow(kernel, out_schema)
 
 
 # Input bytes (Catalyst's estimate of the classified frame) per matcher
@@ -1469,123 +1463,145 @@ def _python_width(coded: DataFrame, n_part: int) -> int:
     return max(1, min(n_part, -(-size // _PY_TASK_BYTES)))
 
 
-def _key_starts(pdf, cols):
-    """Positions where a new key starts in ``pdf``, which is sorted by
-    ``cols``, position 0 included. Keys compare as Spark's groupBy
-    compares them: NULL equals NULL, NaN equals NaN and -0.0 equals 0.0
-    (a NULL floating key is told from NaN by its IS NULL column, which
-    is in ``cols`` too)."""
+def _key_starts(batch, keys):
+    """Positions where a new key starts in the Arrow ``batch`` (or
+    table), which is sorted by ``keys``, position 0 included. Keys
+    compare as Spark's groupBy compares them: NULL equals only NULL,
+    NaN equals NaN and -0.0 equals 0.0."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    change = np.zeros(max(len(pdf) - 1, 0), dtype=bool)
-    for c in cols:
-        a = pdf[c].to_numpy()
-        if a.dtype.kind in "mM":
-            a = a.view("int64")  # NaT is one int64 value, so NaT == NaT
-        nxt, prev = a[1:], a[:-1]
-        if a.dtype.kind == "O":
-            try:
-                ne = np.asarray(nxt != prev, dtype=bool)
-            except ValueError:  # array-valued keys compare as a whole
-                ne = np.fromiter(
-                    (not _same_value(x, y) for x, y in zip(nxt, prev)),
-                    dtype=bool,
-                    count=len(nxt),
-                )
-        else:
-            ne = nxt != prev
-            if a.dtype.kind == "f":
-                ne &= ~(np.isnan(nxt) & np.isnan(prev))
-        change |= ne
+    n = batch.num_rows
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for k in keys:
+        col = batch.column(k)
+        nxt, prev = col.slice(1), col.slice(0, n - 1)
+        try:
+            ne = pc.fill_null(pc.not_equal(nxt, prev), False)
+        except pa.ArrowNotImplementedError:  # nested keys: whole values
+            ne = pa.array(
+                [
+                    _group_value(x) != _group_value(y)
+                    for x, y in zip(nxt.to_pylist(), prev.to_pylist())
+                ],
+                pa.bool_(),
+            )
+        if pa.types.is_floating(col.type):
+            both_nan = pc.and_(pc.is_nan(nxt), pc.is_nan(prev))
+            ne = pc.and_not(ne, pc.fill_null(both_nan, False))
+        ne = pc.or_(ne, pc.not_equal(pc.is_null(nxt), pc.is_null(prev)))
+        change |= ne.to_numpy(zero_copy_only=False)
     return np.concatenate(([0], np.flatnonzero(change) + 1))
 
 
-def _same_value(x, y) -> bool:
-    import numpy as np
-
-    if x is None or y is None:
-        return x is y
-    return bool(np.array_equal(x, y))
+_NAN = object()  # stands for every NaN inside a nested key
 
 
-# pandas dtype of a Spark integral column without NULLs
-_INT_DTYPES = {
-    T.ByteType: "int8",
-    T.ShortType: "int16",
-    T.IntegerType: "int32",
-    T.LongType: "int64",
-}
+def _group_value(v):
+    """A nested key's Python value with each NaN replaced by _NAN, so
+    that == compares it as groupBy does (-0.0 == 0.0 already holds)."""
+    if isinstance(v, float) and v != v:
+        return _NAN
+    if isinstance(v, list):
+        return [_group_value(x) for x in v]
+    if isinstance(v, dict):
+        return {f: _group_value(x) for f, x in v.items()}
+    return v
 
 
-def _per_key_kernel(run, keys, null_cols, schema):
-    """The matcher stage as a ``mapInPandas`` function: it streams one
-    key-sorted partition's Arrow batches, calls ``run(key, pdf)`` for
-    each complete key and carries the last key of a batch into the
-    next, so memory holds one batch plus one key. ``run`` sees what a
-    grouped-map pandas UDF over the keys would hand it:
-    - the key is the tuple of the key columns' first values;
-    - the frame has a fresh index and no IS NULL helper columns;
-    - column dtypes are those of a per-key Arrow conversion. A batch
-      converts an integral column with a NULL anywhere to float64 and a
-      boolean one to object; a key without NULLs gets its int/bool
-      dtype back. (An integral value beyond 2**53 that shares a batch
-      with a NULL in its column has already lost precision there.)
-    The outputs of a batch's keys are concatenated into one frame,
-    split only where their dtypes differ, so no concat widens a
-    column."""
-    from itertools import groupby
+def _per_key_kernel(run, keys, out_schema, spark):
+    """The matcher stage as a ``mapInArrow`` function: it streams one
+    key-sorted partition's Arrow batches, splits them into keys on the
+    Arrow data and calls ``run(key, pdf)`` for each complete key,
+    carrying the last key of a batch into the next, so memory holds one
+    batch plus one key. ``run`` gets exactly the key tuple and frame
+    that ``groupBy(keys).applyInPandas`` would hand it, converted by
+    PySpark's grouped-map serializer, and its output is cast to Arrow by
+    the same serializer."""
+    conf = spark.conf
 
-    import pandas as pd
+    def flag(key):
+        return conf.get(key, "false").lower() == "true"
 
-    cols = keys + null_cols
-    ints = {
-        f.name: _INT_DTYPES[type(f.dataType)]
-        for f in schema
-        if type(f.dataType) in _INT_DTYPES
-    }
-    bools = [f.name for f in schema if isinstance(f.dataType, T.BooleanType)]
-
-    def one(pieces):
-        pdf = (
-            pd.concat(pieces, ignore_index=True)
-            if len(pieces) > 1
-            else pieces[0].reset_index(drop=True)
-        )
-        for c, dt in ints.items():
-            if pdf[c].dtype.kind == "f" and not pdf[c].isna().any():
-                pdf[c] = pdf[c].astype(dt)
-        for c in bools:
-            if pdf[c].dtype == object and not pdf[c].isna().any():
-                pdf[c] = pdf[c].astype(bool)
-        key = tuple(pdf[k].iloc[0] for k in keys)
-        return run(key, pdf.drop(columns=null_cols))
-
-    def concat_runs(frames):
-        nonempty = (f for f in frames if len(f))
-        for _, same in groupby(nonempty, key=lambda f: tuple(f.dtypes)):
-            yield pd.concat(list(same), ignore_index=True)
+    ser_args = (
+        conf.get("spark.sql.session.timeZone"),
+        flag("spark.sql.execution.pandas.convertToArrowArraySafely"),
+        True,  # assign output columns by name
+        flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled"),
+    )
+    large_types = flag("spark.sql.execution.arrow.useLargeVarTypes")
 
     def kernel(batches):
-        carry = []  # the rows of the batch-spanning key seen so far
-        for pdf in batches:
-            if not len(pdf):
+        from itertools import groupby
+
+        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        ser = GroupPandasUDFSerializer(*ser_args)
+        out_type = to_arrow_type(out_schema, prefers_large_types=large_types)
+
+        def run_keys(table, starts):
+            """run() over each key of ``table``, whose keys start at
+            ``starts``. The table converts to pandas once; arrow to
+            pandas is value by value except that an integral column
+            with a NULL becomes float64 and a boolean one object, so
+            such a column is converted again from each key's own rows,
+            where it keeps its type unless that key has the NULL."""
+            cols = list(table.itercolumns())
+            whole = pd.concat(
+                [ser.arrow_to_pandas(c, i) for i, c in enumerate(cols)], axis=1
+            )
+            redo = [
+                (i, c)
+                for i, c in enumerate(cols)
+                if c.null_count
+                and (pa.types.is_integer(c.type) or pa.types.is_boolean(c.type))
+            ]
+            out = []
+            for a, b in zip(starts, [*starts[1:], table.num_rows]):
+                pdf = whole.iloc[a:b].reset_index(drop=True)
+                for i, c in redo:
+                    pdf.isetitem(i, ser.arrow_to_pandas(c.slice(a, b - a), i))
+                out.append(run(tuple(pdf[k].iloc[0] for k in keys), pdf))
+            return out
+
+        def emit(frames):
+            # frames of equal dtypes concatenate unchanged; ones that
+            # differ (an int64 column one key holds as float64) convert
+            # apart, so no concat widens a column
+            nonempty = (f for f in frames if len(f))
+            for _, same in groupby(nonempty, key=lambda f: tuple(f.dtypes)):
+                pdf = pd.concat(list(same), ignore_index=True)
+                arr = ser._create_struct_array(pdf, out_type)
+                yield pa.RecordBatch.from_struct_array(arr)
+
+        carry = []  # the Arrow rows of the batch-spanning key seen so far
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            starts = _key_starts(pdf, cols)
+            starts = _key_starts(batch, keys)
             if carry:
-                edge = pd.concat([carry[-1].iloc[-1:], pdf.iloc[:1]])
-                if len(_key_starts(edge, cols)) == 1:  # same key goes on
-                    end = starts[1] if len(starts) > 1 else len(pdf)
-                    carry.append(pdf.iloc[:end])
+                last = carry[-1].slice(carry[-1].num_rows - 1)
+                edge = pa.Table.from_batches([last, batch.slice(0, 1)])
+                if len(_key_starts(edge, keys)) == 1:  # same key goes on
+                    end = starts[1] if len(starts) > 1 else batch.num_rows
+                    carry.append(batch.slice(0, end))
                     starts = starts[1:]
                     if not len(starts):
                         continue
-            outs = [one(carry)] if carry else []
-            for a, b in zip(starts[:-1], starts[1:]):
-                outs.append(one([pdf.iloc[a:b]]))
-            carry = [pdf.iloc[starts[-1]:]]
-            yield from concat_runs(outs)
+            frames = run_keys(pa.Table.from_batches(carry), [0]) if carry else []
+            if len(starts) > 1:
+                done = batch.slice(starts[0], starts[-1] - starts[0])
+                frames += run_keys(
+                    pa.Table.from_batches([done]), starts[:-1] - starts[0]
+                )
+            carry = [batch.slice(starts[-1])]
+            yield from emit(frames)
         if carry:
-            yield from concat_runs([one(carry)])
+            yield from emit(run_keys(pa.Table.from_batches(carry), [0]))
 
     return kernel
 

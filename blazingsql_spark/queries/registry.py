@@ -106,27 +106,34 @@ def _prepare_session(spark: SparkSession) -> None:
         pass
 
 
-# parquet-footer cache: (path, size, mtime) -> (file size, footer), the
-# footer None when the file has none readable. METADATA only (row-group
-# count, row count, schema) — query results are never memoized; every
-# execution recomputes from the parquet inputs. Keyed by (path, size,
-# mtime) so an in-process fixture regeneration with a different layout
-# invalidates the entry (ADVICE r12).
+# METADATA caches, keyed by (path, size, mtime) so an in-process fixture
+# regeneration with a different layout invalidates the entry (ADVICE
+# r12); query results are never memoized, every execution recomputes
+# from the parquet inputs.
+# parquet footers: key -> (file size, footer), the footer None when the
+# file has none readable
 _FOOTERS: dict[tuple, tuple] = {}
+# read schemas: key + the confs that shape inference -> the schema Spark
+# inferred, handed to later reads so they run no inference job
+_SCHEMAS: dict[tuple, object] = {}
+
+
+def _file_key(path: str) -> tuple:
+    import os as _os
+
+    try:
+        st = _os.stat(path)
+        return (path, st.st_size, st.st_mtime_ns)
+    except OSError:
+        return (path, None, None)
 
 
 def _footer(path: str):
     """(file size, pyarrow FileMetaData or None) of a parquet file."""
-    import os as _os
-
     import pyarrow.lib
     import pyarrow.parquet as pq
 
-    try:
-        st = _os.stat(path)
-        key = (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        key = (path, None, None)
+    key = _file_key(path)
     if key not in _FOOTERS:
         try:
             meta = pq.ParquetFile(path).metadata
@@ -155,74 +162,32 @@ def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
     return (min(meta.num_row_groups, by_size), meta.num_rows)
 
 
-def _footer_schema(spark: SparkSession, path: str):
-    """The schema ``spark.read.parquet(path)`` would infer, built from the
-    footer instead, so the read runs no schema-inference job; and
-    whether a column is TIMESTAMP(NANOS), which Spark reads only under
-    spark.sql.legacy.parquet.nanosAsLong, as bigint. None when the
-    footer is unreadable or holds a type not mapped here (INT96,
-    unsigned, binary, map, TIME, ...): the caller then lets Spark
-    infer."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file:
+    later reads of an unchanged file pass the cached schema and run no
+    inference job. A footer with a TIMESTAMP(NANOS) column sets
+    spark.sql.legacy.parquet.nanosAsLong first, the only way Spark
+    reads one (as bigint); MICROS files leave the session as is."""
     _, meta = _footer(path)
-    if meta is None:
-        return None
+    if meta is None:  # a directory or an unreadable footer
+        return spark.read.parquet(path)
     if any(
-        meta.schema.column(i).physical_type == "INT96"
+        '"timeUnit": "nanoseconds"' in meta.schema.column(i).logical_type.to_json()
         for i in range(meta.num_columns)
     ):
-        return None  # pyarrow shows INT96 as nanos; Spark as timestamp
-    ntz = (
-        spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        == "true"
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = _file_key(path) + tuple(
+        spark.conf.get(f"spark.sql.{c}", None)
+        for c in (
+            "parquet.inferTimestampNTZ.enabled",
+            "parquet.binaryAsString",
+            "parquet.int96AsTimestamp",
+            "legacy.parquet.nanosAsLong",
+        )
     )
-    nanos = False
-    scalars = {
-        pa.bool_(): T.BooleanType(),
-        pa.int8(): T.ByteType(),
-        pa.int16(): T.ShortType(),
-        pa.int32(): T.IntegerType(),
-        pa.int64(): T.LongType(),
-        pa.float32(): T.FloatType(),
-        pa.float64(): T.DoubleType(),
-        pa.string(): T.StringType(),
-        pa.large_string(): T.StringType(),
-        pa.date32(): T.DateType(),
-    }
-
-    def spark_type(t):
-        nonlocal nanos
-        if t in scalars:
-            return scalars[t]
-        if pa.types.is_timestamp(t):
-            if t.unit == "ns":
-                nanos = True
-                return T.LongType()
-            if t.tz is None and ntz:
-                return T.TimestampNTZType()
-            return T.TimestampType()
-        if pa.types.is_decimal128(t):
-            return T.DecimalType(t.precision, t.scale)
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            elem = spark_type(t.value_type)
-            return None if elem is None else T.ArrayType(elem, True)
-        if pa.types.is_struct(t):
-            return struct(list(t))
-        return None
-
-    def struct(fields):
-        out = []
-        for f in fields:
-            t = spark_type(f.type)
-            if t is None:
-                return None
-            out.append(T.StructField(f.name, t, True))
-        return T.StructType(out)
-
-    schema = struct(list(meta.schema.to_arrow_schema()))
-    return None if schema is None else (schema, nanos)
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def fan_out(
@@ -273,17 +238,7 @@ def load_table(
 
 def _load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _prepare_session(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    reader = spark.read
-    footer = _footer_schema(spark, path)
-    if footer is not None:
-        schema, nanos = footer
-        if nanos:
-            # Spark reads TIMESTAMP(NANOS) only as bigint, and only with
-            # this session-wide flag; MICROS files leave the session as is
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        reader = reader.schema(schema)
-    df = reader.parquet(path)
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts resolution varies across fixture regenerations (NANOS
         # in rounds 1-2, MICROS since round 3): a NANOS ts arrives as

@@ -112,49 +112,47 @@ def test_scan_meta_unknown_layout_falls_back(tmp_path, monkeypatch):
         registry._scan_meta(None, str(good))
 
 
-def test_footer_schema_matches_spark_inference(spark):
-    """load_table passes the schema built from the parquet footer, so the
-    read runs no schema-inference job. It must be exactly the schema
-    Spark infers, for every fixture table at every scale present; and
-    loading the MICROS-timestamp events leaves the session's
-    nanosAsLong flag as it was."""
+def test_load_table_infers_schema_once(spark):
+    """load_table infers a file's schema once per process: a later load
+    of the unchanged file runs no job and reads the same schema. Loading
+    the MICROS-timestamp events leaves the session's nanosAsLong flag as
+    it was."""
     from tests.conftest import SF_DIR
-
-    root = os.path.dirname(SF_DIR)
-    checked = 0
-    for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        for path in sorted(glob.glob(os.path.join(root, sf, "*.parquet"))):
-            got = registry._footer_schema(spark, path)
-            assert got is not None, path
-            schema, nanos = got
-            assert schema == spark.read.parquet(path).schema, path
-            assert not nanos, path
-            checked += 1
-    assert checked >= len(registry.TABLES)
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
     before = spark.conf.get(key)
+    first = registry.load_table(spark, SF_DIR, "events")
     sc = spark.sparkContext
-    sc.setJobGroup("footer_schema", "load_table")
+    sc.setJobGroup("read_schema", "load_table")
     try:
-        registry.load_table(spark, SF_DIR, "events")
-        assert sc.statusTracker().getJobIdsForGroup("footer_schema") == []
+        again = registry.load_table(spark, SF_DIR, "events")
+        assert sc.statusTracker().getJobIdsForGroup("read_schema") == []
     finally:
         sc.setJobGroup("", "")
+    assert again.schema == first.schema
+    assert dict(again.dtypes)["ts"] == "timestamp_ntz"
     assert spark.conf.get(key) == before
 
 
-def test_footer_schema_nanos_and_unmapped(spark, tmp_path):
-    """A TIMESTAMP(NANOS) column reads as bigint under nanosAsLong, the
-    only way Spark reads it; a type the footer mapping does not cover
-    (unsigned) leaves the schema to Spark's own inference."""
-    pq.write_table(
-        pa.table({"ts": pa.array([1_000_000_123, None], pa.timestamp("ns"))}),
-        tmp_path / "nanos.parquet",
-    )
-    schema, nanos = registry._footer_schema(spark, str(tmp_path / "nanos.parquet"))
-    assert nanos and schema.simpleString() == "struct<ts:bigint>"
-    pq.write_table(
-        pa.table({"u": pa.array([1], pa.uint32())}), tmp_path / "u.parquet"
-    )
-    assert registry._footer_schema(spark, str(tmp_path / "u.parquet")) is None
+def test_read_parquet_nanos_and_rewrite(spark, tmp_path):
+    """A TIMESTAMP(NANOS) footer sets nanosAsLong, the only way Spark
+    reads the column (as bigint); rewriting a file with another layout
+    invalidates its cached schema."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "t.parquet")
+    try:
+        pq.write_table(
+            pa.table({"ts": pa.array([1_000_000_123, None], pa.timestamp("ns"))}),
+            path,
+        )
+        df = registry._read_parquet(spark, path)
+        assert df.schema.simpleString() == "struct<ts:bigint>"
+        assert [r.ts for r in df.collect()] == [1_000_000_123, None]
+        pq.write_table(pa.table({"u": pa.array([1, 2], pa.int32())}), path)
+        os.utime(path, ns=(1, 1))  # a new mtime even on a coarse clock
+        assert registry._read_parquet(spark, path).schema.simpleString() == (
+            "struct<u:int>"
+        )
+    finally:
+        spark.conf.set(key, before)

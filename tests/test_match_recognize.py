@@ -1347,7 +1347,7 @@ def test_explain_accepts_match_recognize(spark):
         """,
         detail=True,
     )
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_measure_arithmetic_expressions(spark):
@@ -2959,7 +2959,7 @@ def _canon_rows(rows, drop_first=False):
 
 
 def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
-    """The matcher stage is one mapInPandas kernel per shuffle partition:
+    """The matcher stage is one mapInArrow kernel per shuffle partition:
     it streams the partition's Arrow batches, splits them into keys and
     runs each key alone. Spread over 16 partitions (most of them empty)
     with 3-row Arrow batches (every key spans batches), its output must
@@ -2971,8 +2971,8 @@ def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
     0.0. The per-key reference runs each group alone, keyed by its
     string label ``g`` and in one Arrow batch, so it shares none of the
     kernel's floating-key or batch-spanning logic. ``amount`` is a
-    BIGINT that is NULL only under one key, so batches mixing keys
-    convert it to float64."""
+    BIGINT that is NULL only under one key, so only that key's frame
+    holds it as float64."""
     from blazingsql_spark.operators import match_recognize as mr
 
     codes = {"v": "view", "c": "click", "p": "purchase", "s": "search"}
@@ -3060,27 +3060,146 @@ def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
 
 
 def test_key_starts_groups_keys_as_group_by():
-    """The kernel's key split on the pandas columns a key-sorted Arrow
-    batch converts to: NaN equals NaN and -0.0 equals 0.0 (a NULL
-    floating key is told from NaN by the IS NULL column beside it), NaT
-    equals NaT, and an array key (object column of ndarrays and None)
-    compares as a whole value."""
-    import numpy as np
-    import pandas as pd
+    """The kernel's key split on a key-sorted Arrow batch: NULL equals
+    only NULL, NaN equals NaN, -0.0 equals 0.0, integers compare as
+    64-bit values (2**53 and 2**53 + 1 differ), and array and struct
+    keys compare as whole values with the same rules inside."""
+    import pyarrow as pa
 
     from blazingsql_spark.operators import match_recognize as mr
 
     nan = float("nan")
-    pdf = pd.DataFrame(
+    big = 2**53
+    batch = pa.record_batch(
         {
-            "f": [nan, nan, nan, -0.0, 0.0, 1.0],
-            "f_null": [True, False, False, False, False, False],
-            "t": pd.to_datetime(
-                [None, None, None, "2024-01-01", "2024-01-01", None]
+            "f": [None, nan, nan, -0.0, 0.0, 1.0],
+            "i": [None, None, big, big, big + 1, big + 1],
+            "t": pa.array(
+                [None, None, None, 1, 1, 2], pa.timestamp("us", "UTC")
             ),
-            "a": [None] * 3 + [np.array([1, 2]), np.array([1, 2]), np.array([1])],
+            "a": [None, None, [nan, 1.0], [nan, 1.0], [-0.0], [0.0]],
+            "s": [None, {"x": nan}, {"x": nan}, {"x": 1.0}, None, None],
         }
     )
-    assert mr._key_starts(pdf, ["f", "f_null"]).tolist() == [0, 1, 3, 5]
-    assert mr._key_starts(pdf, ["t"]).tolist() == [0, 3, 5]
-    assert mr._key_starts(pdf, ["a"]).tolist() == [0, 3, 5]
+
+    def starts(*keys):
+        return mr._key_starts(batch, list(keys)).tolist()
+
+    assert starts("f") == [0, 1, 3, 5]
+    assert starts("i") == [0, 2, 4]
+    assert starts("t") == [0, 3, 5]
+    assert starts("a") == [0, 2, 4]
+    assert starts("s") == [0, 1, 3, 4]
+    assert starts("f", "i") == [0, 1, 2, 3, 4, 5]
+    assert starts() == [0]
+
+
+def test_kernel_keeps_bigint_precision_beside_null(spark):
+    """Keys 2**53 and 2**53 + 1 sit next to a NULL key in ONE Arrow
+    batch, with epoch-nanosecond BIGINT order values and a passed-
+    through BIGINT that is NULL under one key and 2**53 + 1 under the
+    others. As under groupBy, only the NULL key's frame may hold a
+    column as float64: the two big keys stay apart, their rows order by
+    the exact ts (the float64 values tie and would reorder them), and
+    every BIGINT comes back exact."""
+    big, base = 2**53, 1_700_000_000_000_000_000
+    rows = []
+    keyed_ids = ((None, [None, 7, 8]), (big, [big + 1] * 3), (big + 1, [1, 2, big + 1]))
+    for key, ids in keyed_ids:
+        # input order c, p, v; only the exact ts order v, c, p matches
+        for off, ev, eid in zip((2, 3, 1), ("c", "p", "v"), ids):
+            rows.append((key, base + off, eid, ev))
+    df = spark.createDataFrame(
+        rows, "user_id bigint, ts bigint, event_id bigint, event_type string"
+    ).coalesce(1)
+    define = {"V": "event_type = 'v'", "C": "event_type = 'c'", "P": "event_type = 'p'"}
+    one = match_recognize(
+        df, ["user_id"], ["ts"],
+        [("LAST(ts)", "last_ts"), ("FIRST(event_id)", "first_id"), ("COUNT(*)", "n")],
+        "V C P", define,
+    ).collect()
+    assert sorted(map(tuple, one), key=repr) == sorted(
+        [
+            (None, base + 3, 8, 3),
+            (big, base + 3, big + 1, 3),
+            (big + 1, base + 3, big + 1, 3),
+        ],
+        key=repr,
+    )
+    every = match_recognize(
+        df, ["user_id"], ["ts"], [("MATCH_NUMBER()", "mno")], "V C P",
+        define, all_rows=True,
+    ).collect()
+    assert sorted(
+        (r.user_id, r.ts, r.event_id) for r in every
+        if r.user_id is not None
+    ) == sorted((k, ts, eid) for k, ts, eid, _ in rows if k is not None)
+
+
+def test_kernel_hands_run_the_grouped_map_frames(spark):
+    """Driven directly over two Arrow batches (key 1 spans them; keys 2
+    and 3 complete in the second), the kernel hands run() each key's
+    tuple and frame exactly as a grouped map converts that key's rows
+    on their own: same dtypes and values for every column type, with
+    integral and boolean columns that hold a NULL under one key only (a
+    batch-wide conversion would turn them float64/object for every
+    key)."""
+    import datetime
+    import decimal
+
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
+
+    from blazingsql_spark.operators import match_recognize as mr
+
+    big = 2**53 + 1
+    keys = [None, None, 1, 1, 1, 1, 2, 2, 3, 3, 4]
+    table = pa.table(
+        {
+            "k": pa.array(keys, pa.int64()),
+            "i8": pa.array([1, 2, 3, 4, 5, 6, None, 8, 9, 10, 11], pa.int8()),
+            "i64": pa.array(
+                [None, 1, big, big, big, big, None, big, big, big, 1], pa.int64()
+            ),
+            "b": [True, False, True, True, False, True, None, False, True, True, False],
+            "f": [None, float("nan"), 1.0, -0.0, None, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0],
+            "s": ["a", None, "b", "c", "d", "e", None, "f", "g", "h", "i"],
+            "t": pa.array(
+                [None, 1, 2, 3, 4, None, 6, 7, 8, 9, 10], pa.timestamp("us", "UTC")
+            ),
+            "d": [datetime.date(2024, 1, i) if i % 3 else None for i in range(1, 12)],
+            "dec": [decimal.Decimal(i) / 4 if i != 4 else None for i in range(11)],
+            "arr": [[1.0, None], None, [], [float("nan")], [2.0], None]
+            + [[3.0], [4.0], [], [5.0], [6.0]],
+            "st": [{"x": i, "y": str(i)} if i != 5 else None for i in range(11)],
+        }
+    )
+    batches = [*table.slice(0, 4).to_batches(), *table.slice(4).to_batches()]
+    seen = []
+
+    def capture(key, pdf):
+        seen.append((key, pdf))
+        return pd.DataFrame({"k": []})
+
+    out_schema = T.StructType([T.StructField("k", T.LongType())])
+    kernel = mr._per_key_kernel(capture, ["k"], out_schema, spark)
+    assert list(kernel(iter(batches))) == []
+
+    ser = GroupPandasUDFSerializer(
+        spark.conf.get("spark.sql.session.timeZone"), False, True, False
+    )
+    bounds = [(0, 2), (2, 6), (6, 8), (8, 10), (10, 11)]
+    assert len(seen) == len(bounds)
+    for (key, pdf), (a, b) in zip(seen, bounds):
+        part = table.slice(a, b - a)
+        want = pd.concat(
+            [ser.arrow_to_pandas(c, i) for i, c in enumerate(part.itercolumns())],
+            axis=1,
+        )
+        pd.testing.assert_frame_equal(pdf, want, check_exact=True)
+        assert repr(key) == repr(tuple(want["k"].iloc[:1]))
+    assert seen[1][1]["i64"].tolist() == [big] * 4
+    assert seen[3][1]["i64"].tolist() == [big] * 2
+    assert seen[3][1]["i8"].dtype == "int8" and seen[3][1]["b"].dtype == bool

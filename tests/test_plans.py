@@ -356,7 +356,7 @@ def test_ddsketch_build_is_one_shuffle_no_udf(spark):
 
 def test_match_recognize_classification_is_codegen(spark):
     """Row classification (the DEFINE CASE) must stay JVM-side; the only
-    Python stage is the per-partition mapInPandas matcher kernel, and the
+    Python stage is the per-partition mapInArrow matcher kernel, and the
     only exchange is the partition-key shuffle feeding it."""
     from blazingsql_spark.operators.match_recognize import match_recognize
     from blazingsql_spark.queries.registry import load_table
@@ -375,7 +375,7 @@ def test_match_recognize_classification_is_codegen(spark):
         },
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     assert exchange_count(out) == 1, plan
 
@@ -394,7 +394,7 @@ def test_match_recognize_symbol_relative_plan_shape(spark):
     """The in-automaton path (symbol-relative DEFINE) must keep the same
     scale shape as the vectorized path: nav-free symbols classify as
     JVM-side boolean projections (no BatchEvalPython), the only Python
-    stage is the per-partition mapInPandas kernel, and the only exchange
+    stage is the per-partition mapInArrow kernel, and the only exchange
     is the partition-key shuffle feeding it."""
     from blazingsql_spark.operators.match_recognize import match_recognize
     from blazingsql_spark.queries.registry import load_table
@@ -411,7 +411,7 @@ def test_match_recognize_symbol_relative_plan_shape(spark):
         },
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
     assert "BatchEvalPython" not in plan, plan  # flags are codegen CASEs
     assert exchange_count(out) == 1, plan
 
@@ -522,7 +522,7 @@ def test_match_recognize_width_follows_input_size(spark):
 def test_mr_nondeterministic_single_shuffle(spark):
     """r12 (VERDICT-r11 #8): the ND-assignment MATCH_RECOGNIZE row keeps
     the canonical MR plan shape — ONE hash exchange on the partition key
-    feeding ONE MapInPandas matcher kernel (plus the final presentation
+    feeding ONE MapInArrow matcher kernel (plus the final presentation
     sort); a future change must not silently add a second shuffle or a
     second Python stage."""
     from blazingsql_spark.plans import physical_plan
@@ -540,7 +540,7 @@ def test_mr_nondeterministic_single_shuffle(spark):
         n = exchange_count(df)
         assert n <= 2, (name, n)  # key hash + presentation sort
         plan = physical_plan(df, "simple")
-        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert plan.count("MapInArrow") == 1, (name, plan)
 
 
 def test_filtered_ann_prune_before_scan(spark):
