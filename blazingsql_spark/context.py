@@ -27,24 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from blazingsql_spark.session import get_spark
 
-# File-format dispatch mirrors the reference's DataType enum
-# (engine/src/io/DataType.h:9-18): PARQUET, ORC, CSV, JSON (+ in-memory and
-# JDBC sources handled by type, not extension).
-_EXT_FORMAT = {
-    ".parquet": "parquet",
-    ".parq": "parquet",
-    ".orc": "orc",
-    ".csv": "csv",
-    ".psv": "csv",
-    ".tbl": "csv",
-    ".txt": "csv",
-    ".json": "json",
-    ".ndjson": "json",
-    ".arrow": "arrow",
-    ".feather": "arrow",
-}
-
-
 @dataclass
 class TableMeta:
     """Catalog entry — the analogue of the reference's Python ``BlazingTable``
@@ -130,9 +112,10 @@ class Context:
         elif isinstance(input, (str, os.PathLike)) or (
             isinstance(input, (list, tuple)) and input and isinstance(input[0], str)
         ):
+            from blazingsql_spark.sources.io import infer_format, read_any
+
             paths = [str(input)] if isinstance(input, (str, os.PathLike)) else [str(p) for p in input]
-            fmt = (file_format or _infer_format(paths[0])).lower()
-            from blazingsql_spark.sources.io import read_any
+            fmt = (file_format or infer_format(paths[0])).lower()
 
             post_limit = None
             if fmt == "csv":
@@ -513,14 +496,6 @@ def _map_reference_csv_kwargs(kwargs: dict) -> tuple[dict, object, int | None]:
         )
     opts.update(out)  # vetted native Spark options pass through
     return opts, schema, post_limit
-
-
-def _infer_format(path: str) -> str:
-    base = path.rstrip("/*")
-    for ext, fmt in _EXT_FORMAT.items():
-        if base.endswith(ext):
-            return fmt
-    return "parquet"
 
 
 def _widen_unsigned_arrow(table):

@@ -1433,6 +1433,18 @@ def match_recognize(
         coded = coded.sortWithinPartitions(*partition_by)
     else:
         coded = classify(df.repartition(1))
+    if not all_rows:
+        # ONE ROW PER MATCH emits keys and measures only, so the Python
+        # stage gets just what run() reads: the keys, ORDER BY keys,
+        # flags, navigation-DEFINE columns and every column a measure
+        # names (a superset: any identifier in its text). Column pruning
+        # then reaches the scan.
+        named = {w for e, _ in measures for w in re.findall(r"\w+", e)}
+        keep = {
+            c.lower()
+            for c in (*partition_by, *order_cols, *aux_cols, *used_cols, *named)
+        }
+        coded = coded.select(*[c for c in coded.columns if c.lower() in keep])
     kernel = _per_key_kernel(run, list(partition_by), out_schema, spark)
     return coded.mapInArrow(kernel, out_schema)
 

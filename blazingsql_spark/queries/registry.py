@@ -106,47 +106,11 @@ def _prepare_session(spark: SparkSession) -> None:
         pass
 
 
-# METADATA caches, keyed by (path, size, mtime) so an in-process fixture
-# regeneration with a different layout invalidates the entry (ADVICE
-# r12); query results are never memoized, every execution recomputes
-# from the parquet inputs.
-# parquet footers: key -> (file size, footer), the footer None when the
-# file has none readable
-_FOOTERS: dict[tuple, tuple] = {}
-# read schemas: key + the confs that shape inference -> the schema Spark
-# inferred, handed to later reads so they run no inference job
-_SCHEMAS: dict[tuple, object] = {}
-
-
-def _file_key(path: str) -> tuple:
-    import os as _os
-
-    try:
-        st = _os.stat(path)
-        return (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        return (path, None, None)
-
-
-def _footer(path: str):
-    """(file size, pyarrow FileMetaData or None) of a parquet file."""
-    import pyarrow.lib
-    import pyarrow.parquet as pq
-
-    key = _file_key(path)
-    if key not in _FOOTERS:
-        try:
-            meta = pq.ParquetFile(path).metadata
-        except (OSError, pyarrow.lib.ArrowInvalid):
-            # a directory, a missing file or a non-parquet footer
-            meta = None
-        _FOOTERS[key] = (key[1], meta)
-    return _FOOTERS[key]
-
-
 def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
     """(effective scan-split count, row count) from the parquet footer."""
-    size, meta = _footer(path)
+    from blazingsql_spark.sources.io import parquet_footer
+
+    size, meta = parquet_footer(path)
     if meta is None:
         # the layout is unknown, assume parallel enough
         return (1 << 30, 1 << 62)
@@ -160,34 +124,6 @@ def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
     # parquet split granularity is the row group: a byte-range
     # split can't run more tasks than there are row groups
     return (min(meta.num_row_groups, by_size), meta.num_rows)
-
-
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring the schema once per file:
-    later reads of an unchanged file pass the cached schema and run no
-    inference job. A footer with a TIMESTAMP(NANOS) column sets
-    spark.sql.legacy.parquet.nanosAsLong first, the only way Spark
-    reads one (as bigint); MICROS files leave the session as is."""
-    _, meta = _footer(path)
-    if meta is None:  # a directory or an unreadable footer
-        return spark.read.parquet(path)
-    if any(
-        '"timeUnit": "nanoseconds"' in meta.schema.column(i).logical_type.to_json()
-        for i in range(meta.num_columns)
-    ):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _file_key(path) + tuple(
-        spark.conf.get(f"spark.sql.{c}", None)
-        for c in (
-            "parquet.inferTimestampNTZ.enabled",
-            "parquet.binaryAsString",
-            "parquet.int96AsTimestamp",
-            "legacy.parquet.nanosAsLong",
-        )
-    )
-    if key not in _SCHEMAS:
-        _SCHEMAS[key] = spark.read.parquet(path).schema
-    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def fan_out(
@@ -237,8 +173,10 @@ def load_table(
 
 
 def _load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    from blazingsql_spark.sources.io import read_parquet_file
+
     _prepare_session(spark)
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = read_parquet_file(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # events.ts resolution varies across fixture regenerations (NANOS
         # in rounds 1-2, MICROS since round 3): a NANOS ts arrives as

@@ -3,11 +3,20 @@
 Mirrors the reference's parser dispatch (engine/src/io/data_parser/
 {CSVParser,ParquetParser,OrcParser,JSONParser}.cpp) — in Spark each is one
 DataFrameReader call; partitioned-directory discovery, row-group pruning and
-predicate pushdown come built-in.
+predicate pushdown come built-in. Extension inference mirrors the
+reference's DataType enum (engine/src/io/DataType.h:9-18).
+
+One local parquet file opens through :func:`read_parquet_file`, the policy both
+``Context.create_table`` (via :func:`read_any`) and the query registry's
+``load_table`` use: the footer and the inferred schema are cached per file
+identity, so re-registering or re-loading an unchanged file runs no
+schema-inference job, and a TIMESTAMP(NANOS) column reads as bigint
+instead of failing.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +44,69 @@ def infer_format(path: str) -> str:
         if base.endswith(ext):
             return fmt
     return "parquet"
+
+
+# METADATA caches, keyed by (path, size, mtime) so an in-process file
+# rewrite with a different layout invalidates the entry; data is never
+# memoized, every read goes back to the file.
+# parquet footers: key -> (file size, footer), the footer None when the
+# file has none readable
+_FOOTERS: dict[tuple, tuple] = {}
+# read schemas: key + the confs that shape inference -> the schema Spark
+# inferred, handed to later reads so they run no inference job
+_SCHEMAS: dict[tuple, object] = {}
+
+
+def _file_key(path: str) -> tuple:
+    try:
+        st = os.stat(path)
+        return (path, st.st_size, st.st_mtime_ns)
+    except OSError:
+        return (path, None, None)
+
+
+def parquet_footer(path: str):
+    """(file size, pyarrow FileMetaData or None) of a parquet file."""
+    import pyarrow.lib
+    import pyarrow.parquet as pq
+
+    key = _file_key(path)
+    if key not in _FOOTERS:
+        try:
+            meta = pq.ParquetFile(path).metadata
+        except (OSError, pyarrow.lib.ArrowInvalid):
+            # a directory, a missing file or a non-parquet footer
+            meta = None
+        _FOOTERS[key] = (key[1], meta)
+    return _FOOTERS[key]
+
+
+def read_parquet_file(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file:
+    later reads of an unchanged file pass the cached schema and run no
+    inference job. A footer with a TIMESTAMP(NANOS) column sets
+    spark.sql.legacy.parquet.nanosAsLong first, the only way Spark
+    reads one (as bigint); MICROS files leave the session as is."""
+    _, meta = parquet_footer(path)
+    if meta is None:  # a directory or an unreadable footer
+        return spark.read.parquet(path)
+    if any(
+        '"timeUnit": "nanoseconds"' in meta.schema.column(i).logical_type.to_json()
+        for i in range(meta.num_columns)
+    ):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = _file_key(path) + tuple(
+        spark.conf.get(f"spark.sql.{c}", None)
+        for c in (
+            "parquet.inferTimestampNTZ.enabled",
+            "parquet.binaryAsString",
+            "parquet.int96AsTimestamp",
+            "legacy.parquet.nanosAsLong",
+        )
+    )
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(_SCHEMAS[key]).parquet(path)
 
 
 def _special_reader(spark: SparkSession, fmt: str):
@@ -73,9 +145,20 @@ def read_any(
     **options: Any,
 ) -> DataFrame:
     """Read file(s) of any supported format with reference-like defaults
-    (CSV: header+inference unless a schema is given)."""
+    (CSV: header+inference unless a schema is given). One local parquet
+    file with no schema or options opens through
+    :func:`read_parquet_file`; a remote URI never reaches pyarrow's own
+    filesystem resolution."""
     path_list = [paths] if isinstance(paths, str) else list(paths)
     fmt = (file_format or infer_format(path_list[0])).lower()
+    if (
+        fmt == "parquet"
+        and len(path_list) == 1
+        and schema is None
+        and not options
+        and os.path.isfile(path_list[0])
+    ):
+        return read_parquet_file(spark, path_list[0])
     special = _special_reader(spark, fmt)
     if special is not None:
         loader, why_no_options = special

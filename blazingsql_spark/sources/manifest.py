@@ -23,6 +23,20 @@ parquet (Delta, Iceberg) use:
   collected opportunistically by the next compaction. Every crash window
   therefore leaves either the old consistent view or the new consistent
   view — never duplicates, never a missing index.
+
+Maintainers whose state is one whole table rewritten per epoch (connected
+components labels, CDC current state, PCA moments) use the sibling
+VERSIONED-SNAPSHOT layout, also here:
+
+- **Snapshot writes** land in ``<dir>/snap=<N>/`` for epoch N; a replayed
+  epoch overwrites its own directory.
+- **Reads** take the newest snapshot WITH a ``_SUCCESS`` marker (or the
+  newest before an epoch — a replay anchor that must not see its own
+  first attempt), so a crash mid-write leaves the previous snapshot live:
+  write-then-switch. Stray names (``snap=tmp``, ``snap=5.bak``) are
+  skipped.
+- **Pruning** keeps the newest ``keep >= 2`` snapshots: a replay rewriting
+  its own directory needs the one before it as the fallback.
 """
 
 from __future__ import annotations
@@ -38,6 +52,7 @@ from pyspark.sql import functions as F
 # (the dedup signature index is its own table root) as well as beside
 # sub-tables (the lexical index's postings/ + doclen/).
 _MANIFEST_RE = re.compile(r"^_MANIFEST-(\d+)\.json$")
+_SNAP = "snap="
 
 
 def _fs(spark: SparkSession, path: str):
@@ -362,3 +377,73 @@ def read_live_as_of(
     return read_live(
         spark, table_dir, read_manifest(spark, index_dir, version), snapshot=True
     )
+
+
+def snapshot_dir(root: str, epoch: int) -> str:
+    """The directory epoch ``epoch``'s snapshot of ``root`` lives in."""
+    return f"{root}/{_SNAP}{int(epoch)}"
+
+
+def check_snapshot_retention(keep: int) -> int:
+    """``keep`` itself, or ValueError when fewer than 2 snapshots would be
+    retained: a replayed epoch overwrites ITS OWN snapshot in place, and
+    the reader falls back to the one before it while the rewrite has no
+    _SUCCESS; with only 1 retained there is no fallback and a mid-rewrite
+    crash loses all state."""
+    if keep < 2:
+        raise ValueError(f"keep_snapshots must be >= 2, got {keep}")
+    return keep
+
+
+def snapshot_epochs(spark: SparkSession, root: str) -> list[int]:
+    """Epochs with a published (``_SUCCESS``-marked) snapshot under
+    ``root``, ascending.
+
+    NO blanket exception swallow here: fs.exists covers the one
+    legitimate empty case (root not created yet); masking a transient
+    filesystem error as "no snapshots" would make the next epoch rebuild
+    its state from ONE batch and silently wipe all accumulated history.
+    Real FS errors must fail the epoch."""
+    fs, jvm = _fs(spark, root)
+    jp = jvm.org.apache.hadoop.fs.Path
+    if not fs.exists(jp(root)):
+        return []
+    out = []
+    for st in fs.listStatus(jp(root)):
+        name = st.getPath().getName()
+        if not name.startswith(_SNAP):
+            continue
+        try:
+            epoch = int(name[len(_SNAP):])
+        except ValueError:  # stray snap=tmp / snap=5.bak artifacts
+            continue
+        if fs.exists(jp(f"{root}/{name}/_SUCCESS")):
+            out.append(epoch)
+    return sorted(out)
+
+
+def read_snapshot(
+    spark: SparkSession, root: str, before: int | None = None
+) -> DataFrame | None:
+    """The newest published snapshot under ``root`` — or, with
+    ``before``, the newest one of an epoch < ``before`` — or None when
+    there is none."""
+    epochs = [
+        e for e in snapshot_epochs(spark, root) if before is None or e < before
+    ]
+    if not epochs:
+        return None
+    return spark.read.parquet(snapshot_dir(root, epochs[-1]))
+
+
+def publish_snapshot(
+    spark: SparkSession, root: str, df: DataFrame, epoch: int, keep: int
+) -> None:
+    """Write ``df`` as epoch ``epoch``'s snapshot (Spark's _SUCCESS marker
+    switches readers over once the write commits), then delete all but
+    the newest ``keep`` published snapshots."""
+    keep = check_snapshot_retention(keep)
+    df.write.mode("overwrite").parquet(snapshot_dir(root, epoch))
+    fs, jvm = _fs(spark, root)
+    for old in snapshot_epochs(spark, root)[:-keep]:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(snapshot_dir(root, old)), True)

@@ -1,9 +1,11 @@
 """Structured-Streaming extensions (beyond reference — the reference is a
 pure batch OLAP engine, SURVEY.md §2.9). Streaming twins of the batch
-event-table operators: tumbling/sliding windows, sessionization, stateful
-dedup."""
+event-table operators (events: tumbling/sliding windows, sessionization,
+stateful dedup) and foreachBatch maintainers of persisted state (ingest:
+corpus dedup, indexes, sketches, snapshots), every maintainer wired into
+a stream by the one ``run_ingest``."""
 
-from blazingsql_spark.streaming.ingest import DedupIngest, run_dedup_ingest
+from blazingsql_spark.streaming.ingest import DedupIngest, run_ingest
 from blazingsql_spark.streaming.events import (
     user_running_totals,
     sessionize_stream,
@@ -19,5 +21,5 @@ __all__ = [
     "streaming_dedup",
     "user_running_totals",
     "DedupIngest",
-    "run_dedup_ingest",
+    "run_ingest",
 ]

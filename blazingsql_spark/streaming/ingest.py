@@ -1,15 +1,20 @@
-"""Streaming corpus ingest with online near-dup filtering.
+"""Streaming maintainers: foreachBatch handlers that keep persisted
+state (corpus + dedup index, ANN and lexical indexes, sketches, cluster
+labels, CDC state, a PCA model) current as micro-batches arrive.
 
-The end-to-end training-data-ingest shape: documents arrive as a stream;
-each micro-batch is (1) checked against the persisted MinHash band index,
-(2) clean documents are appended to the corpus sink, (3) their signatures
-are appended to the index — so later batches dedup against everything seen
-so far. All steps are key-partitioned joins/appends; nothing rescans the
+The end-to-end training-data-ingest shape is DedupIngest: each micro-batch
+is (1) checked against the persisted MinHash band index, (2) clean
+documents are appended to the corpus sink, (3) their signatures are
+appended to the index — so later batches dedup against everything seen so
+far. All steps are key-partitioned joins/appends; nothing rescans the
 corpus.
 
-Uses foreachBatch: the batch hook is exactly-once per epoch and can run
-arbitrary batch DataFrame logic (the incremental dedup check) against
-non-streaming state (the parquet index).
+Every handler is a callable ``handler(batch, epoch_id)`` wired into a
+stream by :func:`run_ingest`. foreachBatch is AT-LEAST-ONCE, so each
+handler's writes are replay-idempotent through one of the two storage
+protocols in ``sources.manifest``: per-epoch partitions under a versioned
+manifest (append + compact), or versioned whole-table snapshots
+(components, CDC, PCA).
 """
 
 from __future__ import annotations
@@ -18,6 +23,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from blazingsql_spark.functions.dedup import _banded_signatures, incremental_near_dup_check
+from blazingsql_spark.sources import manifest as mf
+
+
+def run_ingest(handler, stream: DataFrame, checkpoint_path: str):
+    """Wire ``stream`` through the foreachBatch ``handler`` (any
+    maintainer here). Returns the started StreamingQuery; the
+    availableNow trigger processes what the source holds and stops, so
+    ``awaitTermination()`` returns for a bounded source (a continuous
+    feed drops the trigger)."""
+    return (
+        stream.writeStream.foreachBatch(handler)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _parquet_readable(spark: SparkSession, path: str) -> bool:
@@ -29,7 +49,7 @@ def _parquet_readable(spark: SparkSession, path: str) -> bool:
     masking those as "no index yet" would silently disable the dedup
     screen for every later batch and permanently append known duplicates
     to the corpus. Same discipline as operators/forget.py and
-    ComponentsIngest._snapshots. A missing path is answered by the Hadoop
+    sources.manifest.snapshot_epochs. A missing path is answered by the Hadoop
     FileSystem before any read: ``spark.read`` on it would log a WARN with
     a full FileNotFoundException trace on every first epoch.
     """
@@ -46,6 +66,22 @@ def _parquet_readable(spark: SparkSession, path: str) -> bool:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return False
         raise
+
+
+class _OnDisk:
+    """Whether the parquet dataset at ``path`` exists, probed on the
+    filesystem (not instance state) until the first positive answer,
+    then remembered: after a restart from checkpoint (or pointed at a
+    pre-existing dataset) the first batch still sees what is on disk.
+    A maintainer sets ``seen`` once it has written there itself."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark, self.path, self.seen = spark, path, False
+
+    def __call__(self) -> bool:
+        if not self.seen:
+            self.seen = _parquet_readable(self.spark, self.path)
+        return self.seen
 
 
 class DedupIngest:
@@ -76,17 +112,7 @@ class DedupIngest:
         self.shingle_n = shingle_n
         self.max_index_files = max_index_files
         self.index_partitions = index_partitions
-        self._index_seen = False  # cache of a positive filesystem probe
-
-    def _index_exists(self) -> bool:
-        """Probe the filesystem, not instance state: after a restart from
-        checkpoint (or pointed at a pre-existing index) the first batch must
-        still dedup against the on-disk index."""
-        if not self._index_seen:
-            if not _parquet_readable(self.spark, self.index_path):
-                return False
-            self._index_seen = True
-        return True
+        self._index = _OnDisk(spark, index_path)
 
     def _prepare(self, batch: DataFrame) -> DataFrame:
         """Pre-dedup hook (subclasses: quality gates, normalization)."""
@@ -104,12 +130,10 @@ class DedupIngest:
 
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        from blazingsql_spark.sources import manifest as mf
-
         epoch = int(epoch_id)
         batch = self._prepare(batch).persist()
         pairs = None
-        if self._index_exists():
+        if self._index():
             # exclude the CURRENT epoch's own partition from the dedup
             # reference: on an at-least-once replay the batch's signatures
             # are already in the index, and comparing against them would
@@ -156,7 +180,7 @@ class DedupIngest:
             self.index_path,
             epoch,
         )
-        self._index_seen = True
+        self._index.seen = True
         # pairs hook BEFORE compaction: pairs is a lazy plan over index
         # files the compaction garbage-collects — a block-loss recompute
         # inside the hook after GC would hit deleted paths
@@ -177,8 +201,6 @@ class DedupIngest:
         the new consistent view, never a lost index; the previous
         delete-then-rename swap could lose everything between the two
         calls). The corpus table is never compacted — only read."""
-        from blazingsql_spark.sources import manifest as mf
-
         mf.compact_epoch_tables(
             self.spark,
             self.index_path,
@@ -186,25 +208,6 @@ class DedupIngest:
             epoch,
             self.max_index_files,
         )
-
-
-def run_dedup_ingest(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    index_path: str,
-    corpus_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire a document stream through the dedup ingest. Returns the started
-    StreamingQuery (caller stops it / processes available)."""
-    handler = DedupIngest(spark, index_path, corpus_path, **kwargs)
-    return (
-        doc_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 class CorpusPrepIngest(DedupIngest):
@@ -295,15 +298,8 @@ class AnnIndexIngest:
         self.hnsw_ef = hnsw_ef
         self.hnsw_n_probe = hnsw_n_probe
         self.hnsw_recall_sample = hnsw_recall_sample
-        self._index_seen = False
+        self._index = _OnDisk(spark, f"{self.index_path}/encoded")
         self._hnsw_cache = None  # (graph, cids) once loaded/built
-
-    def _index_exists(self) -> bool:
-        if not self._index_seen:
-            if not _parquet_readable(self.spark, f"{self.index_path}/encoded"):
-                return False
-            self._index_seen = True
-        return True
 
     def _batch_error(self, batch: DataFrame, cents: DataFrame, books: DataFrame):
         """PQ reconstruction error of the batch's RESIDUALS (the quantity
@@ -326,7 +322,7 @@ class AnnIndexIngest:
         from blazingsql_spark.functions import similarity as S
 
         batch = batch.persist()
-        if not self._index_exists():
+        if not self._index():
             cents, books, encoded = S.ivfpq_build(
                 batch, n_centroids=self.n_centroids, m=self.m, ksub=self.ksub,
                 iterations=self.iterations, dim=self.dim,
@@ -357,7 +353,7 @@ class AnnIndexIngest:
         ).parquet(f"{self.index_path}/drift")
         if self.hnsw_m is not None:
             self._maintain_hnsw_tier(batch, cents, int(epoch_id))
-        self._index_seen = True
+        self._index.seen = True
         batch.unpersist()
 
     def _maintain_hnsw_tier(self, batch: DataFrame, cents: DataFrame, epoch: int) -> None:
@@ -406,24 +402,6 @@ class AnnIndexIngest:
         ).write.mode("append").parquet(f"{self.index_path}/hnsw_telemetry")
 
 
-def run_ann_index_ingest(
-    spark: SparkSession,
-    vector_stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire an embedding stream through the ANN-index ingest. Returns the
-    started StreamingQuery (caller stops it / processes available)."""
-    handler = AnnIndexIngest(spark, index_path, **kwargs)
-    return (
-        vector_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 class LexicalIndexIngest:
     """foreachBatch handler maintaining a PERSISTED BM25 lexical index:
     each micro-batch's documents are tokenized once and written as
@@ -469,7 +447,6 @@ class LexicalIndexIngest:
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         from blazingsql_spark.functions.text import _tokens
-        from blazingsql_spark.sources import manifest as mf
 
         toks = _tokens(batch, self.id_col, self.text_col).persist()
         epoch = int(epoch_id)
@@ -487,8 +464,6 @@ class LexicalIndexIngest:
         self._compact_if_needed(epoch)
 
     def _compact_if_needed(self, epoch: int) -> None:
-        from blazingsql_spark.sources import manifest as mf
-
         mf.compact_epoch_tables(
             self.spark,
             self.index_path,
@@ -505,24 +480,6 @@ class LexicalIndexIngest:
         )
 
 
-def run_lexical_index_ingest(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire a document stream into the lexical index. Returns the started
-    StreamingQuery."""
-    handler = LexicalIndexIngest(spark, index_path, **kwargs)
-    return (
-        doc_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 class ComponentsIngest:
     """foreachBatch handler maintaining transitive near-dup CLUSTERS as
     edge batches arrive — the cross-epoch completion of DedupIngest
@@ -530,11 +487,9 @@ class ComponentsIngest:
 
     Each epoch applies ``operators.graph.incremental_components`` (cost
     bounded by the batch, never the history) and publishes the full
-    (node, component_id) labels table as a versioned snapshot directory
-    ``snap=<epoch>``; readers take the newest snapshot WITH a _SUCCESS
-    marker, so a crash mid-write leaves the previous snapshot live
-    (write-then-switch, the same discipline as sources.manifest but for
-    whole-table snapshots rather than append+compact).
+    (node, component_id) labels table as a versioned snapshot
+    (sources.manifest.publish_snapshot: write-then-switch, so a crash
+    mid-write leaves the previous snapshot live).
 
     At-least-once replay is idempotent BY ALGEBRA, not bookkeeping:
     connected components is a closure operator — applying the same edge
@@ -548,71 +503,26 @@ class ComponentsIngest:
     """
 
     def __init__(self, spark: SparkSession, labels_path: str, keep_snapshots: int = 2):
-        if keep_snapshots < 2:
-            # the crash-safety argument NEEDS the previous snapshot: a
-            # replayed epoch overwrites ITS OWN snap dir in place, and the
-            # reader falls back to the one before it while the rewrite has
-            # no _SUCCESS; with only 1 retained there is no fallback and a
-            # mid-rewrite crash loses all state
-            raise ValueError(f"keep_snapshots must be >= 2, got {keep_snapshots}")
         self.spark = spark
         self.labels_path = labels_path.rstrip("/")
-        self.keep_snapshots = keep_snapshots
-
-    def _snapshots(self) -> list[int]:
-        # NO blanket exception swallow here: fs.exists covers the one
-        # legitimate empty case (labels dir not created yet); masking a
-        # transient filesystem error as "no snapshots" would make the next
-        # epoch rebuild labels from ONE batch and silently wipe all
-        # accumulated cluster history. Real FS errors must fail the epoch.
-        jvm = self.spark.sparkContext._jvm
-        jp = jvm.org.apache.hadoop.fs.Path
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        root = jp(self.labels_path)
-        fs = root.getFileSystem(conf)
-        if not fs.exists(root):
-            return []
-        out = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not name.startswith("snap="):
-                continue
-            try:
-                snap = int(name.split("=", 1)[1])
-            except ValueError:  # stray snap=tmp / snap=5.bak artifacts
-                continue
-            if fs.exists(jp(f"{self.labels_path}/{name}/_SUCCESS")):
-                out.append(snap)
-        return sorted(out)
+        self.keep_snapshots = mf.check_snapshot_retention(keep_snapshots)
 
     def read_labels(self):
-        snaps = self._snapshots()
-        if not snaps:
-            return None
-        return self.spark.read.parquet(f"{self.labels_path}/snap={snaps[-1]}")
-
-    def _publish(self, df, epoch: int) -> None:
-        """Write-then-switch snapshot publish + prune (shared by every
-        versioned-snapshot maintainer)."""
-        df.write.mode("overwrite").parquet(f"{self.labels_path}/snap={int(epoch)}")
-        jvm = self.spark.sparkContext._jvm
-        jp = jvm.org.apache.hadoop.fs.Path
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        fs = jp(self.labels_path).getFileSystem(conf)
-        for old in self._snapshots()[: -self.keep_snapshots]:
-            fs.delete(jp(f"{self.labels_path}/snap={old}"), True)
+        return mf.read_snapshot(self.spark, self.labels_path)
 
     def __call__(self, batch_df, epoch: int) -> None:
         from blazingsql_spark.operators.graph import incremental_components
 
         labels = self.read_labels()
         # eager checkpoint is LOAD-BEARING (r13 measured, then reverted a
-        # lazy spelling): a REPLAYED epoch overwrites its own snap=<N>
+        # lazy spelling): a REPLAYED epoch overwrites its own snapshot
         # directory, and a lazy plan would still be reading those files
         # inside the overwrite job (FAILED_READ_FILE, caught by the replay
         # tests). Materialize fully BEFORE the write starts.
         new = incremental_components(labels, batch_df).localCheckpoint(eager=True)
-        self._publish(new, epoch)
+        mf.publish_snapshot(
+            self.spark, self.labels_path, new, epoch, self.keep_snapshots
+        )
 
 
 class DedupClusterIngest(DedupIngest):
@@ -727,20 +637,11 @@ class BloomCorpusIngest:
         self.n_bits = n_bits
         self.n_hashes = n_hashes
         self.max_index_files = max_index_files
-        self._screen_seen = False
-
-    def _screen_exists(self) -> bool:
-        if not self._screen_seen:
-            if not _parquet_readable(self.spark, self.words_path):
-                return False
-            self._screen_seen = True
-        return True
+        self._screen = _OnDisk(spark, self.words_path)
 
     def _reference(self, exclude_epoch: int):
         """(merged bloom words, history fingerprints), both excluding the
         possibly-replaying epoch's own partitions."""
-        from blazingsql_spark.sources import manifest as mf
-
         man = mf.read_manifest(self.spark, self.screen_path)
         words = (
             mf.read_live(self.spark, self.words_path, man, exclude_epoch)
@@ -754,7 +655,6 @@ class BloomCorpusIngest:
         from pyspark.sql.window import Window
 
         from blazingsql_spark.functions import dedup
-        from blazingsql_spark.sources import manifest as mf
 
         epoch = int(epoch_id)
         w = Window.partitionBy(self.text_col).orderBy(F.col(self.id_col))
@@ -764,7 +664,7 @@ class BloomCorpusIngest:
             .drop("__rn")
             .persist()
         )
-        if self._screen_exists():
+        if self._screen():
             words, fps = self._reference(epoch)
             probed = dedup.bloom_probe(
                 batch, words, self.text_col, self.id_col, self.n_bits, self.n_hashes
@@ -791,15 +691,13 @@ class BloomCorpusIngest:
             self.words_path,
             epoch,
         )
-        self._screen_seen = True
+        self._screen.seen = True
         self._compact_if_needed(epoch)
         if clean is not batch:
             clean.unpersist()
         batch.unpersist()
 
     def _compact_if_needed(self, epoch: int) -> None:
-        from blazingsql_spark.sources import manifest as mf
-
         mf.compact_epoch_tables(
             self.spark,
             self.screen_path,
@@ -817,26 +715,7 @@ class BloomCorpusIngest:
         return self.spark.read.parquet(self.corpus_path).drop("epoch_id")
 
 
-def run_bloom_corpus_ingest(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    screen_path: str,
-    corpus_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire a document stream through the bloom-screened exact-dedup
-    ingest. Returns the started StreamingQuery."""
-    handler = BloomCorpusIngest(spark, screen_path, corpus_path, **kwargs)
-    return (
-        doc_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-class PcaIngest(ComponentsIngest):
+class PcaIngest:
     """foreachBatch handler maintaining a PCA model over an embedding
     stream — the dimensionality-reduction mirror of AnnIndexIngest.
 
@@ -849,11 +728,11 @@ class PcaIngest(ComponentsIngest):
 
     Unlike components (a closure) or CDC (upserts/deletes), moment
     ADDITION is not idempotent — a replayed epoch must not absorb its
-    batch twice — so the sketch lives under the versioned snap=<epoch>
-    discipline (inherited from ComponentsIngest) and epoch N ALWAYS
-    merges against the newest snapshot with epoch < N: a replay
-    recomputes exactly the first attempt, and a crash mid-write leaves a
-    _SUCCESS-less snap the reader skips. Drift rows (top-component
+    batch twice — so the sketch lives under ``moments/`` as versioned
+    snapshots (sources.manifest) and epoch N ALWAYS merges against the
+    newest snapshot with epoch < N: a replay recomputes exactly the
+    first attempt, and a crash mid-write leaves a _SUCCESS-less snapshot
+    the reader skips. Drift rows (top-component
     rotation angle + explained-variance ratio, derived from the PRIOR
     sketch so replays agree) land in per-epoch partitions, overwritten
     idempotently. Empty micro-batches (recovery/no-data triggers) are
@@ -868,20 +747,20 @@ class PcaIngest(ComponentsIngest):
         vec_col: str = "embedding",
         keep_snapshots: int = 2,
     ):
-        super().__init__(spark, f"{model_path.rstrip('/')}/moments", keep_snapshots)
+        self.spark = spark
         self.model_path = model_path.rstrip("/")
+        self.moments_path = f"{self.model_path}/moments"
+        self.keep_snapshots = mf.check_snapshot_retention(keep_snapshots)
         self.k = int(k)
         self.vec_col = vec_col
 
     def _prior_sketch(self, epoch: int):
         """Newest published sketch STRICTLY BEFORE this epoch — the replay
         anchor (a replayed epoch must not read its own first attempt)."""
-        snaps = [s for s in self._snapshots() if s < epoch]
-        if not snaps:
+        snap = mf.read_snapshot(self.spark, self.moments_path, before=epoch)
+        if snap is None:
             return None
-        row = self.spark.read.parquet(
-            f"{self.labels_path}/snap={snaps[-1]}"
-        ).first()
+        row = snap.first()
         return int(row["n"]), list(row["s"]), list(row["ss"])
 
     def load_model(self) -> dict:
@@ -931,7 +810,9 @@ class PcaIngest(ComponentsIngest):
             ],
             "n long, s array<double>, ss array<double>",
         )
-        self._publish(sk, epoch)  # versioned snap=<epoch>, keep>=2, pruned
+        mf.publish_snapshot(
+            self.spark, self.moments_path, sk, epoch, self.keep_snapshots
+        )
         rows = [("mean", -1, model["mean"], 0.0)]
         rows += [
             ("component", i, model["components"][i], float(model["eigvals"][i]))
@@ -960,35 +841,15 @@ class PcaIngest(ComponentsIngest):
         ).write.mode("overwrite").parquet(f"{self.model_path}/drift/epoch_id={epoch}")
 
 
-def run_pca_ingest(
-    spark: SparkSession,
-    vec_stream: DataFrame,
-    model_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire PcaIngest into a streaming query (availableNow for bounded
-    test sources; production drops the trigger for a continuous feed)."""
-    handler = PcaIngest(spark, model_path, **kwargs)
-    q = (
-        vec_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return handler
-
-
-class CdcApplyIngest(ComponentsIngest):
+class CdcApplyIngest:
     """foreachBatch handler materializing "current state after the log"
     from a CDC change stream (Debezium-shaped: op in I/U/D + a
     monotonically comparable version) — the streaming completion of
     operators.merge.cdc_apply.
 
     Each epoch applies the batch's changes to the newest published
-    snapshot and publishes the result as a versioned ``snap=<epoch>``
-    directory under the same write-then-switch / keep>=2 discipline as
+    snapshot and publishes the result as the epoch's versioned snapshot
+    (sources.manifest: write-then-switch, keep >= 2), like
     ComponentsIngest. At-least-once replay is idempotent BY ALGEBRA:
     upserts and deletes are idempotent, so re-applying an
     already-absorbed batch rewrites an identical snapshot (asserted in
@@ -1005,20 +866,20 @@ class CdcApplyIngest(ComponentsIngest):
         version_col: str = "version",
         keep_snapshots: int = 2,
     ):
-        super().__init__(spark, snapshot_path, keep_snapshots)
+        self.spark = spark
+        self.snapshot_path = snapshot_path.rstrip("/")
+        self.keep_snapshots = mf.check_snapshot_retention(keep_snapshots)
         self.key_cols = list(key_cols)
         self.op_col = op_col
         self.version_col = version_col
 
-    # the snapshot here is table state, not cluster labels — alias for
-    # readable call sites
     def read_snapshot(self):
-        return self.read_labels()
+        return mf.read_snapshot(self.spark, self.snapshot_path)
 
     def __call__(self, batch_df, epoch: int) -> None:
         from blazingsql_spark.operators.merge import cdc_apply
 
-        snap = self.read_labels()
+        snap = self.read_snapshot()
         if snap is None:
             # first epoch: an empty snapshot with the log's payload schema
             snap = batch_df.drop(self.op_col, self.version_col).limit(0)
@@ -1027,28 +888,9 @@ class CdcApplyIngest(ComponentsIngest):
         new = cdc_apply(
             snap, batch_df, self.key_cols, self.op_col, self.version_col
         ).localCheckpoint(eager=True)
-        self._publish(new, epoch)
-
-
-def run_cdc_apply_ingest(
-    spark: SparkSession,
-    change_stream: DataFrame,
-    snapshot_path: str,
-    checkpoint_path: str,
-    key_cols: list[str],
-    **kwargs,
-):
-    """Wire CdcApplyIngest into a streaming query (availableNow for the
-    bounded test sources; production drops the trigger)."""
-    handler = CdcApplyIngest(spark, snapshot_path, key_cols, **kwargs)
-    q = (
-        change_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return handler
+        mf.publish_snapshot(
+            self.spark, self.snapshot_path, new, epoch, self.keep_snapshots
+        )
 
 
 class QuantileSketchIngest:
@@ -1078,7 +920,6 @@ class QuantileSketchIngest:
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         from blazingsql_spark.functions import sketches
-        from blazingsql_spark.sources import manifest as mf
 
         buckets = sketches.ddsketch_build(
             batch, self.value_col, relative_accuracy=self.relative_accuracy
@@ -1088,7 +929,6 @@ class QuantileSketchIngest:
     def read_sketch(self) -> DataFrame:
         """The merged (bucket, cnt) summary over every live epoch."""
         from blazingsql_spark.functions import sketches
-        from blazingsql_spark.sources import manifest as mf
 
         # read_manifest returns None for a never-compacted table (no
         # blanket swallow — real FS errors propagate, the r9 discipline)
@@ -1102,24 +942,6 @@ class QuantileSketchIngest:
         return sketches.ddsketch_quantiles(
             self.read_sketch(), qs, relative_accuracy=self.relative_accuracy
         )
-
-
-def run_quantile_sketch_ingest(
-    spark: SparkSession,
-    value_stream: DataFrame,
-    sketch_path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire a value stream through the DDSketch maintainer. Returns the
-    started StreamingQuery (caller stops it / processes available)."""
-    handler = QuantileSketchIngest(spark, sketch_path, **kwargs)
-    return (
-        value_stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 class TopKIngest:
@@ -1161,10 +983,7 @@ class TopKIngest:
         self.depth = int(depth)
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         from blazingsql_spark.functions import sketches
-        from blazingsql_spark.sources import manifest as mf
 
         # NULL items are EXCLUDED up front: cms_sketch drops them but
         # space_saving stringifies them, and that mismatch would surface
@@ -1180,8 +999,6 @@ class TopKIngest:
         mf.write_epoch_partition(cands, f"{self.path}/cands", int(epoch_id))
 
     def _live(self, sub: str) -> DataFrame:
-        from blazingsql_spark.sources import manifest as mf
-
         man = mf.read_manifest(self.spark, f"{self.path}/{sub}")
         return mf.read_live(self.spark, f"{self.path}/{sub}", man)
 
@@ -1195,8 +1012,6 @@ class TopKIngest:
         Only the FINAL k rows materialize to the driver, so the
         returned frame is a SNAPSHOT: later epoch writes or replay
         overwrites cannot change or break it mid-read."""
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
         from blazingsql_spark.functions import sketches
 
         merged = (
@@ -1212,24 +1027,6 @@ class TopKIngest:
         return self.spark.createDataFrame(
             [(r.item, int(r.est)) for r in top], "item string, est long"
         )
-
-
-def run_top_k_ingest(
-    spark: SparkSession,
-    stream: DataFrame,
-    path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire an item stream through the top-k maintainer. Returns the
-    started StreamingQuery (caller stops it / processes available)."""
-    handler = TopKIngest(spark, path, **kwargs)
-    return (
-        stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 class DistinctCountIngest:
@@ -1252,38 +1049,13 @@ class DistinctCountIngest:
         self.col = col
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from blazingsql_spark.sources import manifest as mf
-
         sk = batch.agg(F.hll_sketch_agg(self.col).alias("sk"))
         mf.write_epoch_partition(sk, self.path, int(epoch_id))
 
     def estimate(self) -> int:
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from blazingsql_spark.sources import manifest as mf
-
         man = mf.read_manifest(self.spark, self.path)
         live = mf.read_live(self.spark, self.path, man)
         row = live.agg(
             F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est")
         ).collect()[0]
         return int(row.est) if row.est is not None else 0
-
-
-def run_distinct_count_ingest(
-    spark: SparkSession,
-    stream: DataFrame,
-    path: str,
-    checkpoint_path: str,
-    **kwargs,
-):
-    """Wire an item stream through the distinct-count maintainer."""
-    handler = DistinctCountIngest(spark, path, **kwargs)
-    return (
-        stream.writeStream.foreachBatch(handler)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -26,6 +26,50 @@ def test_create_table_from_path_and_sql(bc):
     assert "li" not in bc.list_tables()
 
 
+def test_create_table_reads_nanos_parquet_as_bigint(bc, tmp_path):
+    """A TIMESTAMP(NANOS) parquet file registers through the same open
+    path as load_table: the column reads as bigint (Spark has no
+    nanosecond timestamp) instead of failing with PARQUET_TYPE_ILLEGAL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = bc.spark.conf.get(key)
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000_000_123, None], pa.timestamp("ns"))}), path
+    )
+    try:
+        df = bc.create_table("ns_t", path)
+        assert df.schema.simpleString() == "struct<ts:bigint>"
+        got = [r.ts for r in bc.sql("SELECT ts FROM ns_t ORDER BY ts").collect()]
+        assert got == [None, 1_000_000_123]
+    finally:
+        bc.drop_table("ns_t")
+        bc.spark.conf.set(key, before)
+
+
+def test_create_table_infers_a_files_schema_once(bc, tmp_path):
+    """Registering one parquet file twice runs one schema-inference job:
+    the second registration reads with the schema the first inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "once.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    sc = bc.spark.sparkContext
+    sc.setJobGroup("create_table_twice", "create_table")
+    try:
+        first = bc.create_table("once_a", path)
+        again = bc.create_table("once_b", path)
+        assert len(sc.statusTracker().getJobIdsForGroup("create_table_twice")) == 1
+    finally:
+        sc.setJobGroup("", "")
+        bc.drop_table("once_a")
+        bc.drop_table("once_b")
+    assert again.schema == first.schema
+
+
 def test_create_table_from_pandas_and_df(bc):
     bc.create_table("pd_t", pd.DataFrame({"a": [1, 2, 3]}))
     assert bc.sql("SELECT SUM(a) AS s FROM pd_t").first()["s"] == 6

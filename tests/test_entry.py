@@ -15,6 +15,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 from blazingsql_spark.queries import registry
+from blazingsql_spark.sources.io import read_parquet_file
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SENTINELS = ("expr_math", "text_stats", "tpch_q1")
@@ -146,12 +147,12 @@ def test_read_parquet_nanos_and_rewrite(spark, tmp_path):
             pa.table({"ts": pa.array([1_000_000_123, None], pa.timestamp("ns"))}),
             path,
         )
-        df = registry._read_parquet(spark, path)
+        df = read_parquet_file(spark, path)
         assert df.schema.simpleString() == "struct<ts:bigint>"
         assert [r.ts for r in df.collect()] == [1_000_000_123, None]
         pq.write_table(pa.table({"u": pa.array([1, 2], pa.int32())}), path)
         os.utime(path, ns=(1, 1))  # a new mtime even on a coarse clock
-        assert registry._read_parquet(spark, path).schema.simpleString() == (
+        assert read_parquet_file(spark, path).schema.simpleString() == (
             "struct<u:int>"
         )
     finally:

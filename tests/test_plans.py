@@ -390,6 +390,40 @@ def test_match_recognize_classification_is_codegen(spark):
     )
 
 
+def test_match_recognize_ships_only_the_columns_it_reads(spark):
+    """ONE ROW PER MATCH feeds its Python stage only the columns the
+    matcher reads: on events_match_recognize (keys, ORDER BY keys and
+    event_type flags) the MapInArrow input carries neither value nor
+    the JSON props. ALL ROWS PER MATCH still returns every input column,
+    values intact."""
+    import re
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+    from blazingsql_spark.queries.registry import load_table
+
+    df = all_queries()["events_match_recognize"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (node,) = [ln for ln in plan.splitlines() if "MapInArrow" in ln]
+    shipped = set(re.findall(r"(\w+)#\d+", node.split("MapInArrow", 1)[1].split(")#")[0]))
+    assert {"user_id", "ts", "event_id"} <= shipped, node
+    assert not shipped & {"value", "props"}, node
+
+    ev = load_table(spark, SF_DIR, "events")
+    out = match_recognize(
+        ev, ["user_id"], ["ts", "event_id"], [("COUNT(*)", "n")], "V C+ P",
+        {
+            "V": "event_type = 'view'",
+            "C": "event_type = 'click'",
+            "P": "event_type = 'purchase'",
+        },
+        all_rows=True,
+    )
+    assert out.columns == ev.columns + ["n"]
+    rows = out.drop("n")
+    assert rows.count() > 0
+    assert rows.exceptAll(ev).count() == 0
+
+
 def test_match_recognize_symbol_relative_plan_shape(spark):
     """The in-automaton path (symbol-relative DEFINE) must keep the same
     scale shape as the vectorized path: nav-free symbols classify as

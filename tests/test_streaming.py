@@ -465,12 +465,12 @@ def test_lexical_index_ingest_matches_batch_bm25(spark, tmp_path):
 
 def test_lexical_index_streaming_run_with_restart(spark, tmp_path):
     """The FULL streaming wiring, not just the handler: readStream →
-    foreachBatch(run_lexical_index_ingest) with availableNow, then more
+    foreachBatch(LexicalIndexIngest) via run_ingest, then more
     source files land and a SECOND run resumes from the same checkpoint —
     Spark's own epoch numbering drives the per-epoch partitions, and the
     indexed probe equals batch BM25 over the union corpus."""
     from blazingsql_spark.functions.text import bm25_topk, bm25_topk_indexed
-    from blazingsql_spark.streaming.ingest import run_lexical_index_ingest
+    from blazingsql_spark.streaming.ingest import LexicalIndexIngest, run_ingest
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     src = str(tmp_path / "src")
@@ -481,14 +481,14 @@ def test_lexical_index_streaming_run_with_restart(spark, tmp_path):
     terms = ["vector", "spark", "hash"]
 
     stream = spark.readStream.schema(schema).parquet(src)
-    q = run_lexical_index_ingest(spark, stream, index, ckpt)
+    q = run_ingest(LexicalIndexIngest(spark, index), stream, ckpt)
     q.awaitTermination(120)
 
     # more documents arrive; a restarted stream (same checkpoint) must
     # ingest ONLY the new files, under a new epoch id
     docs.filter("doc_id >= 200").write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(schema).parquet(src)
-    q2 = run_lexical_index_ingest(spark, stream2, index, ckpt)
+    q2 = run_ingest(LexicalIndexIngest(spark, index), stream2, ckpt)
     q2.awaitTermination(120)
 
     indexed = [
@@ -869,6 +869,7 @@ def test_components_ingest_incremental_and_replay_idempotent(spark, tmp_path):
     no-op by closure algebra; a fresh handler (restart) resumes from the
     latest snapshot; old snapshots are pruned."""
     from blazingsql_spark.operators.graph import connected_components
+    from blazingsql_spark.sources import manifest as mf
     from blazingsql_spark.streaming.ingest import ComponentsIngest
 
     batches = [
@@ -904,7 +905,7 @@ def test_components_ingest_incremental_and_replay_idempotent(spark, tmp_path):
         )
     )
     assert sorted(map(tuple, h2.read_labels().collect())) == want
-    assert len(h2._snapshots()) <= 2  # pruned
+    assert len(mf.snapshot_epochs(spark, h2.labels_path)) <= 2  # pruned
 
 
 @pytest.mark.slow  # soak/randomized long-tail: nightly tier (r13, driver verify budget)
@@ -1207,9 +1208,11 @@ def test_pca_ingest_is_exactly_mergeable(spark, tmp_path):
     # torn snapshot (no _SUCCESS) is skipped by the reader
     import pathlib
 
-    torn = pathlib.Path(f"{path}/moments/snap=9")
+    from blazingsql_spark.sources import manifest as mf
+
+    torn = pathlib.Path(mf.snapshot_dir(f"{path}/moments", 9))
     torn.mkdir(parents=True)
-    assert fresh._snapshots()[-1] != 9
+    assert mf.snapshot_epochs(spark, f"{path}/moments")[-1] != 9
 
 
 def test_pca_ingest_via_streaming_query(spark, tmp_path):
@@ -1219,7 +1222,7 @@ def test_pca_ingest_via_streaming_query(spark, tmp_path):
 
     from blazingsql_spark.functions.ml import pca_fit
     from blazingsql_spark.queries.registry import load_table
-    from blazingsql_spark.streaming.ingest import run_pca_ingest
+    from blazingsql_spark.streaming.ingest import PcaIngest, run_ingest
 
     emb_b = load_table(spark, SF_DIR, "embeddings")
     src = str(tmp_path / "src")
@@ -1230,9 +1233,8 @@ def test_pca_ingest_via_streaming_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .load(src)
     )
-    handler = run_pca_ingest(
-        spark, stream, str(tmp_path / "model"), str(tmp_path / "ckpt"), k=4
-    )
+    handler = PcaIngest(spark, str(tmp_path / "model"), k=4)
+    run_ingest(handler, stream, str(tmp_path / "ckpt")).awaitTermination()
     got = handler.load_model()
     want = pca_fit(emb_b, k=4)
     assert got["n"] == want["n"]
@@ -1298,7 +1300,7 @@ def test_cdc_apply_ingest_via_streaming_query(spark, tmp_path):
     import time
 
     from blazingsql_spark.operators.merge import cdc_apply
-    from blazingsql_spark.streaming.ingest import run_cdc_apply_ingest
+    from blazingsql_spark.streaming.ingest import CdcApplyIngest, run_ingest
 
     snapshot, log = _cdc_log(spark)
     src = str(tmp_path / "src")
@@ -1314,10 +1316,8 @@ def test_cdc_apply_ingest_via_streaming_query(spark, tmp_path):
         .option("recursiveFileLookup", "true")
         .load(src)
     )
-    h = run_cdc_apply_ingest(
-        spark, stream, str(tmp_path / "snap"), str(tmp_path / "ckpt"),
-        ["o_orderkey"],
-    )
+    h = CdcApplyIngest(spark, str(tmp_path / "snap"), ["o_orderkey"])
+    run_ingest(h, stream, str(tmp_path / "ckpt")).awaitTermination()
     got = h.read_snapshot().orderBy("o_orderkey").collect()
     want = cdc_apply(snapshot, log, ["o_orderkey"]).orderBy("o_orderkey").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
@@ -1451,10 +1451,7 @@ def test_quantile_sketch_ingest_equals_batch_and_replays(spark, tmp_path):
     import math
 
     from blazingsql_spark.functions import sketches
-    from blazingsql_spark.streaming.ingest import (
-        QuantileSketchIngest,
-        run_quantile_sketch_ingest,
-    )
+    from blazingsql_spark.streaming.ingest import QuantileSketchIngest, run_ingest
 
     rows = [(float(i % 97) + 0.5,) for i in range(3000)]
     df = spark.createDataFrame(rows, "v double")
@@ -1471,8 +1468,10 @@ def test_quantile_sketch_ingest_equals_batch_and_replays(spark, tmp_path):
         .parquet(src + "/part*")
     )
     sketch_path = str(tmp_path / "sketch")
-    q = run_quantile_sketch_ingest(
-        spark, stream, sketch_path, str(tmp_path / "ckpt"), value_col="v"
+    q = run_ingest(
+        QuantileSketchIngest(spark, sketch_path, value_col="v"),
+        stream,
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 
@@ -1509,7 +1508,7 @@ def test_top_k_ingest_equals_batch_and_replays(spark, tmp_path):
     heavy ids with capacity 64: the heavy set is recovered exactly and
     estimates never undercount; (3) at-least-once replay of an epoch
     changes nothing (epoch overwrite, the additive-counts discipline)."""
-    from blazingsql_spark.streaming.ingest import TopKIngest, run_top_k_ingest
+    from blazingsql_spark.streaming.ingest import TopKIngest, run_ingest
 
     rows = []
     for i in range(3000):
@@ -1530,8 +1529,8 @@ def test_top_k_ingest_equals_batch_and_replays(spark, tmp_path):
         .parquet(src + "/part*")
     )
     path = str(tmp_path / "topk")
-    q = run_top_k_ingest(
-        spark, stream, path, str(tmp_path / "ckpt_topk"), col="item"
+    q = run_ingest(
+        TopKIngest(spark, path, col="item"), stream, str(tmp_path / "ckpt_topk")
     )
     q.awaitTermination(120)
 
@@ -1594,10 +1593,7 @@ def test_distinct_count_ingest_equals_batch_and_replays(spark, tmp_path):
     batch hll_sketch_estimate on the same rows EXACTLY (same sketch
     implementation, merge is the HLL contract); replaying an epoch
     changes nothing; small cardinalities are exact."""
-    from blazingsql_spark.streaming.ingest import (
-        DistinctCountIngest,
-        run_distinct_count_ingest,
-    )
+    from blazingsql_spark.streaming.ingest import DistinctCountIngest, run_ingest
 
     rows = [(i, f"u{i % 321}") for i in range(3000)]
     df = spark.createDataFrame(rows, "idx long, item string")
@@ -1612,8 +1608,8 @@ def test_distinct_count_ingest_equals_batch_and_replays(spark, tmp_path):
         .parquet(src + "/part*")
     )
     path = str(tmp_path / "dc")
-    q = run_distinct_count_ingest(
-        spark, stream, path, str(tmp_path / "ckpt_dc"), col="item"
+    q = run_ingest(
+        DistinctCountIngest(spark, path, col="item"), stream, str(tmp_path / "ckpt_dc")
     )
     q.awaitTermination(120)
 

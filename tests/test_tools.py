@@ -22,3 +22,14 @@ def test_tool_help(tool):
     assert "usage:" in out.stdout
     # a started session would log Spark's banner to stderr
     assert "Spark" not in out.stderr, out.stderr
+
+
+def test_prof_help_names_cpu_column():
+    """prof.py's row mode prints each timed run's process-tree CPU next
+    to its JIT milliseconds, and its help says so."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "prof.py"), "--help"],
+        cwd=REPO, capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
+    assert "process-tree CPU" in out.stdout

@@ -14,7 +14,10 @@ shuffle bytes, and the run's code generation
 cost: Janino compiles (Spark's CodegenMetrics; 0 when every generated
 class came from Spark's codegen cache) and JIT compile milliseconds (the
 JVM's CompilationMXBean; the JIT compiles in background threads, so the
-split between runs is approximate). Stages and bytes come from the
+split between runs is approximate), next to the run's process-tree CPU
+seconds (this process, the driver JVM and the Python workers, measured
+with perfbench/run.py's tree_cpu_s), so the JIT's share of a run shows
+without a profiler. Stages and bytes come from the
 session's own Spark event log, parsed with perfbench/spans.py. A last
 line gives the session's totals, warm-up runs included: Janino compiles
 (with a large enough codegen cache, the rows' working set of generated
@@ -60,6 +63,7 @@ def job_group(sc, group: str):
 
 
 def profile_rows(args) -> int:
+    from run import tree_cpu_s
     from spans import job_counters, read_event_log
 
     from blazingsql_spark.queries.pipeline import reset_resident_indexes
@@ -78,12 +82,12 @@ def profile_rows(args) -> int:
     )
     sc = spark.sparkContext
     specs = all_queries()
-    runs = []  # (row, rep, construct_s, plan_s, exec_s, compiles, jit_ms)
+    runs = []  # (row, rep, construct_s, plan_s, exec_s, compiles, jit_ms, cpu_s)
     for name in args.rows:
         spec = specs[name]
         spec.fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
         for rep in range(1, args.reps + 1):
-            cg0 = codegen_stats(spark)
+            cg0, cpu0 = codegen_stats(spark), tree_cpu_s()
             with job_group(sc, f"{name}:{rep}|construct"):
                 t0 = time.perf_counter()
                 df = spec.fn(spark, args.sf_dir)
@@ -93,9 +97,10 @@ def profile_rows(args) -> int:
                 t2 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 t3 = time.perf_counter()
+            cpu = tree_cpu_s() - cpu0
             cg1 = codegen_stats(spark)
             runs.append(
-                (name, rep, t1 - t0, t2 - t1, t3 - t2, cg1.compiles - cg0.compiles, cg1.jit_ms - cg0.jit_ms)
+                (name, rep, t1 - t0, t2 - t1, t3 - t2, cg1.compiles - cg0.compiles, cg1.jit_ms - cg0.jit_ms, cpu)
             )
         spark.catalog.clearCache()
         reset_resident_indexes()
@@ -107,7 +112,7 @@ def profile_rows(args) -> int:
 
     counters = job_counters(read_event_log(event_dir), attribute)
     shutil.rmtree(event_dir, ignore_errors=True)
-    for name, rep, construct_s, plan_s, exec_s, compiles, jit_ms in runs:
+    for name, rep, construct_s, plan_s, exec_s, compiles, jit_ms, cpu_s in runs:
         c = counters.get((f"{name}:{rep}", "construct"), {})
         e = counters.get((f"{name}:{rep}", "exec"), {})
         print(
@@ -121,7 +126,7 @@ def profile_rows(args) -> int:
             f"{c.get('input_records', 0) + e.get('input_records', 0):.0f} rec  "
             f"shuffle write {c.get('shuffle_write_bytes', 0) + e.get('shuffle_write_bytes', 0):.0f} B "
             f"read {c.get('shuffle_read_bytes', 0) + e.get('shuffle_read_bytes', 0):.0f} B  "
-            f"janino {compiles} compiles  jit {jit_ms} ms",
+            f"janino {compiles} compiles  jit {jit_ms} ms  cpu {cpu_s:.2f} s",
             flush=True,
         )
     print(
@@ -221,12 +226,8 @@ def audit_streams(args) -> int:
             1 << 16,
             4,
         ),
-        "components_step": incremental_components(
-            spark.read.parquet(f"{tmp}/cc/snap={epochs - 1}"), edge_batches[-1]
-        ),
-        "cdc_apply": cdc_apply(
-            spark.read.parquet(f"{tmp}/cdc/snap={epochs - 1}"), cdc_batches[-1], ["k"], "op", "version"
-        ),
+        "components_step": incremental_components(mf.read_snapshot(spark, f"{tmp}/cc"), edge_batches[-1]),
+        "cdc_apply": cdc_apply(mf.read_snapshot(spark, f"{tmp}/cdc"), cdc_batches[-1], ["k"], "op", "version"),
         "quantile_build": sketches.ddsketch_build(val_batches[-1], "v"),
     }
     outdir = os.path.join(REPO, "plans", "r13")
