@@ -1,18 +1,27 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, mirroring how ANN is deployed on big corpora:
-- brute-force cosine top-k — the exact baseline; broadcast the (small) query
-  set, score JVM-side, per-query top-k via window;
-- LSH-bucketed ANN (random hyperplanes) — the scale path: each vector maps
-  to a small signature, candidate generation is an equi-join on signature,
-  exact scoring only within buckets. Hyperplanes are md5-derived (seeded,
-  engine-portable) rather than RNG-based so results are deterministic and
-  differential-testable.
+Serving tiers, mirroring how ANN is deployed on big corpora: the exact
+brute-force cosine top-k (broadcast the small query set, score
+JVM-side), banded and multi-probe LSH (candidates from an equi-join on
+md5-seeded hyperplane signatures), IVF inverted lists, flat PQ and
+IVF-PQ (ADC scoring over compressed codes), IVF over int8 codes, IVF
+with PCA routing, and the HNSW-routed IVF in operators/hnsw.py.
 
-Pairwise scoring (cosine within candidate buckets) runs as
-F.aggregate/F.zip_with JVM expressions; the bulk signature projections run
-as an Arrow-batched vectorized pandas UDF (numpy, sequential-fold-exact —
-see lsh_band_signatures) with a pure-JVM expression fallback.
+Each tier generates candidates its own way, and all of them then take
+ONE serving path, written once in the helpers below: the query side
+``(query_id, __qvec[, __qn])`` (``_query_side``), the exact rescoring
+``round(cosine_with_norms(vec, __qvec, __vn, __qn), 6) AS cosine_sim``
+(``_rescore``), the IVF-family routing to each query's top ``n_probe``
+centroids (``_route``), the pool-then-rerank of the PQ tiers
+(``_rerank_pool``) and the per-query rank (``_top_k``). The result
+contract is ``(query_id, <id>, <score>, rank)``: ranks 1..k per query,
+score descending, equal scores by ascending id. A faster scorer or a
+tie-rule change is one edit here.
+
+Pairwise scoring runs as F.aggregate/F.zip_with JVM expressions; the bulk
+signature projections run as an Arrow-batched vectorized pandas UDF
+(numpy, sequential-fold-exact — see lsh_band_signatures) with a pure-JVM
+expression fallback.
 """
 
 from __future__ import annotations
@@ -88,6 +97,110 @@ def l2_normalize(a: Column) -> Column:
     )[0]
 
 
+# ------------------------------------------------------------ serving path
+def _query_side(
+    queries: DataFrame, query_id_col: str, vec_col: str, norm: bool = True
+) -> DataFrame:
+    """``(query_id, __qvec[, __qn])``: the query projection every tier
+    joins to its candidates; ``__qn`` is the query's L2 norm, computed
+    once per query instead of once per scored pair."""
+    cols = [F.col(query_id_col), F.col(vec_col).alias("__qvec")]
+    if norm:
+        cols.append(l2_norm(F.col(vec_col)).alias("__qn"))
+    return queries.select(*cols)
+
+
+def _rescore(
+    pairs: DataFrame, query_id_col: str, id_col: str, vec_col: str, *extra: str
+) -> DataFrame:
+    """Exact cosine of (query, candidate) pairs that carry the corpus
+    vector with its norm ``__vn`` and the query side's ``__qvec``/``__qn``:
+    ``(query_id, id, *extra, cosine_sim)``, rounded to 6 places so every
+    engine ranks the same values."""
+    return pairs.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        *[F.col(c) for c in extra],
+        F.round(
+            cosine_with_norms(
+                F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
+            ),
+            6,
+        ).alias("cosine_sim"),
+    )
+
+
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    score_col: str,
+    query_id_col: str,
+    id_col: str,
+    rank_col: str = "rank",
+    out: tuple | None = None,
+) -> DataFrame:
+    """The per-query rank: ``row_number() OVER (PARTITION BY query ORDER
+    BY score DESC, id ASC) <= k`` — ranks 1..k, equal scores by ascending
+    id — projected to ``out`` (default ``(query_id, id, score, rank)``).
+    Spark pushes the rank limit into the window sort (WindowGroupLimit),
+    so each partition keeps only k rows per query."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col), F.asc(id_col))
+    ranked = scored.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+    return ranked.select(*(out or (query_id_col, id_col, score_col, rank_col)))
+
+
+def _route(
+    q: DataFrame,
+    cents: DataFrame,
+    n_probe: int,
+    query_id_col: str,
+    sim: Column,
+    carry: tuple = (),
+    extra: tuple = (),
+) -> DataFrame:
+    """IVF routing: each query's ``n_probe`` best centroids by ``sim``
+    (ties by ascending centroid_id) over the broadcast centroid table,
+    as rows ``(query_id, *carry, centroid_id, *extra)``."""
+    scored = q.crossJoin(F.broadcast(cents)).select(
+        query_id_col, *carry, "centroid_id", sim.alias("sim"), *extra
+    )
+    keep = tuple(c for c in scored.columns if c != "sim")
+    return _top_k(scored, n_probe, "sim", query_id_col, "centroid_id", "__rn", keep)
+
+
+def _rerank_pool(
+    pool: DataFrame,
+    vectors: DataFrame,
+    q: DataFrame,
+    k: int,
+    query_id_col: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact top-k of a ``(query_id, id)`` candidate pool: the raw
+    vectors join back by id (a point lookup of pool×queries rows, never
+    a corpus scan) and the query side ``q`` by query id."""
+    pairs = pool.join(
+        vectors.select(
+            F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__vn")
+        ),
+        id_col,
+    ).join(F.broadcast(q), query_id_col)
+    scored = _rescore(pairs, query_id_col, id_col, vec_col)
+    return _top_k(scored, k, "cosine_sim", query_id_col, id_col)
+
+
+def _index_parts(prebuilt: tuple | None, n: int, build) -> tuple:
+    """A filtered tier's index: the first ``n`` artifacts of ``prebuilt``
+    plus its optional trailing corpus_count (None when absent), or
+    ``build()``'s artifacts and None when nothing was prebuilt."""
+    if prebuilt is None:
+        return (*build(), None)
+    return (*prebuilt[:n], prebuilt[n] if len(prebuilt) > n else None)
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -103,32 +216,12 @@ def cosine_topk(
     executor memory; the only shuffle is the per-query top-k window over
     corpus_rows×n_queries scored pairs (bounded by AQE-coalesced partitions).
     """
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
+    q = _query_side(queries, query_id_col, vec_col)
     v = vectors.select(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__vn")
     )
-    scored = v.crossJoin(F.broadcast(q)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_with_norms(
-                F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-            ),
-            6,
-        ).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    scored = _rescore(v.crossJoin(F.broadcast(q)), query_id_col, id_col, vec_col)
+    return _top_k(scored, k, "cosine_sim", query_id_col, id_col)
 
 
 def margin_mine(
@@ -241,33 +334,17 @@ def knn_classify(
     the smaller label. Same broadcast-scored shape as cosine_topk plus a
     per-query vote aggregate (max_by over (votes, -label) — partial-agg,
     no second sort)."""
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    scored = (
+    pairs = (
         vectors.withColumn("__vn", l2_norm(F.col(vec_col)))
-        .crossJoin(F.broadcast(q))
+        .crossJoin(F.broadcast(_query_side(queries, query_id_col, vec_col)))
         .filter(F.col(id_col) != F.col(query_id_col))
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.col(label_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    votes = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .groupBy(query_id_col, label_col)
-        .agg(F.count("*").alias("n_votes"))
+    scored = _rescore(pairs, query_id_col, id_col, vec_col, label_col)
+    nearest = _top_k(
+        scored, k, "cosine_sim", query_id_col, id_col, out=(query_id_col, label_col)
+    )
+    votes = nearest.groupBy(query_id_col, label_col).agg(
+        F.count("*").alias("n_votes")
     )
     return votes.groupBy(query_id_col).agg(
         F.max_by(
@@ -291,36 +368,6 @@ def _plane_signs(plane: int, dim: int) -> list[float]:
         1.0 if ord(hashlib.md5(f"{plane}-{i}".encode()).hexdigest()[0]) % 2 == 0 else -1.0
         for i in range(1, dim + 1)
     ]
-
-
-def _hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
-    """Sign bit of <vec, plane_p> with the plane embedded as a literal array."""
-    signs = F.array(*[F.lit(s) for s in _plane_signs(plane, dim)])
-    proj = F.aggregate(
-        F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return (proj >= 0).cast("int")
-
-
-def lsh_signature(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    planes: int = 8,
-    out_col: str = "lsh_sig",
-) -> DataFrame:
-    """Single-band random-hyperplane signature: `planes` sign bits packed
-    into one int. Building block; for search/self-join candidate generation
-    use the BANDED variants below — a single band of b bits yields only 2^b
-    buckets, and bucket self-joins go quadratic in bucket size (N/2^b) as
-    the corpus grows."""
-    sig = None
-    for p in range(planes):
-        bit = _hyperplane_sign(F.col(vec_col), p, dim) * (1 << p)
-        sig = bit if sig is None else sig + bit
-    return df.withColumn(out_col, sig)
 
 
 def lsh_band_signatures(
@@ -437,36 +484,13 @@ def ann_lsh_topk(
         vec_col, dim, bands, bits_per_band,
     )
     q_sig = lsh_band_signatures(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            l2_norm(F.col(vec_col)).alias("__qn"),
-        ),
-        "__qvec",
-        dim,
-        bands,
-        bits_per_band,
+        _query_side(queries, query_id_col, vec_col),
+        "__qvec", dim, bands, bits_per_band,
     )
-    cands = (
-        v_sig.join(F.broadcast(q_sig), ["band", "band_sig"])
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .distinct()  # OR across bands: same pair can match in several
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    pairs = v_sig.join(F.broadcast(q_sig), ["band", "band_sig"])
+    # OR across bands: the same pair can match in several
+    cands = _rescore(pairs, query_id_col, id_col, vec_col).distinct()
+    return _top_k(cands, k, "cosine_sim", query_id_col, id_col)
 
 
 def embedding_near_dup_pairs(
@@ -649,6 +673,14 @@ def auto_n_probe(n_centroids: int) -> int:
     return max(4, -(-int(n_centroids) // 2))
 
 
+def _ivf_build(
+    vectors: DataFrame, n_centroids: int, dim: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(centroids, assigned lists) of a self-trained IVF index."""
+    cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
+    return cents, assign_to_centroids(vectors, cents, id_col, vec_col)
+
+
 def ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -675,54 +707,19 @@ def ivf_topk(
     self-training path."""
     if n_probe is None:
         n_probe = auto_n_probe(n_centroids)
-    if prebuilt is not None:
-        cents, lists = prebuilt
-    else:
-        cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
-        lists = assign_to_centroids(vectors, cents, id_col, vec_col)
-
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
+    cents, lists = prebuilt or _ivf_build(vectors, n_centroids, dim, id_col, vec_col)
+    sim = cosine_with_norms(
+        F.col("__qvec"), F.col("centroid"), F.col("__qn"), l2_norm(F.col("centroid"))
     )
-    q_scored = q.crossJoin(F.broadcast(cents)).select(
-        query_id_col,
-        "__qvec",
-        "__qn",
-        "centroid_id",
-        cosine_with_norms(
-            F.col("__qvec"), F.col("centroid"), F.col("__qn"),
-            l2_norm(F.col("centroid")),
-        ).alias("sim"),
+    probes = _route(
+        _query_side(queries, query_id_col, vec_col), cents, n_probe,
+        query_id_col, sim, carry=("__qvec", "__qn"),
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q_scored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(query_id_col, "__qvec", "__qn", "centroid_id")
+    pairs = lists.withColumn("__vn", l2_norm(F.col(vec_col))).join(
+        F.broadcast(probes), "centroid_id"
     )
-
-    cands = (
-        lists.withColumn("__vn", l2_norm(F.col(vec_col)))
-        .join(F.broadcast(probes), "centroid_id")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    scored = _rescore(pairs, query_id_col, id_col, vec_col)
+    return _top_k(scored, k, "cosine_sim", query_id_col, id_col)
 
 
 # One cached filtered-id frame per session, evicted on the NEXT serving
@@ -844,14 +841,9 @@ def ivf_topk_filtered(
     ``prebuilt`` accepts ``(cents, lists)`` or ``(cents, lists,
     corpus_count)`` — the 3-tuple caches the corpus size at build time
     so a serving call only counts the FILTERED ids."""
-    corpus_count = None
-    if prebuilt is not None:
-        cents, lists = prebuilt[0], prebuilt[1]
-        if len(prebuilt) > 2:
-            corpus_count = prebuilt[2]
-    else:
-        cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
-        lists = assign_to_centroids(vectors, cents, id_col, vec_col)
+    cents, lists, corpus_count = _index_parts(
+        prebuilt, 2, lambda: _ivf_build(vectors, n_centroids, dim, id_col, vec_col)
+    )
     # filter on the CORPUS (so filter_expr may reference any of its
     # columns, the vector included) and prune the lists by a left-semi
     # join on ids — no metadata columns ever join into the list table,
@@ -860,7 +852,6 @@ def ivf_topk_filtered(
         vectors, filter_expr, n_probe, n_centroids,
         corpus_count, selectivity, id_col,
     )
-    flt = lists.join(flt_ids, id_col, "left_semi")
     return ivf_topk(
         vectors,
         queries,
@@ -871,7 +862,7 @@ def ivf_topk_filtered(
         vec_col=vec_col,
         query_id_col=query_id_col,
         dim=dim,
-        prebuilt=(cents, flt),
+        prebuilt=(cents, lists.join(flt_ids, id_col, "left_semi")),
     )
 
 
@@ -904,15 +895,8 @@ def ann_lsh_topk_multiprobe(
         else lsh_band_signatures(vectors, vec_col, dim, bands, bits_per_band)
     )
     q_sig = lsh_band_signatures(
-        queries.select(
-            F.col(query_id_col),
-            F.col(vec_col).alias("__qvec"),
-            l2_norm(F.col(vec_col)).alias("__qn"),
-        ),
-        "__qvec",
-        dim,
-        bands,
-        bits_per_band,
+        _query_side(queries, query_id_col, vec_col),
+        "__qvec", dim, bands, bits_per_band,
     )
     # original band signature + every 1-bit flip within the band
     probes = q_sig.select(
@@ -930,27 +914,11 @@ def ann_lsh_topk_multiprobe(
             )
         ).alias("band_sig"),
     )
-    cands = (
-        v_sig.withColumn("__vn", l2_norm(F.col(vec_col)))
-        .join(F.broadcast(probes), ["band", "band_sig"])
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        .distinct()
+    pairs = v_sig.withColumn("__vn", l2_norm(F.col(vec_col))).join(
+        F.broadcast(probes), ["band", "band_sig"]
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    cands = _rescore(pairs, query_id_col, id_col, vec_col).distinct()
+    return _top_k(cands, k, "cosine_sim", query_id_col, id_col)
 
 
 def ann_lsh_topk_filtered(
@@ -1161,22 +1129,33 @@ def pq_adc_topk(
     JVM-side — no raw vectors touched, no shuffle except the per-query
     top-k window. Scores are ADC dot estimates normalized by the stored
     vector norm, so ranking approximates cosine."""
-    dsub = dim // m
     q_subs = _subvectors(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
-        "__qvec",
-        m,
-        dsub,
-        [query_id_col],
+        _query_side(queries, query_id_col, vec_col, norm=False),
+        "__qvec", m, dim // m, [query_id_col],
     )
-    qtab = (
-        q_subs.join(F.broadcast(codebooks), "sub")
+    qtab = _adc_tables(q_subs, codebooks, ksub, (query_id_col,))
+    scored = encoded.crossJoin(F.broadcast(qtab)).select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(_adc_lookup(m, ksub) / F.col("norm"), 6).alias("adc_sim"),
+    )
+    return _top_k(scored, k, "adc_sim", query_id_col, id_col)
+
+
+def _adc_tables(
+    subs: DataFrame, codebooks: DataFrame, ksub: int, keys: tuple
+) -> DataFrame:
+    """One ADC ``table`` per ``keys`` group of query subvectors: the
+    m×ksub partial dots <subvec, centroid>, code ``c`` of subspace ``s``
+    at position ``s*ksub + c``."""
+    return (
+        subs.join(F.broadcast(codebooks), "sub")
         .select(
-            query_id_col,
+            *keys,
             (F.col("sub") * ksub + F.col("code")).alias("pos"),
             dot(F.col("subvec"), F.col("centroid")).alias("pdot"),
         )
-        .groupBy(query_id_col)
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "pdot"))),
@@ -1184,28 +1163,19 @@ def pq_adc_topk(
             ).alias("table")
         )
     )
-    scored = encoded.crossJoin(F.broadcast(qtab)).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"),
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda c, s: F.element_at(F.col("table"), (s * ksub + c + 1).cast("int")),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            / F.col("norm"),
-            6,
-        ).alias("adc_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_sim", "rank")
+
+
+def _adc_lookup(m: int, ksub: int) -> Column:
+    """The ADC dot estimate of a row's ``codes`` against its ``table``:
+    m element_at lookups folded JVM-side."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("codes"),
+            F.sequence(F.lit(0), F.lit(m - 1)),
+            lambda c, s: F.element_at(F.col("table"), (s * ksub + c + 1).cast("int")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
 
@@ -1235,36 +1205,8 @@ def pq_topk_reranked(
         encoded, codebooks, queries, k=pool, m=m, ksub=ksub, dim=dim,
         id_col=id_col, query_id_col=query_id_col,
     ).select(query_id_col, id_col)
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    scored = (
-        cand.join(
-            vectors.select(
-                F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__vn")
-            ),
-            id_col,
-        )
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    q = _query_side(queries, query_id_col, vec_col)
+    return _rerank_pool(cand, vectors, q, k, query_id_col, id_col, vec_col)
 
 
 def pq_topk_filtered(
@@ -1392,101 +1334,30 @@ def ivfpq_topk(
     side touches is an equi-join on centroid_id — candidates are
     ~n_probe/n_centroids of the corpus, read at ~32× compression; raw
     vectors only surface in the pool-sized re-rank."""
-    dsub = dim // m
     pool = pool or 10 * k
     cents, books, encoded = prebuilt or ivfpq_build(
         vectors, n_centroids, m, ksub, dim=dim, id_col=id_col, vec_col=vec_col
     )
 
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    q_cent = q.crossJoin(F.broadcast(cents)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        cosine(F.col("__qvec"), F.col("centroid")).alias("sim"),
-        dot(F.col("__qvec"), F.col("centroid")).alias("qc_dot"),
-        F.col("centroid"),
+    q = _query_side(queries, query_id_col, vec_col, norm=False)
+    probes = _route(
+        q, cents, n_probe, query_id_col,
+        cosine(F.col("__qvec"), F.col("centroid")), carry=("__qvec",),
+        extra=(dot(F.col("__qvec"), F.col("centroid")).alias("qc_dot"), F.col("centroid")),
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q_cent.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(query_id_col, "__qvec", "centroid_id", "qc_dot", "centroid")
-    )
-
     # per (query, probed centroid): the m×ksub residual-dot table
-    p_subs = _subvectors(probes, "__qvec", m, dsub, [query_id_col, "centroid_id", "qc_dot"])
-    ptab = (
-        p_subs.join(F.broadcast(books), "sub")
-        .select(
-            query_id_col,
-            "centroid_id",
-            "qc_dot",
-            (F.col("sub") * ksub + F.col("code")).alias("pos"),
-            dot(F.col("subvec"), F.col("centroid")).alias("pdot"),
-        )
-        .groupBy(query_id_col, "centroid_id", "qc_dot")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "pdot"))),
-                lambda s: s["pdot"],
-            ).alias("table")
-        )
-    )
-
+    keys = (query_id_col, "centroid_id", "qc_dot")
+    ptab = _adc_tables(_subvectors(probes, "__qvec", m, dim // m, list(keys)), books, ksub, keys)
     cands = encoded.join(F.broadcast(ptab), "centroid_id").select(
         F.col(query_id_col),
         F.col(id_col),
         F.round(
-            (
-                F.col("qc_dot")
-                + F.aggregate(
-                    F.zip_with(
-                        F.col("codes"),
-                        F.sequence(F.lit(0), F.lit(m - 1)),
-                        lambda c, s: F.element_at(
-                            F.col("table"), (s * ksub + c + 1).cast("int")
-                        ),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            )
-            / F.col("norm"),
-            6,
+            (F.col("qc_dot") + _adc_lookup(m, ksub)) / F.col("norm"), 6
         ).alias("adc_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("adc_sim"), F.asc(id_col))
-    cand_pool = (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= pool)
-        .select(query_id_col, id_col)
-    )
-    scored = (
-        cand_pool.join(
-            vectors.select(
-                F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__vn")
-            ),
-            id_col,
-        )
-        .join(F.broadcast(q.withColumn("__qn", l2_norm(F.col("__qvec")))), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    cand_pool = _top_k(cands, pool, "adc_sim", query_id_col, id_col, out=(query_id_col, id_col))
+    q = q.withColumn("__qn", l2_norm(F.col("__qvec")))
+    return _rerank_pool(cand_pool, vectors, q, k, query_id_col, id_col, vec_col)
 
 
 def ivfpq_topk_filtered(
@@ -1515,16 +1386,12 @@ def ivfpq_topk_filtered(
     ``(cents, books, encoded)`` or ``(cents, books, encoded,
     corpus_count)`` — the 4th element caches the corpus size so a
     serving call only counts the filtered ids."""
-    corpus_count = None
-    if prebuilt is not None:
-        cents, books, encoded = prebuilt[0], prebuilt[1], prebuilt[2]
-        if len(prebuilt) > 3:
-            corpus_count = prebuilt[3]
-    else:
-        cents, books, encoded = ivfpq_build(
-            vectors, n_centroids, m, ksub, dim=dim,
-            id_col=id_col, vec_col=vec_col,
-        )
+    cents, books, encoded, corpus_count = _index_parts(
+        prebuilt, 3,
+        lambda: ivfpq_build(
+            vectors, n_centroids, m, ksub, dim=dim, id_col=id_col, vec_col=vec_col
+        ),
+    )
     flt_ids, n_probe = _prefilter_plan(
         vectors, filter_expr, n_probe, n_centroids,
         corpus_count, selectivity, id_col,
@@ -1707,8 +1574,8 @@ def _bounded_cluster_keys(
     # plan, which costs seconds of analysis + codegen per query and ran the
     # 500-row fixture in ~9 s (measured round 8; this spelling runs it in
     # well under a second). The fold order inside the transform is the exact
-    # left-fold _hyperplane_sign computes, so the bits are bit-identical to
-    # the per-plane spelling and to the md5-parity SQL twin.
+    # left-fold lsh_band_signatures' projections compute, so the bits are
+    # bit-identical to a per-plane spelling and to the md5-parity SQL twin.
     matrix = [_plane_signs(1000 + j, dim) for j in range(split_bits)]
     mat_sql = "array(" + ",".join(
         "array(" + ",".join(f"{s:.0f}D" for s in row) + ")" for row in matrix
@@ -2152,7 +2019,7 @@ def ivf_int8_topk(
         vectors, n_centroids, dim=dim, id_col=id_col, vec_col=vec_col
     )
 
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
+    q = _query_side(queries, query_id_col, vec_col, norm=False)
     qq = quantize_int8(
         q.withColumn("__qnorm", l2_norm(F.col("__qvec"))),
         id_col=query_id_col,
@@ -2162,18 +2029,9 @@ def ivf_int8_topk(
     ).select(
         query_id_col, F.col("scale").alias("__qscale"), "__qq", "__qnorm"
     )
-    q_scored = q.crossJoin(F.broadcast(cents)).select(
-        query_id_col,
-        "centroid_id",
-        cosine(F.col("__qvec"), F.col("centroid")).alias("sim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q_scored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(query_id_col, "centroid_id")
-        .join(qq, query_id_col)
-    )
+    probes = _route(
+        q, cents, n_probe, query_id_col, cosine(F.col("__qvec"), F.col("centroid"))
+    ).join(qq, query_id_col)
 
     int_dot = F.aggregate(
         F.zip_with(
@@ -2196,12 +2054,8 @@ def ivf_int8_topk(
             6,
         ).alias("int8_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("int8_sim"), F.asc(id_col))
-    return (
-        cands.filter(F.col("int8_sim").isNotNull())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "int8_sim", "rank")
+    return _top_k(
+        cands.filter(F.col("int8_sim").isNotNull()), k, "int8_sim", query_id_col, id_col
     )
 
 
@@ -2380,45 +2234,15 @@ def ivf_pca_topk(
         )
 
     qp = pca_transform(
-        queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec")),
-        model,
-        vec_col="__qvec",
-        out_col="__qproj",
+        _query_side(queries, query_id_col, vec_col, norm=False),
+        model, vec_col="__qvec", out_col="__qproj",
     )
-    q_scored = qp.crossJoin(F.broadcast(cents)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        cosine(F.col("__qproj"), F.col("centroid")).alias("sim"),
+    probes = _route(
+        qp, cents, n_probe, query_id_col,
+        cosine(F.col("__qproj"), F.col("centroid")), carry=("__qvec",),
+    ).select(query_id_col, "__qvec", l2_norm(F.col("__qvec")).alias("__qn"), "centroid_id")
+    pairs = lists.withColumn("__vn", l2_norm(F.col(vec_col))).join(
+        F.broadcast(probes), "centroid_id"
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q_scored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(
-            query_id_col,
-            "__qvec",
-            l2_norm(F.col("__qvec")).alias("__qn"),
-            "centroid_id",
-        )
-    )
-    cands = (
-        lists.withColumn("__vn", l2_norm(F.col(vec_col)))
-        .join(F.broadcast(probes), "centroid_id")
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    scored = _rescore(pairs, query_id_col, id_col, vec_col)
+    return _top_k(scored, k, "cosine_sim", query_id_col, id_col)

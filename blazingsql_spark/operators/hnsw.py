@@ -59,11 +59,6 @@ class HnswGraph:
         return self.points.shape[0]
 
 
-def _select_neighbors(cands: list[tuple[float, int]], m: int) -> list[int]:
-    # cands: (negdist=sim, id); keep the m most similar, ties by smaller id
-    return [i for _, i in sorted(cands, key=lambda t: (-t[0], t[1]))[:m]]
-
-
 def _select_neighbors_heuristic(
     points: np.ndarray, cands: list[tuple[float, int]], m: int
 ) -> list[int]:
@@ -381,23 +376,19 @@ def hnsw_ivf_topk(
     requested beam is narrower than the probe count (a beam thinner than
     the probes it must return degrades the coarse route for free)."""
     from blazingsql_spark.functions.similarity import (
-        assign_to_centroids,
+        _ivf_build,
+        _query_side,
+        _rescore,
+        _top_k,
         auto_n_probe,
-        cosine_with_norms,
-        ivf_train_centroids,
         l2_norm,
     )
-    from pyspark.sql.window import Window
 
     if n_probe is None:
         n_probe = auto_n_probe(n_centroids)
     ef = max(int(ef), 4 * int(n_probe))
 
-    if prebuilt_ivf is not None:
-        cents, lists = prebuilt_ivf
-    else:
-        cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
-        lists = assign_to_centroids(vectors, cents, id_col, vec_col)
+    cents, lists = prebuilt_ivf or _ivf_build(vectors, n_centroids, dim, id_col, vec_col)
     probes = hnsw_coarse_probes(
         queries, cents, n_probe=n_probe, ef=ef,
         query_id_col=query_id_col, vec_col=vec_col, prebuilt=prebuilt,
@@ -405,32 +396,13 @@ def hnsw_ivf_topk(
     # probes is vector-free; join the query vectors back from the queries
     # frame so each vector is broadcast once per query, not once per probe
     # row (n_probe× smaller broadcast than carrying it through the explode)
-    qvecs = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-    )
-    cands = (
+    pairs = (
         lists.withColumn("__vn", l2_norm(F.col(vec_col)))
         .join(F.broadcast(probes), "centroid_id")
-        .join(F.broadcast(qvecs), query_id_col)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                cosine_with_norms(
-                    F.col(vec_col), F.col("__qvec"), F.col("__vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
+        .join(F.broadcast(_query_side(queries, query_id_col, vec_col)), query_id_col)
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
-    )
+    scored = _rescore(pairs, query_id_col, id_col, vec_col)
+    return _top_k(scored, k, "cosine_sim", query_id_col, id_col)
 
 
 def hnsw_ivf_topk_filtered(
@@ -458,19 +430,14 @@ def hnsw_ivf_topk_filtered(
     ``(cents, lists, corpus_count)`` — the 3rd element caches the
     corpus size so a serving call only counts the filtered ids."""
     from blazingsql_spark.functions.similarity import (
+        _index_parts,
+        _ivf_build,
         _prefilter_plan,
-        assign_to_centroids,
-        ivf_train_centroids,
     )
 
-    corpus_count = None
-    if prebuilt_ivf is not None:
-        cents, lists = prebuilt_ivf[0], prebuilt_ivf[1]
-        if len(prebuilt_ivf) > 2:
-            corpus_count = prebuilt_ivf[2]
-    else:
-        cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
-        lists = assign_to_centroids(vectors, cents, id_col, vec_col)
+    cents, lists, corpus_count = _index_parts(
+        prebuilt_ivf, 2, lambda: _ivf_build(vectors, n_centroids, dim, id_col, vec_col)
+    )
     flt_ids, n_probe = _prefilter_plan(
         vectors, filter_expr, n_probe, n_centroids,
         corpus_count, selectivity, id_col,

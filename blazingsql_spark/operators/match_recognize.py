@@ -1417,48 +1417,57 @@ def match_recognize(
 
     # The matcher is one Python stage over a key-hashed, key-sorted
     # input: each task streams its partition and calls run() once per
-    # key. Its width follows the input's size (see _PY_TASK_BYTES) and
-    # is pinned by an explicit repartition-by-num, which AQE's
-    # bytes-based coalescing leaves alone. The repartition sits under
-    # the classification, so a PREV/NEXT window over the same key rides
-    # the same exchange.
+    # key. Its width follows the size of what it ships (see
+    # _PY_TASK_BYTES) and is pinned by an explicit repartition-by-num,
+    # which AQE's bytes-based coalescing leaves alone. The repartition
+    # sits under the classification, so a PREV/NEXT window over the same
+    # key rides the same exchange.
     spark = df.sparkSession
     try:
         n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     except ValueError:  # e.g. 'auto' under AQE auto-optimized shuffle
         n_part = spark.sparkContext.defaultParallelism
+    # ONE ROW PER MATCH emits keys and measures only, so the Python stage
+    # gets just what run() reads: the keys, ORDER BY keys, flags,
+    # navigation-DEFINE columns and every column a measure names (a
+    # superset: any identifier in its text). Column pruning then reaches
+    # the scan. ALL ROWS PER MATCH ships every column.
+    named = {w for e, _ in measures for w in re.findall(r"\w+", e)}
+    keep = {
+        c.lower()
+        for c in (*partition_by, *order_cols, *aux_cols, *used_cols, *named)
+    }
+
+    def shipped(frame: DataFrame) -> DataFrame:
+        if all_rows:
+            return frame
+        return frame.select(*[c for c in frame.columns if c.lower() in keep])
+
     if partition_by:
-        width = _python_width(classify(df), n_part)
+        # sized on the bytes that reach Python, not the classified input
+        width = _python_width(shipped(classify(df)), n_part)
         coded = classify(df.repartition(width, *partition_by))
         coded = coded.sortWithinPartitions(*partition_by)
     else:
         coded = classify(df.repartition(1))
-    if not all_rows:
-        # ONE ROW PER MATCH emits keys and measures only, so the Python
-        # stage gets just what run() reads: the keys, ORDER BY keys,
-        # flags, navigation-DEFINE columns and every column a measure
-        # names (a superset: any identifier in its text). Column pruning
-        # then reaches the scan.
-        named = {w for e, _ in measures for w in re.findall(r"\w+", e)}
-        keep = {
-            c.lower()
-            for c in (*partition_by, *order_cols, *aux_cols, *used_cols, *named)
-        }
-        coded = coded.select(*[c for c in coded.columns if c.lower() in keep])
+    coded = shipped(coded)
     kernel = _per_key_kernel(run, list(partition_by), out_schema, spark)
     return coded.mapInArrow(kernel, out_schema)
 
 
-# Input bytes (Catalyst's estimate of the classified frame) per matcher
-# task. A Python task has a fixed cost of about 0.27 s CPU, measured on
+# Input bytes (Catalyst's estimate of the frame the matcher receives:
+# under ONE ROW PER MATCH the projected columns only) per matcher task.
+# A Python task has a fixed cost of about 0.27 s CPU, measured on
 # events_match_recognize: most of it is PySpark's per-task worker setup
 # (setup_spark_files calls importlib.invalidate_caches(), which re-reads
 # 16 zip directories), the rest Arrow framing. Matching costs about
-# 0.12 s per 230 KB of classified events (sf0.01, 150 keys), so a task
-# pays its fixed cost again in matching only past about 500 KB. 384 KB
-# keeps each task's matching near its fixed cost: the sf0.01 events
-# rows (224-249 KB) run in one task, and sf0.1 (2.07-2.30 MB) still
-# fills 4 cores.
+# 0.12 s per 230 KB of classified events with every column (sf0.01, 150
+# keys), so a task pays its fixed cost again in matching only past about
+# 500 KB of such input. 384 KB keeps each task's matching near its fixed
+# cost: the sf0.01 events rows run in one task (229 KB with every
+# column, 97 KB as events_match_recognize ships it), and sf0.1 (2.12 MB
+# with every column, 895 KB shipped) sizes to 6 tasks and to 3, at most
+# spark.sql.shuffle.partitions.
 _PY_TASK_BYTES = 384 << 10
 
 

@@ -145,7 +145,11 @@ def fan_out(
     per-row work is light and full-width tasks would be mostly
     scheduling overhead (VERDICT r12 #1: 32-way oversharding of a
     2k-row table probed by ~18 sequential jobs cost more than it
-    bought). On a real deployment the inputs are many files / many row
+    bought). ``rows`` there is the row count in the footer of the
+    source file ``name``, not a count of ``df``: the size-aware width
+    assumes ``df`` keeps that table's cardinality (a projection or a
+    light filter of it), and a ``df`` that aggregates or explodes the
+    table gets a width sized for the table instead. On a real deployment the inputs are many files / many row
     groups, the condition is false, and NO repartition is injected —
     the corpus is never reshuffled just to fan out. Deterministic:
     keyless repartition local-sorts its input first

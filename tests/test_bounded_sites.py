@@ -42,12 +42,9 @@ ALLOWED: dict[tuple[str, str, str], int] = {
     ("blazingsql_spark/functions/sampling.py", "dsir_log_weights", "crossJoin"): 2,  # bcast (hashed n-gram stats)
     ("blazingsql_spark/functions/sampling.py", "temperature_weights", "crossJoin"): 2,  # bcast (1-row totals)
     ("blazingsql_spark/functions/similarity.py", "_bounded_cluster_keys", "collect"): 1,  # summary (config-bounded: <= #centroids x 2^split_bits x (split_bits+1) rows, corpus-independent)
+    ("blazingsql_spark/functions/similarity.py", "_route", "crossJoin"): 1,  # bcast (k centroids; the IVF routing of ivf_topk, ivfpq_topk, ivf_int8_topk and ivf_pca_topk)
     ("blazingsql_spark/functions/similarity.py", "assign_to_centroids", "crossJoin"): 1,  # bcast (k centroids)
     ("blazingsql_spark/functions/similarity.py", "cosine_topk", "crossJoin"): 1,  # bcast (bounded query set)
-    ("blazingsql_spark/functions/similarity.py", "ivf_int8_topk", "crossJoin"): 1,  # bcast (k centroids)
-    ("blazingsql_spark/functions/similarity.py", "ivf_pca_topk", "crossJoin"): 1,  # bcast (k centroids)
-    ("blazingsql_spark/functions/similarity.py", "ivf_topk", "crossJoin"): 1,  # bcast (k centroids)
-    ("blazingsql_spark/functions/similarity.py", "ivfpq_topk", "crossJoin"): 1,  # bcast (k centroids)
     ("blazingsql_spark/functions/similarity.py", "knn_classify", "crossJoin"): 1,  # bcast (bounded probe set)
     ("blazingsql_spark/functions/similarity.py", "pq_adc_topk", "crossJoin"): 1,  # bcast (codebook)
     ("blazingsql_spark/functions/sketches.py", "cms_estimate", "collect"): 1,  # summary (w x d sketch)

@@ -2755,3 +2755,75 @@ def test_lloyd_mean_update_matches_per_column_avg(spark):
     plan = got._jdf.queryExecution().executedPlan().toString()
     # both avg() HashAggregates run inside whole-stage codegen
     assert len(re.findall(r"\*\(\d+\) HashAggregate", plan)) == 2, plan
+
+
+def test_every_topk_tier_keeps_the_serving_contract(spark):
+    """One contract over every top-k serving tier: output columns
+    (query_id, vec_id, <score>, rank), ranks 1..n contiguous per query
+    (n <= k), score descending and equal scores by ASCENDING id. The
+    corpus holds every vector three times under different ids (j,
+    100+j, 200+j) and the queries equal corpus vectors, so each tier
+    ranks exact score ties and the tie rule is exercised, not assumed.
+    Filtered tiers run with an always-true predicate."""
+    import random as _r
+
+    from blazingsql_spark.functions import similarity as S
+    from blazingsql_spark.operators.hnsw import hnsw_ivf_topk, hnsw_ivf_topk_filtered
+
+    rnd = _r.Random(17)
+    base = [[rnd.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+    rows = [(off + j, v) for off in (200, 0, 100) for j, v in enumerate(base)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = emb.filter(F.col("vec_id") % 10 == 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    k = 4
+    ivf = dict(n_centroids=4, n_probe=4, dim=8)
+    pq = dict(m=4, ksub=8, dim=8)
+    books = S.pq_train_codebooks(emb, m=4, ksub=8, dim=8)
+    encoded = S.pq_encode(emb, books, m=4, dim=8)
+    tiers = {
+        "cosine_topk": S.cosine_topk(emb, queries, k=k),
+        "ann_lsh_topk": S.ann_lsh_topk(emb, queries, k=k, dim=8, bands=4, bits_per_band=4),
+        "ann_lsh_topk_multiprobe": S.ann_lsh_topk_multiprobe(
+            emb, queries, k=k, dim=8, bands=4, bits_per_band=4
+        ),
+        "ann_lsh_topk_filtered": S.ann_lsh_topk_filtered(
+            emb, queries, "TRUE", k=k, dim=8, bands=4, bits_per_band=4
+        ),
+        "ivf_topk": S.ivf_topk(emb, queries, k=k, **ivf),
+        "ivf_topk_filtered": S.ivf_topk_filtered(emb, queries, "TRUE", k=k, **ivf),
+        "pq_adc_topk": S.pq_adc_topk(encoded, books, queries, k=k, **pq),
+        "pq_topk_reranked": S.pq_topk_reranked(emb, encoded, books, queries, k=k, **pq),
+        "pq_topk_filtered": S.pq_topk_filtered(emb, queries, "TRUE", k=k, **pq),
+        "ivfpq_topk": S.ivfpq_topk(emb, queries, k=k, n_centroids=4, n_probe=4, **pq),
+        "ivfpq_topk_filtered": S.ivfpq_topk_filtered(
+            emb, queries, "TRUE", k=k, n_centroids=4, n_probe=4, **pq
+        ),
+        "ivf_int8_topk": S.ivf_int8_topk(emb, queries, k=k, **ivf),
+        "ivf_pca_topk": S.ivf_pca_topk(
+            emb, queries, k=k, n_centroids=4, n_probe=4, pca_k=4
+        ),
+        "hnsw_ivf_topk": hnsw_ivf_topk(emb, queries, k=k, ef=16, **ivf),
+        "hnsw_ivf_topk_filtered": hnsw_ivf_topk_filtered(
+            emb, queries, "TRUE", k=k, ef=16, **ivf
+        ),
+    }
+    n_queries = queries.count()
+    for name, df in tiers.items():
+        score = df.columns[2]
+        assert df.columns == ["query_id", "vec_id", score, "rank"], (name, df.columns)
+        assert score in ("cosine_sim", "adc_sim", "int8_sim"), (name, score)
+        by_q: dict = {}
+        for r in df.collect():
+            by_q.setdefault(r.query_id, []).append(r)
+        assert len(by_q) == n_queries, name
+        ties = 0
+        for qid, rs in by_q.items():
+            rs.sort(key=lambda r: r["rank"])
+            assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1)), (name, qid)
+            assert len(rs) <= k, (name, qid)
+            order = [(-r[score], r.vec_id) for r in rs]
+            assert order == sorted(set(order)), (name, qid, order)
+            ties += sum(a[0] == b[0] for a, b in zip(order, order[1:]))
+        assert ties > 0, (name, "no equal scores ranked: the tie rule went untested")

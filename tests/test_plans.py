@@ -553,6 +553,36 @@ def test_match_recognize_width_follows_input_size(spark):
     assert _python_widths(out) == [n_part]
 
 
+def test_match_recognize_one_row_width_ignores_unread_columns(spark):
+    """Under ONE ROW PER MATCH the matcher stage is sized on the columns
+    that reach Python, so a wide column the query never reads leaves its
+    task count unchanged. ALL ROWS PER MATCH ships every column, and
+    there the same column still widens the stage."""
+    from pyspark.sql import functions as F
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+
+    narrow = spark.range(10_000).select(  # planned, never run
+        (F.col("id") % 1000).alias("user_id"),
+        F.col("id").alias("ts"),
+        F.lit("view").alias("event_type"),
+    )
+    wide = narrow.withColumn(
+        "payload", F.struct(*[F.lit("x").alias(f"p{i}") for i in range(40)])
+    )
+
+    def widths(df, all_rows):
+        return _python_widths(match_recognize(
+            df, ["user_id"], ["ts"], [("COUNT(*)", "n")], "V+",
+            {"V": "event_type = 'view'"}, all_rows=all_rows,
+        ))
+
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert widths(narrow, False) == widths(wide, False)
+    assert widths(narrow, False)[0] < n_part
+    assert widths(narrow, True)[0] < widths(wide, True)[0]
+
+
 def test_mr_nondeterministic_single_shuffle(spark):
     """r12 (VERDICT-r11 #8): the ND-assignment MATCH_RECOGNIZE row keeps
     the canonical MR plan shape — ONE hash exchange on the partition key

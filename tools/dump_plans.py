@@ -15,19 +15,43 @@ import argparse
 import os
 import re
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TESTDATA = "/root/testdata"  # fixture root, see TESTDATA.md
 
+# What changes between two dumps of the same plan: expression ids
+# (`doc_id#1234L`, `[id=#12]`), exchange plan ids, the counter Spark
+# appends to lambda variable names (`lambda x_272`), RDD ids of
+# checkpointed or Python-built leaves, and the random name of a
+# temporary directory a plan reads from.
+_VOLATILE = (
+    (re.compile(r"#\d+"), "#x"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=x]"),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_x"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[x]"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s,\]]+"), "<tmp>"),
+)
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with its run-specific ids and temp-directory names
+    replaced by fixed tokens, so two dumps of one plan compare equal and
+    a ``diff`` of two dumps shows only real plan changes."""
+    for pat, repl in _VOLATILE:
+        plan = pat.sub(repl, plan)
+    return plan
+
 
 def plan_text(df) -> str:
-    """Formatted physical plan. Control chars from plan literals (e.g.
-    match_recognize's NUL classification sentinel) are escaped so the
-    dump stays a text file."""
+    """Formatted physical plan, normalized (see normalize_plan). Control
+    chars from plan literals (e.g. match_recognize's NUL classification
+    sentinel) are escaped so the dump stays a text file."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    return "".join(ch if ch.isprintable() or ch in "\n\t" else f"\\x{ord(ch):02x}" for ch in plan)
+    plan = "".join(ch if ch.isprintable() or ch in "\n\t" else f"\\x{ord(ch):02x}" for ch in plan)
+    return normalize_plan(plan)
 
 
 def main() -> int:

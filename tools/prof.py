@@ -29,7 +29,8 @@ prints each epoch's wall seconds and Spark job count. It then dumps the
 steady-state per-batch plan of each maintainer's compute body (the
 library function the handler calls) to plans/r13/stream_<name>_plan.txt,
 where tests/test_plans.py's streaming budgets point, with its Exchange
-count.
+count. The dumps are normalized (dump_plans.normalize_plan), so a plan
+that did not change is rewritten byte for byte.
 """
 
 from __future__ import annotations
