@@ -378,7 +378,6 @@ def lsh_band_signatures(
     bits_per_band: int = 16,
     band_col: str = "band",
     sig_col: str = "band_sig",
-    vectorized: bool = True,
 ) -> DataFrame:
     """AND-OR amplified hyperplane LSH: one row per (vector, band), where
     band b's signature packs sign bits of planes [b*bits, (b+1)*bits).
@@ -393,44 +392,53 @@ def lsh_band_signatures(
     as N grows. Plane signs are md5-derived (seeded, engine-portable), so
     signatures are deterministic and differential-testable.
 
-    ``vectorized=True`` (default) computes the 64 projections in an
-    Arrow-batched pandas UDF — a numpy (rows × planes) multiply, ~1000×
-    less per-row overhead than interpreted higher-order expressions, the
-    right shape for dense linear algebra at scale. The accumulation loops
-    over dims SEQUENTIALLY so every projection is the exact left-fold the
-    SQL spelling computes — bit-identical signatures on either path.
-    ``vectorized=False`` keeps the pure-JVM expression path (no Python
-    workers required).
+    The 64 projections run in an Arrow-batched pandas UDF — a numpy
+    (rows × planes) multiply, ~1000× less per-row overhead than
+    interpreted higher-order expressions, the right shape for dense
+    linear algebra at scale. The accumulation loops over dims
+    SEQUENTIALLY so every projection is the exact left-fold the SQL
+    spelling of :func:`_lsh_band_signatures_jvm` computes — bit-identical
+    signatures on either path.
     """
+    S = np.asarray([_plane_signs(p, dim) for p in range(bands * bits_per_band)])
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def band_sigs(emb: pd.Series) -> pd.Series:
+        X = np.asarray([np.asarray(e, dtype=np.float64) for e in emb])
+        if len(X) == 0:
+            return pd.Series([], dtype=object)
+        acc = np.zeros((X.shape[0], S.shape[0]))
+        for i in range(dim):  # sequential over dims = SQL fold order
+            acc += X[:, i : i + 1] * S[:, i][None, :]
+        w = (1 << np.arange(bits_per_band)).astype(np.int64)
+        sig = (
+            ((acc >= 0.0).reshape(len(X), bands, bits_per_band) * w)
+            .sum(axis=2)
+            .astype(np.int32)
+        )
+        return pd.Series(list(sig))
+
+    return df.withColumn("__sigs", band_sigs(F.col(vec_col))).select(
+        "*", F.posexplode("__sigs").alias(band_col, sig_col)
+    ).drop("__sigs")
+
+
+def _lsh_band_signatures_jvm(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    dim: int = 64,
+    bands: int = 4,
+    bits_per_band: int = 16,
+    band_col: str = "band",
+    sig_col: str = "band_sig",
+) -> DataFrame:
+    """:func:`lsh_band_signatures` as pure-JVM expressions (no Python
+    workers): the reference its numpy path is tested against. The whole
+    plane matrix rides in one parsed SQL literal and the projections
+    come from one `transform` pass: building bands*bits separate
+    aggregate expressions (or one F.lit per plane row) costs seconds of
+    py4j/analysis time per query — measured 8 s at 4×16."""
     matrix = [_plane_signs(p, dim) for p in range(bands * bits_per_band)]
-
-    if vectorized:
-        S = np.asarray(matrix)
-
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def band_sigs(emb: pd.Series) -> pd.Series:
-            X = np.asarray([np.asarray(e, dtype=np.float64) for e in emb])
-            if len(X) == 0:
-                return pd.Series([], dtype=object)
-            acc = np.zeros((X.shape[0], S.shape[0]))
-            for i in range(dim):  # sequential over dims = SQL fold order
-                acc += X[:, i : i + 1] * S[:, i][None, :]
-            w = (1 << np.arange(bits_per_band)).astype(np.int64)
-            sig = (
-                ((acc >= 0.0).reshape(len(X), bands, bits_per_band) * w)
-                .sum(axis=2)
-                .astype(np.int32)
-            )
-            return pd.Series(list(sig))
-
-        return df.withColumn("__sigs", band_sigs(F.col(vec_col))).select(
-            "*", F.posexplode("__sigs").alias(band_col, sig_col)
-        ).drop("__sigs")
-
-    # Pure-JVM path. The whole plane matrix rides in one parsed SQL literal
-    # and the projections come from one `transform` pass: building
-    # bands*bits separate aggregate expressions (or one F.lit per plane row)
-    # costs seconds of py4j/analysis time per query — measured 8 s at 4×16.
     mat_sql = "array(" + ",".join(
         "array(" + ",".join(f"{s:.0f}D" for s in row) + ")" for row in matrix
     ) + ")"
@@ -677,7 +685,9 @@ def _ivf_build(
     vectors: DataFrame, n_centroids: int, dim: int, id_col: str, vec_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """(centroids, assigned lists) of a self-trained IVF index."""
-    cents = ivf_train_centroids(vectors, k=n_centroids, dim=dim)
+    cents = ivf_train_centroids(
+        vectors, k=n_centroids, id_col=id_col, vec_col=vec_col, dim=dim
+    )
     return cents, assign_to_centroids(vectors, cents, id_col, vec_col)
 
 
@@ -1716,7 +1726,9 @@ def semantic_dedup_keep(
             F.col(id_col), F.col(vec_col), F.lit(0).cast("long").alias("centroid_id")
         )
     else:
-        cents = ivf_train_centroids(vectors, k=n_clusters, dim=dim)
+        cents = ivf_train_centroids(
+            vectors, k=n_clusters, id_col=id_col, vec_col=vec_col, dim=dim
+        )
         assigned = assign_to_centroids(vectors, cents, id_col, vec_col)
     if max_cluster_size is not None:
         assigned = _bounded_cluster_keys(

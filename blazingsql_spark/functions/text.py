@@ -296,7 +296,6 @@ def unigram_negative_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_count: int = 1,
-    broadcast_vocab: bool = False,
 ) -> DataFrame:
     """CCNet-style language-model quality score: per-document average
     negative log-probability under an add-one-smoothed unigram LM trained
@@ -310,10 +309,8 @@ def unigram_negative_logprob(
     default: a min-count-floored vocab of a 100 TB corpus is easily 1e8+
     rows, so a mandatory broadcast hint would OOM every executor — AQE
     sees the actual post-shuffle size and broadcasts exactly when it
-    fits. Pass ``broadcast_vocab=True`` only when the caller KNOWS the
-    vocab is bounded (e.g. after a top-K cap). The only corpus-wide
-    shuffles are the vocab count (partial-aggregated) and the per-doc
-    score aggregate.
+    fits. The only corpus-wide shuffles are the vocab count
+    (partial-aggregated) and the per-doc score aggregate.
     """
     toks = (
         df.select(
@@ -327,8 +324,6 @@ def unigram_negative_logprob(
     totals = vocab_full.agg(
         F.sum("c").alias("n"), F.count("*").alias("v")
     )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     scored = (
         toks.join(vocab, "token", "left")
         .crossJoin(F.broadcast(totals))  # totals is a single row

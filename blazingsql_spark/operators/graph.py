@@ -35,7 +35,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 100,
-    algorithm: str = "star",
 ) -> DataFrame:
     """(node, component_id) for every node appearing in ``edges``, where
     component_id is the smallest node id reachable from it. Deterministic;
@@ -47,10 +46,10 @@ def connected_components(
     returning non-minimal labels (the sf0.1 full-registry gate caught
     exactly that: the measured canonicalization graph needs ~60 plain
     propagation rounds, and a silent 25-round cap produced one wrong
-    survivor). The default ``star`` algorithm converges in O(log n)
-    rounds regardless of diameter, so the cap is far from binding even
-    on a path graph (measured: a 10k-node chain converges in <15 rounds
-    vs 10k propagation rounds).
+    survivor). The star contraction (:func:`_star_components`) converges
+    in O(log n) rounds regardless of diameter, so the cap is far from
+    binding even on a path graph (measured: a 10k-node chain converges
+    in <15 rounds vs 10k rounds of :func:`_propagate_components`).
 
     Plan-size discipline (measured, not hypothetical): ``localCheckpoint``
     truncates RDD lineage but the LogicalRDD leaf KEEPS the origin plan's
@@ -62,10 +61,15 @@ def connected_components(
     additively (union / window), never join-it-to-itself; joins against
     the fixed ``sym`` table multiply by a constant factor per round,
     which stays a few hundred digits over 100 rounds — negligible."""
-    if algorithm == "star":
-        return _star_components(edges, src, dst, max_iterations)
-    if algorithm != "propagate":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    return _star_components(edges, src, dst, max_iterations)
+
+
+def _propagate_components(
+    edges: DataFrame, src: str, dst: str, max_iterations: int
+) -> DataFrame:
+    """Plain min-label propagation, one round per unit of diameter: the
+    reference that :func:`_star_components` is tested against, with
+    :func:`connected_components`' output contract and round cap."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -128,8 +132,8 @@ def _star_components(
     per round. Self-loops contribute no connectivity and are dropped from
     the contraction; nodes left with no edges (self-loop-only) are
     re-added as their own singleton components at the end, so the output
-    covers every node appearing in ``edges`` — byte-identical to the
-    ``propagate`` algorithm's contract."""
+    covers every node appearing in ``edges`` — byte-identical to
+    :func:`_propagate_components`' output."""
     wa = Window.partitionBy("a")
     nodes0 = (
         edges.select(F.col(src).alias("node"))

@@ -48,6 +48,17 @@ who type the standard spelling. Scope:
 - ``WITHIN <interval|number>`` (the Flink extension): bounds the match
   duration against the first ORDER BY key, enforced inside the scan.
 
+Standing limit: a NaN in a floating input column comes back as NULL.
+PySpark's pandas-to-Arrow conversion masks every NaN as null, so ALL
+ROWS PER MATCH returns NULL for NaN values, and ONE ROW PER MATCH
+reports a NaN PARTITION BY key as a NULL key.
+
+One front end: :func:`compile_recognizer` turns PATTERN, SUBSET,
+AFTER MATCH SKIP, WITHIN and DEFINE into a :class:`Recognizer`. This
+operator and its streaming twin (streaming/patterns.py
+``match_recognize_stream``) both run it, so batch and stream keep one
+set of semantics.
+
 SYMBOL ASSIGNMENT follows SQL:2016: a row may satisfy SEVERAL
 predicates, and the PATTERN decides the mapping in PREFERENCE order.
 Greedy quantifiers prefer consuming more, reluctant ones less, and
@@ -83,6 +94,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from blazingsql_spark.operators import mr_expr
+from blazingsql_spark.operators.mr_expr import mask_literals
 from blazingsql_spark.streaming.patterns import (
     _SKIP_PAST,
     _Nfa,
@@ -139,10 +151,10 @@ class _Measure(NamedTuple):
     prefix_inv: bool = False  # prefix-invariant (MATCH_NUMBER())
     # O(span) cumulative RUNNING evaluator: (span_pdf, span_codes,
     # match_no) -> list of len(span) prefix values, bit-identical to
-    # calling ev on every prefix (VERDICT r10 "What's wrong" #3: the
-    # per-prefix loop is O(span^2) per measure — fine for funnels, a
-    # scale killer when a greedy B* makes span ~ partition size).
-    # None -> the per-prefix fallback (property-tested equal).
+    # calling ev on every prefix (property-tested; calling ev per prefix
+    # would be O(span^2) per measure, a scale killer when a greedy B*
+    # makes span ~ partition size). None only for CLASSIFIER(), which
+    # run() evaluates per row itself.
     run_ev: object = None
 
 
@@ -220,7 +232,7 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
         # ONE ROW PER MATCH: classifier of the match's LAST row (final
         # semantics); ALL ROWS PER MATCH overrides this per-row in run().
         # Union (SUBSET) names never classify rows: keep the FIRST name
-        # per char (pattern symbols precede unions in measure_syms), so
+        # per char (pattern symbols precede SUBSET unions in the lookup), so
         # a single-member union can never shadow its symbol.
         names_by_char: dict[str, str] = {}
         for s_, c_ in sym_chars.items():
@@ -559,7 +571,7 @@ def _compile_arith_measure(
     whole expression is prefix-invariant only when every atom is, so
     RUNNING re-evaluation under ALL ROWS sees running aggregates
     inside the arithmetic, per the standard."""
-    masked = _mask_literals(expr)
+    masked = mask_literals(expr)
     tokens: list[tuple[str, object]] = []
     i = 0
     while i < len(masked):
@@ -931,7 +943,6 @@ def _physical_nav_rewrite(
     define: dict[str, str],
     partition_by: list[str] | None,
     order_by: list[str] | None,
-    allow_navigation: bool,
 ) -> tuple[dict[str, str], DataFrame, list[str]]:
     """Rewrite physical PREV(col[, n])/NEXT(col[, n]) atoms in DEFINE
     predicates to lag/lead helper columns; returns (rewritten define,
@@ -941,11 +952,6 @@ def _physical_nav_rewrite(
     def _rewrite_nav(pred_sql: str) -> str:
         def sub(m: re.Match) -> str:
             fn, col, off = m.group(1).upper(), m.group(2), int(m.group(3) or 1)
-            if not allow_navigation:
-                raise ValueError(
-                    f"MATCH_RECOGNIZE: {fn}() navigation is not supported "
-                    f"here (streaming DEFINE is row-local)"
-                )
             if col not in df.columns:
                 raise ValueError(
                     f"MATCH_RECOGNIZE: {fn}({col!r}) references an unknown "
@@ -1080,6 +1086,173 @@ def _parse_within(spec):
         ) from None
 
 
+_PHYS_NAV = re.compile(r"\b(?:PREV|NEXT)\s*\(", re.IGNORECASE)
+_SKIP = re.compile(
+    r"^\s*(?:PAST\s+LAST\s+ROW|(?P<next>TO\s+NEXT\s+ROW)"
+    r"|TO\s+(?P<fl>FIRST|LAST)\s+(?P<sym>\w+))\s*$",
+    re.IGNORECASE,
+)
+
+
+class Recognizer(NamedTuple):
+    """A compiled MATCH_RECOGNIZE front end (see :func:`compile_recognizer`)."""
+
+    sym_chars: dict[str, str]  # symbol -> its NFA char
+    symbols: dict[str, str]  # sym_chars plus SUBSET unions -> member chars
+    nfa: _Nfa
+    anchor_start: bool
+    anchor_end: bool
+    excluded_chars: frozenset  # chars of {- -} excluded symbols
+    skip: tuple  # the AFTER MATCH mode, as scan_rows takes it
+    within: object  # the WITHIN bound: None, a number or a pd.Timedelta
+    flag_define: dict[str, str]  # symbol -> Spark SQL of a flag DEFINE
+    flag_cols: dict[str, str]  # char -> its flag column, __p_<i>
+    compiled: dict[str, object]  # char -> mr_expr closure
+    used_cols: set[str]  # the columns the closures read
+    read_chars: frozenset  # the chars whose mapping the closures read
+
+    def classify(self, frame: DataFrame, partition_by=(), order_by=()):
+        """``frame`` with one boolean flag column per flag DEFINE, all in
+        one codegen projection (physical PREV/NEXT rewritten to lag/lead
+        over ``partition_by``/``order_by`` first)."""
+        vdef, out, nav_names = _physical_nav_rewrite(
+            frame, self.flag_define, partition_by, order_by
+        )
+        for s, p in vdef.items():
+            out = out.withColumn(self.flag_cols[self.sym_chars[s]], F.expr(p))
+        return out.drop(*nav_names)
+
+
+def compile_recognizer(
+    schema: T.StructType,
+    pattern: str,
+    define: dict[str, str],
+    after_match: str = "PAST LAST ROW",
+    subset: dict[str, list[str]] | None = None,
+    within: str | int | float | None = None,
+    order_key: str | None = None,
+    stream: bool = False,
+    _force_in_automaton: bool = False,
+) -> Recognizer:
+    """The one front end of :func:`match_recognize` and of the streaming
+    twin ``streaming.patterns.match_recognize_stream``: PATTERN (anchors
+    stripped, PERMUTE expanded, ``{- -}`` exclusions stripped) to symbols
+    and the NFA; SUBSET unions; AFTER MATCH SKIP; WITHIN, parsed and
+    checked against the type of ``order_key``; and DEFINE, split into
+    vectorized flag columns and symbol-relative mr_expr closures.
+
+    ``stream=True`` adds what a stream cannot do: ^/$ anchors and
+    PREV/NEXT navigation raise. Schema checks need no Spark job."""
+    import pandas as pd
+
+    pattern, anchor_start, anchor_end = _strip_anchors(pattern)
+    if stream and (anchor_start or anchor_end):
+        # loud, not the generic metacharacter error: the batch operator
+        # supports ^/$, so a migrating user deserves the real reason
+        raise ValueError(
+            "MATCH_RECOGNIZE: ^/$ partition anchors are not supported on "
+            "streams — $ needs the partition's LAST row, which an "
+            "unbounded stream never has (a $-anchored match could never "
+            "be committed: any future row invalidates it), and a "
+            "^-anchored stream degenerates to one attempt at the key's "
+            "first-ever row, which is a bounded-prefix question. Run "
+            "the batch operator over a bounded snapshot instead."
+        )
+    # expand PERMUTE first (so excluded PERMUTE arguments resolve to
+    # symbols), then strip the {- -} markers: the excluded region still
+    # matches and feeds measures; only ALL ROWS output drops its rows
+    pattern, excluded_syms = _extract_exclusions(_expand_permute(pattern))
+    names, sym_chars, nfa = compile_symbols(pattern, define)
+    # symbols is the lookup every symbol-name surface (MEASURES, DEFINE
+    # navigation, SKIP TO) resolves through
+    symbols = dict(sym_chars)
+    for uname, members in (subset or {}).items():
+        if uname in sym_chars:
+            raise ValueError(
+                f"MATCH_RECOGNIZE: SUBSET name {uname!r} collides with a "
+                f"pattern symbol"
+            )
+        if not members:
+            raise ValueError(f"MATCH_RECOGNIZE: SUBSET {uname!r} is empty")
+        for m_ in members:
+            if m_ not in sym_chars:
+                raise ValueError(
+                    f"MATCH_RECOGNIZE: SUBSET {uname!r} references unknown "
+                    f"pattern symbol {m_!r}"
+                )
+        symbols[uname] = "".join(dict.fromkeys(sym_chars[m_] for m_ in members))
+
+    m_skip = _SKIP.match(after_match)
+    if not m_skip:
+        raise ValueError(
+            f"MATCH_RECOGNIZE: unsupported {'streaming ' if stream else ''}"
+            f"AFTER MATCH SKIP {after_match!r} (supported: PAST LAST ROW, "
+            f"TO NEXT ROW, TO FIRST <sym>, TO LAST <sym>)"
+        )
+    if m_skip.group("fl"):
+        sym = m_skip.group("sym")
+        if sym not in symbols:
+            raise ValueError(
+                f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO unknown symbol {sym!r}"
+            )
+        skip = (m_skip.group("fl").lower(), symbols[sym])
+    else:
+        skip = ("next",) if m_skip.group("next") else _SKIP_PAST
+
+    within_dur = None
+    if within is not None:
+        within_dur = _parse_within(within)
+        key_t = schema[order_key].dataType
+        is_time = isinstance(
+            key_t, (T.TimestampType, T.TimestampNTZType, T.DateType)
+        )
+        if is_time != isinstance(within_dur, pd.Timedelta):
+            raise ValueError(
+                f"MATCH_RECOGNIZE: WITHIN {within!r} does not fit the order "
+                f"key {order_key!r} of type {key_t.simpleString()} — use an "
+                f"INTERVAL for timestamp/date keys and a plain number for "
+                f"numeric keys"
+            )
+
+    if stream:
+        for s, p in define.items():
+            if _PHYS_NAV.search(mask_literals(p)):
+                raise ValueError(
+                    "MATCH_RECOGNIZE: PREV()/NEXT() navigation is not "
+                    "supported on streams (physical offsets can reach rows "
+                    "outside the in-flight attempt, which bounded state no "
+                    f"longer has) — symbol {s!r}: {p!r}. FIRST/LAST and "
+                    "bare SYM.col navigation are supported."
+                )
+    # Symbols with symbol-relative navigation compile to mr_expr closures
+    # the scanner evaluates per thread; every other DEFINE becomes one
+    # boolean flag column (see Recognizer.classify).
+    compiled: dict[str, object] = {}
+    used_cols: set[str] = set()
+    read_chars: frozenset[str] = frozenset()
+    flag_define: dict[str, str] = {}
+    for s, p in define.items():
+        if _force_in_automaton or mr_expr.is_symbol_relative(p, list(symbols)):
+            closure, used = mr_expr.compile_predicate(
+                p, schema.fieldNames(), symbols
+            )
+            compiled[sym_chars[s]] = closure
+            used_cols |= used
+            read_chars |= closure.used_sym_chars
+        else:
+            flag_define[s] = p
+    return Recognizer(
+        sym_chars, symbols, nfa, anchor_start, anchor_end,
+        frozenset(sym_chars[s] for s in excluded_syms if s in sym_chars),
+        skip, within_dur, flag_define,
+        # keyed by symbol index, not char: Spark resolves columns
+        # case-insensitively, so __p_a and __p_A would collide for
+        # patterns with >26 distinct symbols
+        {sym_chars[s]: f"__p_{names.index(s)}" for s in flag_define},
+        compiled, used_cols, read_chars,
+    )
+
+
 def match_recognize(
     df: DataFrame,
     partition_by: list[str],
@@ -1148,135 +1321,36 @@ def match_recognize(
     columns."""
     import pandas as pd
 
-    define = dict(define or {})
-    # SQL:2016 {- ... -} exclusions: expand PERMUTE first (so excluded
-    # PERMUTE arguments resolve to symbols), then strip the markers —
-    # the excluded region still matches and feeds measures; its rows
-    # are dropped from ALL ROWS output below (no-op under ONE ROW)
-    pattern, anchor_start, anchor_end = _strip_anchors(pattern)
-    pattern, excluded_syms = _extract_exclusions(_expand_permute(pattern))
-    names, sym_chars, nfa = compile_symbols(pattern, define)
-    excluded_chars = frozenset(
-        sym_chars[s] for s in excluded_syms if s in sym_chars
-    )
     if unmatched and not all_rows:
         raise ValueError(
             "MATCH_RECOGNIZE: WITH UNMATCHED ROWS requires ALL ROWS PER "
             "MATCH"
         )
-    if unmatched and excluded_chars:
+    order_cols, order_asc = _parse_order_keys(list(order_by))
+    if within is not None and not order_asc[0]:
+        raise ValueError(
+            "MATCH_RECOGNIZE: WITHIN requires the first ORDER BY key "
+            "ascending (a match duration against a descending key is "
+            "ill-defined)"
+        )
+    rec = compile_recognizer(
+        df.schema, pattern, dict(define or {}), after_match, subset, within,
+        next(iter(order_cols), None), _force_in_automaton=_force_in_automaton,
+    )
+    if unmatched and rec.excluded_chars:
         raise ValueError(
             "MATCH_RECOGNIZE: {- -} exclusions cannot be combined with "
             "WITH UNMATCHED ROWS (SQL:2016 restriction — an excluded row "
             "is matched, so omitting it would be indistinguishable from "
             "an unmatched row)"
         )
-
-    # SUBSET union variables: name -> concatenation of member chars.
-    # measure_syms is the lookup every symbol-name surface (MEASURES,
-    # DEFINE navigation, SKIP TO) resolves through.
-    measure_syms = dict(sym_chars)
-    for uname, members in (subset or {}).items():
-        if uname in sym_chars:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: SUBSET name {uname!r} collides with a "
-                f"pattern symbol"
-            )
-        if not members:
-            raise ValueError(f"MATCH_RECOGNIZE: SUBSET {uname!r} is empty")
-        for m_ in members:
-            if m_ not in sym_chars:
-                raise ValueError(
-                    f"MATCH_RECOGNIZE: SUBSET {uname!r} references unknown "
-                    f"pattern symbol {m_!r}"
-                )
-        measure_syms[uname] = "".join(
-            dict.fromkeys(sym_chars[m_] for m_ in members)
-        )
-
-    m_skip = re.match(
-        r"^\s*(?:PAST\s+LAST\s+ROW|(?P<next>TO\s+NEXT\s+ROW)"
-        r"|TO\s+(?P<fl>FIRST|LAST)\s+(?P<sym>\w+))\s*$",
-        after_match,
-        re.IGNORECASE,
-    )
-    if not m_skip:
-        raise ValueError(
-            f"MATCH_RECOGNIZE: unsupported AFTER MATCH SKIP {after_match!r} "
-            f"(supported: PAST LAST ROW, TO NEXT ROW, TO FIRST <sym>, "
-            f"TO LAST <sym>)"
-        )
-    if m_skip.group("fl"):
-        sym = m_skip.group("sym")
-        if sym not in measure_syms:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO unknown symbol {sym!r}"
-            )
-        skip = (m_skip.group("fl").lower(), measure_syms[sym])
-    elif m_skip.group("next"):
-        skip = ("next",)
-    else:
-        skip = _SKIP_PAST
-
-    symrel_preds = {
-        s: p
-        for s, p in define.items()
-        if _force_in_automaton
-        or mr_expr.is_symbol_relative(p, list(measure_syms))
-    }
-    order_cols, order_asc = _parse_order_keys(list(order_by))
-    within_dur = _parse_within(within) if within is not None else None
-    if within_dur is not None:
-        if not order_asc[0]:
-            raise ValueError(
-                "MATCH_RECOGNIZE: WITHIN requires the first ORDER BY key "
-                "ascending (a match duration against a descending key is "
-                "ill-defined)"
-            )
-        key_t = df.schema[order_cols[0]].dataType
-        is_time = isinstance(
-            key_t, (T.TimestampType, T.TimestampNTZType, T.DateType)
-        )
-        if is_time != isinstance(within_dur, pd.Timedelta):
-            raise ValueError(
-                f"MATCH_RECOGNIZE: WITHIN {within!r} does not fit the "
-                f"first ORDER BY key {order_cols[0]!r} of type "
-                f"{key_t.simpleString()} — use an INTERVAL for "
-                f"timestamp/date keys and a plain number for numeric keys"
-            )
-    # Symbols with symbol-relative navigation compile to mr_expr
-    # closures the scanner evaluates per thread; every other DEFINE
-    # becomes one boolean flag column of a single codegen projection
-    # (physical PREV/NEXT rewritten to lag/lead first).
-    vec_define = {s: p for s, p in define.items() if s not in symrel_preds}
-    # keyed by symbol index, not char: Spark resolves columns
-    # case-insensitively, so __p_a and __p_A would collide for patterns
-    # with >26 distinct symbols
-    flag_cols = {sym_chars[s]: f"__p_{names.index(s)}" for s in vec_define}
-
-    def classify(frame: DataFrame) -> DataFrame:
-        vdef, out, nav_names = _physical_nav_rewrite(
-            frame, vec_define, partition_by, order_by, allow_navigation=True
-        )
-        for s, p in vdef.items():
-            out = out.withColumn(flag_cols[sym_chars[s]], F.expr(p))
-        return out.drop(*nav_names)
-
-    compiled: dict[str, object] = {}
-    used_cols: set[str] = set()
-    nav_read_chars: frozenset[str] = frozenset()
-    for s, p in symrel_preds.items():
-        closure, used = mr_expr.compile_predicate(p, df.columns, measure_syms)
-        compiled[sym_chars[s]] = closure
-        used_cols |= used
-        nav_read_chars |= closure.used_sym_chars
-    aux_cols = list(flag_cols.values())
+    aux_cols = list(rec.flag_cols.values())
 
     # partition-context holder for PREV/NEXT measures (physical
     # navigation may leave the match): run() keeps pdf/lo current
     part_ctx: dict = {"pdf": None, "lo": 0}
     parsed = [
-        _parse_measure(e, a, measure_syms, part_ctx) for e, a in measures
+        _parse_measure(e, a, rec.symbols, part_ctx) for e, a in measures
     ]
     in_schema = df.schema
     shadowed = set(in_schema.fieldNames()) if all_rows else set(partition_by)
@@ -1297,27 +1371,27 @@ def match_recognize(
             [in_schema[k] for k in partition_by]
             + [T.StructField(m_.alias, m_.ty(in_schema)) for m_ in parsed]
         )
-    names_by_char = {c: s for s, c in sym_chars.items()}
+    names_by_char = {c: s for s, c in rec.sym_chars.items()}
 
     def run(key, pdf):
         pdf = _sort_partition(pdf, order_cols, order_asc)
         part_ctx["pdf"] = pdf
         size = len(pdf)
         truth = build_truth(
-            {ch: flag_list(pdf[cn]) for ch, cn in flag_cols.items()},
-            compiled,
-            {c: pdf[c].tolist() for c in used_cols},
+            {ch: flag_list(pdf[cn]) for ch, cn in rec.flag_cols.items()},
+            rec.compiled,
+            {c: pdf[c].tolist() for c in rec.used_cols},
             size,
         )
         bound = (
-            (pdf[order_cols[0]].tolist(), within_dur)
-            if within_dur is not None
+            (pdf[order_cols[0]].tolist(), rec.within)
+            if rec.within is not None
             else None
         )
         spans, _ = scan_rows(
-            nfa, truth, size, skip=skip, within=bound,
-            anchor_start=anchor_start, anchor_end=anchor_end,
-            read_chars=nav_read_chars,
+            rec.nfa, truth, size, skip=rec.skip, within=bound,
+            anchor_start=rec.anchor_start, anchor_end=rec.anchor_end,
+            read_chars=rec.read_chars,
         )
         if all_rows:
             frames = []
@@ -1335,27 +1409,14 @@ def match_recognize(
                         m_.running or not m_.explicit_final
                     ) and not m_.prefix_inv:
                         # RUNNING — the SQL:2016 DEFAULT for unprefixed
-                        # measures under ALL ROWS PER MATCH. The compiled
-                        # run_ev evaluates all prefixes in ONE O(span)
-                        # pass (cumulative fold, bit-identical to the
-                        # per-prefix loop by construction: the FINAL
-                        # aggregate folds sequentially too); the per-
-                        # prefix O(span²) loop stays as the fallback for
-                        # any measure without one and as the property-
-                        # test reference. Only an explicit FINAL (or a
-                        # prefix-invariant MATCH_NUMBER()) takes the
-                        # constant whole-match evaluation below.
-                        if m_.run_ev is not None:
-                            vals = m_.run_ev(pdf.iloc[lo:hi], scodes, n)
-                        else:
-                            vals = [
-                                ev(
-                                    pdf.iloc[lo : lo + i + 1],
-                                    scodes[: i + 1],
-                                    n,
-                                )
-                                for i in range(hi - lo)
-                            ]
+                        # measures under ALL ROWS PER MATCH. run_ev
+                        # evaluates all prefixes in ONE O(span) pass
+                        # (cumulative fold, bit-identical to ev on each
+                        # prefix: the FINAL aggregate folds sequentially
+                        # too; property-tested). Only an explicit FINAL
+                        # (or a prefix-invariant MATCH_NUMBER()) takes
+                        # the constant whole-match evaluation below.
+                        vals = m_.run_ev(pdf.iloc[lo:hi], scodes, n)
                     else:
                         vals = ev(pdf.iloc[lo:hi], scodes, n)
                     # object dtype like the ONE ROW branch: a None among
@@ -1367,10 +1428,10 @@ def match_recognize(
                     span = span.assign(
                         **{a: pd.Series(col, dtype=object, index=span.index)}
                     )
-                if excluded_chars:
+                if rec.excluded_chars:
                     # {- -}: excluded rows fed the match and the measures
                     # above; they just never reach the output
-                    span = span[[c not in excluded_chars for c in scodes]]
+                    span = span[[c not in rec.excluded_chars for c in scodes]]
                 frames.append(span)
             if unmatched:
                 # WITH UNMATCHED ROWS: rows in NO match come back with
@@ -1435,13 +1496,16 @@ def match_recognize(
     named = {w for e, _ in measures for w in re.findall(r"\w+", e)}
     keep = {
         c.lower()
-        for c in (*partition_by, *order_cols, *aux_cols, *used_cols, *named)
+        for c in (*partition_by, *order_cols, *aux_cols, *rec.used_cols, *named)
     }
 
     def shipped(frame: DataFrame) -> DataFrame:
         if all_rows:
             return frame
         return frame.select(*[c for c in frame.columns if c.lower() in keep])
+
+    def classify(frame: DataFrame) -> DataFrame:
+        return rec.classify(frame, partition_by, order_by)
 
     if partition_by:
         # sized on the bytes that reach Python, not the classified input
@@ -1655,35 +1719,9 @@ _CLAUSE = re.compile(
 )
 
 
-def _mask_literals(s: str) -> str:
-    """Same-length copy with the CONTENTS of SQL string literals
-    ('single', with '' escapes, and "double") blanked to spaces, so
-    positional regex/paren scans never trip on quoted text. Positions
-    map 1:1 back to the original."""
-    out = list(s)
-    i, n = 0, len(s)
-    while i < n:
-        q = s[i]
-        if q in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if s[j] == q:
-                    if q == "'" and j + 1 < n and s[j + 1] == "'":
-                        j += 2  # '' escape inside a single-quoted literal
-                        continue
-                    break
-                j += 1
-            for k in range(i + 1, min(j, n)):
-                out[k] = " "
-            i = j + 1
-        else:
-            i += 1
-    return "".join(out)
-
-
 def _split_top(s: str, sep: str = ",") -> list[str]:
     """Split on `sep` outside parentheses AND string literals."""
-    masked = _mask_literals(s)
+    masked = mask_literals(s)
     out, depth, start = [], 0, 0
     for i, ch in enumerate(masked):
         if ch == "(":
@@ -1838,7 +1876,7 @@ def _prepend_visible_ctes(
     visible = [(nm, txt) for nm, txt, end in items if end <= factor_start]
     if not visible:
         return sub_sql
-    sub_masked = _mask_literals(sub_sql)
+    sub_masked = mask_literals(sub_sql)
     inner = re.match(r"\s*WITH\s+(RECURSIVE\s+)?", sub_masked, re.IGNORECASE)
     if inner:
         _, inner_items = _leading_ctes(sub_masked, sub_sql)
@@ -1865,7 +1903,7 @@ _AS_KW = re.compile(r"\sAS\s", re.IGNORECASE)
 def _split_as(item: str) -> tuple[str, str]:
     """Split `expr AS alias` on the LAST top-level AS keyword (outside
     parens and literals); returns ('', '') when no AS is present."""
-    masked = _mask_literals(item)
+    masked = mask_literals(item)
     last = None
     for m in _AS_KW.finditer(masked):
         d = masked[: m.start()].count("(") - masked[: m.start()].count(")")
@@ -1893,7 +1931,7 @@ def rewrite_match_recognize(spark, query: str) -> str:
     import uuid
 
     while True:
-        masked = _mask_literals(query)
+        masked = mask_literals(query)
         head = _MR_KW.search(masked)
         if head is None:
             return query
@@ -1913,7 +1951,7 @@ def rewrite_match_recognize(spark, query: str) -> str:
         if depth:
             raise ValueError("MATCH_RECOGNIZE: unbalanced parentheses")
         body = query[head.end() : i - 1].strip()
-        m = _CLAUSE.match(_mask_literals(body))
+        m = _CLAUSE.match(mask_literals(body))
         if m is None:
             raise ValueError(
                 "MATCH_RECOGNIZE: expected PARTITION BY … ORDER BY … "
@@ -1951,7 +1989,7 @@ def rewrite_match_recognize(spark, query: str) -> str:
                 # DEFINE splits on the FIRST AS: the symbol is a bare
                 # identifier, the predicate may itself contain AS-free
                 # text and literals
-                masked_item = _mask_literals(item)
+                masked_item = mask_literals(item)
                 kw = _AS_KW.search(masked_item)
                 if kw is None:
                     raise ValueError(

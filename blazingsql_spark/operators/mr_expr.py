@@ -566,19 +566,13 @@ def compile_predicate(sql: str, columns: list[str], sym_chars: dict[str, str]):
     return closure, used
 
 
-_SYMREL_NAV = re.compile(
-    r"\b(?:PREV|NEXT|FIRST|LAST)\s*\(", re.IGNORECASE
-)
-
-
 def is_symbol_relative(pred_sql: str, names: list[str]) -> bool:
     """True when a DEFINE predicate needs per-thread evaluation in the
-    scan: it
-    contains FIRST/LAST navigation (running-semantics by definition), a
-    symbol-qualified reference ``SYM.col``, or a symbol-qualified
-    PREV/NEXT. Plain ``PREV(col)``/``NEXT(col)`` stay on the vectorized
-    physical lag/lead path."""
-    masked = _mask(pred_sql)
+    scan: it contains FIRST/LAST navigation (running-semantics by
+    definition), a symbol-qualified reference ``SYM.col``, or a
+    symbol-qualified PREV/NEXT. Plain ``PREV(col)``/``NEXT(col)`` stay on
+    the vectorized physical lag/lead path."""
+    masked = mask_literals(pred_sql)
     if re.search(r"\b(?:FIRST|LAST)\s*\(", masked, re.IGNORECASE):
         return True
     for s in names:
@@ -587,13 +581,13 @@ def is_symbol_relative(pred_sql: str, names: list[str]) -> bool:
     return False
 
 
-def _mask(s: str) -> str:
-    """Blank string-literal contents (keeps positions) so symbol scans
-    never trip on quoted text — BOTH quote styles, matching
-    match_recognize._mask_literals (Spark SQL also treats "double
-    quoted" text as a string literal, so an unmasked "B.x" would
-    false-positive the symbol-relative detector and misroute a
-    vectorized DEFINE into this grammar)."""
+def mask_literals(s: str) -> str:
+    """Same-length copy of ``s`` with the CONTENTS of SQL string
+    literals ('single', with '' escapes, and "double" — Spark SQL reads
+    both as strings) blanked to spaces, so positional regex and paren
+    scans never trip on quoted text: an unmasked "B.x" would make the
+    symbol-relative check misroute a vectorized DEFINE into this
+    grammar. Positions map 1:1 back to the original."""
     out = list(s)
     i, n = 0, len(s)
     while i < n:

@@ -16,12 +16,8 @@ cents summed as BIGINT (float sums are order-dependent across engines;
 integer sums are associative), and dates rendered as ISO strings. Every
 column aliased identically in both dialects; CAST(... AS BIGINT) on every
 DuckDB SUM (HUGEINT otherwise — the driver hash is dtype-sensitive).
-
-STAGED for round 6: the round-5 registration freeze (VERDICT r4 #2) holds
-until the 47-query backlog drains, so this module is NOT in
-registry._QUERY_MODULES yet. r6 flips it on by adding
-"blazingsql_spark.queries.formats" there — the module self-registers on
-import like every other query module.
+The module is in registry._QUERY_MODULES and self-registers on import
+like every other query module.
 """
 
 from __future__ import annotations

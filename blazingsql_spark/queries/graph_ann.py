@@ -1,8 +1,11 @@
-"""sim_ann_hnsw — recall-gated registry row for the HNSW graph ANN tier
-(operators.hnsw), completing the ANN family list (LSH / IVF / PQ / IVF-PQ
-/ graph).
+"""Registry rows for the graph ANN tier, the filtered-serving facades,
+the MATCH_RECOGNIZE surface (``events_match_recognize`` and the
+``events_mr_*`` rows), sketches and negative sampling. This module is in
+``registry._QUERY_MODULES`` like every other query module.
 
-Same oracle shape as sim_ann_ivfpq: the graph/codebook contents aren't
+sim_ann_hnsw is the recall-gated row for the HNSW graph ANN tier
+(operators.hnsw), completing the ANN family list (LSH / IVF / PQ / IVF-PQ
+/ graph). Same oracle shape as sim_ann_ivfpq: the graph/codebook contents aren't
 SQL-expressible, but recall@5 vs the exact top-k is deterministic
 end-to-end (seeded level RNG, id tiebreaks everywhere, md5-seeded k-means
 landmarks) so the driver-comparable output is a thresholded boolean the
@@ -10,9 +13,6 @@ DuckDB oracle asserts TRUE. ef is set >= n_centroids, which makes the
 coarse probe EXACT (tests/test_hnsw.py proves row-for-row equality with
 ivf_topk then), so measured recall here equals the IVF tier's .64-.84 —
 threshold 0.6 holds with the same margin.
-
-STAGED for round 6: not in registry._QUERY_MODULES until the round-5
-window freeze lifts (same staging discipline as queries/formats.py).
 """
 
 from __future__ import annotations

@@ -168,18 +168,15 @@ def enrich_stream(
     dim: DataFrame,
     on: str,
     how: str = "left",
-    broadcast_dim: bool = False,
 ) -> DataFrame:
     """Stream-static enrichment: join a streaming DataFrame against a batch
     dimension table. Spark re-plans the static side per micro-batch (so
     dimension updates are picked up); with the dimension under the
     broadcast threshold the join is stateless — no streaming state at all.
-    The planner chooses the strategy from the static side's size estimate;
-    pass ``broadcast_dim=True`` to force the hint only when the caller
-    KNOWS the dimension is bounded (a mandatory hint on an arbitrary
-    caller-provided table is the OOM hazard class removed in round 4)."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return events.join(d, on, how)
+    The planner chooses the strategy from the static side's size estimate
+    (a mandatory broadcast hint on an arbitrary caller-provided table
+    would be an executor OOM hazard)."""
+    return events.join(dim, on, how)
 
 
 def stream_stream_join(

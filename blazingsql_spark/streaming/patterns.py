@@ -16,11 +16,16 @@ overrides it. That is ``re.finditer``'s leftmost-first discipline, so
 ``re`` is the oracle for every pattern (property-tested). Every route
 runs through this scanner: the batch MATCH_RECOGNIZE operator
 (operators/match_recognize.py), and :class:`StreamMatcher` behind the
-three streaming entry points below.
+two streaming operators below. ``match_recognize_stream`` compiles its
+PATTERN/DEFINE/SKIP/WITHIN with the batch operator's own front end,
+``match_recognize.compile_recognizer``.
 
-Streaming state is bounded. A key's state is ``(n_matches, longest,
-carry)``, where ``carry`` holds only the rows of the in-flight match
-attempt. That suffix is bounded by the longest single match the pattern
+Streaming state is bounded, and both operators keep it in one format
+through one update function: a key's state is its counts (matches,
+longest match, rows seen, aborted attempts) and its pickled ``carry``,
+the rows of the in-flight match attempt only — a code string for
+``pattern_match_stream``, row tuples for ``match_recognize_stream``.
+That suffix is bounded by the longest single match the pattern
 can absorb, which an adversarial stream can grow without limit (an
 endless click run under ``vc+p``). ``max_carry`` therefore caps it: an
 attempt whose carry exceeds the cap is aborted (carry dropped,
@@ -452,12 +457,6 @@ def char_truth(text: str):
     return lambda j, pos, ch, tent: text[j] == ch
 
 
-def mask_truth(sym_bits: dict[str, int]):
-    """Truth over per-row bitmasks: row ``j`` satisfies every symbol
-    whose bit ``sym_bits[ch]`` is set in ``masks[j]``."""
-    return lambda masks: lambda j, pos, ch, tent: masks[j] & sym_bits[ch]
-
-
 class StreamMatcher:
     """:func:`scan_rows` fed incrementally, for one key of a stream.
 
@@ -465,8 +464,8 @@ class StreamMatcher:
     ``(n_matches, longest)`` *as if the stream ended now* without
     disturbing the in-flight attempt. Rows are any sliceable sequence
     that ``+`` concatenates: a code string (the default,
-    :func:`char_truth`), a list of bitmasks (:func:`mask_truth`), or a
-    list of row tuples. ``truth_of(rows)`` builds the scanner's truth
+    :func:`char_truth`) or a list of row tuples. ``truth_of(rows)``
+    builds the scanner's truth
     over one such sequence, and ``within_of(rows)`` its WITHIN bound.
     ``carry`` is the in-flight attempt's rows, the state-store payload,
     capped at ``max_carry`` rows: an attempt that outgrows the cap is
@@ -543,15 +542,59 @@ _OUT_SCHEMA = T.StructType(
         T.StructField("n_aborted", T.LongType()),
     ]
 )
+# a key's state: its counts and the pickled carry, written and read only
+# by _stream_totals. The carry sits third as a binary field, so a
+# checkpoint of an earlier layout (a string carry, or a binary carry
+# last) fails Spark's state schema check at restart instead of handing
+# a carry of another format to this update.
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("n_matches", T.LongType()),
         T.StructField("longest", T.LongType()),
-        T.StructField("carry", T.StringType()),
+        T.StructField("carry", T.BinaryType()),
         T.StructField("n_codes", T.LongType()),
         T.StructField("n_aborted", T.LongType()),
     ]
 )
+
+
+def _stream_totals(frame: DataFrame, order: list[str], rows_of, **matcher):
+    """The update every stream here runs, per ``user_id`` of ``frame``:
+    load the key's state, sort the micro-batch by ``order``, feed
+    ``rows_of(batch)`` to a :class:`StreamMatcher` built from ``matcher``,
+    save the counts and the carry, and emit the snapshot row."""
+    import pickle  # noqa: PLC0415
+
+    import pandas as pd  # noqa: PLC0415
+
+    StreamMatcher(**matcher)  # validate eagerly on the driver
+
+    def update(key, pdfs, state):
+        m = StreamMatcher(**matcher)
+        seen = 0
+        if state.exists:
+            m.n_matches, m.longest, blob, seen, m.n_aborted = state.get
+            m.carry = pickle.loads(bytes(blob))
+        batch = pd.concat(list(pdfs)).sort_values(order)
+        m.feed(rows_of(batch))
+        seen += len(batch)
+        state.update(
+            (m.n_matches, m.longest, pickle.dumps(m.carry), seen, m.n_aborted)
+        )
+        n_fin, longest_fin = m.snapshot()
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_matches": [n_fin],
+                "longest_match": [longest_fin],
+                "n_codes": [seen],
+                "n_aborted": [m.n_aborted],
+            }
+        )
+
+    return frame.groupBy("user_id").applyInPandasWithState(
+        update, _OUT_SCHEMA, _STATE_SCHEMA, "update", "NoTimeout"
+    )
 
 
 def pattern_match_stream(
@@ -569,44 +612,20 @@ def pattern_match_stream(
     (use the max-n_codes row per user as the final answer in
     at-least-once sinks). ``n_aborted`` counts in-flight attempts dropped
     by the ``max_carry`` state cap — nonzero means some matches may have
-    been undercounted to keep state bounded.
+    been undercounted to keep state bounded. The carry is the in-flight
+    attempt's code string.
     """
-    import pandas as pd  # noqa: PLC0415
-
     cmap = dict(code_map or DEFAULT_CODE_MAP)
-    nfa = compile_pattern(pattern)  # validate eagerly on the driver
-    if max_carry < 1:
-        raise ValueError(f"max_carry must be >= 1, got {max_carry}")
 
-    def update(key, pdfs, state):
-        (user_id,) = key
-        if state.exists:
-            n0, longest0, carry0, seen0, aborted0 = state.get
-        else:
-            n0, longest0, carry0, seen0, aborted0 = 0, 0, "", 0, 0
-        chunks = [pdf[["ts", "event_id", "event_type"]] for pdf in pdfs]
-        batch = pd.concat(chunks).sort_values(["ts", "event_id"])
-        codes = "".join(batch["event_type"].map(lambda t: cmap.get(t, default_code)))
-        m = StreamMatcher(
-            nfa, n_matches=n0, longest=longest0, carry=carry0,
-            max_carry=max_carry, n_aborted=aborted0,
-        )
-        m.feed(codes)
-        seen = seen0 + len(batch)
-        state.update((m.n_matches, m.longest, m.carry, seen, m.n_aborted))
-        n_fin, longest_fin = m.snapshot()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_matches": [n_fin],
-                "longest_match": [longest_fin],
-                "n_codes": [seen],
-                "n_aborted": [m.n_aborted],
-            }
+    def codes(batch):
+        return "".join(
+            batch["event_type"].map(lambda t: cmap.get(t, default_code))
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        update, _OUT_SCHEMA, _STATE_SCHEMA, "update", "NoTimeout"
+    return _stream_totals(
+        events.select("user_id", "ts", "event_id", "event_type"),
+        ["ts", "event_id"], codes,
+        nfa=compile_pattern(pattern), max_carry=max_carry,
     )
 
 
@@ -622,339 +641,85 @@ def match_recognize_stream(
     after_match: str = "PAST LAST ROW",
 ) -> DataFrame:
     """Streaming MATCH_RECOGNIZE summary — the incremental twin of
-    operators.match_recognize for its ONE-ROW-PER-MATCH aggregate form,
-    run by :class:`StreamMatcher` over each key's rows with the batch
+    operators.match_recognize for its ONE-ROW-PER-MATCH aggregate form.
+    PATTERN, DEFINE, ``after_match`` and ``within`` compile through the
+    batch operator's own front end (``compile_recognizer``), and
+    :class:`StreamMatcher` runs each key's rows through the batch
     operator's scanner and preference order.
-
-    Without symbol-relative navigation or WITHIN, one codegen projection
-    evaluates every DEFINE into a per-row truth BITMASK (a row may
-    satisfy several symbols; undefined symbols' bits are always set),
-    and the carry is the in-flight attempt's masks. PREV/NEXT are
-    rejected: a stream has no ordered partition to lag over.
-    ``after_match`` is 'PAST LAST ROW' (default), 'TO NEXT ROW', or 'TO
-    FIRST/LAST <sym>', with the batch operator's SQL:2016 runtime
-    errors.
 
     Emits one (key, n_matches, longest_match, n_codes, n_aborted) row
     per key per micro-batch with the totals the batch operator would
     report on the prefix seen so far — the same contract, state bound,
     and ``max_carry`` abort discipline as pattern_match_stream.
     MEASURES are not part of this surface: emission is a count and a
-    length per match. ^/$ anchors are rejected loudly below.
+    length per match. ^/$ anchors raise (a stream has no last row), and
+    so does PREV/NEXT navigation: a stream has no ordered partition to
+    lag over, and physical offsets can reach rows the bounded state no
+    longer has. ``after_match`` is 'PAST LAST ROW' (default), 'TO NEXT
+    ROW', or 'TO FIRST/LAST <sym>', with the batch operator's SQL:2016
+    runtime errors.
 
-    SYMBOL-RELATIVE navigation in DEFINE (``FIRST(V.ts)``,
-    ``LAST(B.x, n)``, bare ``A.col``) is supported on streams too: those
-    references only ever name rows of the CURRENT match attempt, which
-    is exactly the suffix the carry persists. The carry then stores row
-    VALUES (the nav-referenced columns and the vectorized symbols'
-    flags), bounded by the same ``max_carry`` row cap.
+    Vectorized DEFINEs become flag columns of one codegen projection.
+    SYMBOL-RELATIVE navigation (``FIRST(V.ts)``, ``LAST(B.x, n)``, bare
+    ``A.col``) is supported too: those references only ever name rows of
+    the CURRENT match attempt, which is exactly the suffix the carry
+    persists. Whatever the DEFINEs, the carry is the in-flight attempt's
+    rows as tuples: the order key ``ts_col``, the columns the navigation
+    DEFINEs read, then the flags, bounded by the ``max_carry`` row cap.
 
     ``within`` bounds the match DURATION like the batch operator (the
     Flink extension): a row whose ``ts_col`` exceeds the attempt's
     first row by more than the bound ends the attempt (the accepted
-    prefix still emits). A WITHIN stream also carries row values (the
-    ts of every in-flight row must persist across micro-batches). The
-    bound's type is checked against ``ts_col`` at plan time (interval
-    for timestamps, plain number for numeric keys).
+    prefix still emits). The bound's type is checked against ``ts_col``
+    at plan time (interval for timestamps, plain number for numeric
+    keys).
 
     Cross-batch order contract: per-key rows must arrive in (ts, id)
     order across micro-batches (within a batch they are sorted), same
     as every stateful twin here."""
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from blazingsql_spark.operators import mr_expr
-    from blazingsql_spark.operators.match_recognize import (
-        _expand_permute,
-        _extract_exclusions,
-        _parse_within,
-        _strip_anchors,
-        compile_symbols,
-    )
-
-    define = dict(define or {})
-    pattern, anchor_start, anchor_end = _strip_anchors(pattern)
-    if anchor_start or anchor_end:
-        # loud, not the generic metacharacter error: the batch
-        # operator supports ^/$, so a migrating user
-        # deserves the real reason streams cannot
-        raise ValueError(
-            "MATCH_RECOGNIZE: ^/$ partition anchors are not supported on "
-            "streams — $ needs the partition's LAST row, which an "
-            "unbounded stream never has (a $-anchored match could never "
-            "be committed: any future row invalidates it), and a "
-            "^-anchored stream degenerates to one attempt at the key's "
-            "first-ever row, which is a bounded-prefix question. Run "
-            "the batch operator over a bounded snapshot instead."
-        )
-    am = re.match(
-        r"^\s*(?:PAST\s+LAST\s+ROW|(?P<next>TO\s+NEXT\s+ROW)"
-        r"|TO\s+(?P<fl>FIRST|LAST)\s+(?P<flsym>\w+))\s*$",
-        after_match, re.IGNORECASE,
-    )
-    if not am:
-        raise ValueError(
-            f"MATCH_RECOGNIZE: unsupported streaming AFTER MATCH SKIP "
-            f"{after_match!r} (streams support PAST LAST ROW, TO NEXT "
-            f"ROW, and TO FIRST/LAST <sym>)"
-        )
-    # {- -} exclusions only affect ALL ROWS row output, which this
-    # summary form never emits — strip them so the pattern compiles
-    # (leaving the braces in would make them literal NFA characters no
-    # row code can equal: silent zero matches forever)
-    pattern, _ = _extract_exclusions(_expand_permute(pattern))
-    names, sym_chars, nfa = compile_symbols(pattern, define)
-    skip = ("next",) if am.group("next") else _SKIP_PAST
-    if am.group("fl"):
-        flsym = am.group("flsym")
-        if flsym not in sym_chars:
-            raise ValueError(
-                f"MATCH_RECOGNIZE: AFTER MATCH SKIP TO unknown symbol "
-                f"{flsym!r}"
-            )
-        skip = (am.group("fl").lower(), sym_chars[flsym])
-    if max_carry < 1:
-        raise ValueError(f"max_carry must be >= 1, got {max_carry}")
-    symrel = {
-        s: p for s, p in define.items()
-        if mr_expr.is_symbol_relative(p, names)
-    }
-    within_dur = None
-    if within is not None:
-        within_dur = _parse_within(within)
-        is_time = isinstance(
-            events.schema[ts_col].dataType,
-            (T.TimestampType, T.TimestampNTZType, T.DateType),
-        )
-        if is_time != isinstance(within_dur, pd.Timedelta):
-            raise ValueError(
-                f"MATCH_RECOGNIZE: WITHIN {within!r} does not fit the "
-                f"order key {ts_col!r} "
-                f"({events.schema[ts_col].dataType.simpleString()}) — "
-                f"use an interval for timestamps, a number for numerics"
-            )
-    if symrel or within_dur is not None:
-        return _match_recognize_stream_nav(
-            events, key_col, ts_col, id_col, define, symrel,
-            names, sym_chars, nfa, max_carry, within_dur, skip,
-        )
-    # Symbol alphabet is capped at 52, so the mask always fits a LongType
-    sym_bits = {sym_chars[s]: 1 << i for i, s in enumerate(names)}
-    undef_const = 0
-    mask_expr = None
-    for s in names:
-        if s in define:
-            if _PHYS_NAV.search(mr_expr._mask(define[s])):
-                raise ValueError(
-                    f"MATCH_RECOGNIZE: PREV()/NEXT() navigation is not "
-                    f"supported here (streaming DEFINE is row-local) — "
-                    f"symbol {s!r}: {define[s]!r}"
-                )
-            term = F.when(
-                F.expr(define[s]), F.lit(sym_bits[sym_chars[s]])
-            ).otherwise(F.lit(0))
-            mask_expr = term if mask_expr is None else mask_expr + term
-        else:
-            undef_const |= sym_bits[sym_chars[s]]
-    mask_expr = (
-        F.lit(undef_const)
-        if mask_expr is None
-        else mask_expr + F.lit(undef_const)
-    )
-    coded = events.select(
-        F.col(key_col).alias("user_id"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).alias("event_id"),
-        mask_expr.cast("long").alias("__mask"),
-    )
-
-    def update(key, pdfs, state):
-        (user_id,) = key
-        if state.exists:
-            n0, longest0, blob, seen0, aborted0 = state.get
-            carry0 = (
-                [int(x) for x in blob.split(",")] if blob else []
-            )
-        else:
-            n0, longest0, carry0, seen0, aborted0 = 0, 0, [], 0, 0
-        chunks = [pdf[["ts", "event_id", "__mask"]] for pdf in pdfs]
-        batch = pd.concat(chunks).sort_values(["ts", "event_id"])
-        m = StreamMatcher(
-            nfa, mask_truth(sym_bits), n0, longest0, carry0,
-            max_carry=max_carry, n_aborted=aborted0, skip=skip,
-        )
-        m.feed([int(x) for x in batch["__mask"]])
-        seen = seen0 + len(batch)
-        state.update((
-            m.n_matches, m.longest,
-            ",".join(str(x) for x in m.carry), seen, m.n_aborted,
-        ))
-        n_fin, longest_fin = m.snapshot()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_matches": [n_fin],
-                "longest_match": [longest_fin],
-                "n_codes": [seen],
-                "n_aborted": [m.n_aborted],
-            }
-        )
-
-    return coded.groupBy("user_id").applyInPandasWithState(
-        update, _OUT_SCHEMA, _STATE_SCHEMA, "update", "NoTimeout"
-    )
-
-
-_NAV_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_matches", T.LongType()),
-        T.StructField("longest", T.LongType()),
-        T.StructField("n_codes", T.LongType()),
-        T.StructField("n_aborted", T.LongType()),
-        T.StructField("carry", T.BinaryType()),
-    ]
-)
-
-_PHYS_NAV = re.compile(r"\b(?:PREV|NEXT)\s*\(", re.IGNORECASE)
-
-
-def _match_recognize_stream_nav(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    id_col: str,
-    define: dict[str, str],
-    symrel: dict[str, str],
-    names: list[str],
-    sym_chars: dict[str, str],
-    nfa,
-    max_carry: int,
-    within_dur,
-    skip,
-) -> DataFrame:
-    """Symbol-relative streaming twin (see match_recognize_stream's
-    docstring): the carry persists the in-flight attempt's ROWS (nav
-    column values + vectorized flags, pickled — state-store internal,
-    never crosses process versions within a run), so the scanner replays
-    the attempt exactly when the next micro-batch arrives.
-    FIRST/LAST/bare-SYM.col only: those resolve inside the attempt by
-    construction. PREV/NEXT (physical offsets) are rejected loudly."""
-    import pickle  # noqa: PLC0415
-
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    from blazingsql_spark.operators import mr_expr
     from blazingsql_spark.operators.match_recognize import (
         build_truth,
+        compile_recognizer,
         flag_list,
     )
 
-    compiled: dict[str, object] = {}
-    used_cols: set[str] = set()
-    for s, p in symrel.items():
-        if _PHYS_NAV.search(mr_expr._mask(p)):
-            raise ValueError(
-                "MATCH_RECOGNIZE: PREV()/NEXT() navigation is not "
-                "supported on streams (physical offsets can reach rows "
-                "outside the in-flight attempt, which bounded state no "
-                f"longer has) — symbol {s!r}: {p!r}. FIRST/LAST and bare "
-                "SYM.col navigation are supported."
-            )
-        closure, used = mr_expr.compile_predicate(p, events.columns, sym_chars)
-        compiled[sym_chars[s]] = closure
-        used_cols |= used
-    nav_read_chars = frozenset().union(
-        *(c.used_sym_chars for c in compiled.values())
+    rec = compile_recognizer(
+        events.schema, pattern, dict(define or {}), after_match,
+        within=within, order_key=ts_col, stream=True,
     )
-
-    flag_cols: dict[str, str] = {}
-    coded = events
-    for s, p in define.items():
-        if s in symrel:
-            continue
-        if _PHYS_NAV.search(mr_expr._mask(p)):
-            raise ValueError(
-                f"MATCH_RECOGNIZE: PREV()/NEXT() navigation is not "
-                f"supported here (streaming DEFINE is row-local) — "
-                f"symbol {s!r}: {p!r}"
-            )
-        # index-keyed like the batch operator: Spark column names are
-        # case-insensitive, so char-keyed __p_a/__p_A would collide
-        cname = f"__p_{names.index(s)}"
-        coded = coded.withColumn(cname, F.expr(p))
-        flag_cols[sym_chars[s]] = cname
-
-    val_cols = sorted(used_cols | {ts_col, id_col})
-    coded = coded.select(
-        F.col(key_col).alias("user_id"), *val_cols, *flag_cols.values()
-    )
+    val_cols = sorted(rec.used_cols | {ts_col})
     n_vals = len(val_cols)
+    coded = rec.classify(events).select(
+        F.col(key_col).alias("user_id"),
+        *dict.fromkeys([ts_col, id_col, *val_cols]),
+        *rec.flag_cols.values(),
+    )
 
-    # the matcher's rows are tuples (*values, *flags) in val_cols then
-    # flag_cols order; the state blob stays column-wise
-    def columns(rows):
-        return list(zip(*rows)) or [()] * (n_vals + len(flag_cols))
+    def rows_of(batch):
+        return list(zip(
+            *(batch[c].tolist() for c in val_cols),
+            *(flag_list(batch[c]) for c in rec.flag_cols.values()),
+        ))
 
     def truth_of(rows):
-        cols = columns(rows)
+        cols = list(zip(*rows))
         return build_truth(
-            dict(zip(flag_cols, cols[n_vals:])),
-            compiled,
+            dict(zip(rec.flag_cols, cols[n_vals:])),
+            rec.compiled,
             dict(zip(val_cols, cols)),
             len(rows),
         )
 
-    within_of = None
-    if within_dur is not None:
-        ts_at = val_cols.index(ts_col)
+    ts_at = val_cols.index(ts_col)
 
-        def within_of(rows):
-            return [r[ts_at] for r in rows], within_dur
+    def within_of(rows):
+        return [r[ts_at] for r in rows], rec.within
 
-    def update(key, pdfs, state):
-        (user_id,) = key
-        rows0: list[tuple] = []
-        if state.exists:
-            n0, longest0, seen0, aborted0, blob = state.get
-            if blob:
-                carry = pickle.loads(bytes(blob))
-                rows0 = list(zip(
-                    *(carry["cols"][c] for c in val_cols),
-                    *(carry["flags"][ch] for ch in flag_cols),
-                ))
-        else:
-            n0, longest0, seen0, aborted0 = 0, 0, 0, 0
-        batch = pd.concat(list(pdfs)).sort_values([ts_col, id_col])
-        m = StreamMatcher(
-            nfa, truth_of, n0, longest0, rows0, max_carry=max_carry,
-            n_aborted=aborted0, skip=skip, read_chars=nav_read_chars,
-            within_of=within_of,
-        )
-        m.feed(list(zip(
-            *(batch[c].tolist() for c in val_cols),
-            *(flag_list(batch[cn]) for cn in flag_cols.values()),
-        )))
-        blob = None
-        if m.carry:
-            cols = [list(c) for c in columns(m.carry)]
-            blob = pickle.dumps({
-                "cols": dict(zip(val_cols, cols)),
-                "flags": dict(zip(flag_cols, cols[n_vals:])),
-            })
-        seen = seen0 + len(batch)
-        state.update((m.n_matches, m.longest, seen, m.n_aborted, blob))
-        n_fin, longest_fin = m.snapshot()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_matches": [n_fin],
-                "longest_match": [longest_fin],
-                "n_codes": [seen],
-                "n_aborted": [m.n_aborted],
-            }
-        )
-
-    return coded.groupBy("user_id").applyInPandasWithState(
-        update, _OUT_SCHEMA, _NAV_STATE_SCHEMA, "update", "NoTimeout"
+    return _stream_totals(
+        coded, [ts_col, id_col], rows_of,
+        nfa=rec.nfa, truth_of=truth_of, carry=[], max_carry=max_carry,
+        skip=rec.skip, read_chars=rec.read_chars,
+        within_of=within_of if rec.within is not None else None,
     )

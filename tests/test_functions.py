@@ -196,13 +196,13 @@ def test_lsh_band_signature_paths_identical(spark):
     emb = load_table(spark, SF, "embeddings")
     fast = {
         (r.vec_id, r.band): r.band_sig
-        for r in similarity.lsh_band_signatures(emb, vectorized=True)
+        for r in similarity.lsh_band_signatures(emb)
         .select("vec_id", "band", "band_sig")
         .collect()
     }
     jvm = {
         (r.vec_id, r.band): r.band_sig
-        for r in similarity.lsh_band_signatures(emb, vectorized=False)
+        for r in similarity._lsh_band_signatures_jvm(emb)
         .select("vec_id", "band", "band_sig")
         .collect()
     }
@@ -733,15 +733,15 @@ def test_connected_components_raises_on_nonconvergence(spark):
     returned one wrong dedup survivor at sf0.1 before this guard)."""
     import pytest as _pytest
 
-    from blazingsql_spark.operators.graph import connected_components
+    from blazingsql_spark.operators.graph import _propagate_components
 
     path = spark.createDataFrame([(i, i + 1) for i in range(30)], ["src", "dst"])
     with _pytest.raises(RuntimeError, match="not converged"):
-        connected_components(path, max_iterations=3, algorithm="propagate").count()
+        _propagate_components(path, "src", "dst", 3).count()
     # and with room to converge, the 30-node path is one component
     from pyspark.sql import functions as F
 
-    cc = connected_components(path, max_iterations=100, algorithm="propagate")
+    cc = _propagate_components(path, "src", "dst", 100)
     assert cc.filter(F.col("component_id") != 0).count() == 0
 
 
@@ -756,7 +756,7 @@ def test_star_components_deep_chain_olog_rounds(spark):
 
     n = 4096
     path = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
-    cc = connected_components(path, max_iterations=16)  # algorithm="star"
+    cc = connected_components(path, max_iterations=16)
     rows = cc.collect()
     assert len(rows) == n
     assert {r["component_id"] for r in rows} == {0}
@@ -799,7 +799,10 @@ def test_star_matches_propagate_on_mixed_graph(spark):
     algorithms for the same function — byte-identical (node,
     component_id) output on a graph mixing chains, cycles, stars, and
     duplicate/reversed edges."""
-    from blazingsql_spark.operators.graph import connected_components
+    from blazingsql_spark.operators.graph import (
+        _propagate_components,
+        connected_components,
+    )
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10),
@@ -808,9 +811,9 @@ def test_star_matches_propagate_on_mixed_graph(spark):
         ["src", "dst"],
     )
     star = {(r["node"], r["component_id"])
-            for r in connected_components(edges, algorithm="star").collect()}
+            for r in connected_components(edges).collect()}
     prop = {(r["node"], r["component_id"])
-            for r in connected_components(edges, algorithm="propagate").collect()}
+            for r in _propagate_components(edges, "src", "dst", 100).collect()}
     assert star == prop
     assert (40, 40) in star  # self-loop-only node kept as singleton
 
@@ -2551,6 +2554,51 @@ def test_ivf_topk_filtered_no_leaks_and_exact_at_full_probe(spark):
     # behavioral assertion of the widening logic, not arithmetic on
     # local variables
     assert sorted(map(tuple, got)) == sorted(map(tuple, exact.collect()))
+
+
+def test_self_trained_ivf_tiers_honour_renamed_columns(spark):
+    """The self-trained IVF tiers and semantic_dedup_keep train their
+    centroids on the caller's ``id_col``/``vec_col``: a ``(doc_id, emb)``
+    corpus returns the same rows as the same corpus under the default
+    ``(vec_id, embedding)`` names."""
+    import random as _r
+
+    from blazingsql_spark.functions import similarity
+    from blazingsql_spark.operators import hnsw
+
+    rnd = _r.Random(11)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(120)]
+    plain = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    renamed = spark.createDataFrame(rows, "doc_id long, emb array<float>")
+    q_plain = plain.filter(F.col("vec_id") % 30 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    q_renamed = renamed.filter(F.col("doc_id") % 30 == 0).select(
+        F.col("doc_id").alias("query_id"), "emb"
+    )
+    common = dict(k=3, n_centroids=4, dim=8)
+    calls = {
+        "ivf_topk": lambda v, q, **c: similarity.ivf_topk(v, q, **c, **common),
+        "ivf_topk_filtered": lambda v, q, **c: similarity.ivf_topk_filtered(
+            v, q, "TRUE", **c, **common
+        ),
+        "hnsw_ivf_topk": lambda v, q, **c: hnsw.hnsw_ivf_topk(
+            v, q, **c, **common
+        ),
+        "hnsw_ivf_topk_filtered": lambda v, q, **c: (
+            hnsw.hnsw_ivf_topk_filtered(v, q, "TRUE", **c, **common)
+        ),
+        "semantic_dedup_keep": lambda v, q, **c: similarity.semantic_dedup_keep(
+            v, n_clusters=4, threshold=0.5, dim=8, **c
+        ),
+    }
+    for name, call in calls.items():
+        want = sorted(map(tuple, call(plain, q_plain).collect()))
+        got = sorted(
+            map(tuple, call(renamed, q_renamed, id_col="doc_id", vec_col="emb")
+                .collect())
+        )
+        assert want and got == want, name
 
 
 def test_filtered_serving_hnsw_and_pq_tiers(spark):

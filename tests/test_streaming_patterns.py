@@ -15,11 +15,16 @@ from blazingsql_spark.streaming.patterns import (
     StreamMatcher,
     char_truth,
     compile_pattern,
-    mask_truth,
     pattern_match_stream,
     scan_rows,
 )
 from tests.conftest import SF_DIR
+
+
+def mask_truth(sym_bits):
+    """Truth over per-row bitmasks: row ``j`` satisfies every symbol
+    whose bit ``sym_bits[ch]`` is set in ``masks[j]``."""
+    return lambda masks: lambda j, pos, ch, tent: masks[j] & sym_bits[ch]
 
 PATTERNS = ["vc+p", "vcp", "v?c+p", "c*p", "(vc|cp)e?", "v.p", "ve*c+p", "p+", "v(c|e)+p",
             # prefix alternations: re prefers the LEFT (shorter) branch,
@@ -706,7 +711,7 @@ def test_match_recognize_stream_nav_nondeterministic(spark, tmp_path):
 
 def test_reluctant_quantifiers_stream(spark, tmp_path):
     """Late r12: reluctant quantifiers on the streaming path — the
-    bitmask priority matcher inherits the inverted edge order from
+    stream's priority matcher inherits the inverted edge order from
     compile_pattern, so `A+? B` over fully ambiguous rows commits
     pair-matches incrementally instead of one greedy whole-stream
     match."""
@@ -976,8 +981,9 @@ def test_preferment_not_longest_on_every_route(spark, tmp_path):
     both a's, so (A B)? is skipped), as re.finditer says — not one
     match of length 4. Every route runs the same scanner: the batch
     operator with flag columns and with a navigation DEFINE, and the
-    three streams (bitmasks, navigation rows, code string), fed in two
-    micro-batches so the carry replays the in-flight attempt."""
+    streams (MATCH_RECOGNIZE with flag and with navigation DEFINEs, and
+    the code string), fed in two micro-batches so the carry replays the
+    in-flight attempt."""
     import os
 
     import pandas as pd
@@ -1037,3 +1043,95 @@ def test_preferment_not_longest_on_every_route(spark, tmp_path):
             "ORDER BY n_codes DESC LIMIT 1"
         ).collect()
         assert [tuple(r) for r in last] == [(2, 3, 4)], name
+
+
+def test_streams_resume_from_their_own_checkpoint(spark, tmp_path):
+    """A stream stopped after a micro-batch that leaves an attempt in
+    flight, then restarted from its checkpoint with the next file, ends
+    with the totals of an uninterrupted run: the carry survives the
+    restart in the state store. Covers pattern_match_stream and
+    match_recognize_stream with flag-only DEFINEs, with FIRST(V.ts) and
+    with WITHIN."""
+    import os
+
+    import pandas as pd
+
+    from blazingsql_spark.streaming.patterns import match_recognize_stream
+
+    # every key's attempt spans the cut; user 2's second half breaks the
+    # FIRST(V.ts) and WITHIN bounds, user 4 first appears after it
+    halves = [
+        [(1, 0, "view", 1), (1, 1, "click", 2), (2, 0, "view", 1),
+         (2, 1, "click", 3), (3, 0, "purchase", 1), (3, 1, "view", 2)],
+        [(1, 2, "click", 3), (1, 3, "purchase", 4), (2, 2, "click", 9),
+         (2, 3, "purchase", 10), (3, 2, "purchase", 3), (4, 0, "view", 5),
+         (4, 1, "purchase", 6)],
+    ]
+    schema = "user_id long, event_id long, event_type string, ts long"
+    flags = {"V": "event_type = 'view'", "C": "event_type = 'click'",
+             "P": "event_type = 'purchase'"}
+    nav = dict(flags, P="event_type = 'purchase' AND ts <= FIRST(V.ts) + 6")
+    operators = {
+        "chars": lambda raw: pattern_match_stream(raw, "vc*p"),
+        "flags": lambda raw: match_recognize_stream(
+            raw, "user_id", "ts", "event_id", "V C* P", flags),
+        "nav": lambda raw: match_recognize_stream(
+            raw, "user_id", "ts", "event_id", "V C* P", nav),
+        "within": lambda raw: match_recognize_stream(
+            raw, "user_id", "ts", "event_id", "V C* P", flags, within=7),
+    }
+
+    def write(src, i):
+        f = src / f"b{i}.json"
+        pd.DataFrame(halves[i], columns=["user_id", "event_id", "event_type", "ts"]
+                     ).to_json(f, orient="records", lines=True)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    def start(op, src, checkpoint, rows):
+        raw = (spark.readStream.schema(schema)
+               .option("maxFilesPerTrigger", 1).json(str(src)))
+        return (op(raw).writeStream.outputMode("update")
+                .foreachBatch(lambda df, _epoch: rows.extend(df.collect()))
+                .option("checkpointLocation", str(checkpoint))
+                .trigger(availableNow=True).start())
+
+    def run_all(runs):
+        """Run (op, src, checkpoint) queries side by side; each one's
+        last row per key as (n_matches, longest, n_codes, n_aborted)."""
+        outs = [[] for _ in runs]
+        for q in [start(*r, rows) for r, rows in zip(runs, outs)]:
+            q.awaitTermination()
+        return [
+            {r.user_id: (r.n_matches, r.longest_match, r.n_codes, r.n_aborted)
+             for r in sorted(rows, key=lambda r: r.n_codes)}
+            for rows in outs
+        ]
+
+    want_matches = {
+        "chars": {1: (1, 4), 2: (1, 4), 3: (1, 2), 4: (1, 2)},
+        "flags": {1: (1, 4), 2: (1, 4), 3: (1, 2), 4: (1, 2)},
+        "nav": {1: (1, 4), 2: (0, 0), 3: (1, 2), 4: (1, 2)},
+        "within": {1: (1, 4), 2: (0, 0), 3: (1, 2), 4: (1, 2)},
+    }
+    for name in operators:
+        for kind, files in (("whole", (0, 1)), ("split", (0,))):
+            (tmp_path / name / kind).mkdir(parents=True)
+            for i in files:
+                write(tmp_path / name / kind, i)
+    phase1 = run_all([
+        (op, tmp_path / name / kind, tmp_path / name / f"ck_{kind}")
+        for name, op in operators.items() for kind in ("whole", "split")
+    ])
+    for name in operators:
+        write(tmp_path / name / "split", 1)
+    phase2 = run_all([
+        (op, tmp_path / name / "split", tmp_path / name / "ck_split")
+        for name, op in operators.items()
+    ])
+    for i, name in enumerate(operators):
+        want, first = phase1[2 * i], phase1[2 * i + 1]
+        # the cut left user 1's attempt in flight: no match yet
+        assert first[1][:2] == (0, 0), (name, first)
+        got = {**first, **phase2[i]}
+        assert got == want, (name, got, want)
+        assert {k: v[:2] for k, v in want.items()} == want_matches[name], name
