@@ -1824,14 +1824,9 @@ def semantic_dedup_keep(
         # bytes-based coalescing under-parallelizes this PYTHON
         # pairwise-distance stage, whose cost is rows², not bytes;
         # groupBy reuses the hash partitioning — one exchange total
-        try:
-            n_part = int(
-                assigned.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions", "32"
-                )
-            )
-        except ValueError:  # e.g. 'auto' under AQE auto-optimized shuffle
-            n_part = assigned.sparkSession.sparkContext.defaultParallelism
+        n_part = int(
+            assigned.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+        )
         cand = (
             assigned.repartition(n_part, key)
             .groupBy(key)
@@ -2179,12 +2174,9 @@ def mmr_rerank(
     # pin the exchange width (REPARTITION_BY_NUM hint): AQE's bytes-based
     # coalescing under-parallelizes this PYTHON greedy-selection stage
     # (cost per group is k×candidates dot products, not bytes)
-    try:
-        n_part = int(
-            pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    except ValueError:  # e.g. 'auto' under AQE auto-optimized shuffle
-        n_part = pairs.sparkSession.sparkContext.defaultParallelism
+    n_part = int(
+        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
     return (
         pairs.repartition(n_part, query_id_col)
         .groupBy(query_id_col)

@@ -48,10 +48,11 @@ who type the standard spelling. Scope:
 - ``WITHIN <interval|number>`` (the Flink extension): bounds the match
   duration against the first ORDER BY key, enforced inside the scan.
 
-Standing limit: a NaN in a floating input column comes back as NULL.
-PySpark's pandas-to-Arrow conversion masks every NaN as null, so ALL
-ROWS PER MATCH returns NULL for NaN values, and ONE ROW PER MATCH
-reports a NaN PARTITION BY key as a NULL key.
+NaN is a value and NULL is missing, as in Spark SQL: a NaN passes
+through and keys as NaN, and in MEASURES SUM/AVG/STDDEV of a NaN are
+NaN, MIN/MAX order NaN above every number and COUNT(col) counts it.
+(The symbol-relative DEFINE closures of operators/mr_expr.py still read
+a NaN as NULL.)
 
 One front end: :func:`compile_recognizer` turns PATTERN, SUBSET,
 AFTER MATCH SKIP, WITHIN and DEFINE into a :class:`Recognizer`. This
@@ -75,8 +76,11 @@ Scale shape: the flags are one codegen projection; matching is one
 per-partition kernel (mapInArrow) over an input hashed and sorted by
 the PARTITION BY key, whose task count follows the input's estimated
 size. Each task streams its Arrow batches, splits them into keys on
-the Arrow data and scans one key at a time in pandas, so memory holds
-one batch plus one key's event history, the same bound as every
+the Arrow data and scans one key at a time in Arrow: it sorts the key
+by the ORDER BY keys, converts to Python values only the columns the
+scan and the measures read, and writes its output as Arrow (passed-
+through columns are a ``take`` of the input). Memory holds one batch
+plus one key's event history, the same bound as every
 MATCH_RECOGNIZE implementation (Flink/Oracle both require a partition
 key for parallelism; skewed keys are the user's modeling problem there
 too). The scan is O(events × NFA states) per key for navigation-free
@@ -85,6 +89,9 @@ DEFINEs.
 
 from __future__ import annotations
 
+import datetime
+import functools
+import math
 import re
 from typing import NamedTuple
 
@@ -143,49 +150,55 @@ _SEMANTICS_PREFIX = re.compile(r"^(RUNNING|FINAL)\s+", re.IGNORECASE)
 
 class _Measure(NamedTuple):
     alias: str
-    ev: object  # (span_pdf, span_codes, match_no) -> scalar
+    # (cols, codes, match_no) -> the value over the whole span: cols
+    # maps a column name to the span's values, codes is the span's
+    # symbol chars, one per row
+    ev: object
+    # the O(span) cumulative RUNNING evaluator: same arguments, a list
+    # of len(codes) prefix values, bit-identical to calling ev on every
+    # prefix (property-tested; calling ev per prefix would be O(span^2)
+    # per measure, a scale killer when a greedy B* makes span ~
+    # partition size)
+    run_ev: object
     ty: object  # (input schema) -> Spark DataType
-    running: bool  # explicit RUNNING prefix
-    is_clf: bool  # CLASSIFIER() measure
-    explicit_final: bool  # explicit FINAL prefix
-    prefix_inv: bool = False  # prefix-invariant (MATCH_NUMBER())
-    # O(span) cumulative RUNNING evaluator: (span_pdf, span_codes,
-    # match_no) -> list of len(span) prefix values, bit-identical to
-    # calling ev on every prefix (property-tested; calling ev per prefix
-    # would be O(span^2) per measure, a scale killer when a greedy B*
-    # makes span ~ partition size). None only for CLASSIFIER(), which
-    # run() evaluates per row itself.
-    run_ev: object = None
+    final: bool  # explicit FINAL prefix
+
+
+def _spark_lt(a, b) -> bool:
+    """``a < b`` in Spark's value order, where NaN is larger than every
+    number (and equal to NaN)."""
+    return a < b or (b != b and a == a)
 
 
 def _parse_measure(
     expr: str, alias: str, sym_chars: dict[str, str], part_ctx=None
 ):
-    """Compile one measure into a _Measure. The evaluator gets
-    (span_pdf, span_codes, match_no). Under ALL ROWS PER MATCH the
+    """Compile one measure into a _Measure. Under ALL ROWS PER MATCH the
     SQL:2016 default applies: an UNPREFIXED (or RUNNING) measure is
-    re-evaluated over each row's PREFIX of the match, bare CLASSIFIER()
-    is the per-row symbol, and only an explicit FINAL prefix yields the
-    whole-match constant (FINAL CLASSIFIER() is the last-row symbol).
-    MATCH_NUMBER() is prefix-invariant and skips the per-prefix loop.
-    Under ONE ROW PER MATCH running and final coincide. Besides the
-    atomic forms, NUMERIC arithmetic over them is supported
+    re-evaluated over each row's PREFIX of the match (``run_ev``; bare
+    CLASSIFIER() is then the per-row symbol), and only an explicit FINAL
+    prefix yields the whole-match constant (FINAL CLASSIFIER() is the
+    last-row symbol). Under ONE ROW PER MATCH running and final coincide.
+    Besides the atomic forms, NUMERIC arithmetic over them is supported
     (Oracle/Flink parity): e.g. `LAST(value) - FIRST(value)`,
     `SUM(A.price) / COUNT(A.*)`, `100 * AVG(x)` — see
     :func:`_compile_arith_measure` for the semantics.
 
-    ``part_ctx`` is the partition-context holder ({"pdf": sorted
-    partition frame, "lo": current span start}) that run() keeps
+    Values are Python values as Arrow's ``to_pylist`` gives them: None
+    is NULL and a float NaN is NaN, which SUM/AVG/STDDEV propagate and
+    MIN/MAX order above every number, as Spark does.
+
+    ``part_ctx`` is the partition-context holder ({"cols": the sorted
+    partition's columns, "lo": current span start}) that run() keeps
     current; PREV/NEXT measures read it because physical navigation can
     reach rows OUTSIDE the match (SQL:2016: navigation in MEASURES is
     over the row pattern partition, positioned at the last row of the
     match — FINAL — or of the current prefix — RUNNING)."""
     expr = expr.strip()
     pm = _SEMANTICS_PREFIX.match(expr)
-    running = explicit_final = False
+    final = False
     if pm:
-        running = pm.group(1).upper() == "RUNNING"
-        explicit_final = not running
+        final = pm.group(1).upper() == "FINAL"
         expr = expr[pm.end():].strip()
     quad = _compile_single(expr, sym_chars, part_ctx)
     if quad is None:
@@ -202,46 +215,39 @@ def _parse_measure(
             f"SUM/AVG/MIN/MAX(S.col), and numeric + - * / % arithmetic "
             f"over those forms and literals)"
         )
-    ev, ty, is_clf, prefix_inv, run_ev = quad
-    return _Measure(
-        alias, ev, ty, running, is_clf, explicit_final, prefix_inv, run_ev
-    )
+    ev, ty, run_ev = quad
+    return _Measure(alias, ev, run_ev, ty, final)
 
 
 def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
-    """Compile ONE atomic measure form; returns (ev, ty, is_clf,
-    prefix_inv, run_ev) or None when the text is not an atomic form
-    (semantic errors inside a recognized form still raise loudly).
-    run_ev is the O(span) cumulative RUNNING evaluator (None only for
-    CLASSIFIER(), which the ALL ROWS branch handles per-row itself)."""
-
-    def mk(ev, ty, is_clf=False, prefix_inv=False, run_ev=None):
-        return (ev, ty, is_clf, prefix_inv, run_ev)
+    """Compile ONE atomic measure form; returns (ev, ty, run_ev) or None
+    when the text is not an atomic form (semantic errors inside a
+    recognized form still raise loudly)."""
 
     m = _MEASURE_FORMS.match(expr)
     if not m:
         return None
     if m.group("mn"):
-        return mk(
-            lambda pdf, codes, n: n,
+        return (
+            lambda cols, codes, n: n,
             lambda sch: T.LongType(),
-            prefix_inv=True,
-            run_ev=lambda pdf, codes, n: [n] * len(pdf),
+            lambda cols, codes, n: [n] * len(codes),
         )
     if m.group("clf"):
-        # ONE ROW PER MATCH: classifier of the match's LAST row (final
-        # semantics); ALL ROWS PER MATCH overrides this per-row in run().
-        # Union (SUBSET) names never classify rows: keep the FIRST name
-        # per char (pattern symbols precede SUBSET unions in the lookup), so
-        # a single-member union can never shadow its symbol.
+        # the symbol of the evaluation prefix's last row: the match's
+        # last row under FINAL / ONE ROW PER MATCH, each row's own under
+        # RUNNING. Union (SUBSET) names never classify rows: keep the
+        # FIRST name per char (pattern symbols precede SUBSET unions in
+        # the lookup), so a single-member union can never shadow its
+        # symbol.
         names_by_char: dict[str, str] = {}
         for s_, c_ in sym_chars.items():
             if len(c_) == 1:
                 names_by_char.setdefault(c_, s_)
-        return mk(
-            lambda pdf, codes, n, _m=names_by_char: _m.get(codes[-1]),
+        return (
+            lambda cols, codes, n, _m=names_by_char: _m.get(codes[-1]),
             lambda sch: T.StringType(),
-            is_clf=True,
+            lambda cols, codes, n, _m=names_by_char: [_m.get(c) for c in codes],
         )
     if m.group("agg"):
         # FINAL aggregate over the match's rows (optionally restricted to
@@ -262,8 +268,6 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
             # accumulates with the identical recurrence, so per-prefix
             # and cumulative evaluation stay bit-identical (the repo's
             # measure discipline); sample variance needs >= 2 rows
-            import math
-
             cnt, mean, m2 = 0, 0.0, 0.0
             for v in vals:
                 v = float(v)
@@ -276,36 +280,37 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
             var = m2 / (cnt - 1) if _sample else m2 / cnt
             return math.sqrt(var) if _std else var
 
-        def ev_agg(pdf, codes, n, _ch=ch, _col=col, _agg=agg):
-            rows = pdf if _ch is None else pdf[[c in _ch for c in codes]]
-            vals = rows[_col].dropna()
+        def fold(total, v, _agg=agg):
+            # one step of a sequential left fold, shared by the whole-span
+            # and the cumulative RUNNING evaluator: per-prefix vs
+            # cumulative must be bit-identical for floats
+            # (property-tested), so neither may sum pairwise
+            if _agg in ("SUM", "AVG"):
+                return total + v
+            if _agg == "MIN":
+                return v if _spark_lt(v, total) else total
+            return v if _spark_lt(total, v) else total
+
+        def ev_agg(cols, codes, n, _ch=ch, _col=col, _agg=agg):
+            vals = [
+                v for v, c in zip(cols[_col], codes)
+                if v is not None and (_ch is None or c in _ch)
+            ]
             if is_var:
                 return _welford(vals)
-            if len(vals) == 0:
+            if not vals:
                 return None
-            if _agg in ("SUM", "AVG"):
-                # sequential left fold, NOT pandas' pairwise .sum(): the
-                # O(span) cumulative RUNNING evaluator below accumulates
-                # sequentially, and per-prefix vs cumulative must be
-                # bit-identical for floats (property-tested)
-                total = None
-                for v in vals:
-                    total = v if total is None else total + v
-                return float(total / len(vals)) if _agg == "AVG" else total
-            return vals.min() if _agg == "MIN" else vals.max()
+            total = functools.reduce(fold, vals)
+            return float(total / len(vals)) if _agg == "AVG" else total
 
-        def run_agg(pdf, codes, n, _ch=ch, _col=col, _agg=agg):
-            import math
-
-            import pandas as pd
-
+        def run_agg(cols, codes, n, _ch=ch, _col=col, _agg=agg):
             if is_var:
                 # running Welford: identical recurrence to _welford, so
                 # the final prefix equals the whole-match value bit-wise
                 out, cnt, mean, m2 = [], 0, 0.0, 0.0
                 min_cnt = 2 if sample else 1
-                for i, v in enumerate(pdf[_col]):
-                    if (_ch is None or codes[i] in _ch) and not pd.isna(v):
+                for v, c in zip(cols[_col], codes):
+                    if v is not None and (_ch is None or c in _ch):
                         v = float(v)
                         cnt += 1
                         d = v - mean
@@ -318,15 +323,10 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
                         out.append(math.sqrt(var) if want_std else var)
                 return out
             out, total, cnt = [], None, 0
-            for i, v in enumerate(pdf[_col]):
-                if (_ch is None or codes[i] in _ch) and not pd.isna(v):
+            for v, c in zip(cols[_col], codes):
+                if v is not None and (_ch is None or c in _ch):
                     cnt += 1
-                    if _agg in ("SUM", "AVG"):
-                        total = v if total is None else total + v
-                    elif _agg == "MIN":
-                        total = v if total is None or v < total else total
-                    else:
-                        total = v if total is None or v > total else total
+                    total = v if total is None else fold(total, v)
                 if total is None:
                     out.append(None)
                 elif _agg == "AVG":
@@ -348,7 +348,7 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
                     return T.DoubleType()
             return dt
 
-        return mk(ev_agg, ty_agg, run_ev=run_agg)
+        return ev_agg, ty_agg, run_agg
     if m.group("csym") is not None or expr.strip().upper().startswith("COUNT"):
         sym = m.group("csym")
         if m.group("cccol") is not None:
@@ -362,47 +362,43 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
                 )
             cch = sym_chars.get(csym2) if csym2 else None
 
-            def ev_ccol(pdf, codes, n, _ch=cch, _col=ccol):
-                rows = (
-                    pdf if _ch is None else pdf[[c in _ch for c in codes]]
+            def ev_ccol(cols, codes, n, _ch=cch, _col=ccol):
+                return sum(
+                    v is not None and (_ch is None or c in _ch)
+                    for v, c in zip(cols[_col], codes)
                 )
-                return int(rows[_col].count())
 
-            def run_ccol(pdf, codes, n, _ch=cch, _col=ccol):
-                import pandas as pd
-
-                out, c = [], 0
-                for i, v in enumerate(pdf[_col]):
-                    if (_ch is None or codes[i] in _ch) and not pd.isna(v):
-                        c += 1
-                    out.append(c)
+            def run_ccol(cols, codes, n, _ch=cch, _col=ccol):
+                out, k = [], 0
+                for v, c in zip(cols[_col], codes):
+                    if v is not None and (_ch is None or c in _ch):
+                        k += 1
+                    out.append(k)
                 return out
 
-            return mk(
-                ev_ccol, lambda sch: T.LongType(), run_ev=run_ccol
-            )
+            return ev_ccol, lambda sch: T.LongType(), run_ccol
         if sym is None:
-            return mk(
-                lambda pdf, codes, n: len(pdf),
+            return (
+                lambda cols, codes, n: len(codes),
                 lambda sch: T.LongType(),
-                run_ev=lambda pdf, codes, n: list(range(1, len(pdf) + 1)),
+                lambda cols, codes, n: list(range(1, len(codes) + 1)),
             )
         if sym not in sym_chars:
             raise ValueError(f"MATCH_RECOGNIZE: COUNT over unknown symbol {sym!r}")
         ch = sym_chars[sym]
 
-        def run_count(pdf, codes, n, _ch=ch):
-            out, c = [], 0
-            for ci in codes:
-                if ci in _ch:
-                    c += 1
-                out.append(c)
+        def run_count(cols, codes, n, _ch=ch):
+            out, k = [], 0
+            for c in codes:
+                if c in _ch:
+                    k += 1
+                out.append(k)
             return out
 
-        return mk(
-            lambda pdf, codes, n: sum(1 for c in codes if c in ch),
+        return (
+            lambda cols, codes, n: sum(1 for c in codes if c in ch),
             lambda sch: T.LongType(),
-            run_ev=run_count,
+            run_count,
         )
     if m.group("pn"):
         # PREV/NEXT in MEASURES (SQL:2016 / Oracle): PHYSICAL navigation
@@ -412,7 +408,7 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
         # last row, under RUNNING the current row), the last row mapped
         # to SYM (SYM.col), or a nested FIRST/LAST logical position;
         # the physical offset then walks the partition, and the value
-        # is read from the FULL partition frame via part_ctx.
+        # is read from the FULL partition's columns via part_ctx.
         is_prev = m.group("pn").upper() == "PREV"
         off = int(m.group("pnoff")) if m.group("pnoff") else 1
         nfl = m.group("pnfl")
@@ -441,24 +437,15 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
             )
 
         def _pn_value(anchor_abs, _col=col, _prev=is_prev, _off=off):
-            import pandas as pd
-
-            full = part_ctx["pdf"]
-            if anchor_abs is None:
-                return None
+            full = part_ctx["cols"][_col]
             tgt = anchor_abs - _off if _prev else anchor_abs + _off
-            if not 0 <= tgt < len(full):
-                return None
-            val = full[_col].iloc[tgt]
-            return None if pd.isna(val) else val
+            return full[tgt] if 0 <= tgt < len(full) else None
 
         def ev_pn(
-            pdf, codes, n, _bare=bare, _ch=in_ch, _in_first=in_first,
+            cols, codes, n, _bare=bare, _ch=in_ch, _in_first=in_first,
             _in_off=in_off,
         ):
-            L = len(pdf)
-            if L == 0:
-                return None
+            L = len(codes)
             lo = part_ctx["lo"]
             if _bare:
                 return _pn_value(lo + L - 1)
@@ -473,12 +460,12 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
             return _pn_value(lo + pos)
 
         def run_pn(
-            pdf, codes, n, _bare=bare, _ch=in_ch, _in_first=in_first,
+            cols, codes, n, _bare=bare, _ch=in_ch, _in_first=in_first,
             _in_off=in_off,
         ):
             lo = part_ctx["lo"]
             out, idxs = [], []
-            for i in range(len(pdf)):
+            for i in range(len(codes)):
                 if _bare:
                     out.append(_pn_value(lo + i))
                     continue
@@ -491,11 +478,7 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
                     out.append(_pn_value(lo + pos))
             return out
 
-        return mk(
-            ev_pn,
-            lambda sch, _col=col: sch[_col].dataType,
-            run_ev=run_pn,
-        )
+        return ev_pn, lambda sch, _col=col: sch[_col].dataType, run_pn
     first = m.group("fl").upper() == "FIRST"
     sym, col = m.group("sym"), m.group("col")
     if sym is not None and sym not in sym_chars:
@@ -506,40 +489,26 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
     # (or the symbol's rows) has fewer than n+1 rows
     off = int(m.group("floff")) if m.group("floff") else 0
 
-    def ev(pdf, codes, n, _ch=ch, _col=col, _first=first, _off=off):
-        import pandas as pd
-
-        rows = (
-            pdf
-            if _ch is None
-            else pdf[[c in _ch for c in codes]]
-        )
+    def ev(cols, codes, n, _ch=ch, _col=col, _first=first, _off=off):
+        rows = [
+            v for v, c in zip(cols[_col], codes) if _ch is None or c in _ch
+        ]
         if len(rows) <= _off:
             return None
-        val = rows[_col].iloc[_off if _first else -1 - _off]
-        # a NULL cell must come back as SQL NULL, not the container's
-        # missing sentinel (float NaN / pandas NA / NaT) — those leak
-        # into arithmetic as NaN and into Arrow as a non-null cell
-        return None if pd.isna(val) else val
+        return rows[_off if _first else -1 - _off]
 
-    def ty(sch, _col=col):
-        return sch[_col].dataType
-
-    def run_fl(pdf, codes, n, _ch=ch, _col=col, _first=first, _off=off):
-        import pandas as pd
-
+    def run_fl(cols, codes, n, _ch=ch, _col=col, _first=first, _off=off):
         eligible, out = [], []
-        for i, v in enumerate(pdf[_col]):
-            if _ch is None or codes[i] in _ch:
+        for v, c in zip(cols[_col], codes):
+            if _ch is None or c in _ch:
                 eligible.append(v)
             if len(eligible) <= _off:
                 out.append(None)
             else:
-                val = eligible[_off] if _first else eligible[-1 - _off]
-                out.append(None if pd.isna(val) else val)
+                out.append(eligible[_off] if _first else eligible[-1 - _off])
         return out
 
-    return mk(ev, ty, run_ev=run_fl)
+    return ev, lambda sch, _col=col: sch[_col].dataType, run_fl
 
 
 _MEXPR_ATOM = re.compile(
@@ -566,11 +535,11 @@ def _compile_arith_measure(
     modulo and NULL on zero, integer-only `+ - * %` stays BIGINT.
     Operands must be numeric (a timestamp FIRST/LAST in arithmetic
     raises — interval arithmetic is out of scope, compute it on the
-    output columns instead). Returns (ev, ty, False, prefix_inv,
-    run_ev) or None when the text is not an arithmetic measure; the
-    whole expression is prefix-invariant only when every atom is, so
-    RUNNING re-evaluation under ALL ROWS sees running aggregates
-    inside the arithmetic, per the standard."""
+    output columns instead). Returns (ev, ty, run_ev) or None
+    when the text is not an arithmetic measure; run_ev applies the same
+    operators to each operand's prefix values, so RUNNING re-evaluation
+    under ALL ROWS sees running aggregates inside the arithmetic, per
+    the standard."""
     masked = mask_literals(expr)
     tokens: list[tuple[str, object]] = []
     i = 0
@@ -593,12 +562,11 @@ def _compile_arith_measure(
             txt = nm.group(0)
             val = float(txt) if "." in txt else int(txt)
             tokens.append(
-                ("atom", (lambda pdf, codes, n, _v=val: _v,
+                ("atom", (lambda cols, codes, n, _v=val: _v,
                           lambda sch, _f=isinstance(val, float): (
                               T.DoubleType() if _f else T.LongType()
                           ),
-                          False, True,
-                          lambda pdf, codes, n, _v=val: [_v] * len(pdf)))
+                          lambda cols, codes, n, _v=val: [_v] * len(codes)))
             )
             i = nm.end()
             continue
@@ -621,19 +589,12 @@ def _compile_arith_measure(
             f"{dt.simpleString()} in {expr!r} (numeric operands only)"
         )
 
-    def _int_like(x):
-        import numpy as np
-
-        return isinstance(x, (int, np.integer)) and not isinstance(x, bool)
-
     def _scalar_op(a, b, op):
         if a is None or b is None:
             return None
         if op == "/":
             return float(a) / float(b) if b else None
-        if _int_like(a) and _int_like(b):
-            a, b = int(a), int(b)
-        else:
+        if not (isinstance(a, int) and isinstance(b, int)):
             a, b = float(a), float(b)
         if op == "+":
             return a + b
@@ -654,18 +615,16 @@ def _compile_arith_measure(
                 return T.DoubleType()
             return T.LongType()
 
-        def ev(pdf, codes, n, _ea=ea, _eb=eb, _op=op):
-            return _scalar_op(_ea(pdf, codes, n), _eb(pdf, codes, n), _op)
+        def ev(cols, codes, n, _ea=ea, _eb=eb, _op=op):
+            return _scalar_op(_ea(cols, codes, n), _eb(cols, codes, n), _op)
 
-        run = None
-        if ra is not None and rb is not None:
-            # O(span) RUNNING composes elementwise: the same scalar op
-            # over each operand's prefix-value lists
-            def run(pdf, codes, n, _ra=ra, _rb=rb, _op=op):
-                return [
-                    _scalar_op(x, y, _op)
-                    for x, y in zip(_ra(pdf, codes, n), _rb(pdf, codes, n))
-                ]
+        # O(span) RUNNING composes elementwise: the same scalar op over
+        # each operand's prefix-value lists
+        def run(cols, codes, n, _ra=ra, _rb=rb, _op=op):
+            return [
+                _scalar_op(x, y, _op)
+                for x, y in zip(_ra(cols, codes, n), _rb(cols, codes, n))
+            ]
 
         return ev, ty, run
 
@@ -682,20 +641,16 @@ def _compile_arith_measure(
             return parse_factor()
         if t == "-":
             pos += 1
-            ev, ty, _, pinv, run = parse_factor()
+            ev, ty, run = parse_factor()
 
-            def neg(pdf, codes, n, _e=ev):
-                v = _e(pdf, codes, n)
+            def neg(cols, codes, n, _e=ev):
+                v = _e(cols, codes, n)
                 return None if v is None else -v
 
-            neg_run = None
-            if run is not None:
-                def neg_run(pdf, codes, n, _r=run):
-                    return [
-                        None if v is None else -v for v in _r(pdf, codes, n)
-                    ]
+            def neg_run(cols, codes, n, _r=run):
+                return [None if v is None else -v for v in _r(cols, codes, n)]
 
-            return neg, ty, False, pinv, neg_run
+            return neg, ty, neg_run
         if t == "(":
             pos += 1
             out = parse_expr()
@@ -707,46 +662,36 @@ def _compile_arith_measure(
             return out
         if t == "atom":
             pos += 1
-            ev, ty, is_clf, pinv, run = payload
-            if is_clf:
-                raise ValueError(
-                    "MATCH_RECOGNIZE: CLASSIFIER() cannot appear in "
-                    "arithmetic measures"
-                )
-            return ev, ty, False, pinv, run
+            return payload
         raise ValueError(
             f"MATCH_RECOGNIZE: cannot parse measure expression {expr!r}"
         )
 
     def parse_term():
         nonlocal pos
-        ev, ty, _, pinv, run = parse_factor()
+        ev, ty, run = parse_factor()
         while peek() in ("*", "/", "%"):
             op = peek()
             pos += 1
-            ev2, ty2, _, pinv2, run2 = parse_factor()
-            ev, ty, run = combine(ev, ty, run, ev2, ty2, run2, op)
-            pinv = pinv and pinv2
-        return ev, ty, False, pinv, run
+            ev, ty, run = combine(ev, ty, run, *parse_factor(), op)
+        return ev, ty, run
 
     def parse_expr():
         nonlocal pos
-        ev, ty, _, pinv, run = parse_term()
+        ev, ty, run = parse_term()
         while peek() in ("+", "-"):
             op = peek()
             pos += 1
-            ev2, ty2, _, pinv2, run2 = parse_term()
-            ev, ty, run = combine(ev, ty, run, ev2, ty2, run2, op)
-            pinv = pinv and pinv2
-        return ev, ty, False, pinv, run
+            ev, ty, run = combine(ev, ty, run, *parse_term(), op)
+        return ev, ty, run
 
-    out = parse_expr()
+    ev, ty, run = parse_expr()
     if pos != len(tokens):
         raise ValueError(
             f"MATCH_RECOGNIZE: trailing tokens in measure expression "
             f"{expr!r}"
         )
-    return out
+    return ev, ty, run
 
 
 _PERMUTE_KW = re.compile(r"\bPERMUTE\s*\(", re.IGNORECASE)
@@ -982,12 +927,24 @@ def _physical_nav_rewrite(
     return define, nav_df, list(nav_cols)
 
 
-def flag_list(col) -> list[bool]:
-    """A flag column as Python bools, NULL as False. A column holding a
-    NULL arrives as object dtype; this avoids ``fillna(False)``, whose
-    object-dtype downcast pandas deprecates. ``tolist`` yields Python
-    bools, and None or pd.NA for NULL."""
-    return [v is True for v in col.tolist()]
+def flag_list(values) -> list[bool]:
+    """A flag column's values (an iterable of Python values: Arrow's
+    ``to_pylist`` or a pandas Series) as bools, NULL as False."""
+    return [v is True for v in values]
+
+
+class _Columns(dict):
+    """Column name -> a list of Python values, made by ``read(name)`` on
+    first use, so a key converts only the columns that its scan and its
+    measures read."""
+
+    def __init__(self, read):
+        super().__init__()
+        self.read = read
+
+    def __missing__(self, name):
+        self[name] = values = self.read(name)
+        return values
 
 
 def build_truth(flags, compiled, cols, size):
@@ -1015,54 +972,26 @@ def build_truth(flags, compiled, cols, size):
     return truth
 
 
-def _sort_partition(pdf, order_cols, order_asc):
-    """Order one partition's rows by the ORDER BY keys — semantically
-    ``pdf.sort_values(order_cols, ascending=order_asc, kind="mergesort",
-    na_position="last")``, which is also the fallback. The fast path is
-    ``np.lexsort`` (stable, like mergesort) on the key arrays directly:
-    pandas' multi-key sort builds a Categorical per key per call, which
-    profiling shows DOMINATES the whole scan worker on many-small-group
-    inputs (1500 groups × ~70 rows: 1.6 s of 2.2 s total, vs 0.3 s for
-    the NFA scan itself). Restricted to ALL-ASCENDING, null-free
-    numeric/datetime/bool keys — so NaN/NaT placement (pandas puts them
-    LAST; raw lexsort would put NaT first) and descending-negation
-    overflow corners can never diverge; anything else takes the pandas
-    path unchanged."""
-    import numpy as np
+def _sort_indices(table, order_cols, order_asc):
+    """The order of one key's rows (an Arrow table) by the ORDER BY
+    keys: a stable sort with NULL keys last in both directions. A NaN
+    key sorts after every number and before NULL, in both directions."""
+    import pyarrow.compute as pc
 
-    keys = []
-    if all(order_asc):
-        for c in order_cols:
-            a = pdf[c].to_numpy()
-            if a.dtype.kind in "mM":
-                a = a.view("int64")
-                if (a == np.iinfo(np.int64).min).any():  # NaT sentinel
-                    keys = None
-                    break
-            elif a.dtype.kind == "f":
-                if np.isnan(a).any():
-                    keys = None
-                    break
-            elif a.dtype.kind not in "biu":
-                keys = None  # strings/objects/nullable-ext: pandas path
-                break
-            keys.append(a)
-    else:
-        keys = None
-    if keys is None:
-        return pdf.sort_values(
-            order_cols, ascending=order_asc, kind="mergesort"
-        )
-    # lexsort sorts by the LAST key first
-    return pdf.take(np.lexsort(tuple(reversed(keys))))
+    return pc.sort_indices(
+        table,
+        sort_keys=[
+            (c, "ascending" if a else "descending")
+            for c, a in zip(order_cols, order_asc)
+        ],
+        null_placement="at_end",
+    )
 
 
 def _parse_within(spec):
     """WITHIN budget: an interval string ("8 HOUR", "INTERVAL '30'
-    MINUTE") -> pandas Timedelta for timestamp order keys, or a plain
-    number for numeric order keys."""
-    import pandas as pd
-
+    MINUTE") -> a ``datetime.timedelta`` for timestamp and date order
+    keys, or a plain number for numeric order keys."""
     from blazingsql_spark.operators.mr_expr import _UNITS
 
     if isinstance(spec, (int, float)) and not isinstance(spec, bool):
@@ -1075,7 +1004,7 @@ def _parse_within(spec):
         unit = m.group(2).upper()
         base = unit[:-1] if unit.endswith("S") and unit not in _UNITS else unit
         if base in _UNITS:
-            return pd.Timedelta(**{_UNITS[base]: float(m.group(1))})
+            return datetime.timedelta(**{_UNITS[base]: float(m.group(1))})
     try:
         return float(txt)
     except ValueError:
@@ -1104,7 +1033,7 @@ class Recognizer(NamedTuple):
     anchor_end: bool
     excluded_chars: frozenset  # chars of {- -} excluded symbols
     skip: tuple  # the AFTER MATCH mode, as scan_rows takes it
-    within: object  # the WITHIN bound: None, a number or a pd.Timedelta
+    within: object  # the WITHIN bound: None, a number or a timedelta
     flag_define: dict[str, str]  # symbol -> Spark SQL of a flag DEFINE
     flag_cols: dict[str, str]  # char -> its flag column, __p_<i>
     compiled: dict[str, object]  # char -> mr_expr closure
@@ -1143,8 +1072,6 @@ def compile_recognizer(
 
     ``stream=True`` adds what a stream cannot do: ^/$ anchors and
     PREV/NEXT navigation raise. Schema checks need no Spark job."""
-    import pandas as pd
-
     pattern, anchor_start, anchor_end = _strip_anchors(pattern)
     if stream and (anchor_start or anchor_end):
         # loud, not the generic metacharacter error: the batch operator
@@ -1206,7 +1133,7 @@ def compile_recognizer(
         is_time = isinstance(
             key_t, (T.TimestampType, T.TimestampNTZType, T.DateType)
         )
-        if is_time != isinstance(within_dur, pd.Timedelta):
+        if is_time != isinstance(within_dur, datetime.timedelta):
             raise ValueError(
                 f"MATCH_RECOGNIZE: WITHIN {within!r} does not fit the order "
                 f"key {order_key!r} of type {key_t.simpleString()} — use an "
@@ -1319,7 +1246,7 @@ def match_recognize(
     nav-free DEFINEs (which must then fit mr_expr's grammar) to mr_expr
     closures too, to property-check them against the Spark SQL flag
     columns."""
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if unmatched and not all_rows:
         raise ValueError(
@@ -1347,8 +1274,8 @@ def match_recognize(
     aux_cols = list(rec.flag_cols.values())
 
     # partition-context holder for PREV/NEXT measures (physical
-    # navigation may leave the match): run() keeps pdf/lo current
-    part_ctx: dict = {"pdf": None, "lo": 0}
+    # navigation may leave the match): run() keeps cols/lo current
+    part_ctx: dict = {"cols": None, "lo": 0}
     parsed = [
         _parse_measure(e, a, rec.symbols, part_ctx) for e, a in measures
     ]
@@ -1361,30 +1288,30 @@ def match_recognize(
             f"{'input' if all_rows else 'partition'} columns: "
             f"{sorted(clashes)}"
         )
-    if all_rows:
-        out_schema = T.StructType(
-            list(in_schema)
-            + [T.StructField(m_.alias, m_.ty(in_schema)) for m_ in parsed]
-        )
-    else:
-        out_schema = T.StructType(
-            [in_schema[k] for k in partition_by]
-            + [T.StructField(m_.alias, m_.ty(in_schema)) for m_ in parsed]
-        )
-    names_by_char = {c: s for s, c in rec.sym_chars.items()}
+    passed = in_schema.fieldNames() if all_rows else list(partition_by)
+    out_schema = T.StructType(
+        [in_schema[c] for c in passed]
+        + [T.StructField(m_.alias, m_.ty(in_schema)) for m_ in parsed]
+    )
+    out_type = to_arrow_schema(out_schema)
 
-    def run(key, pdf):
-        pdf = _sort_partition(pdf, order_cols, order_asc)
-        part_ctx["pdf"] = pdf
-        size = len(pdf)
+    def run(table):
+        """One key's rows, an Arrow table, to its output rows (or None).
+        Only the columns that the scan and the measures read become
+        Python values; passed-through columns are a ``take`` of the
+        key's own Arrow data."""
+        import pyarrow as pa
+
+        order = _sort_indices(table, order_cols, order_asc)
+        part = _Columns(lambda c: table.column(c).take(order).to_pylist())
+        part_ctx["cols"] = part
+        size = table.num_rows
         truth = build_truth(
-            {ch: flag_list(pdf[cn]) for ch, cn in rec.flag_cols.items()},
-            rec.compiled,
-            {c: pdf[c].tolist() for c in rec.used_cols},
-            size,
+            {ch: flag_list(part[cn]) for ch, cn in rec.flag_cols.items()},
+            rec.compiled, part, size,
         )
         bound = (
-            (pdf[order_cols[0]].tolist(), rec.within)
+            (part[order_cols[0]], rec.within)
             if rec.within is not None
             else None
         )
@@ -1393,87 +1320,53 @@ def match_recognize(
             anchor_start=rec.anchor_start, anchor_end=rec.anchor_end,
             read_chars=rec.read_chars,
         )
-        if all_rows:
-            frames = []
-            for n, (lo, hi, scodes) in enumerate(spans, start=1):
-                part_ctx["lo"] = lo
-                span = pdf.iloc[lo:hi].drop(columns=aux_cols)
-                for m_ in parsed:
-                    a, ev = m_.alias, m_.ev
-                    if m_.is_clf and not m_.explicit_final:
-                        # bare (or RUNNING) CLASSIFIER(): per-row symbol;
-                        # an explicit FINAL CLASSIFIER() falls through to
-                        # the constant last-row evaluation
-                        vals = [names_by_char.get(c) for c in scodes]
-                    elif (
-                        m_.running or not m_.explicit_final
-                    ) and not m_.prefix_inv:
-                        # RUNNING — the SQL:2016 DEFAULT for unprefixed
-                        # measures under ALL ROWS PER MATCH. run_ev
-                        # evaluates all prefixes in ONE O(span) pass
-                        # (cumulative fold, bit-identical to ev on each
-                        # prefix: the FINAL aggregate folds sequentially
-                        # too; property-tested). Only an explicit FINAL
-                        # (or a prefix-invariant MATCH_NUMBER()) takes
-                        # the constant whole-match evaluation below.
-                        vals = m_.run_ev(pdf.iloc[lo:hi], scodes, n)
-                    else:
-                        vals = ev(pdf.iloc[lo:hi], scodes, n)
-                    # object dtype like the ONE ROW branch: a None among
-                    # numeric values must stay a NULL, not collapse the
-                    # column to float64 (NaN semantics, int64 precision
-                    # loss past 2^53, and pandas concat FutureWarnings
-                    # against the all-NA unmatched frames)
-                    col = vals if isinstance(vals, list) else [vals] * len(span)
-                    span = span.assign(
-                        **{a: pd.Series(col, dtype=object, index=span.index)}
-                    )
-                if rec.excluded_chars:
-                    # {- -}: excluded rows fed the match and the measures
-                    # above; they just never reach the output
-                    span = span[[c not in rec.excluded_chars for c in scodes]]
-                frames.append(span)
-            if unmatched:
-                # WITH UNMATCHED ROWS: rows in NO match come back with
-                # every measure NULL (matched positions masked off; a
-                # TO NEXT ROW overlap marks a row matched if ANY match
-                # covered it)
-                hit = [False] * len(pdf)
-                for lo, hi, _ in spans:
-                    for j in range(lo, hi):
-                        hit[j] = True
-                un = pdf.iloc[[j for j, h in enumerate(hit) if not h]].drop(
-                    columns=aux_cols
-                )
-                if len(un):
-                    frames.append(
-                        un.assign(**{m_.alias: None for m_ in parsed})
-                    )
-            if not frames:
-                # object-dtype empties: a zero-match partition must not
-                # surface float64 columns Arrow cannot cast to the output
-                # schema's timestamp/string measure types
-                return pd.DataFrame(
-                    {
-                        c: pd.Series([], dtype=object)
-                        for c in out_schema.fieldNames()
-                    }
-                )
-            return pd.concat(frames)
-        out = {c: [] for c in out_schema.fieldNames()}
+        # rows: the sorted positions each output row passes through
+        # (ONE ROW PER MATCH passes only the key, so any row of the key)
+        rows, vals = [], [[] for _ in parsed]
         for n, (lo, hi, scodes) in enumerate(spans, start=1):
             part_ctx["lo"] = lo
-            span = pdf.iloc[lo:hi]
-            for k, v in zip(partition_by, key):
-                out[k].append(v)
-            # ONE ROW PER MATCH: running == final (last-row evaluation)
-            for m_ in parsed:
-                out[m_.alias].append(m_.ev(span, scodes, n))
-        # object dtype throughout: values carry their own types (Arrow
-        # casts per value), and zero-match groups stay castable to ANY
-        # measure type instead of defaulting to float64
-        return pd.DataFrame(
-            {k: pd.Series(v, dtype=object) for k, v in out.items()}
+            span = _Columns(lambda c, _lo=lo, _hi=hi: part[c][_lo:_hi])
+            if not all_rows:
+                # ONE ROW PER MATCH: running == final (last-row evaluation)
+                rows.append(lo)
+                for out, m_ in zip(vals, parsed):
+                    out.append(m_.ev(span, scodes, n))
+                continue
+            # {- -}: excluded rows fed the match and the measures; they
+            # just never reach the output
+            keep = [c not in rec.excluded_chars for c in scodes]
+            rows += [j for j, k in zip(range(lo, hi), keep) if k]
+            for out, m_ in zip(vals, parsed):
+                # RUNNING — the SQL:2016 DEFAULT for unprefixed measures
+                # under ALL ROWS PER MATCH: run_ev evaluates every prefix
+                # in ONE O(span) pass; an explicit FINAL is the constant
+                # whole-match value
+                col = (
+                    [m_.ev(span, scodes, n)] * len(scodes)
+                    if m_.final
+                    else m_.run_ev(span, scodes, n)
+                )
+                out += [v for v, k in zip(col, keep) if k]
+        if unmatched:
+            # WITH UNMATCHED ROWS: rows in NO match come back with every
+            # measure NULL (a TO NEXT ROW overlap marks a row matched if
+            # ANY match covered it)
+            hit = [False] * size
+            for lo, hi, _ in spans:
+                hit[lo:hi] = [True] * (hi - lo)
+            miss = [j for j, h in enumerate(hit) if not h]
+            rows += miss
+            for out in vals:
+                out += [None] * len(miss)
+        if not rows:
+            return None
+        taken = table.select(passed).take(order.take(pa.array(rows, pa.int64())))
+        return pa.Table.from_arrays(
+            [
+                pa.array(v, f.type) if isinstance(v, list) else v.cast(f.type)
+                for v, f in zip([*taken.columns, *vals], out_type)
+            ],
+            schema=out_type,
         )
 
     # The matcher is one Python stage over a key-hashed, key-sorted
@@ -1483,11 +1376,7 @@ def match_recognize(
     # which AQE's bytes-based coalescing leaves alone. The repartition
     # sits under the classification, so a PREV/NEXT window over the same
     # key rides the same exchange.
-    spark = df.sparkSession
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:  # e.g. 'auto' under AQE auto-optimized shuffle
-        n_part = spark.sparkContext.defaultParallelism
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # ONE ROW PER MATCH emits keys and measures only, so the Python stage
     # gets just what run() reads: the keys, ORDER BY keys, flags,
     # navigation-DEFINE columns and every column a measure names (a
@@ -1515,8 +1404,7 @@ def match_recognize(
     else:
         coded = classify(df.repartition(1))
     coded = shipped(coded)
-    kernel = _per_key_kernel(run, list(partition_by), out_schema, spark)
-    return coded.mapInArrow(kernel, out_schema)
+    return coded.mapInArrow(_per_key_kernel(run, list(partition_by)), out_schema)
 
 
 # Input bytes (Catalyst's estimate of the frame the matcher receives:
@@ -1595,73 +1483,28 @@ def _group_value(v):
     return v
 
 
-def _per_key_kernel(run, keys, out_schema, spark):
+def _per_key_kernel(run, keys):
     """The matcher stage as a ``mapInArrow`` function: it streams one
     key-sorted partition's Arrow batches, splits them into keys on the
-    Arrow data and calls ``run(key, pdf)`` for each complete key,
+    Arrow data and calls ``run(table)`` with each complete key's rows,
     carrying the last key of a batch into the next, so memory holds one
-    batch plus one key. ``run`` gets exactly the key tuple and frame
-    that ``groupBy(keys).applyInPandas`` would hand it, converted by
-    PySpark's grouped-map serializer, and its output is cast to Arrow by
-    the same serializer."""
-    conf = spark.conf
-
-    def flag(key):
-        return conf.get(key, "false").lower() == "true"
-
-    ser_args = (
-        conf.get("spark.sql.session.timeZone"),
-        flag("spark.sql.execution.pandas.convertToArrowArraySafely"),
-        True,  # assign output columns by name
-        flag("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled"),
-    )
-    large_types = flag("spark.sql.execution.arrow.useLargeVarTypes")
+    batch plus one key. ``run`` returns the key's output rows as an
+    Arrow table, or None; the tables of one input batch leave as one
+    batch."""
 
     def kernel(batches):
-        from itertools import groupby
-
-        import pandas as pd
         import pyarrow as pa
-        from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        ser = GroupPandasUDFSerializer(*ser_args)
-        out_type = to_arrow_type(out_schema, prefers_large_types=large_types)
 
         def run_keys(table, starts):
-            """run() over each key of ``table``, whose keys start at
-            ``starts``. The table converts to pandas once; arrow to
-            pandas is value by value except that an integral column
-            with a NULL becomes float64 and a boolean one object, so
-            such a column is converted again from each key's own rows,
-            where it keeps its type unless that key has the NULL."""
-            cols = list(table.itercolumns())
-            whole = pd.concat(
-                [ser.arrow_to_pandas(c, i) for i, c in enumerate(cols)], axis=1
-            )
-            redo = [
-                (i, c)
-                for i, c in enumerate(cols)
-                if c.null_count
-                and (pa.types.is_integer(c.type) or pa.types.is_boolean(c.type))
+            return [
+                run(table.slice(a, b - a))
+                for a, b in zip(starts, [*starts[1:], table.num_rows])
             ]
-            out = []
-            for a, b in zip(starts, [*starts[1:], table.num_rows]):
-                pdf = whole.iloc[a:b].reset_index(drop=True)
-                for i, c in redo:
-                    pdf.isetitem(i, ser.arrow_to_pandas(c.slice(a, b - a), i))
-                out.append(run(tuple(pdf[k].iloc[0] for k in keys), pdf))
-            return out
 
-        def emit(frames):
-            # frames of equal dtypes concatenate unchanged; ones that
-            # differ (an int64 column one key holds as float64) convert
-            # apart, so no concat widens a column
-            nonempty = (f for f in frames if len(f))
-            for _, same in groupby(nonempty, key=lambda f: tuple(f.dtypes)):
-                pdf = pd.concat(list(same), ignore_index=True)
-                arr = ser._create_struct_array(pdf, out_type)
-                yield pa.RecordBatch.from_struct_array(arr)
+        def emit(tables):
+            tables = [t for t in tables if t is not None]
+            if tables:
+                yield from pa.concat_tables(tables).combine_chunks().to_batches()
 
         carry = []  # the Arrow rows of the batch-spanning key seen so far
         for batch in batches:

@@ -533,15 +533,8 @@ class StreamMatcher:
 DEFAULT_CODE_MAP = {"view": "v", "click": "c", "purchase": "p", "error": "e"}
 DEFAULT_CODE = "s"
 
-_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_matches", T.LongType()),
-        T.StructField("longest_match", T.LongType()),
-        T.StructField("n_codes", T.LongType()),
-        T.StructField("n_aborted", T.LongType()),
-    ]
-)
+# the counts each stream emits after its key column
+_TOTALS = ("n_matches", "longest_match", "n_codes", "n_aborted")
 # a key's state: its counts and the pickled carry, written and read only
 # by _stream_totals. The carry sits third as a binary field, so a
 # checkpoint of an earlier layout (a string carry, or a binary carry
@@ -558,18 +551,21 @@ _STATE_SCHEMA = T.StructType(
 )
 
 
-def _stream_totals(frame: DataFrame, order: list[str], rows_of, **matcher):
-    """The update every stream here runs, per ``user_id`` of ``frame``:
-    load the key's state, sort the micro-batch by ``order``, feed
+def _stream_totals(
+    frame: DataFrame, key: str, order: list[str], rows_of, **matcher
+):
+    """The update every stream here runs, per ``key`` of ``frame``: load
+    the key's state, sort the micro-batch by ``order``, feed
     ``rows_of(batch)`` to a :class:`StreamMatcher` built from ``matcher``,
-    save the counts and the carry, and emit the snapshot row."""
+    save the counts and the carry, and emit the snapshot row: the key,
+    under its own name and type, then the counts."""
     import pickle  # noqa: PLC0415
 
     import pandas as pd  # noqa: PLC0415
 
     StreamMatcher(**matcher)  # validate eagerly on the driver
 
-    def update(key, pdfs, state):
+    def update(k, pdfs, state):
         m = StreamMatcher(**matcher)
         seen = 0
         if state.exists:
@@ -581,19 +577,17 @@ def _stream_totals(frame: DataFrame, order: list[str], rows_of, **matcher):
         state.update(
             (m.n_matches, m.longest, pickle.dumps(m.carry), seen, m.n_aborted)
         )
-        n_fin, longest_fin = m.snapshot()
+        totals = (*m.snapshot(), seen, m.n_aborted)
         yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_matches": [n_fin],
-                "longest_match": [longest_fin],
-                "n_codes": [seen],
-                "n_aborted": [m.n_aborted],
-            }
+            {key: [k[0]], **{c: [v] for c, v in zip(_TOTALS, totals)}}
         )
 
-    return frame.groupBy("user_id").applyInPandasWithState(
-        update, _OUT_SCHEMA, _STATE_SCHEMA, "update", "NoTimeout"
+    out_schema = T.StructType(
+        [T.StructField(key, frame.schema[key].dataType)]
+        + [T.StructField(c, T.LongType()) for c in _TOTALS]
+    )
+    return frame.groupBy(key).applyInPandasWithState(
+        update, out_schema, _STATE_SCHEMA, "update", "NoTimeout"
     )
 
 
@@ -624,7 +618,7 @@ def pattern_match_stream(
 
     return _stream_totals(
         events.select("user_id", "ts", "event_id", "event_type"),
-        ["ts", "event_id"], codes,
+        "user_id", ["ts", "event_id"], codes,
         nfa=compile_pattern(pattern), max_carry=max_carry,
     )
 
@@ -648,8 +642,9 @@ def match_recognize_stream(
     operator's scanner and preference order.
 
     Emits one (key, n_matches, longest_match, n_codes, n_aborted) row
-    per key per micro-batch with the totals the batch operator would
-    report on the prefix seen so far — the same contract, state bound,
+    per key per micro-batch, the key under ``key_col``'s own name and
+    type, with the totals the batch operator would report on the prefix
+    seen so far — the same contract, state bound,
     and ``max_carry`` abort discipline as pattern_match_stream.
     MEASURES are not part of this surface: emission is a count and a
     length per match. ^/$ anchors raise (a stream has no last row), and
@@ -677,8 +672,6 @@ def match_recognize_stream(
     Cross-batch order contract: per-key rows must arrive in (ts, id)
     order across micro-batches (within a batch they are sorted), same
     as every stateful twin here."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
     from blazingsql_spark.operators.match_recognize import (
         build_truth,
         compile_recognizer,
@@ -692,8 +685,7 @@ def match_recognize_stream(
     val_cols = sorted(rec.used_cols | {ts_col})
     n_vals = len(val_cols)
     coded = rec.classify(events).select(
-        F.col(key_col).alias("user_id"),
-        *dict.fromkeys([ts_col, id_col, *val_cols]),
+        *dict.fromkeys([key_col, ts_col, id_col, *val_cols]),
         *rec.flag_cols.values(),
     )
 
@@ -718,7 +710,7 @@ def match_recognize_stream(
         return [r[ts_at] for r in rows], rec.within
 
     return _stream_totals(
-        coded, [ts_col, id_col], rows_of,
+        coded, key_col, [ts_col, id_col], rows_of,
         nfa=rec.nfa, truth_of=truth_of, carry=[], max_carry=max_carry,
         skip=rec.skip, read_chars=rec.read_chars,
         within_of=within_of if rec.within is not None else None,

@@ -1536,18 +1536,15 @@ def test_measure_arithmetic_matches_duckdb_property():
     @settings(max_examples=120, deadline=None)
     @given(expr=exprs(), v=vals, codes_seed=st.integers(0, 1 << 30))
     def check(expr, v, codes_seed):
-        import pandas as pd
-
         rnd = random.Random(codes_seed)
         codes = "".join(rnd.choice("ac") for _ in v)  # 'c' = symbol C
         try:
             meas = _parse_measure(expr, "m", {"C": "c", "A": "a"})
         except ValueError:
             return  # e.g. a lone literal — not a measure, fine
-        pdf = pd.DataFrame({"v": pd.array(v, dtype="Int64")})
-        got = meas.ev(pdf, codes, 1)
-        # DuckDB twin: substitute each atom's value computed by pandas
-        # (itself unit-tested), then let DuckDB do the arithmetic
+        got = meas.ev({"v": v}, codes, 1)
+        # DuckDB twin: substitute each atom's value computed in Python
+        # here, then let DuckDB do the arithmetic
         cv = [x for x, c in zip(v, codes) if c == "c"]
         nn = [x for x in v if x is not None]
         cnn = [x for x in cv if x is not None]
@@ -2012,22 +2009,23 @@ def test_running_cumulative_equals_per_prefix_property():
     """The O(span) cumulative RUNNING evaluators (_Measure.run_ev) must
     be BIT-identical to evaluating the FINAL evaluator on every prefix
     (the pre-r11 O(span²) path, kept as the fallback/reference) — over
-    randomized values including NULLs, floats (fold-order sensitive),
-    ints, symbol restrictions, logical offsets, and arithmetic
-    composition."""
-    import pandas as pd
-
+    randomized values including NULLs, NaNs, floats (fold-order
+    sensitive), ints, symbol restrictions, logical offsets, and
+    arithmetic composition."""
     from blazingsql_spark.operators.match_recognize import _parse_measure
 
     rnd = random.Random(20260816)
     sym_chars = {"A": "a", "B": "b", "C": "c"}
     exprs = [
         "MATCH_NUMBER()",
+        "CLASSIFIER()",
         "COUNT(*)",
         "COUNT(A.*)",
         "COUNT(B.*)",
+        "COUNT(x)",
         "SUM(x)", "SUM(A.x)", "AVG(x)", "AVG(B.x)",
         "MIN(x)", "MAX(A.x)", "MIN(B.y)", "MAX(y)",
+        "STDDEV(x)", "VAR_POP(A.x)",
         "FIRST(x)", "LAST(x)", "FIRST(A.x, 1)", "LAST(B.x, 2)",
         "FIRST(x, 3)", "LAST(y)",
         "LAST(x) - FIRST(x)",
@@ -2040,6 +2038,9 @@ def test_running_cumulative_equals_per_prefix_property():
     for m in measures:
         assert m.run_ev is not None, f"{m.alias}: no cumulative evaluator"
 
+    def same(f, s):
+        return f == s or (f != f and s != s)  # NaN equals NaN here
+
     for trial in range(60):
         size = rnd.randint(1, 25)
         codes = "".join(rnd.choice("abc") for _ in range(size))
@@ -2049,20 +2050,21 @@ def test_running_cumulative_equals_per_prefix_property():
                 r = rnd.random()
                 if r < 0.2:
                     out.append(None)
+                elif r < 0.3 and float_ok:
+                    out.append(float("nan"))
                 elif r < 0.6 and float_ok:
                     out.append(rnd.uniform(-1e6, 1e6))
                 else:
                     out.append(rnd.randint(-1000, 1000))
             return out
-        pdf = pd.DataFrame(
-            {"x": pd.Series(col(), dtype=object),
-             "y": pd.Series(col(float_ok=False), dtype=object)}
-        )
+        cols = {"x": col(), "y": col(float_ok=False)}
         n = rnd.randint(1, 9)
         for m in measures:
-            fast = m.run_ev(pdf, codes, n)
+            fast = m.run_ev(cols, codes, n)
             slow = [
-                m.ev(pdf.iloc[: i + 1], codes[: i + 1], n)
+                m.ev(
+                    {c: v[: i + 1] for c, v in cols.items()}, codes[: i + 1], n
+                )
                 for i in range(size)
             ]
             assert len(fast) == size
@@ -2070,9 +2072,9 @@ def test_running_cumulative_equals_per_prefix_property():
                 assert (f is None) == (s is None), (m.alias, trial, i, f, s)
                 if f is not None:
                     assert type(f) is type(s) or (
-                        float(f) == float(s)
+                        same(float(f), float(s))
                     ), (m.alias, trial, i, f, s)
-                    assert f == s, (m.alias, trial, i, repr(f), repr(s))
+                    assert same(f, s), (m.alias, trial, i, repr(f), repr(s))
 
 
 def test_measures_clause_optional(spark):
@@ -2603,46 +2605,62 @@ def test_in_automaton_nd_scanner_matches_backtracking_reference():
         assert got == ref, (pat, size, got, ref)
 
 
-def test_sort_partition_equals_pandas_sort():
-    """_sort_partition's np.lexsort fast path must be permutation-
-    identical to the pandas mergesort it replaces (stable, same
-    tiebreak), and every ineligible shape — descending keys, NaN/NaT,
-    string keys — must take the pandas path and so agree trivially."""
-    import numpy as np
+def test_arrow_sort_equals_pandas_sort():
+    """The matcher orders each key's rows with _sort_indices, a stable
+    Arrow sort with NULL keys last in both directions. On random frames
+    it must be permutation-identical to pandas' stable mergesort with
+    NULLs last, which holds every row without a NaN key. A NaN key sorts
+    after every number and before NULL in both directions, so the
+    reference replaces it by +inf (ascending) or -inf (descending)."""
     import pandas as pd
+    import pyarrow as pa
 
-    from blazingsql_spark.operators.match_recognize import _sort_partition
+    from blazingsql_spark.operators.match_recognize import _sort_indices
 
     rnd = random.Random(20260816)
     for trial in range(60):
         n = rnd.randint(0, 40)
-        pdf = pd.DataFrame(
-            {
-                "ts": pd.to_datetime(
-                    [rnd.randint(0, 10) * 1_000_000_000 for _ in range(n)]
-                ),
-                "k": [rnd.randint(0, 5) for _ in range(n)],
-                "f": [rnd.uniform(0, 3) for _ in range(n)],
-                "s": [rnd.choice("xyz") for _ in range(n)],
-                "payload": list(range(n)),
-            }
-        )
+        ts = [rnd.randint(0, 10) * 1_000_000 for _ in range(n)]
+        f = [rnd.uniform(0, 3) for _ in range(n)]
         if trial % 4 == 0 and n:
-            pdf.loc[pdf.index[rnd.randrange(n)], "ts"] = pd.NaT
-        if trial % 5 == 0 and n:
-            pdf.loc[pdf.index[rnd.randrange(n)], "f"] = float("nan")
-        for cols, asc in [
+            ts[rnd.randrange(n)] = None
+        if trial % 3 == 0 and n:
+            f[rnd.randrange(n)] = None
+        nan_at = rnd.randrange(n) if trial % 5 == 0 and n else None
+        if nan_at is not None:
+            f[nan_at] = float("nan")
+        cols = {
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "k": [rnd.randint(0, 5) for _ in range(n)],
+            "f": pa.array(f, pa.float64()),
+            "s": [rnd.choice("xyz") for _ in range(n)],
+            "payload": list(range(n)),
+        }
+        table = pa.table(cols)
+        pdf = pd.DataFrame(
+            {c: v.to_pylist() if isinstance(v, pa.Array) else v
+             for c, v in cols.items()}
+        )
+        pdf["ts"] = pd.to_datetime(pdf["ts"])
+        for order, asc in [
             (["ts", "k"], [True, True]),
             (["k", "f"], [True, True]),
             (["f", "ts", "k"], [True, True, True]),
-            (["k", "ts"], [False, True]),  # descending: pandas path
-            (["s", "k"], [True, True]),  # string key: pandas path
+            (["k", "ts"], [False, True]),
+            (["f", "k"], [False, True]),
+            (["s", "k"], [True, False]),
         ]:
-            got = _sort_partition(pdf, cols, asc)
-            want = pdf.sort_values(cols, ascending=asc, kind="mergesort")
-            assert list(got["payload"]) == list(want["payload"]), (
-                trial, cols, asc,
+            got = table.column("payload").take(
+                _sort_indices(table, order, asc)
+            ).to_pylist()
+            ref = pdf
+            if nan_at is not None and "f" in order:
+                inf = float("inf") if asc[order.index("f")] else float("-inf")
+                ref = pdf.assign(f=pdf["f"].where(pdf.index != nan_at, inf))
+            want = ref.sort_values(
+                order, ascending=asc, kind="mergesort", na_position="last"
             )
+            assert got == list(want["payload"]), (trial, order, asc)
 
 
 def test_prev_next_measures(spark):
@@ -3098,10 +3116,9 @@ def test_kernel_keeps_bigint_precision_beside_null(spark):
     """Keys 2**53 and 2**53 + 1 sit next to a NULL key in ONE Arrow
     batch, with epoch-nanosecond BIGINT order values and a passed-
     through BIGINT that is NULL under one key and 2**53 + 1 under the
-    others. As under groupBy, only the NULL key's frame may hold a
-    column as float64: the two big keys stay apart, their rows order by
-    the exact ts (the float64 values tie and would reorder them), and
-    every BIGINT comes back exact."""
+    others. The two big keys stay apart, their rows order by the exact
+    ts (as float64 the values tie and would reorder them), and every
+    BIGINT comes back exact."""
     big, base = 2**53, 1_700_000_000_000_000_000
     rows = []
     keyed_ids = ((None, [None, 7, 8]), (big, [big + 1] * 3), (big + 1, [1, 2, big + 1]))
@@ -3136,21 +3153,18 @@ def test_kernel_keeps_bigint_precision_beside_null(spark):
     ) == sorted((k, ts, eid) for k, ts, eid, _ in rows if k is not None)
 
 
-def test_kernel_hands_run_the_grouped_map_frames(spark):
+def test_kernel_hands_run_each_keys_arrow_rows():
     """Driven directly over two Arrow batches (key 1 spans them; keys 2
     and 3 complete in the second), the kernel hands run() each key's
-    tuple and frame exactly as a grouped map converts that key's rows
-    on their own: same dtypes and values for every column type, with
-    integral and boolean columns that hold a NULL under one key only (a
-    batch-wide conversion would turn them float64/object for every
-    key)."""
+    rows as the Arrow data they arrived as: BIGINT 2**53 + 1 exact
+    beside a NULL, NaN distinct from NULL, and nested, decimal, date and
+    timestamp values intact. The tables run() returns for one input
+    batch leave as one batch."""
     import datetime
     import decimal
+    import math
 
-    import pandas as pd
     import pyarrow as pa
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
 
     from blazingsql_spark.operators import match_recognize as mr
 
@@ -3179,27 +3193,133 @@ def test_kernel_hands_run_the_grouped_map_frames(spark):
     batches = [*table.slice(0, 4).to_batches(), *table.slice(4).to_batches()]
     seen = []
 
-    def capture(key, pdf):
-        seen.append((key, pdf))
-        return pd.DataFrame({"k": []})
+    def capture(rows):
+        seen.append(rows)
+        return None
 
-    out_schema = T.StructType([T.StructField("k", T.LongType())])
-    kernel = mr._per_key_kernel(capture, ["k"], out_schema, spark)
-    assert list(kernel(iter(batches))) == []
-
-    ser = GroupPandasUDFSerializer(
-        spark.conf.get("spark.sql.session.timeZone"), False, True, False
-    )
+    assert list(mr._per_key_kernel(capture, ["k"])(iter(batches))) == []
     bounds = [(0, 2), (2, 6), (6, 8), (8, 10), (10, 11)]
     assert len(seen) == len(bounds)
-    for (key, pdf), (a, b) in zip(seen, bounds):
-        part = table.slice(a, b - a)
-        want = pd.concat(
-            [ser.arrow_to_pandas(c, i) for i, c in enumerate(part.itercolumns())],
-            axis=1,
-        )
-        pd.testing.assert_frame_equal(pdf, want, check_exact=True)
-        assert repr(key) == repr(tuple(want["k"].iloc[:1]))
-    assert seen[1][1]["i64"].tolist() == [big] * 4
-    assert seen[3][1]["i64"].tolist() == [big] * 2
-    assert seen[3][1]["i8"].dtype == "int8" and seen[3][1]["b"].dtype == bool
+    for rows, (a, b) in zip(seen, bounds):
+        want = table.slice(a, b - a)
+        assert rows.schema == table.schema
+        # repr: NaN compares equal to NaN, and None stays apart from it
+        assert repr(rows.to_pylist()) == repr(want.to_pylist())
+    assert seen[0].column("i64").to_pylist() == [None, 1]
+    assert seen[1].column("i64").to_pylist() == [big] * 4
+    null, nan = seen[0].column("f").to_pylist()
+    assert null is None and math.isnan(nan)
+    assert math.isnan(seen[1].column("arr").to_pylist()[1][0])
+    assert seen[1].column("dec").to_pylist()[2] is None
+
+    def keys_only(rows):
+        return rows.select(["k"])
+
+    out = list(mr._per_key_kernel(keys_only, ["k"])(iter(batches)))
+    assert [b.num_rows for b in out] == [2, 8, 1]
+    assert pa.Table.from_batches(out).column("k").to_pylist() == keys
+
+
+def test_nan_and_null_measures_equal_spark_sql(spark):
+    """NaN is a value and NULL is missing, as in Spark SQL. An events
+    copy holds NaN and NULL in ``value`` (DOUBLE) and is keyed by a
+    DOUBLE ``g`` holding NaN, NULL, -0.0 and 0.0, plus a key whose
+    values are all NaN and one whose values are all NULL. Under
+    PATTERN (A+) with an always-true A every key is one match, so the
+    ONE ROW PER MATCH measures equal the GROUP BY spelling (FIRST/LAST
+    as min_by/max_by on the order key), the ALL ROWS PER MATCH RUNNING
+    measures equal the running-window spelling, and every passed-through
+    NaN stays NaN."""
+    import math
+
+    from tests.conftest import SF_DIR
+
+    spark.read.parquet(f"{SF_DIR}/events.parquet").createOrReplaceTempView(
+        "nan_events_src"
+    )
+    df = spark.sql(
+        """
+        SELECT event_id, ts, user_id,
+               CASE WHEN user_id % 7 = 4 THEN CAST('NaN' AS DOUBLE)
+                    WHEN user_id % 7 = 5 THEN NULL
+                    WHEN event_id % 7 = 0 THEN NULL
+                    WHEN event_id % 5 = 0 THEN CAST('NaN' AS DOUBLE)
+                    ELSE value END AS value,
+               CASE user_id % 7 WHEN 0 THEN CAST('NaN' AS DOUBLE)
+                    WHEN 1 THEN NULL
+                    WHEN 2 THEN CAST('-0.0' AS DOUBLE)
+                    WHEN 3 THEN 0.0D
+                    WHEN 4 THEN 1.5D
+                    WHEN 5 THEN 2.5D
+                    ELSE 3.5D END AS g
+        FROM nan_events_src
+        """
+    )
+    df.createOrReplaceTempView("nan_events")
+    aggs = ["SUM", "AVG", "MIN", "MAX", "COUNT", "STDDEV"]
+    names = ["s", "a", "mn", "mx", "c", "sd", "f", "l", "n"]
+    measures = [(f"{a}(value)", n) for a, n in zip(aggs, names)] + [
+        ("FIRST(value)", "f"), ("LAST(value)", "l"), ("COUNT(*)", "n"),
+    ]
+
+    def canon(v):
+        if isinstance(v, float):
+            return "nan" if v != v else v + 0.0  # -0.0 groups with 0.0
+        return v
+
+    def same(a, b):
+        if isinstance(a, float) and isinstance(b, float):
+            if a != a or b != b:
+                return a != a and b != b
+            return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
+        return a == b
+
+    def assert_rows_equal(got, want, key):
+        got = {canon(r[key]): r for r in got}
+        want = {canon(r[key]): r for r in want}
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+        for k, w in want.items():
+            g = got[k]
+            assert g.__fields__ == w.__fields__, (g, w)
+            assert all(same(x, y) for x, y in zip(g, w)), (k, g, w)
+
+    one = match_recognize(
+        df, ["g"], ["event_id"], measures, "A+", {"A": "TRUE"}
+    ).collect()
+    by_key = spark.sql(
+        """
+        SELECT g, SUM(value) AS s, AVG(value) AS a, MIN(value) AS mn,
+               MAX(value) AS mx, COUNT(value) AS c, STDDEV(value) AS sd,
+               min_by(value, event_id) AS f, max_by(value, event_id) AS l,
+               COUNT(*) AS n
+        FROM nan_events GROUP BY g
+        """
+    ).collect()
+    assert len(by_key) == 6  # -0.0 and 0.0 are one key
+    assert len(one) == len(by_key)
+    assert_rows_equal(one, by_key, "g")
+    nan_key = [r for r in one if r.g is not None and r.g != r.g]
+    assert len(nan_key) == 1 and math.isnan(nan_key[0].mx)
+
+    every = match_recognize(
+        df, ["g"], ["event_id"], measures, "A+", {"A": "TRUE"},
+        all_rows=True,
+    ).collect()
+    running = spark.sql(
+        """
+        SELECT *, SUM(value) OVER w AS s, AVG(value) OVER w AS a,
+               MIN(value) OVER w AS mn, MAX(value) OVER w AS mx,
+               COUNT(value) OVER w AS c, STDDEV(value) OVER w AS sd,
+               first(value) OVER w AS f, last(value) OVER w AS l,
+               COUNT(*) OVER w AS n
+        FROM nan_events
+        WINDOW w AS (PARTITION BY g ORDER BY event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        """
+    ).collect()
+    assert len(every) == len(running) == df.count()
+    assert_rows_equal(every, running, "event_id")
+    passed = {r.event_id: r.value for r in every}
+    planted = [r.event_id for r in df.collect() if r.value != r.value]
+    assert planted and all(math.isnan(passed[e]) for e in planted)
+    assert any(r.value is None for r in every)

@@ -315,6 +315,74 @@ def test_match_recognize_stream_matches_batch_operator(spark, tmp_path):
         )
 
 
+def test_match_recognize_stream_keeps_its_key_column(spark, tmp_path):
+    """A stream keyed by a STRING column emits that column, under its own
+    name and type, and its per-key totals after the last micro-batch
+    equal the batch operator's on the same rows."""
+    import pandas as pd
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+    from blazingsql_spark.streaming.patterns import match_recognize_stream
+
+    rng = random.Random(12)
+    rows = [
+        (f"acct-{u}", i, rng.choice(["view", "click", "click", "purchase"]), i)
+        for u in range(1, 7)
+        for i in range(rng.randint(5, 30))
+    ]
+    pdf = pd.DataFrame(rows, columns=["acct", "event_id", "event_type", "ts"])
+    src = tmp_path / "src_str"
+    src.mkdir()
+    third = len(pdf) // 3
+    for i in range(3):
+        chunk = pdf.iloc[i * third : (i + 1) * third if i < 2 else len(pdf)]
+        chunk.to_json(src / f"b{i}.json", orient="records", lines=True)
+    schema = "acct string, event_id long, event_type string, ts long"
+    raw = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+    )
+    define = {
+        "V": "event_type = 'view'",
+        "C": "event_type = 'click'",
+        "P": "event_type = 'purchase'",
+    }
+    out = match_recognize_stream(raw, "acct", "ts", "event_id", "V C+ P", define)
+    assert out.schema.fieldNames()[0] == "acct"
+    assert out.schema["acct"].dataType.simpleString() == "string"
+    q = (
+        out.writeStream.format("memory")
+        .queryName("t_mr_str_stream")
+        .outputMode("update")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {
+        r.acct: (r.n_matches, r.longest_match)
+        for r in spark.sql(
+            "SELECT * FROM t_mr_str_stream ORDER BY n_codes"
+        ).collect()
+    }
+    per_match = match_recognize(
+        spark.createDataFrame(pdf, schema), ["acct"], ["ts", "event_id"],
+        [("COUNT(*)", "match_len")], "V C+ P", define,
+    )
+    want = {
+        r.acct: (r.n, r.longest)
+        for r in per_match.groupBy("acct")
+        .agg(F.count("*").alias("n"), F.max("match_len").alias("longest"))
+        .collect()
+    }
+    assert want, "no matches to compare"
+    assert set(got) == set(pdf["acct"])
+    assert {k: got[k] for k in want} == want
+    assert all(got[k] == (0, 0) for k in set(got) - set(want))
+
+
 def test_match_recognize_stream_symbol_relative_nav(spark, tmp_path):
     """Streaming symbol-relative navigation: FIRST(V.ts) in DEFINE
     resumes across REAL micro-batch boundaries (the carry persists the
@@ -605,8 +673,7 @@ def test_match_recognize_stream_nondeterministic_assignment(spark, tmp_path):
         spark.sql("SELECT * FROM t_mr_nd_stream")
         .toPandas()
         .sort_values("n_codes")
-        .groupby("uid" if "uid" in spark.sql(
-            "SELECT * FROM t_mr_nd_stream").columns else "user_id")
+        .groupby("uid")
         .last()
         .reset_index()
     )
@@ -620,9 +687,8 @@ def test_match_recognize_stream_nondeterministic_assignment(spark, tmp_path):
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    key_col = "user_id"
     for _, row in got.iterrows():
-        assert row.n_matches == want.get(row[key_col], 0), row[key_col]
+        assert row.n_matches == want.get(row.uid, 0), row.uid
     assert want == {1: 4, 2: 2}  # pairs per partition, sanity
 
     # anchors are rejected loudly on streams
