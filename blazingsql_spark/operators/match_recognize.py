@@ -101,7 +101,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from blazingsql_spark.operators import mr_expr
-from blazingsql_spark.operators.mr_expr import mask_literals
+from blazingsql_spark.operators.mr_expr import mask_literals, spark_lt
 from blazingsql_spark.streaming.patterns import (
     _SKIP_PAST,
     _Nfa,
@@ -162,12 +162,6 @@ class _Measure(NamedTuple):
     run_ev: object
     ty: object  # (input schema) -> Spark DataType
     final: bool  # explicit FINAL prefix
-
-
-def _spark_lt(a, b) -> bool:
-    """``a < b`` in Spark's value order, where NaN is larger than every
-    number (and equal to NaN)."""
-    return a < b or (b != b and a == a)
 
 
 def _parse_measure(
@@ -288,8 +282,8 @@ def _compile_single(expr: str, sym_chars: dict[str, str], part_ctx=None):
             if _agg in ("SUM", "AVG"):
                 return total + v
             if _agg == "MIN":
-                return v if _spark_lt(v, total) else total
-            return v if _spark_lt(total, v) else total
+                return v if spark_lt(v, total) else total
+            return v if spark_lt(total, v) else total
 
         def ev_agg(cols, codes, n, _ch=ch, _col=col, _agg=agg):
             vals = [

@@ -49,9 +49,10 @@ SQL:2016 DEFINE semantics):
   of the attempt (the universal row-pattern variable): attempt start + n
   / current row - n.
 
-Three-valued logic: NULL (Python None / NaN / NaT) propagates through
-arithmetic and comparisons; AND/OR are Kleene; the compiled predicate is
-satisfied only when the result is exactly TRUE.
+Three-valued logic: NULL (Python None) propagates through arithmetic and
+comparisons; AND/OR are Kleene; the compiled predicate is satisfied only
+when the result is exactly TRUE. A NaN is a value, not NULL, and compares
+as in Spark: equal to NaN and above every number.
 """
 
 from __future__ import annotations
@@ -106,11 +107,6 @@ class MatchCtx:
         self.pos = pos
         self.size = size
         self.tent = tent
-
-
-def _fetch(cols, name, idx):
-    v = cols[name][idx]
-    return None if v is None or pd.isna(v) else v
 
 
 class ImmutableRows:
@@ -196,7 +192,15 @@ def _num(tok: str):
     return float(tok) if ("." in tok or "e" in tok or "E" in tok) else int(tok)
 
 
+def spark_lt(a, b) -> bool:
+    """``a < b`` in Spark's value order, where NaN is larger than every
+    number (and equal to NaN)."""
+    return a < b or (b != b and a == a)
+
+
 def _cmp(op: str, a, b):
+    """Comparison in Spark's value order: None is NULL, NaN equals NaN
+    and is above every number."""
     if a is None or b is None:
         return None
     try:
@@ -211,14 +215,15 @@ def _cmp(op: str, a, b):
                     f"{type(a).__name__} {op} {type(b).__name__} "
                     f"({a!r} vs {b!r})"
                 )
-            return a == b if op == "=" else a != b
+            eq = a == b or (a != a and b != b)
+            return eq if op == "=" else not eq
         if op == "<":
-            return a < b
+            return spark_lt(a, b)
         if op == "<=":
-            return a <= b
+            return not spark_lt(b, a)
         if op == ">":
-            return a > b
-        return a >= b
+            return spark_lt(b, a)
+        return not spark_lt(a, b)
     except TypeError as exc:  # str vs number etc.
         raise ValueError(
             f"MATCH_RECOGNIZE DEFINE: cannot compare {type(a).__name__} "
@@ -530,7 +535,7 @@ def compile_predicate(sql: str, columns: list[str], sym_chars: dict[str, str]):
 
                 def nav(ctx, _k=val, _s=sym_char, _c=col, _n=n):
                     i = _nav_idx(_k, _s, _n, ctx)
-                    return None if i is None else _fetch(ctx.cols, _c, i)
+                    return None if i is None else ctx.cols[_c][i]
 
                 return nav
             raise ValueError(
@@ -544,11 +549,11 @@ def compile_predicate(sql: str, columns: list[str], sym_chars: dict[str, str]):
 
                 def ref(ctx, _s=sym_char, _c=col):
                     i = _nav_idx("LAST", _s, 0, ctx)
-                    return None if i is None else _fetch(ctx.cols, _c, i)
+                    return None if i is None else ctx.cols[_c][i]
 
                 return ref
             col = col_ref(val)
-            return lambda ctx, _c=col: _fetch(ctx.cols, _c, ctx.j)
+            return lambda ctx, _c=col: ctx.cols[_c][ctx.j]
         if (kind, val) == ("op", "("):
             take()
             f = parse_or()

@@ -16,6 +16,14 @@ large cluster, trimmed to work on local[N]:
   classes instead of compiling and JIT-warming them again. The reference
   compiles nothing per query: its expressions run through one precompiled
   GPU interpreter (engine/src/Interpreter/interpreter_cpp.h:30-36).
+- A JIT policy for the local-mode driver JVM (``_JIT_POLICY``): the four
+  C2 (tier-4) compile thresholds raised 10x, so hot code still reaches
+  C2 while Spark's broad, lukewarm driver code (planning, scheduling,
+  streaming micro-batches) stays in C1. That JIT work is fixed cost the
+  reference never pays; it was 55-65% of a warm operation's CPU.
+  A caller's ``spark.driver.extraJavaOptions`` is appended after the
+  package's flags, and HotSpot keeps the last value of a repeated
+  ``-XX`` flag, so a caller can override any one of them.
 """
 
 from __future__ import annotations
@@ -62,6 +70,22 @@ _DEFAULTS = {
     "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
+# C2 (tier-4) thresholds 10x the JDK 17 defaults (5000, 600, 15000,
+# 40000). Over 8 identical ANN probes the JIT compiled 12,602 distinct
+# methods: the long tail of C2 compiles over Spark's lukewarm driver
+# code, 55-65% of a warm operation's CPU. With these, that code stays in
+# C1 and hot loops still reach C2: the warm runs of a 200M-row
+# aggregate, a 20M-row sort and a 10M x 2M join (tools/scale.py hot)
+# keep their wall time. Measured on a 4-core host, 10 interleaved pairs:
+# perfbench pass CPU 0.67x (llm_ops) and 0.70x (tpch_sql), warm wall
+# time flat; sf0.1 TPC-H + MATCH_RECOGNIZE session JIT 72.8 -> 28.3 s.
+# C1 only (-XX:TieredStopAtLevel=1) made that aggregate 10x slower, and
+# -XX:CompileThresholdScaling=4 delays C1 too (session setup 1.3x).
+_JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_spark(
     app_name: str = "blazingsql_spark",
@@ -95,9 +119,13 @@ def get_spark(
         # WHATEVER runs next goes interpreted — observed as random 5-10x
         # per-query spikes late in bench runs. Spark's own tuning guide
         # says to raise ReservedCodeCacheSize for codegen-heavy workloads.
-        conf["spark.driver.extraJavaOptions"] = "-XX:ReservedCodeCacheSize=512m"
-    if extra_conf:
-        conf.update(extra_conf)
+        conf["spark.driver.extraJavaOptions"] = f"-XX:ReservedCodeCacheSize=512m {_JIT_POLICY}"
+    for k, v in (extra_conf or {}).items():
+        # the caller's JVM flags go after the package's: the last value of a
+        # repeated -XX flag wins, so the caller overrides one, not all
+        if k == "spark.driver.extraJavaOptions" and k in conf:
+            v = f"{conf[k]} {v}"
+        conf[k] = v
     conf.update(_rapids_conf())
     for k, v in conf.items():
         builder = builder.config(k, v)

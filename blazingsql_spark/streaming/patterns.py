@@ -669,6 +669,13 @@ def match_recognize_stream(
     at plan time (interval for timestamps, plain number for numeric
     keys).
 
+    NULL and NaN: ``applyInPandasWithState`` hands a micro-batch over as
+    pandas, where a NULL double is already NaN (a NULL timestamp NaT), so
+    a symbol-relative DEFINE and WITHIN read every NaN as NULL. Flag
+    DEFINEs are Spark SQL columns computed before that boundary, and the
+    batch operator reads Arrow: both keep NaN apart from NULL (NaN equals
+    NaN and is above every number, as in Spark SQL).
+
     Cross-batch order contract: per-key rows must arrive in (ts, id)
     order across micro-batches (within a batch they are sorted), same
     as every stateful twin here."""
@@ -689,9 +696,13 @@ def match_recognize_stream(
         *rec.flag_cols.values(),
     )
 
+    def values(s):
+        # NULL and NaN arrive as one NaN (NaT for a timestamp): read as NULL
+        return s.astype(object).where(s.notna(), None).tolist() if s.hasnans else s.tolist()
+
     def rows_of(batch):
         return list(zip(
-            *(batch[c].tolist() for c in val_cols),
+            *(values(batch[c]) for c in val_cols),
             *(flag_list(batch[c]) for c in rec.flag_cols.values()),
         ))
 

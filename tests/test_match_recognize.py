@@ -3323,3 +3323,52 @@ def test_nan_and_null_measures_equal_spark_sql(spark):
     planted = [r.event_id for r in df.collect() if r.value != r.value]
     assert planted and all(math.isnan(passed[e]) for e in planted)
     assert any(r.value is None for r in every)
+
+
+@pytest.mark.parametrize(
+    "define", ["value > 2", "value = value", "value >= FIRST(A.value)"]
+)
+def test_nan_define_reads_spark_order_on_both_routes(spark, define):
+    """A DEFINE reads NaN as a value in Spark's order (equal to NaN and
+    above every number) whether it runs as a Spark SQL flag column or as
+    an mr_expr closure inside the scan (a symbol-relative DEFINE, or the
+    forced automaton route). Over 5.0, NaN, 7.0 ``A+`` is one 3-row
+    match on both routes; a NULL in place of the NaN splits it."""
+    df = spark.createDataFrame(
+        [(1, 1, 5.0), (1, 2, float("nan")), (1, 3, 7.0),
+         (2, 1, 5.0), (2, 2, None), (2, 3, 7.0)],
+        "k int, seq int, value double",
+    )
+    meas = [("MATCH_NUMBER()", "mn"), ("COUNT(*)", "n")]
+    want = [(1, 1, 3), (2, 1, 1), (2, 2, 1)]
+    for force in (False, True):
+        got = match_recognize(df, ["k"], ["seq"], meas, "A+", {"A": define},
+                              _force_in_automaton=force)
+        assert sorted(map(tuple, got.collect())) == want, (define, force)
+
+
+def test_mr_expr_nan_comparisons_equal_spark_sql(spark):
+    """The mr_expr comparators against Spark SQL itself over NaN, a
+    number and NULL: NaN = NaN, NaN above every number, NULL unknown."""
+    from blazingsql_spark.operators.mr_expr import MatchCtx, compile_predicate
+
+    vals = [float("nan"), 2.0, None]
+    preds = [
+        f"{a} {op} {b}"
+        for op in ("=", "<>", "<", "<=", ">", ">=")
+        for a, b in (("x", "y"), ("x", "2"), ("2", "x"))
+    ] + ["x BETWEEN 1 AND y", "x IN (2, 3)", "x IS NULL", "x + 1 > y"]
+    rows = [(x, y) for x in vals for y in vals]
+    spark.createDataFrame(rows, "x double, y double").createOrReplaceTempView(
+        "nan_cmp"
+    )
+    want = spark.sql(
+        "SELECT x, y, "
+        + ", ".join(f"COALESCE({p}, FALSE) AS p{i}" for i, p in enumerate(preds))
+        + " FROM nan_cmp"
+    ).collect()
+    for r in want:
+        ctx = MatchCtx({"x": [r["x"]], "y": [r["y"]]}, 0, 0, 1, {})
+        for i, p in enumerate(preds):
+            f, _ = compile_predicate(p, ["x", "y"], {"X": "x"})
+            assert (f(ctx) is True) == r[f"p{i}"], (p, r["x"], r["y"])

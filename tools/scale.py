@@ -11,6 +11,13 @@ Cases (select by name; default all):
   mr_nav    symbol-relative MATCH_RECOGNIZE (per-thread navigation DEFINE) vs
             its vectorized twin (same pattern, budget constraint dropped)
             on events at 1x/16x/64x
+  hot       three long hot-loop queries on spark.range data (a 200M-row
+            group-by aggregate, a 20M-row sort, a 10M x 2M join), each
+            run 3 times, run 1 cold: wall seconds and process-tree CPU
+            seconds (perfbench/run.py's tree_cpu_s) per run. Run it alone,
+            in a fresh process, so that run 1 is cold; it ignores --sf-dir
+            and --reps. The check for a JVM JIT-flag change: warm runs must
+            keep their speed while the hot loops reach C2
 
 Usage: python tools/scale.py [case ...] [--sf-dir DIR] [--reps 1,16,64]
 """
@@ -147,10 +154,36 @@ def case_mr_nav(spark, sf_dir, reps_list):
         )
 
 
+def case_hot(spark, sf_dir, reps_list):
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from run import tree_cpu_s
+
+    def agg():
+        return spark.range(200_000_000).groupBy((F.col("id") % 1000).alias("g")).agg(F.sum("id"), F.count("*"))
+
+    def sort():
+        return spark.range(20_000_000).select((F.col("id") * 2654435761 % 20_000_000).alias("k")).orderBy("k")
+
+    def join():
+        a = spark.range(10_000_000).select((F.col("id") % 2_000_000).alias("k"), F.col("id").alias("v"))
+        b = spark.range(2_000_000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("w"))
+        return a.join(b, "k")
+
+    for name, build in (("aggregate 200M", agg), ("sort 20M", sort), ("join 10M x 2M", join)):
+        for run in (1, 2, 3):
+            cpu0, t0 = tree_cpu_s(), time.perf_counter()
+            build().write.format("noop").mode("overwrite").save()
+            wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
+            print(f"hot {name} run {run}: {wall:.2f} s wall, {cpu:.2f} s CPU", flush=True)
+
+
 CASES = {
     "docs": (case_docs, (1, 64)),
     "mr": (case_mr, (1, 16, 64)),
     "mr_nav": (case_mr_nav, (1, 16, 64)),
+    "hot": (case_hot, ()),
 }
 
 
