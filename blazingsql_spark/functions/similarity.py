@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from blazingsql_spark.width import shuffle_width
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<numeric> columns, computed in float64."""
@@ -1824,11 +1826,8 @@ def semantic_dedup_keep(
         # bytes-based coalescing under-parallelizes this PYTHON
         # pairwise-distance stage, whose cost is rows², not bytes;
         # groupBy reuses the hash partitioning — one exchange total
-        n_part = int(
-            assigned.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
         cand = (
-            assigned.repartition(n_part, key)
+            assigned.repartition(shuffle_width(assigned.sparkSession), key)
             .groupBy(key)
             .applyInPandas(_grp_pairs, out_schema)
         )
@@ -2174,11 +2173,8 @@ def mmr_rerank(
     # pin the exchange width (REPARTITION_BY_NUM hint): AQE's bytes-based
     # coalescing under-parallelizes this PYTHON greedy-selection stage
     # (cost per group is k×candidates dot products, not bytes)
-    n_part = int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     return (
-        pairs.repartition(n_part, query_id_col)
+        pairs.repartition(shuffle_width(pairs.sparkSession), query_id_col)
         .groupBy(query_id_col)
         .applyInPandas(greedy, out_schema)
     )

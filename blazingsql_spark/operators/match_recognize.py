@@ -108,6 +108,7 @@ from blazingsql_spark.streaming.patterns import (
     compile_pattern,
     scan_rows,
 )
+from blazingsql_spark.width import python_width
 
 
 def _strip_anchors(pattern: str) -> tuple[str, bool, bool]:
@@ -1366,11 +1367,10 @@ def match_recognize(
     # The matcher is one Python stage over a key-hashed, key-sorted
     # input: each task streams its partition and calls run() once per
     # key. Its width follows the size of what it ships (see
-    # _PY_TASK_BYTES) and is pinned by an explicit repartition-by-num,
+    # width.python_width) and is pinned by an explicit repartition-by-num,
     # which AQE's bytes-based coalescing leaves alone. The repartition
     # sits under the classification, so a PREV/NEXT window over the same
     # key rides the same exchange.
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     # ONE ROW PER MATCH emits keys and measures only, so the Python stage
     # gets just what run() reads: the keys, ORDER BY keys, flags,
     # navigation-DEFINE columns and every column a measure names (a
@@ -1392,42 +1392,13 @@ def match_recognize(
 
     if partition_by:
         # sized on the bytes that reach Python, not the classified input
-        width = _python_width(shipped(classify(df)), n_part)
+        width = python_width(shipped(classify(df)))
         coded = classify(df.repartition(width, *partition_by))
         coded = coded.sortWithinPartitions(*partition_by)
     else:
         coded = classify(df.repartition(1))
     coded = shipped(coded)
     return coded.mapInArrow(_per_key_kernel(run, list(partition_by)), out_schema)
-
-
-# Input bytes (Catalyst's estimate of the frame the matcher receives:
-# under ONE ROW PER MATCH the projected columns only) per matcher task.
-# A Python task has a fixed cost of about 0.27 s CPU, measured on
-# events_match_recognize: most of it is PySpark's per-task worker setup
-# (setup_spark_files calls importlib.invalidate_caches(), which re-reads
-# 16 zip directories), the rest Arrow framing. Matching costs about
-# 0.12 s per 230 KB of classified events with every column (sf0.01, 150
-# keys), so a task pays its fixed cost again in matching only past about
-# 500 KB of such input. 384 KB keeps each task's matching near its fixed
-# cost: the sf0.01 events rows run in one task (229 KB with every
-# column, 97 KB as events_match_recognize ships it), and sf0.1 (2.12 MB
-# with every column, 895 KB shipped) sizes to 6 tasks and to 3, at most
-# spark.sql.shuffle.partitions.
-_PY_TASK_BYTES = 384 << 10
-
-
-def _python_width(coded: DataFrame, n_part: int) -> int:
-    """Task count of the matcher stage: Catalyst's size estimate of its
-    input over _PY_TASK_BYTES, capped at ``n_part``. The estimate comes
-    from the optimized plan's statistics and runs no job; an input of
-    unknown size reports Long.MaxValue and gets the cap."""
-    # a Scala BigInt: py4j hands back an int or a proxy whose str() is
-    # the decimal value
-    size = int(
-        str(coded._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    )
-    return max(1, min(n_part, -(-size // _PY_TASK_BYTES)))
 
 
 def _key_starts(batch, keys):

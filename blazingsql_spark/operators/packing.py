@@ -32,7 +32,6 @@ def pack_documents(
     id_col: str = "doc_id",
     text_col: str = "text",
     token_counter=None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, n_tokens, pack_id, pack_offset, spills) per document.
 
@@ -45,12 +44,7 @@ def pack_documents(
     counter = token_counter or text_fns.token_count
     tokens: Column = counter(F.col(text_col))
     base = df.select(F.col(id_col), tokens.cast("long").alias("n_tokens"))
-    cum = global_running(
-        base,
-        order_by=[id_col],
-        sum_cols={"cum_tokens": "n_tokens"},
-        num_partitions=num_partitions,
-    )
+    cum = global_running(base, order_by=[id_col], sum_cols={"cum_tokens": "n_tokens"})
     start = F.col("cum_tokens") - F.col("n_tokens")
     return cum.select(
         F.col(id_col),

@@ -38,13 +38,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blazingsql_spark.width import shuffle_width
+
 
 def group_percentile_cont(
     df: DataFrame,
     keys: list[str],
     value_col: str,
     quantiles: dict[str, float],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact PERCENTILE_CONT per group, distributed.
 
@@ -58,10 +59,7 @@ def group_percentile_cont(
         if not (0.0 <= q <= 1.0):
             raise ValueError(f"quantile {name}={q} outside [0, 1]")
 
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = shuffle_width(df.sparkSession)
     base = df.select(
         *keys, F.col(value_col).cast("double").alias("__v")
     ).filter(F.col("__v").isNotNull())

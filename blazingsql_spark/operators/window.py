@@ -31,13 +31,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from blazingsql_spark.width import shuffle_width
+
 
 def global_running(
     df: DataFrame,
     order_by: list[str],
     sum_cols: dict[str, str] | None = None,
     row_number_as: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add global running (prefix) aggregates over ``order_by`` without a
     single-partition window.
@@ -52,10 +53,7 @@ def global_running(
     columns when bit-exact cross-engine agreement matters.
     """
     sum_cols = sum_cols or {}
-    n = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n = shuffle_width(df.sparkSession)
     order_cols = [F.col(c) for c in order_by]
     part = df.repartitionByRange(n, *order_cols).withColumn(
         "__cid", F.spark_partition_id()

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from blazingsql_spark.functions import similarity
 from blazingsql_spark.operators import hnsw
 from blazingsql_spark.queries.pipeline import _recall_gate
-from blazingsql_spark.queries.registry import fan_out, load_table, register
+from blazingsql_spark.queries.registry import load_table, register
+from blazingsql_spark.width import fan_out
 
 
 def _hnsw_index(spark, sf_dir: str, emb):
@@ -42,7 +43,7 @@ def _hnsw_index(spark, sf_dir: str, emb):
         # size-aware persist width (r13, VERDICT r12 #1): see
         # pipeline._ivfpq_index — parallelizes the beam-search scoring
         # stages without the r12 full-core oversharding
-        lists = fan_out(spark, sf_dir, "embeddings", lists, per_task_rows=256).persist()
+        lists = fan_out(lists, per_task_rows=256).persist()
         lists.count()  # materialize the assignment now
         graph = hnsw.graph_from_centroids(cents, m=8, ef_construction=64)
         _IVFPQ_PREBUILT[key] = (cents, lists, graph)
@@ -71,7 +72,7 @@ def sim_ann_hnsw(spark, sf_dir):
     )
     cents, lists, graph = _hnsw_index(spark, sf_dir, emb)
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     approx = (
         hnsw.hnsw_ivf_topk(
@@ -884,7 +885,7 @@ def sim_ann_filtered(spark, sf_dir):
     )
     flt = "label % 2 = 0"
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb).filter(flt), queries, k=5
+        fan_out(emb).filter(flt), queries, k=5
     ).select(
         "query_id", "vec_id"
     )
@@ -937,7 +938,7 @@ def sim_ann_filtered_hnsw(spark, sf_dir):
     )
     flt = "label % 2 = 0"
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb).filter(flt), queries, k=5
+        fan_out(emb).filter(flt), queries, k=5
     ).select(
         "query_id", "vec_id"
     )
@@ -1056,7 +1057,7 @@ def sim_ann_filtered_pq(spark, sf_dir):
     )
     flt = "label % 2 = 0"
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb).filter(flt), queries, k=5
+        fan_out(emb).filter(flt), queries, k=5
     ).select(
         "query_id", "vec_id"
     )
@@ -1112,7 +1113,7 @@ def sim_ann_filtered_lsh(spark, sf_dir):
     )
     flt = "label % 2 = 0"
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb).filter(flt), queries, k=5
+        fan_out(emb).filter(flt), queries, k=5
     ).select(
         "query_id", "vec_id"
     )

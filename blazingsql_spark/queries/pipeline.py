@@ -11,7 +11,8 @@ same corpus, so the dedup behavior itself is what's compared.
 from pyspark.sql import functions as F
 
 from blazingsql_spark.functions import dedup, multimodal, similarity, text
-from blazingsql_spark.queries.registry import fan_out, load_table, pair, register, twin
+from blazingsql_spark.queries.registry import load_table, pair, register, twin
+from blazingsql_spark.width import fan_out
 
 # ------------------------------------------------------------------ text
 
@@ -470,7 +471,7 @@ def sim_cosine_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     )
     return out.select(
         "query_id", "vec_id", "cosine_sim", F.col("rank").alias("rnk")
@@ -559,7 +560,7 @@ def sim_mmr_rerank(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") % 200 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    pool = cosine_topk(fan_out(spark, sf_dir, "embeddings", emb), queries, k=20)
+    pool = cosine_topk(fan_out(emb), queries, k=20)
     out = mmr_rerank(pool, emb, k=5, lam=0.7, mu=0.3)
     return out.orderBy("query_id", "mmr_rank")
 
@@ -681,7 +682,7 @@ def sim_ann_lsh(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     out = similarity.ann_lsh_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries,
+        fan_out(emb), queries,
         k=5, dim=64, bands=4, bits_per_band=16,
     )
     return out.select(
@@ -818,7 +819,7 @@ def sim_near_dup(spark, sf_dir):
     dups = emb.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
-    corpus = fan_out(spark, sf_dir, "embeddings", emb.unionAll(dups))
+    corpus = fan_out(emb.unionAll(dups))
     out = similarity.embedding_near_dup_pairs(
         corpus, threshold=0.95, dim=64, bands=4, bits_per_band=16
     )
@@ -1039,7 +1040,7 @@ def sim_ann_ivf(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     approx = (
         similarity.ivf_topk(emb, queries, k=5, n_centroids=16)
@@ -1080,7 +1081,7 @@ def ann_recall_telemetry(spark, sf_dir: str) -> dict[str, float]:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     def _pq():
         books = similarity.pq_train_codebooks(emb, m=16, ksub=16, iterations=3)
@@ -1486,7 +1487,7 @@ def sim_ann_pq(spark, sf_dir):
     books = similarity.pq_train_codebooks(emb, m=16, ksub=16, iterations=3)
     enc = similarity.pq_encode(emb, books, m=16)
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     approx = (
         similarity.pq_topk_reranked(emb, enc, books, queries, k=5, m=16, ksub=16)
@@ -1518,7 +1519,7 @@ def sim_ann_ivfpq(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     approx = (
         similarity.ivfpq_topk(
@@ -1549,11 +1550,11 @@ def _ivfpq_index(spark, sf_dir: str, emb):
         # than it bought (driver: ivfpq 2.17->4.32 s, faster at 8 cores);
         # but the natural single-row-group layout serializes the ADC-fold
         # scoring stage on ONE task (measured: the biggest probe stage at
-        # sf0.1). per_task_rows sizes the width from the footer row count
-        # (8 tasks at sf0.1); on real many-row-group inputs fan_out is a
-        # no-op and the persisted layout is whatever the build's own
-        # plan left it in.
-        encoded = fan_out(spark, sf_dir, "embeddings", encoded, per_task_rows=256).persist()
+        # sf0.1). per_task_rows sizes the width from the row count of the
+        # embeddings file the codes are built from (8 tasks at sf0.1); on
+        # real many-row-group inputs fan_out is a no-op and the persisted
+        # layout is whatever the build's own shuffles left it in.
+        encoded = fan_out(encoded, per_task_rows=256).persist()
         encoded.count()  # materialize the compressed codes now
         _IVFPQ_PREBUILT[key] = (cents, books, encoded)
     return _IVFPQ_PREBUILT[key]
@@ -1590,7 +1591,7 @@ def sim_ann_ivf_pca(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     model, pca_prebuilt, f_prebuilt = _ivf_pca_index(spark, sf_dir, emb)
     approx_pca = (
@@ -1654,7 +1655,7 @@ def sim_ann_ivf_int8(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(
-        fan_out(spark, sf_dir, "embeddings", emb), queries, k=5
+        fan_out(emb), queries, k=5
     ).select("query_id", "vec_id")
     cents, qlists, flists = _ivf_int8_index(spark, sf_dir, emb)
     approx8 = (
@@ -1748,7 +1749,6 @@ def _ivf_int8_index(spark, sf_dir: str, emb):
         # 8 tasks at sf0.1 parallelize the int8 dot-fold scoring stage
         # (single-task at natural layout, 32-way oversharded under r12)
         flists = fan_out(
-            spark, sf_dir, "embeddings",
             similarity.assign_to_centroids(emb, cents, "vec_id", "embedding"),
             per_task_rows=256,
         ).persist()
@@ -3466,7 +3466,7 @@ def text_perplexity_kn(spark, sf_dir):
     shape."""
     from blazingsql_spark.functions.text import kn_bigram_negative_logprob
 
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
     return kn_bigram_negative_logprob(docs).orderBy("doc_id")
 
 
@@ -3532,7 +3532,7 @@ def text_perplexity_kn3(spark, sf_dir):
     1-row (B̂, V) scalar frame."""
     from blazingsql_spark.functions.text import kn_trigram_negative_logprob
 
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
     return kn_trigram_negative_logprob(docs).orderBy("doc_id")
 
 
@@ -3838,7 +3838,7 @@ def dedup_spans(spark, sf_dir):
 
     # fan_out (r12): same single-task tokenize+explode bottleneck as the
     # rewrite twin below
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
     return duplicated_ngram_spans(docs, n=3).orderBy("doc_id")
 
 
@@ -3891,7 +3891,7 @@ def dedup_spans_rewrite(spark, sf_dir):
     # fan_out (r12): the tokenize+gram-explode chain and the doc-level
     # join back both serialize on the single-row-group fixture scan
     # (stage profile: one ~1.1 s single-task stage ≈ half the query)
-    docs = load_table(spark, sf_dir, "documents", parallel=True)
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
     return remove_duplicated_ngram_spans(docs, n=3).orderBy("doc_id")
 
 
@@ -4681,7 +4681,7 @@ def dedup_semantic(spark, sf_dir):
     dups = emb.filter(F.col("vec_id") % 50 == 0).select(
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
-    corpus = fan_out(spark, sf_dir, "embeddings", emb.unionAll(dups))
+    corpus = fan_out(emb.unionAll(dups))
     keep = similarity.semantic_dedup_keep(
         # max_cluster_size=None: the paper-exact unbounded opt-in — this
         # row IS the exact anchor (bounded-by-default since r9)
@@ -4776,9 +4776,7 @@ def dedup_semantic_bounded(spark, sf_dir):
     # across this query's ~15 sequential AQE jobs for no extra
     # parallelism (the pairwise stage is parallelized by its own
     # group-key repartition, not the scan).
-    corpus = fan_out(
-        spark, sf_dir, "embeddings", emb.unionAll(dups), per_task_rows=256
-    )
+    corpus = fan_out(emb.unionAll(dups), per_task_rows=256)
     keep = similarity.semantic_dedup_keep(
         corpus,
         n_clusters=1,

@@ -31,6 +31,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from blazingsql_spark import width
+
 TABLES = (
     "region",
     "nation",
@@ -106,77 +108,16 @@ def _prepare_session(spark: SparkSession) -> None:
         pass
 
 
-def _scan_meta(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(effective scan-split count, row count) from the parquet footer."""
-    from blazingsql_spark.sources.io import parquet_footer
-
-    size, meta = parquet_footer(path)
-    if meta is None:
-        # the layout is unknown, assume parallel enough
-        return (1 << 30, 1 << 62)
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-    try:
-        max_bytes = int(raw)
-    except ValueError:  # "128m"-style spellings
-        units = {"k": 10, "m": 20, "g": 30}
-        max_bytes = int(raw[:-1]) << units.get(raw[-1].lower(), 0)
-    by_size = max(1, -(-size // max_bytes))
-    # parquet split granularity is the row group: a byte-range
-    # split can't run more tasks than there are row groups
-    return (min(meta.num_row_groups, by_size), meta.num_rows)
+def fan_out(spark, sf_dir, name, df, per_task_rows=None) -> DataFrame:
+    """:func:`blazingsql_spark.width.fan_out` under the signature
+    ``perfbench/workloads.py`` calls; ``spark``, ``sf_dir`` and ``name``
+    are unused (the width follows the files ``df`` reads)."""
+    return width.fan_out(df, per_task_rows)
 
 
-def fan_out(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    df: DataFrame,
-    per_task_rows: int | None = None,
-) -> DataFrame:
-    """Restore scan parallelism for compute-heavy consumers (guide §2.5
-    "input skew: one huge unsplittable file ... repartition immediately
-    after the read"): the local fixtures are single-row-group parquet
-    files, so every scan is ONE task and tokenize/signature/projection
-    work serializes on one core. When the footer says the scan cannot
-    reach at least a quarter of the cores, round-robin repartition —
-    to the full core count when per-row work dominates (the default:
-    brute-force pair scoring, tokenizers), or to a size-aware width
-    ``min(cores, ceil(rows / per_task_rows))`` when the caller knows the
-    per-row work is light and full-width tasks would be mostly
-    scheduling overhead (VERDICT r12 #1: 32-way oversharding of a
-    2k-row table probed by ~18 sequential jobs cost more than it
-    bought). ``rows`` there is the row count in the footer of the
-    source file ``name``, not a count of ``df``: the size-aware width
-    assumes ``df`` keeps that table's cardinality (a projection or a
-    light filter of it), and a ``df`` that aggregates or explodes the
-    table gets a width sized for the table instead. On a real deployment the inputs are many files / many row
-    groups, the condition is false, and NO repartition is injected —
-    the corpus is never reshuffled just to fan out. Deterministic:
-    keyless repartition local-sorts its input first
-    (spark.sql.execution.sortBeforeRepartition, default on)."""
-    cores = spark.sparkContext.defaultParallelism
-    splits, rows = _scan_meta(spark, f"{sf_dir}/{name}.parquet")
-    if splits < max(2, cores // 4):
-        width = cores
-        if per_task_rows is not None:
-            width = min(cores, max(2, -(-rows // per_task_rows)))
-        return df.repartition(width)
-    return df
-
-
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, parallel: bool = False
-) -> DataFrame:
-    """``parallel=True`` applies :func:`fan_out` — opt-in for queries whose
-    scan-side per-row work dominates (tokenizers, signatures, embeddings
-    math); cheap scans (filter+agg TPC-H shapes) keep the raw scan."""
-    df = _load_table_raw(spark, sf_dir, name)
-    if parallel:
-        df = fan_out(spark, sf_dir, name, df)
-    return df
-
-
-def _load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``<sf_dir>/<name>.parquet`` fixture table; a compute-heavy
+    consumer widens the scan with :func:`blazingsql_spark.width.fan_out`."""
     from blazingsql_spark.sources.io import read_parquet_file
 
     _prepare_session(spark)

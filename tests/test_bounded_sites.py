@@ -86,8 +86,8 @@ ALLOWED: dict[tuple[str, str, str], int] = {
 }
 
 
-def _observed() -> Counter:
-    sites: Counter = Counter()
+def _package_trees():
+    """(repo-relative path, parsed module) of every package source file."""
     for dirpath, _dirs, files in os.walk(PKG):
         for fn in sorted(files):
             if not fn.endswith(".py"):
@@ -95,22 +95,27 @@ def _observed() -> Counter:
             path = os.path.join(dirpath, fn)
             rel = os.path.relpath(path, REPO)
             with open(path, encoding="utf-8") as f:
-                tree = ast.parse(f.read(), filename=rel)
+                yield rel, ast.parse(f.read(), filename=rel)
 
-            def walk(node: ast.AST, scope: str) -> None:
-                for child in ast.iter_child_nodes(node):
-                    child_scope = scope
-                    if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                        child_scope = (scope + "." if scope else "") + child.name
-                    if (
-                        isinstance(child, ast.Call)
-                        and isinstance(child.func, ast.Attribute)
-                        and child.func.attr in ("collect", "crossJoin")
-                    ):
-                        sites[(rel, scope or "<module>", child.func.attr)] += 1
-                    walk(child, child_scope)
 
-            walk(tree, "")
+def _observed() -> Counter:
+    sites: Counter = Counter()
+    for rel, tree in _package_trees():
+
+        def walk(node: ast.AST, scope: str) -> None:
+            for child in ast.iter_child_nodes(node):
+                child_scope = scope
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    child_scope = (scope + "." if scope else "") + child.name
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in ("collect", "crossJoin")
+                ):
+                    sites[(rel, scope or "<module>", child.func.attr)] += 1
+                walk(child, child_scope)
+
+        walk(tree, "")
     return sites
 
 
@@ -134,3 +139,38 @@ def test_allowlist_has_no_stale_entries():
         f"stale allowlist entries (site removed or renamed): {sorted(stale)} "
         "— prune them so the allowlist stays an exact audit"
     )
+
+
+WIDTH = "blazingsql_spark/width.py"
+
+
+def test_stage_widths_are_read_in_width_py_only():
+    """Stage widths have one home, blazingsql_spark/width.py, and follow
+    the frame they size. No other package module reads
+    spark.sql.shuffle.partitions (session.py sets it), and no package
+    call passes ``sf_dir`` to a width function (a function of width.py,
+    or the registry's fan_out wrapper of it)."""
+    trees = dict(_package_trees())
+    width_fns = {
+        node.name for node in trees[WIDTH].body if isinstance(node, ast.FunctionDef)
+    }
+    readers, plumbed = [], []
+    for rel, tree in trees.items():
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and node.value == "spark.sql.shuffle.partitions"
+                and rel not in (WIDTH, "blazingsql_spark/session.py")
+            ):
+                readers.append((rel, node.lineno))
+            if isinstance(node, ast.Call):
+                fn = node.func
+                name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", "")
+                args = [*node.args, *(k.value for k in node.keywords)]
+                if name in width_fns and any(
+                    isinstance(a, ast.Name) and a.id == "sf_dir" for a in args
+                ):
+                    plumbed.append((rel, node.lineno))
+    assert "fan_out" in width_fns and "shuffle_width" in width_fns
+    assert not readers, f"read the width through blazingsql_spark.width: {readers}"
+    assert not plumbed, f"width functions read the frame, not sf_dir: {plumbed}"

@@ -14,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry_mod
+from blazingsql_spark import width
 from blazingsql_spark.queries import registry
 from blazingsql_spark.sources.io import read_parquet_file
 
@@ -92,10 +93,10 @@ def test_driver_order():
     assert len(qs) == 281
 
 
-def test_scan_meta_unknown_layout_falls_back(tmp_path, monkeypatch):
-    """A directory or a truncated file has no readable footer: _scan_meta
-    assumes the scan is parallel enough (no Spark needed to get there).
-    Any other error is a bug and propagates."""
+def test_scan_layout_unknown_layout_falls_back(tmp_path, monkeypatch):
+    """A directory or a truncated file has no readable footer:
+    width._scan_layout assumes the scan is parallel enough (no Spark
+    needed to get there). Any other error is a bug and propagates."""
     good = tmp_path / "good.parquet"
     pq.write_table(pa.table({"a": list(range(100))}), good)
     truncated = tmp_path / "truncated.parquet"
@@ -103,14 +104,21 @@ def test_scan_meta_unknown_layout_falls_back(tmp_path, monkeypatch):
     directory = tmp_path / "dir.parquet"
     directory.mkdir()
     for path in (directory, truncated):
-        assert registry._scan_meta(None, str(path)) == (1 << 30, 1 << 62)
+        assert width._scan_layout([str(path)], 128 << 20) == (1 << 30, 1 << 62)
+        assert width._scan_layout([str(good), str(path)], 128 << 20) == (
+            1 << 30,
+            1 << 62,
+        )
+    assert width._scan_layout([str(good)], 128 << 20) == (1, 100)
 
     def broken(_path):
         raise RuntimeError("not a footer error")
 
+    fresh = tmp_path / "fresh.parquet"  # not in the footer cache
+    pq.write_table(pa.table({"a": [1]}), fresh)
     monkeypatch.setattr(pq, "ParquetFile", broken)
     with pytest.raises(RuntimeError):
-        registry._scan_meta(None, str(good))
+        width._scan_layout([str(fresh)], 128 << 20)
 
 
 def test_load_table_infers_schema_once(spark):

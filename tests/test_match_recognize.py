@@ -2976,7 +2976,7 @@ def _canon_rows(rows, drop_first=False):
     )
 
 
-def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
+def test_per_partition_kernel_matches_per_key_runs(spark):
     """The matcher stage is one mapInArrow kernel per shuffle partition:
     it streams the partition's Arrow batches, splits them into keys and
     runs each key alone. Spread over 16 partitions (most of them empty)
@@ -2990,9 +2990,9 @@ def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
     string label ``g`` and in one Arrow batch, so it shares none of the
     kernel's floating-key or batch-spanning logic. ``amount`` is a
     BIGINT that is NULL only under one key, so only that key's frame
-    holds it as float64."""
-    from blazingsql_spark.operators import match_recognize as mr
-
+    holds it as float64. The input comes from a 16-partition RDD, which
+    has no size estimate, so the matcher takes its 16 partitions as its
+    width (capped at spark.sql.shuffle.partitions)."""
     codes = {"v": "view", "c": "click", "p": "purchase", "s": "search"}
     streams = [  # (key, group label, events)
         (None, "null", "vcpvccps"),
@@ -3009,7 +3009,8 @@ def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
             amount = None if label == "x" and i % 3 == 0 else 10 * seq
             rows.append((key, label, seq, codes[ch], amount))
     df = spark.createDataFrame(
-        rows, "k double, g string, seq bigint, event_type string, amount bigint"
+        spark.sparkContext.parallelize(rows, 16),
+        "k double, g string, seq bigint, event_type string, amount bigint",
     )
     define = {
         "V": "event_type = 'view'",
@@ -3043,7 +3044,6 @@ def test_per_partition_kernel_matches_per_key_runs(spark, monkeypatch):
         ]
         for i, mode in enumerate(modes)
     }
-    monkeypatch.setattr(mr, "_PY_TASK_BYTES", 1)  # widest stage
     conf = spark.conf
     saved = {
         c: conf.get(c)

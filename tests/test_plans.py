@@ -553,6 +553,47 @@ def test_match_recognize_width_follows_input_size(spark):
     assert _python_widths(out) == [n_part]
 
 
+def test_match_recognize_width_of_unsized_input_is_its_partitions(spark):
+    """An input Catalyst cannot size (a frame built from Python rows or
+    an RDD reports Long.MaxValue bytes) runs the matcher at its own
+    planned partition count, not at spark.sql.shuffle.partitions: 14
+    rows from a 1-partition RDD under Spark's default 200 shuffle
+    partitions run ONE Python task (each costs about 0.27 s CPU). In a
+    plan mixing such a leaf with a sized one, each leaf counts alone."""
+    from pyspark.sql import functions as F
+
+    from blazingsql_spark.operators.match_recognize import match_recognize
+
+    rows = [(i % 3, i, "view" if i % 2 else "click") for i in range(14)]
+
+    def from_rdd(n):
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, n),
+            "user_id bigint, ts bigint, event_type string",
+        )
+
+    def widths(df):
+        return _python_widths(match_recognize(
+            df, ["user_id"], ["ts"], [("COUNT(*)", "n")], "V+",
+            {"V": "event_type = 'view'"},
+        ))
+
+    sized = spark.range(10).select(  # 80 bytes: one task's worth
+        F.col("id").alias("user_id"), F.col("id").alias("ts"),
+        F.lit("view").alias("event_type"),
+    )
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        assert widths(from_rdd(1)) == [1]
+        assert widths(from_rdd(3)) == [3]
+        assert widths(from_rdd(3).unionByName(sized)) == [4]
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        assert widths(from_rdd(3)) == [2]  # still capped
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
 def test_match_recognize_one_row_width_ignores_unread_columns(spark):
     """Under ONE ROW PER MATCH the matcher stage is sized on the columns
     that reach Python, so a wide column the query never reads leaves its
